@@ -221,7 +221,8 @@ def test_classify_matches_committed_golden(spark):
 
 def test_rejects_bad_weight_tables(spark):
     """The quality_classify ADVICE discipline: missing or duplicated
-    per-lang bias rows raise instead of silently mis-scoring."""
+    per-lang bias rows, and repeated (lang, b) feature rows (which the
+    pivot would silently sum), raise instead of silently mis-scoring."""
     from text_ocr_spark.ops.lang_clf import langid_classify
 
     docs = spark.createDataFrame([(1, "hello")], "doc_id long, text string")
@@ -232,6 +233,8 @@ def test_rejects_bad_weight_tables(spark):
         langid_classify(
             docs, w.unionByName(w.where(F.col("b") == -1))
         )
+    with pytest.raises(ValueError, match="repeats"):
+        langid_classify(docs, w.unionByName(w.where(F.col("b") != -1)))
 
 
 def test_classify_plan_one_pass_jvm(spark):

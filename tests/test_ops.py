@@ -553,6 +553,51 @@ def test_resolve_pairs_transitive_chain(spark):
     assert got == {1: (1, 0), 2: (1, 1), 3: (1, 1), 9: (9, 0)}
 
 
+def test_resolve_pairs_one_partition_needs_no_rounds(spark, monkeypatch):
+    """A small edge set lands in one partition, where the local
+    union-find already emits the final stars: the star-forest check
+    passes on the initial edges and no contraction round runs."""
+    from text_ocr_spark.ops import dedup
+
+    calls = []
+    large_star = dedup._large_star
+
+    def counting(e):
+        calls.append(1)
+        return large_star(e)
+
+    monkeypatch.setattr(dedup, "_large_star", counting)
+    docs = spark.createDataFrame([(1,), (2,), (3,), (9,)], "doc_id long")
+    pairs = spark.createDataFrame([(2, 3), (1, 2)], "doc_a long, doc_b long")
+    got = {
+        r.doc_id: (r.cluster_id, r.is_dup)
+        for r in dedup.resolve_pairs(docs, pairs).collect()
+    }
+    assert got == {1: (1, 0), 2: (1, 1), 3: (1, 1), 9: (9, 0)}
+    assert len(calls) == 0
+
+
+def test_resolve_pairs_refuses_unconverged_edges(spark, monkeypatch):
+    """Edges that are still no star forest when the round cap is hit
+    raise instead of emitting labels that are not component minima."""
+    from text_ocr_spark.ops import dedup
+
+    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prior = spark.conf.get(coalesce_key)
+    monkeypatch.setattr(dedup, "STAR_MAX_ROUNDS", 0)
+    path = list(range(100))
+    docs = spark.createDataFrame([(x,) for x in path], "doc_id long")
+    pairs = spark.createDataFrame(
+        list(zip(path, path[1:])), "doc_a long, doc_b long"
+    ).repartition(4)
+    spark.conf.set(coalesce_key, "false")
+    try:
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup.resolve_pairs(docs, pairs)
+    finally:
+        spark.conf.set(coalesce_key, prior)
+
+
 def test_embed_prefilter_matches_exhaustive(spark, emb):
     """LSH candidate-block tile enumeration loses nothing on the real
     corpus (forced small blocks so the prefilter actually routes)."""
@@ -637,14 +682,29 @@ def test_embed_resolve_clusters_embed_pairs(spark, emb):
         assert got[v] == (keep, int(v != keep))
 
 
-def test_resolve_pairs_random_graphs_and_long_path(spark):
+def test_resolve_pairs_random_graphs_and_long_path(spark, monkeypatch):
     """Star-contraction CC vs a driver union-find on random graphs, plus
     the adversarial long-path graph that breaks O(diameter) algorithms
     (200-node path must resolve in O(log n) rounds, well under the
-    iteration cap)."""
+    iteration cap). Every case runs twice: as is, then ``spread`` with
+    partition coalescing off and the edges split over several
+    partitions, so the local union-find leaves work for the contraction
+    rounds and the star-forest stop."""
+    import itertools
     import random
 
-    from text_ocr_spark.ops.dedup import resolve_pairs
+    from text_ocr_spark.ops import dedup
+
+    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prior = spark.conf.get(coalesce_key)
+    rounds = {False: 0, True: 0}
+    large_star = dedup._large_star
+
+    def counting(e):
+        rounds[spread] += 1
+        return large_star(e)
+
+    monkeypatch.setattr(dedup, "_large_star", counting)
 
     rng = random.Random(7)
     cases = []
@@ -660,16 +720,23 @@ def test_resolve_pairs_random_graphs_and_long_path(spark):
     path_nodes = list(range(5000, 5200))
     cases.append((path_nodes, list(zip(path_nodes, path_nodes[1:]))))
 
-    for nodes, edges in cases:
+    for spread, (nodes, edges) in itertools.product((False, True), cases):
         docs = spark.createDataFrame([(x,) for x in nodes], "doc_id long")
         pairs = (
             spark.createDataFrame(edges, "doc_a long, doc_b long")
             if edges
             else spark.createDataFrame([], "doc_a long, doc_b long")
         )
-        got = {
-            r.doc_id: r.cluster_id for r in resolve_pairs(docs, pairs).collect()
-        }
+        if spread:
+            spark.conf.set(coalesce_key, "false")
+            pairs = pairs.repartition(4)
+        try:
+            got = {
+                r.doc_id: r.cluster_id
+                for r in dedup.resolve_pairs(docs, pairs).collect()
+            }
+        finally:
+            spark.conf.set(coalesce_key, prior)
 
         parent = {}
 
@@ -691,7 +758,8 @@ def test_resolve_pairs_random_graphs_and_long_path(spark):
             mn = min(members)
             for v in members:
                 want[v] = mn
-        assert got == want, (len(nodes), len(edges))
+        assert got == want, (spread, len(nodes), len(edges))
+    assert rounds[True] > 0  # spread edges leave work for the rounds
 
 
 def test_collapse_gate_skips_on_low_dup_corpora(spark, docs, caplog):

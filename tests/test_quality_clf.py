@@ -278,7 +278,8 @@ def test_quality_clf_classify_plan_one_pass_jvm(spark, corpus):
 def test_quality_clf_rejects_bad_weight_tables(spark, corpus):
     """ADVICE r4 regression: the public apply API must refuse a weight
     table with a missing or duplicated bias row instead of silently
-    emitting zero rows / multiplied rows."""
+    emitting zero rows / multiplied rows, and a repeated feature bucket
+    instead of doubling its n_tokens and s_micro."""
     from text_ocr_spark.ops.quality_clf import (
         quality_classify,
         quality_train,
@@ -296,3 +297,7 @@ def test_quality_clf_rejects_bad_weight_tables(spark, corpus):
     doubled = w.unionByName(w.where(F.col("b") == -1))
     with pytest.raises(ValueError, match="exactly one bias row"):
         quality_classify(docs, doubled, n_buckets=B)
+
+    repeated = w.unionByName(w.where(F.col("b") != -1))
+    with pytest.raises(ValueError, match="repeats feature buckets"):
+        quality_classify(docs, repeated, n_buckets=B)

@@ -463,9 +463,9 @@ def pretrain_pipeline(
     the stripped corpus, and selection/packing read the clean corpus
     (whose final segment is Arrow-free — conv/turn re-attach by the
     pure inverse key, never a join back through extraction). Bounded
-    auxiliary actions (the dedup probe, the CC fixed point over
-    localCheckpointed edges, decontamination's test-side probe, DSIR's
-    <= n_buckets model build) are the ops' own documented driver
+    auxiliary actions (the dedup probe, the CC star-forest checks over
+    lazily localCheckpointed edges, decontamination's test-side probe,
+    DSIR's <= n_buckets model build) are the ops' own documented driver
     actions."""
     gated = _pretrain_gate(spark, sf_dir).localCheckpoint(eager=False)
     stripped = _pretrain_strip(gated).localCheckpoint(eager=False)

@@ -947,9 +947,75 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def resolve_pairs(
-    docs: DataFrame, pairs: DataFrame, *, max_iters: int = 50
-) -> DataFrame:
+#: star-contraction round cap. Rounds needed grow as O(log n) in the
+#: component size, so reaching the cap means a bug, not a big graph.
+STAR_MAX_ROUNDS = 50
+
+
+def _local_stars(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Union-find over one partition's edges -> (node, local component
+    min) for every node that is not its own local minimum. Local
+    components are subsets of global ones and every input edge's ends
+    share a local root, so the graph's components do not change; a
+    partition holding whole components emits their final stars."""
+    parts = list(batches)
+    if not parts:
+        return
+    us = np.concatenate([pdf["u"].to_numpy() for pdf in parts])
+    vs = np.concatenate([pdf["v"].to_numpy() for pdf in parts])
+    # sorted unique ids: the smallest index of a set is its smallest node
+    nodes, idx = np.unique(np.concatenate([us, vs]), return_inverse=True)
+    parent = list(range(len(nodes)))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in zip(idx[: len(us)].tolist(), idx[len(us) :].tolist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    roots = np.array([find(x) for x in range(len(nodes))], dtype=np.int64)
+    child = roots != np.arange(len(nodes))
+    yield pd.DataFrame({"u": nodes[child], "v": nodes[roots[child]]})
+
+
+def _is_star_forest(e: DataFrame) -> bool:
+    """One action: every u has exactly one edge, every edge has v < u,
+    and no v is also a u. Each star's center is then its component's
+    minimum, i.e. the contraction is done."""
+    ends = e.select(
+        F.col("u").alias("x"),
+        F.lit(1).alias("n_out"),
+        (F.col("v") >= F.col("u")).cast("int").alias("up"),
+        F.lit(0).alias("is_v"),
+    ).unionByName(
+        e.select(
+            F.col("v").alias("x"),
+            F.lit(0).alias("n_out"),
+            F.lit(0).alias("up"),
+            F.lit(1).alias("is_v"),
+        )
+    )
+    bad = (
+        ends.groupBy("x")
+        .agg(
+            F.sum("n_out").alias("n_out"),
+            F.max("up").alias("up"),
+            F.max("is_v").alias("is_v"),
+        )
+        .where(
+            (F.col("n_out") > 1)
+            | (F.col("up") > 0)
+            | ((F.col("n_out") > 0) & (F.col("is_v") > 0))
+        )
+    )
+    return bad.count() == 0
+
+
+def resolve_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Connected components over a near-dup pair graph -> per-doc verdict.
 
     -> (doc_id, cluster_id, keep_id, is_dup): cluster_id = keep_id = the
@@ -957,45 +1023,40 @@ def resolve_pairs(
     docs (no near-dup pair) keep themselves. This is the near-dup twin of
     exact_dedup's keep decision — pairs alone don't dedup a corpus.
 
-    Alternating large-star / small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", 2014): each round is
-    two groupBy-min + join passes over the edge list, and the edge set
+    First a local union-find per partition of the distinct edges
+    (``_local_stars``): when AQE coalesces a small edge set into one
+    partition this alone yields the final stars, and at scale it shrinks
+    each partition's edges to at most its node count. Then alternating
+    large-star / small-star contraction (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", 2014): each round is two
+    groupBy-min + join passes over the edge list, and the edge set
     provably converges to per-component stars (child -> component min)
     in O(log n) rounds — immune to the long-chain worst case that makes
     plain min-label propagation take O(diameter) rounds. No driver-side
-    collect: the driver only compares bounded symmetric-difference
-    counts to detect the fixed point; localCheckpoint cuts lineage per
-    round (swap for reliable checkpoint dirs on a real cluster).
+    collect: before each round one count checks whether the edges are
+    already a star forest (exact, see ``_is_star_forest``), and that
+    action also materializes the round's lazy localCheckpoint, which
+    cuts lineage (swap for reliable checkpoint dirs on a real cluster).
     """
     e = (
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
+        .mapInPandas(_local_stars, schema="u long, v long")
+        .localCheckpoint(eager=False)
     )
-    n_prev = e.count()
-    converged = n_prev == 0
-    for _ in range(max_iters):
-        if converged:
-            break
-        e1 = _large_star(e).localCheckpoint()
-        e2 = _small_star(e1).localCheckpoint()
-        # both sides are distinct sets: equal size + empty one-sided
-        # difference <=> equal sets (skips the second exceptAll pass)
-        n_new = e2.count()
-        converged = n_new == n_prev and e2.exceptAll(e).count() == 0
-        e, n_prev = e2, n_new
-    if not converged:
-        # an unconverged edge set would yield labels that are NOT
-        # component minima — refuse rather than silently mis-cluster.
-        # O(log n) convergence means 50 rounds covers any real graph.
-        raise RuntimeError(
-            f"star contraction did not converge in {max_iters} rounds"
-        )
-    # at the fixed point every edge is (member, component_min)
-    child = e.groupBy("u").agg(F.min("v").alias("lbl")).withColumnRenamed(
-        "u", "doc_id"
-    )
+    rounds = 0
+    while not _is_star_forest(e):
+        if rounds == STAR_MAX_ROUNDS:
+            # an unconverged edge set would yield labels that are NOT
+            # component minima — refuse rather than silently mis-cluster
+            raise RuntimeError(
+                f"star contraction did not converge in {STAR_MAX_ROUNDS} rounds"
+            )
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        rounds += 1
+    # a star forest: every edge is (member, component_min)
+    child = e.withColumnRenamed("u", "doc_id").withColumnRenamed("v", "lbl")
     labels = (
         docs.select("doc_id")
         .join(child, "doc_id", "left")

@@ -741,8 +741,9 @@ def _heal_labels(
 ) -> DataFrame:
     """(old label -> merge-component minimum) mapping over the merge
     graph, seeded from every stored label plus every merge endpoint.
-    Star-contraction (resolve_pairs) — O(log n) rounds, no driver
-    collect of the label set."""
+    resolve_pairs: a local union-find per partition, then star
+    contraction until the edges form a star forest — O(log n) rounds,
+    one count each, no driver collect of the label set."""
     nodes = (
         labels.select(F.col(label_col).alias("doc_id"))
         .unionByName(merges.select(F.col("u").alias("doc_id")))

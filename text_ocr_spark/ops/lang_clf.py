@@ -166,16 +166,30 @@ def langid_classify(
     count, lang_pred = argmax language (ties -> lexicographically
     first), z_micro = the winning exact int64 micro logit. Zero-gram
     docs score the biases alone. Raises on a weight table whose bias
-    rows are missing or duplicated for any language (the
+    rows are missing or duplicated for any language, or that repeats a
+    (lang, b) feature row, which the pivot would silently sum (the
     quality_classify ADVICE discipline)."""
-    bias_rows = weights.where(F.col("b") == -1).select(
-        "lang", "w_micro"
-    ).collect()
+    # one bounded driver action on the model table: the bias rows plus
+    # every repeated (lang, b) key
+    flagged = (
+        weights.groupBy("lang", "b")
+        .agg(F.count("*").alias("n"), F.min("w_micro").alias("w_micro"))
+        .where((F.col("b") == -1) | (F.col("n") > 1))
+        .collect()
+    )
+    bias_rows = [r for r in flagged if r["b"] == -1]
     langs = sorted(r["lang"] for r in bias_rows)
-    if not langs or len(set(langs)) != len(langs):
+    if not langs or any(r["n"] != 1 for r in bias_rows):
         raise ValueError(
             "langid_classify: weight table must contain exactly one "
-            f"bias row (b == -1) per language; got {langs}"
+            f"bias row (b == -1) per language; got "
+            f"{sorted((r['lang'], r['n']) for r in bias_rows)}"
+        )
+    dup_keys = sorted((r["lang"], r["b"]) for r in flagged if r["b"] != -1)
+    if dup_keys:
+        raise ValueError(
+            "langid_classify: weight table repeats (lang, b) feature rows "
+            f"{dup_keys[:5]} ({len(dup_keys)} in all)"
         )
     bias = {r["lang"]: int(r["w_micro"]) for r in bias_rows}
 

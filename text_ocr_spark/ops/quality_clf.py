@@ -213,17 +213,31 @@ def quality_classify(
     """
     # validate the weight table up front (ADVICE r4): this is the
     # public apply API, and a missing bias row would otherwise yield
-    # ZERO output rows (crossJoin with empty) while a duplicated one
+    # ZERO output rows (crossJoin with empty) while a duplicated row
     # (e.g. a concatenated weight table) would silently multiply every
-    # row. take(2) is a bounded driver action on the model table.
-    bias_rows = weights.where(F.col("b") == -1).select("w_micro").take(2)
-    if len(bias_rows) != 1:
+    # row or, for a feature bucket, double its n_tokens and s_micro
+    # through the broadcast join. One bounded driver action on the
+    # model table finds the bias row and every repeated bucket.
+    flagged = (
+        weights.groupBy("b")
+        .agg(F.count("*").alias("n"), F.min("w_micro").alias("w_micro"))
+        .where((F.col("b") == -1) | (F.col("n") > 1))
+        .collect()
+    )
+    bias_rows = [r for r in flagged if r["b"] == -1]
+    n_bias = sum(r["n"] for r in bias_rows)
+    if n_bias != 1:
         raise ValueError(
             "quality_classify: weight table must contain exactly one "
-            f"bias row (b == -1); found {len(bias_rows)}"
-            + (" or more" if len(bias_rows) == 2 else "")
+            f"bias row (b == -1); found {n_bias}"
         )
-    w0_micro = int(bias_rows[0][0])
+    dup_buckets = sorted(r["b"] for r in flagged if r["b"] != -1)
+    if dup_buckets:
+        raise ValueError(
+            "quality_classify: weight table repeats feature buckets "
+            f"{dup_buckets[:5]} ({len(dup_buckets)} in all)"
+        )
+    w0_micro = int(bias_rows[0]["w_micro"])
     wtab = weights.where(F.col("b") != -1)
     # ONE corpus tokenize pass: a LEFT join keeps unweighted
     # occurrences (buckets unseen in training score 0 but still count
