@@ -192,6 +192,7 @@ def main() -> int:
     from text_ocr_spark.pipeline import (
         conv_chunk_expr,
         extract_corpus,
+        extract_docs,
         ordered,
         session_builder,
     )
@@ -281,9 +282,7 @@ def main() -> int:
             "Catalyst cannot push below MapInPandas, so every chunk "
             "re-extracted the whole corpus. On an Iceberg table bucketed "
             "by conv_id the same predicate prunes data files.",
-            extract_corpus(
-                spark, SF, num_partitions=8, doc_predicate=conv_chunk_expr(8) == 3
-            ),
+            extract_docs(docs.where(conv_chunk_expr(8) == 3), num_partitions=8),
         ),
         (
             "embed_pairs with LSH candidate-block prefilter",

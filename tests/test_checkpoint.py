@@ -4,10 +4,24 @@ rerun, output identical to a single-shot run."""
 from __future__ import annotations
 
 import shutil
+import threading
 
 import pytest
 
 from tests.conftest import SF_TINY
+
+KINDS = ("html", "pdf", "ocr", "plain", "empty")
+COUNTED = ("rows_out", *[f"n_{k}" for k in KINDS], "bytes_in", "bytes_out")
+
+
+def _jobs_in_group(spark, group: str) -> int:
+    """Spark jobs issued under job group ``group``; clears the group.
+    The status tracker works with the UI off, but it is filled by an
+    asynchronous listener, so drain the listener bus first."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _collect(df):
@@ -29,25 +43,35 @@ def test_resume_after_partial_commit(spark, tmp_path):
 
     single = _collect(extract_corpus(spark, SF_TINY, num_partitions=6))
 
+    # job budget per call: one `documents` schema read, then per chunk
+    # the salted exchange and the write (manifest metrics are observed
+    # during the write, not read back)
+    sc = spark.sparkContext
     out = str(tmp_path / "run")
+    sc.setJobGroup("resume-killed", "resume-killed")
     with pytest.raises(RuntimeError, match="injected failure"):
         resumable_extract(
             spark, SF_TINY, out, run_id="r1", n_chunks=4,
             num_partitions=6, fail_after=2,
         )
+    assert _jobs_in_group(spark, "resume-killed") <= 1 + 2 * 2
     assert len(committed_chunks(out)) == 2  # two chunks survived the kill
 
+    sc.setJobGroup("resume-resumed", "resume-resumed")
     stats = resumable_extract(
         spark, SF_TINY, out, run_id="r1-resume", n_chunks=4, num_partitions=6
     )
+    assert _jobs_in_group(spark, "resume-resumed") <= 1 + 2 * 2
     assert stats["chunks_skipped"] == 2 and stats["chunks_run"] == 2
     assert _collect(read_extracted(spark, out)) == single
     assert stats["rows_out"] == len(single)
 
-    # a completed run is a no-op on rerun
+    # a completed run is a no-op on rerun, down to not reading its input
+    sc.setJobGroup("resume-noop", "resume-noop")
     stats2 = resumable_extract(
         spark, SF_TINY, out, run_id="r1-noop", n_chunks=4, num_partitions=6
     )
+    assert _jobs_in_group(spark, "resume-noop") == 0
     assert stats2["chunks_run"] == 0 and stats2["chunks_skipped"] == 4
 
 
@@ -66,7 +90,14 @@ def test_resume_refuses_changed_input(spark, tmp_path):
 
 
 def test_manifest_carries_lineage(spark, tmp_path):
-    from text_ocr_spark.checkpoint import committed_chunks, resumable_extract
+    from pyspark.sql import functions as F
+
+    from text_ocr_spark.checkpoint import (
+        committed_chunks,
+        read_extracted,
+        resumable_extract,
+    )
+    from text_ocr_spark.pipeline import lineage_metrics
 
     out = str(tmp_path / "run3")
     resumable_extract(
@@ -75,12 +106,53 @@ def test_manifest_carries_lineage(spark, tmp_path):
     recs = committed_chunks(out)
     assert set(recs) == {0, 1}
     total_kinds = sum(
-        rec[f"n_{k}"]
-        for rec in recs.values()
-        for k in ("html", "pdf", "ocr", "plain", "empty")
+        rec[f"n_{k}"] for rec in recs.values() for k in KINDS
     )
     assert total_kinds == sum(rec["rows_out"] for rec in recs.values()) == 500
     assert all(rec["bytes_in"] > 0 and rec["wall_ms"] >= 0 for rec in recs.values())
+
+    # the metrics observed during each chunk's write equal lineage_metrics
+    # summed over the committed chunk read back
+    ex = read_extracted(spark, out)
+    for cid, rec in recs.items():
+        m = (
+            lineage_metrics(ex.where(F.col("chunk") == cid), run_id="r3")
+            .agg(*[F.sum(c).alias(c) for c in COUNTED])
+            .first()
+        )
+        assert {c: rec[c] for c in COUNTED} == {c: int(m[c]) for c in COUNTED}
+
+
+@pytest.mark.parametrize("num_partitions", [None, 4])
+def test_empty_chunks_commit_zero_manifests(spark, tmp_path, num_partitions):
+    """SF_TINY's 51 conversations in 64 chunks leave many chunks empty;
+    each still commits a manifest with all-zero counts, and reading its
+    observed metrics returns instead of waiting forever."""
+    from text_ocr_spark.checkpoint import committed_chunks, resumable_extract
+
+    out = str(tmp_path / "run5")
+    stats = {}
+
+    def run():
+        stats.update(
+            resumable_extract(
+                spark, SF_TINY, out, run_id="r5", n_chunks=64,
+                num_partitions=num_partitions,
+            )
+        )
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=600)
+    assert not t.is_alive(), "resumable_extract did not return"
+    assert stats == {"chunks_run": 64, "chunks_skipped": 0, "rows_out": 500}
+
+    recs = committed_chunks(out)
+    assert set(recs) == set(range(64))
+    empty = [rec for rec in recs.values() if rec["rows_out"] == 0]
+    assert empty
+    assert all(rec[c] == 0 for rec in empty for c in COUNTED)
+    assert sum(rec["rows_out"] for rec in recs.values()) == 500
 
 
 def test_chunks_are_conversation_aligned(spark, tmp_path):

@@ -11,8 +11,13 @@ the graft makes restartability a first-class table-scale property:
   ``out/extracted/chunk=<id>/`` first, then a manifest row is renamed
   into ``out/manifest/`` (rename-as-commit). A killed run leaves either
   a committed chunk (skipped on restart) or an uncommitted one (rerun);
-- the manifest row carries the lineage/metrics (FIXTURES.md §4): rows
-  in/out, per-kind counts, bytes, wall_ms, and the input snapshot id.
+- the manifest row carries the lineage/metrics (FIXTURES.md §4):
+  ``run_id``, ``chunk_id``, ``snapshot_id`` (the input snapshot),
+  ``rows_out``, ``n_<kind>`` for each of html/pdf/ocr/plain/empty,
+  ``bytes_in``, ``bytes_out`` and ``wall_ms``. The counts are observed
+  (``DataFrame.observe``) while the chunk's parquet is written, so a
+  chunk costs one write action and no read-back; ``wall_ms`` runs from
+  the chunk's start to the end of that write.
 
 On an Iceberg catalog the same interface rides snapshot isolation
 instead of directory renames: ``snapshot_id`` pins the input version
@@ -33,14 +38,16 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from text_ocr_spark.pipeline import (
+    LINEAGE_KINDS,
     SALT_BUCKETS,
+    _read_docs,
     conv_chunk_expr,
-    extract_corpus,
-    lineage_metrics,
+    extract_docs,
+    lineage_counts,
 )
 
 MANIFEST_DIR = "manifest"
@@ -113,6 +120,9 @@ def resumable_extract(
             f"manifest was committed against another input snapshot: {stale}"
         )
 
+    chunk_of = conv_chunk_expr(n_chunks)
+    observed = [F.count("*").alias("rows_out"), *lineage_counts()]
+    docs = None  # read on the first chunk that runs: a finished run issues no job
     ran = 0
     skipped = 0
     rows_out = 0
@@ -124,34 +134,28 @@ def resumable_extract(
         if fail_after is not None and ran >= fail_after:
             raise RuntimeError(f"injected failure after {ran} chunks")
         t0 = time.time()
+        if docs is None:
+            docs = _read_docs(spark, sf_dir, 1)
         # chunk predicate computed from doc_id on the SCAN side: each
         # chunk's job reads, exchanges, and extracts only its own
         # conversations. Filtering the extraction OUTPUT instead (the
         # equivalent chunk_col(n)==cid on conv_id) would sit above the
         # MapInPandas node, which Catalyst cannot push a predicate
         # below — re-running the full Python extraction once per chunk.
-        ex = extract_corpus(
-            spark,
-            sf_dir,
+        ex = extract_docs(
+            docs.where(chunk_of == cid),
             salt_buckets=salt_buckets,
             num_partitions=num_partitions,
-            doc_predicate=conv_chunk_expr(n_chunks) == cid,
         )
+        # the observe node sits in the write's result stage, above the
+        # Arrow stage with no exchange over it: each task's metrics are
+        # applied once, so a retried task cannot double-count. An
+        # Observation serves one action only, hence one per chunk.
+        obs = Observation()
         chunk_path = os.path.join(out_dir, CHUNK_DIR, f"chunk={cid}")
-        ex.write.mode("overwrite").parquet(chunk_path)
-        metrics = (
-            lineage_metrics(spark.read.parquet(chunk_path), run_id=run_id)
-            .agg(
-                F.sum("rows_out").alias("rows_out"),
-                *[
-                    F.sum(f"n_{k}").alias(f"n_{k}")
-                    for k in ("html", "pdf", "ocr", "plain", "empty")
-                ],
-                F.sum("bytes_in").alias("bytes_in"),
-                F.sum("bytes_out").alias("bytes_out"),
-            )
-            .first()
-        )
+        ex.observe(obs, *observed).write.mode("overwrite").parquet(chunk_path)
+        wall_ms = int(1000 * (time.time() - t0))
+        metrics = obs.get
         rec = {
             "run_id": run_id,
             "chunk_id": cid,
@@ -159,11 +163,8 @@ def resumable_extract(
             "rows_out": int(metrics["rows_out"] or 0),
             "bytes_in": int(metrics["bytes_in"] or 0),
             "bytes_out": int(metrics["bytes_out"] or 0),
-            "wall_ms": int(1000 * (time.time() - t0)),
-            **{
-                f"n_{k}": int(metrics[f"n_{k}"] or 0)
-                for k in ("html", "pdf", "ocr", "plain", "empty")
-            },
+            "wall_ms": wall_ms,
+            **{f"n_{k}": int(metrics[f"n_{k}"] or 0) for k in LINEAGE_KINDS},
         }
         _commit_chunk(out_dir, rec)
         ran += 1

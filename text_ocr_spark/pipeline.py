@@ -340,11 +340,29 @@ def extract_corpus(
     repeat: int = 1,
     salt_buckets: int = SALT_BUCKETS,
     num_partitions: int | None = None,
-    doc_predicate: F.Column | None = None,
     max_chars: int | None = None,
     pad_frac: float = 0.0,
 ) -> DataFrame:
-    """documents at sf_dir -> extracted rows; the one-exchange fast path.
+    """documents at sf_dir -> extracted rows; the one-exchange fast path
+    (``extract_docs`` over one scan of ``documents.parquet``)."""
+    return extract_docs(
+        _read_docs(spark, sf_dir, repeat),
+        salt_buckets=salt_buckets,
+        num_partitions=num_partitions,
+        max_chars=max_chars,
+        pad_frac=pad_frac,
+    )
+
+
+def extract_docs(
+    docs: DataFrame,
+    *,
+    salt_buckets: int = SALT_BUCKETS,
+    num_partitions: int | None = None,
+    max_chars: int | None = None,
+    pad_frac: float = 0.0,
+) -> DataFrame:
+    """(doc_id, text) rows -> extracted rows.
 
     ``max_chars``/``pad_frac`` surface the B2 bounded-analysis window
     and the D6 span-padding flag (kernels/extract.py) at the pipeline
@@ -358,15 +376,13 @@ def extract_corpus(
     (pytest-pinned), with half the exchanges and a minimal Arrow
     boundary: 2 columns in, none passing through.
 
-    ``doc_predicate`` (a Column over ``doc_id``/``text``) filters the
-    scan side BEFORE the exchange and Arrow stage — the hook the
-    chunked resume path uses so each chunk extracts only its own
-    conversations (on an Iceberg table bucketed by conv_id the same
-    predicate prunes data files instead of merely rows).
+    A filter on ``docs`` (e.g. ``conv_chunk_expr(n) == cid``, the
+    chunked resume path) stays on the scan side, BEFORE the exchange
+    and Arrow stage, so each chunk extracts only its own conversations
+    (on an Iceberg table bucketed by conv_id the same predicate prunes
+    data files instead of merely rows).
     """
-    docs = _read_docs(spark, sf_dir, repeat)
-    if doc_predicate is not None:
-        docs = docs.where(doc_predicate)
+    docs = docs.select("doc_id", "text")
     if salt_buckets <= 0:
         # no exchange: trust the source partitioning (an Iceberg table
         # bucketed on conv_id arrives pre-spread, skew pre-defused)
@@ -395,20 +411,32 @@ def ordered(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
     return rp.sortWithinPartitions("conv_id", "turn_idx")
 
 
+#: payload kinds counted by the lineage metrics (``n_<kind>`` columns)
+LINEAGE_KINDS = ("html", "pdf", "ocr", "plain", "empty")
+
+
+def lineage_counts() -> list[F.Column]:
+    """``n_<kind>`` per payload kind, ``bytes_in`` and ``bytes_out``:
+    additive aggregates over extracted rows, shared by the per-partition
+    lineage rows and the per-chunk resume manifest."""
+    return [
+        *[
+            F.sum((F.col("kind") == k).cast("long")).alias(f"n_{k}")
+            for k in LINEAGE_KINDS
+        ],
+        F.sum("bytes_in").alias("bytes_in"),
+        F.sum("bytes_out").alias("bytes_out"),
+    ]
+
+
 def lineage_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
     """Per-partition lineage rows (FIXTURES.md §4) from the extraction
     output — no second pass over the input."""
-    kind_count = [
-        F.sum((F.col("kind") == k).cast("long")).alias(f"n_{k}")
-        for k in ("html", "pdf", "ocr", "plain", "empty")
-    ]
     return extracted.groupBy("part_id").agg(
         F.count("*").alias("rows_out"),
         F.min("conv_id").alias("first_conv"),
         F.max("conv_id").alias("last_conv"),
-        *kind_count,
-        F.sum("bytes_in").alias("bytes_in"),
-        F.sum("bytes_out").alias("bytes_out"),
+        *lineage_counts(),
     ).withColumn("run_id", F.lit(run_id))
 
 
