@@ -59,31 +59,10 @@ def _extract_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_extraction(spark, sf_dir).select(*GOLDEN_COLS)
 
 
-def _extract_kind_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from text_ocr_spark.pipeline import build_transcripts, extract_transcripts
-
-    ex = extract_transcripts(build_transcripts(spark, sf_dir))
-    return (
-        ex.groupBy("kind")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.length("extracted")).alias("sum_chars"),
-            F.sum((F.length("extracted") == 0).cast("long")).alias("n_blank"),
-        )
-        .orderBy("kind")
-    )
-
-
 def _transcript_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from text_ocr_spark.pipeline import transcript_index
 
     return transcript_index(spark, sf_dir)
-
-
-def _conversation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from text_ocr_spark.pipeline import conversation_stats
-
-    return conversation_stats(spark, sf_dir)
 
 
 def _conversation_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -749,9 +728,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embed_resolve": lambda s, d: embed_resolve(_emb(s, d)).orderBy(
             "vec_id"
         ),
-        # literal SQL-string twin of events_hourly (same plan goal);
-        # pinned equal by tests/test_contract.py::test_events_hourly_sql_twin
-        "events_hourly_sql": R.events_hourly_sql,
         # pure span math over the extraction golden (green r1-r3);
         # judge-suggested tail twin, pytest-covered span offsets
         "extract_spans_debug": _extract_spans_debug,
@@ -760,15 +736,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # green row (which runs ivf_assign against trained centroids);
         # green r1-r3, plus tests/test_similarity.py unit coverage
         "ivf_assign": lambda s, d: ivf_assign(_emb(s, d)).orderBy("vec_id"),
-        # trivial aggregate composition over the in-window
-        # extract_transcripts golden row (same extraction DAG + a
-        # groupBy(kind)); green r1-r3, oracle retained below
-        "extract_kind_stats": _extract_kind_stats,
         # r4 demotions (head slots went to the three new pipeline
         # families dup_spans/strip_dup_spans/sample_stratified), each
         # pinned by an in-window sibling + its retained oracle below:
-        # per-conv digest = sibling per-conv aggregate of the in-window
-        # conversation_stats/transcript_index rows (green r1-r3)
+        # per-conv digest = grouped fold over the in-window
+        # extract_transcripts row's output (green r1-r3)
         "conversation_digest": _conversation_digest,
         # third TPC-H rep alongside the in-window q1/q5 rows (green
         # r1-r3)
@@ -781,10 +753,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the in-window curate_corpus row (green r1-r3; scrub-specific
         # pytests in tests/test_cleaning.py)
         "pii_scrub": lambda s, d: pii_scrub(_docs(s, d)).orderBy("doc_id"),
-        # groupBy over the in-window transcript_index row (same DAG +
-        # per-conv aggregates; green r1-r3) — the extract_kind_stats
-        # argument
-        "conversation_stats": _conversation_stats,
         # composition of the in-window dup_spans row (the hard part —
         # the duplicated-window discovery and interval merge are
         # identical code) plus one doc_id equi-join and a JVM
@@ -817,9 +785,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # in-window sibling + a pytest oracle row in
         # tests/test_contract.py::SUBSET:
         # plain windowed agg whose (1h window × status) grouping is a
-        # strict subset of the in-window events_rollup grouping sets;
-        # additionally pinned value-identical to its SQL-string twin by
-        # test_events_hourly_sql_twin (green r1-r4)
+        # strict subset of the in-window events_rollup grouping sets
+        # (green r1-r4)
         "events_hourly": R.events_hourly,
         # set-op rep (judge-named twin): UNION/INTERSECT/EXCEPT over
         # the same orders scan; exact oracle retained below + SUBSET
@@ -977,23 +944,8 @@ def oracle_sql() -> dict[str, str]:
             FROM read_parquet('{GOLDEN_SF001}')
             GROUP BY conv_id ORDER BY conv_id
         """,
-        "extract_kind_stats": f"""
-            SELECT kind, count(*) AS n,
-                   CAST(sum(length(extracted)) AS BIGINT) AS sum_chars,
-                   CAST(sum(CASE WHEN length(extracted) = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_blank
-            FROM read_parquet('{GOLDEN_SF001}')
-            GROUP BY kind ORDER BY kind
-        """,
         "transcript_index": _TRANSCRIPT_META_CTE
         + "SELECT conv_id, turn_idx, role, ts_epoch, turn_rank, prev_role FROM idx",
-        "conversation_stats": _TRANSCRIPT_META_CTE
-        + """
-            SELECT conv_id, count(*) AS n_turns,
-                   CAST(count(DISTINCT role) AS BIGINT) AS n_roles,
-                   min(ts_epoch) AS first_epoch, max(ts_epoch) AS last_epoch,
-                   max(ts_epoch) - min(ts_epoch) AS span_secs
-            FROM idx GROUP BY conv_id ORDER BY conv_id
-        """,
         # relational
         "q1_pricing_summary": """
             SELECT l_returnflag, l_linestatus,
@@ -1093,12 +1045,6 @@ def oracle_sql() -> dict[str, str]:
             FROM sess GROUP BY user_id ORDER BY user_id
         """,
         "events_hourly": """
-            SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) AS hour_bucket,
-                   event_type, count(*) AS n,
-                   round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 4) AS sum_value
-            FROM events GROUP BY 1, 2
-        """,
-        "events_hourly_sql": """
             SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) AS hour_bucket,
                    event_type, count(*) AS n,
                    round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 4) AS sum_value

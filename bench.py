@@ -36,8 +36,9 @@ Queries timed (post-warmup of the Spark session):
                 decontamination -> dsir top-k -> pack_shards, three
                 stage barriers — VERDICT r4 item 4)
 
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_REPEAT (default
-4), SPARK_GRAFT_PARTITIONS (default 4x cpus).
+Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: the cores this
+process may run on), SPARK_GRAFT_REPEAT (default 16), SPARK_GRAFT_PARTITIONS
+(default 2x cpus).
 """
 
 from __future__ import annotations
@@ -55,7 +56,8 @@ import time
 # after warmup (control_pre) and again after the last timed query
 # (control_post); either reading >1.5x the committed reference
 # (BENCH/control_ref.json, regenerate with scripts/gen_control_ref.py
-# on an idle host) marks the whole record host_degraded=true.
+# on an idle host) marks the whole record host_degraded=true. With no
+# reference for this core count the check is off: host_degraded=null.
 CONTROL_TOLERANCE = 1.5
 
 
@@ -94,7 +96,9 @@ def load_control_ref(cpus: int) -> float | None:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    )
     repeat = int(os.environ.get("SPARK_GRAFT_REPEAT", "16"))
     partitions = int(os.environ.get("SPARK_GRAFT_PARTITIONS", str(cpus * 2)))
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -251,8 +255,9 @@ def main() -> int:
     control_post = control_probe(spark)
     control_measured = max(control_pre, control_post)
     host_degraded = (
-        control_ref is not None
-        and control_measured > CONTROL_TOLERANCE * control_ref
+        None
+        if control_ref is None
+        else control_measured > CONTROL_TOLERANCE * control_ref
     )
     if host_degraded:
         print(

@@ -273,3 +273,43 @@ def test_zero_gram_docs_score_biases(spark):
         assert out[d].n_grams == 0
         assert out[d].lang_pred == best[0]
         assert out[d].z_micro == best[1]
+
+
+def test_score_rounding_ties_away_from_zero(spark):
+    """Exact .5 ties in the per-document score round(s / n): Spark's
+    F.round, the _half_up replay and DuckDB's round all send +k.5 up
+    and -k.5 down (away from zero). Each two-gram doc weights only its
+    first gram, so s / n is exactly w / 2."""
+    import duckdb
+
+    from text_ocr_spark.ops.lang_clf import LANGID_BUCKETS, langid_classify
+
+    w_first = {1: 5, 2: -5, 3: 1, 4: -1}  # s / n = 2.5, -2.5, 0.5, -0.5
+    texts = {1: "abcd", 2: "efgh", 3: "ijkl", 4: "mnop"}
+    grams = {d: _grams(t, LANGID_BUCKETS) for d, t in texts.items()}
+    weighted = {grams[d][0]: w for d, w in w_first.items()}
+    assert all(len(g) == 2 for g in grams.values())
+    assert len(weighted) == 4
+    assert not {g[1] for g in grams.values()} & set(weighted)
+    weights = spark.createDataFrame(
+        [("en", -1, 0)] + [("en", b, w) for b, w in weighted.items()],
+        "lang string, b long, w_micro long",
+    )
+    docs = spark.createDataFrame(
+        list(texts.items()), "doc_id long, text string"
+    )
+    got = {
+        r.doc_id: r.z_micro for r in langid_classify(docs, weights).collect()
+    }
+    replay = {d: _half_up(w / 2) for d, w in w_first.items()}
+    duck = dict(
+        duckdb.sql(
+            "SELECT d, CAST(round(s / 2.0) AS BIGINT) FROM (VALUES "
+            + ", ".join(f"({d}, {w})" for d, w in w_first.items())
+            + ") t(d, s)"
+        ).fetchall()
+    )
+    assert replay == {1: 3, 2: -3, 3: 1, 4: -1}
+    assert got == replay == duck
+    # half-to-even would differ on every tie: the fixture discriminates
+    assert [round(w / 2) for w in w_first.values()] == [2, -2, 0, 0]

@@ -18,7 +18,6 @@ QUERIES = [
     "events_hourly",
     "events_props_json",
     "transcript_index",
-    "conversation_stats",
 ]
 
 

@@ -179,22 +179,6 @@ def events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_hourly_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same epoch-hour aggregation through the spark.sql string API
-    (temp view + ANSI SQL text) — exercises the SQL entry surface with
-    the identical oracle as the DataFrame twin."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("events_v")
-    return spark.sql(
-        """
-        SELECT CAST(floor(unix_timestamp(ts) / 3600) AS BIGINT) AS hour_bucket,
-               event_type, count(*) AS n,
-               round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 4)
-                 AS sum_value
-        FROM events_v GROUP BY 1, 2
-        """
-    )
-
-
 def order_status_setop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set op: customers with open orders EXCEPT those with filled orders."""
     orders = _t(spark, sf_dir, "orders")

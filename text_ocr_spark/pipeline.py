@@ -7,10 +7,17 @@ Physical plan (SURVEY.md §3.4):
          (explicit skew handling, SURVEY.md §2.H — extraction is per-turn
          independent so salting is safe; AQE alone doesn't split a hot
          groupBy key that never aggregates)
-      -> ArrowEvalPython: mapInPandas(extract_batch) — kernels over Arrow
-         batches, per-payload numpy, no per-row Python UDFs
+      -> ArrowEvalPython: mapInPandas — kernels over Arrow batches,
+         per-payload numpy, no per-row Python UDFs
       -> (optional) Exchange+Sort: range partition by (conv_id, turn_idx)
          for the stable-turn-ordering contract
+
+One kernel loop: every Arrow extraction stage (``extract_transcripts``,
+the fused ``extract_docs`` and ``extract_vertical_corpus``) calls
+``_extract_columns`` on each batch and keeps only its own part — passing
+the transcript columns through, or building the payloads. Transcript
+metadata (conv_id/turn_idx/role/ts) is derived from doc_id in one place,
+``_with_transcript_meta``.
 
 Scale notes (100 TB / 1000 executors):
 - the only wide dependencies are the two explicit exchanges; everything
@@ -26,7 +33,7 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -34,7 +41,8 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from text_ocr_spark.fixtures import build_payload
+from text_ocr_spark.fixtures import build_payload, build_vertical
+from text_ocr_spark.kernels.constants import MAX_ANALYSIS_CHARS
 from text_ocr_spark.kernels.extract import extract_payload
 from text_ocr_spark.oracle import spans_to_json
 
@@ -98,14 +106,19 @@ def session_builder(
 # transcripts source (fixture table derived from `documents`)
 # --------------------------------------------------------------------------
 
+def _build_payloads(pdf: pd.DataFrame) -> tuple[list[Any], list[Any]]:
+    """``build_payload`` over one batch's (doc_id, text) rows ->
+    (payloads, tools)."""
+    built = [
+        build_payload(int(doc_id), text or "")
+        for doc_id, text in zip(pdf["doc_id"], pdf["text"])
+    ]
+    return [p for p, _ in built], [tool for _, tool in built]
+
+
 def _gen_payloads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        texts: list[Any] = []
-        tools: list[Any] = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload, tool = build_payload(int(doc_id), text or "")
-            texts.append(payload)
-            tools.append(tool)
+        texts, tools = _build_payloads(pdf)
         yield pd.DataFrame(
             {"doc_id": pdf["doc_id"], "text": texts, "tool": tools}
         )
@@ -170,16 +183,25 @@ def _turn_idx_expr(d: F.Column) -> F.Column:
     return F.when(d < 100, d).otherwise((d - 100) % 8).cast("int")
 
 
+def _ts_epoch_expr(d: F.Column) -> F.Column:
+    """Turn timestamp as epoch seconds: epoch arithmetic, not timestamp
+    literals, so it is session-TZ-proof (the base is
+    2026-01-01T00:00:00Z, fixtures.EPOCH). conv_ord is bounded mod 1e6 so
+    bench ``repeat`` replicas (doc_id + r*10^7) stay inside pandas'
+    timestamp[ns] range; identity for any real sf dir."""
+    conv_ord = F.when(d < 100, F.lit(0)).otherwise(F.floor((d - 100) / 8) + 1)
+    return (
+        F.lit(1767225600) + (conv_ord % 1_000_000) * 3600 + _turn_idx_expr(d)
+    ).cast("long")
+
+
 def _with_transcript_meta(df: DataFrame) -> DataFrame:
     """Attach conv_id/turn_idx/role/ts derived from doc_id (JVM-side,
     SQL-expressible — the DuckDB oracle rebuilds the same expressions)."""
     d = F.col("doc_id")
-    conv_k = F.floor((d - 100) / 8)
-    turn_idx = _turn_idx_expr(d)
-    conv_ord = F.when(d < 100, F.lit(0)).otherwise(conv_k + 1)
     return (
         df.withColumn("conv_id", _conv_id_expr(d))
-        .withColumn("turn_idx", turn_idx)
+        .withColumn("turn_idx", _turn_idx_expr(d))
         .withColumn(
             "role",
             F.element_at(
@@ -187,20 +209,7 @@ def _with_transcript_meta(df: DataFrame) -> DataFrame:
                 (F.col("turn_idx") % 3) + 1,
             ),
         )
-        .withColumn("conv_ord", conv_ord)
-        # epoch arithmetic, not timestamp literals: session-TZ-proof
-        # (1767225600 = 2026-01-01T00:00:00Z, fixtures.EPOCH). conv_ord is
-        # bounded mod 1e6 so bench `repeat` replicas (doc_id + r*10^7) stay
-        # inside pandas' timestamp[ns] range; identity for any real sf dir.
-        .withColumn(
-            "ts",
-            F.timestamp_seconds(
-                F.lit(1767225600)
-                + (F.col("conv_ord") % 1_000_000) * 3600
-                + F.col("turn_idx")
-            ),
-        )
-        .drop("conv_ord")
+        .withColumn("ts", F.timestamp_seconds(_ts_epoch_expr(d)))
     )
 
 
@@ -208,37 +217,62 @@ def _with_transcript_meta(df: DataFrame) -> DataFrame:
 # extraction stage
 # --------------------------------------------------------------------------
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _na_to_none(v: Any) -> Any:
+    return None if v is None or (isinstance(v, float) and pd.isna(v)) else v
+
+
+def _extract_columns(
+    payloads: Iterable[Any],
+    tools: Iterable[Any],
+    max_chars: int = MAX_ANALYSIS_CHARS,
+    pad_frac: float = 0.0,
+) -> dict[str, Any]:
+    """The one kernel loop: ``extract_payload`` over one batch.
+
+    None/NaN payloads and tools become None once, here. Returns the
+    output columns kind, extracted, spans_json, part_id (the task's
+    partition id, a scalar pandas broadcasts), bytes_in and bytes_out,
+    in EXTRACT_SCHEMA order.
+    """
     tc = TaskContext.get()
-    pid = tc.partitionId() if tc is not None else -1
+    kinds: list[str] = []
+    texts: list[str] = []
+    spans_json: list[str] = []
+    bytes_in: list[int] = []
+    bytes_out: list[int] = []
+    for text, tool in zip(payloads, tools):
+        t = _na_to_none(text)
+        kind, extracted, spans = extract_payload(
+            t, _na_to_none(tool), max_chars=max_chars, pad_frac=pad_frac
+        )
+        kinds.append(kind)
+        texts.append(extracted)
+        spans_json.append(spans_to_json(spans))
+        bytes_in.append(len(t.encode("utf-8")) if t else 0)
+        bytes_out.append(len(extracted.encode("utf-8")))
+    return {
+        "kind": kinds,
+        "extracted": texts,
+        "spans_json": spans_json,
+        "part_id": tc.partitionId() if tc is not None else -1,
+        "bytes_in": bytes_in,
+        "bytes_out": bytes_out,
+    }
+
+
+#: transcript columns extract_transcripts' Arrow stage passes through
+_PASS_COLS = ["conv_id", "turn_idx", "role", "tool", "ts"]
+
+
+def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        kinds: list[str] = []
-        texts: list[str] = []
-        spans_json: list[str] = []
-        bytes_in: list[int] = []
-        bytes_out: list[int] = []
-        for text, tool in zip(pdf["text"], pdf["tool"]):
-            t = None if text is None or (isinstance(text, float) and pd.isna(text)) else text
-            tl = None if tool is None or (isinstance(tool, float) and pd.isna(tool)) else tool
-            kind, extracted, spans = extract_payload(t, tl)
-            kinds.append(kind)
-            texts.append(extracted)
-            spans_json.append(spans_to_json(spans))
-            bytes_in.append(len(t.encode("utf-8")) if t else 0)
-            bytes_out.append(len(extracted.encode("utf-8")))
         yield pd.DataFrame(
             {
-                "conv_id": pdf["conv_id"],
-                "turn_idx": pdf["turn_idx"],
-                "role": pdf["role"],
-                "tool": pdf["tool"],
-                "ts": pdf["ts"],
-                "kind": kinds,
-                "extracted": texts,
-                "spans_json": spans_json,
-                "part_id": pid,
-                "bytes_in": bytes_in,
-                "bytes_out": bytes_out,
+                **{c: pdf[c] for c in _PASS_COLS},
+                **_extract_columns(
+                    pdf["text"], pdf["tool"],
+                    max_chars=MAX_ANALYSIS_CHARS, pad_frac=0.0,
+                ),
             }
         )
 
@@ -255,8 +289,7 @@ def extract_transcripts(
     before the Arrow stage defuses long-conversation skew (SURVEY.md §2.H);
     the Window/sort that restores ordering runs on unsalted keys afterwards.
     """
-    cols = ["conv_id", "turn_idx", "role", "tool", "ts", "text"]
-    narrow = df.select(*cols)
+    narrow = df.select(*_PASS_COLS, "text")
     salt = F.pmod(F.xxhash64("turn_idx"), F.lit(salt_buckets))
     if num_partitions:
         salted = narrow.repartition(num_partitions, F.col("conv_id"), salt)
@@ -274,41 +307,16 @@ def _gen_extract_batches_fn(max_chars: int | None, pad_frac: float):
     attached AFTER this stage — strings/timestamps that merely pass
     through a pandas UDF cost Arrow+object conversion for nothing.
     """
-    from text_ocr_spark.kernels.constants import MAX_ANALYSIS_CHARS
-
     mc = MAX_ANALYSIS_CHARS if max_chars is None else max_chars
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
         for pdf in batches:
-            tools: list[Any] = []
-            kinds: list[str] = []
-            texts: list[str] = []
-            spans_json: list[str] = []
-            bytes_in: list[int] = []
-            bytes_out: list[int] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                payload, tool = build_payload(int(doc_id), text or "")
-                kind, extracted, spans = extract_payload(
-                    payload, tool, max_chars=mc, pad_frac=pad_frac
-                )
-                tools.append(tool)
-                kinds.append(kind)
-                texts.append(extracted)
-                spans_json.append(spans_to_json(spans))
-                bytes_in.append(len(payload.encode("utf-8")) if payload else 0)
-                bytes_out.append(len(extracted.encode("utf-8")))
+            payloads, tools = _build_payloads(pdf)
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
                     "tool": tools,
-                    "kind": kinds,
-                    "extracted": texts,
-                    "spans_json": spans_json,
-                    "part_id": pid,
-                    "bytes_in": bytes_in,
-                    "bytes_out": bytes_out,
+                    **_extract_columns(payloads, tools, mc, pad_frac),
                 }
             )
 
@@ -450,59 +458,14 @@ def transcript_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    d = F.col("doc_id")
-    conv_k = F.floor((d - 100) / 8)
-    base = (
-        docs.withColumn(
-            "conv_id",
-            F.when(d < 100, F.lit("conv-skew")).otherwise(
-                F.format_string("conv-%06d", conv_k)
-            ),
-        )
-        .withColumn(
-            "turn_idx", F.when(d < 100, d).otherwise((d - 100) % 8).cast("int")
-        )
-        .withColumn(
-            "role",
-            F.element_at(
-                F.array(F.lit("user"), F.lit("assistant"), F.lit("tool")),
-                (F.col("turn_idx") % 3) + 1,
-            ),
-        )
-        .withColumn(
-            "ts_epoch",
-            (
-                F.lit(1767225600)
-                + (F.when(d < 100, F.lit(0)).otherwise(conv_k + 1) % 1_000_000)
-                * 3600
-                + F.col("turn_idx")
-            ).cast("long"),
-        )
-    )
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return base.select(
+    return _with_transcript_meta(docs).select(
         "conv_id",
         "turn_idx",
         "role",
-        "ts_epoch",
+        _ts_epoch_expr(F.col("doc_id")).alias("ts_epoch"),
         F.row_number().over(w).cast("long").alias("turn_rank"),
         F.lag("role").over(w).alias("prev_role"),
-    )
-
-
-def conversation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-conversation aggregates over the transcript index."""
-    idx = transcript_index(spark, sf_dir)
-    return (
-        idx.groupBy("conv_id")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.countDistinct("role").cast("long").alias("n_roles"),
-            F.min("ts_epoch").alias("first_epoch"),
-            F.max("ts_epoch").alias("last_epoch"),
-            (F.max("ts_epoch") - F.min("ts_epoch")).alias("span_secs"),
-        )
-        .orderBy("conv_id")
     )
 
 
@@ -516,8 +479,6 @@ def extract_vertical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays byte-identical; the oracle is a committed pure-Python golden
     (scripts/gen_op_golden.py) over the same deterministic payloads.
     """
-    from text_ocr_spark.fixtures import build_vertical
-
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", "text")
@@ -526,20 +487,14 @@ def extract_vertical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids: list[int] = []
-            kinds: list[str] = []
-            texts: list[str] = []
-            spans: list[str] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                payload = build_vertical(int(doc_id), text or "")
-                kind, extracted, sp = extract_payload(payload, None)
-                ids.append(int(doc_id))
-                kinds.append(kind)
-                texts.append(extracted)
-                spans.append(spans_to_json(sp))
+            payloads = [
+                build_vertical(int(doc_id), text or "")
+                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
+            ]
+            cols = _extract_columns(payloads, [None] * len(payloads))
             yield pd.DataFrame(
-                {"doc_id": ids, "kind": kinds, "extracted": texts,
-                 "spans_json": spans}
+                {"doc_id": pdf["doc_id"],
+                 **{c: cols[c] for c in ("kind", "extracted", "spans_json")}}
             )
 
     return docs.repartition(
