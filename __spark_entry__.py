@@ -548,7 +548,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         embed_pairs,
         embed_resolve,
         exact_dedup,
-        jaccard_pairs,
         minhash_dedup,
         neardup_resolve,
         simhash_pairs,
@@ -715,12 +714,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # sf0.1 (tests/test_relational_sketch.py), which a driver row
         # cannot strengthen — the head slot goes to a hash-gated family
         "events_quantiles_sketch": R.events_quantiles_sketch,
-        # oracle-identical twin of dedup_minhash's green row (same SQL),
-        # pinned equal to it by tests/test_ops.py::
-        # test_minhash_equals_exact_jaccard on both physical routes
-        "dedup_jaccard": lambda s, d: jaccard_pairs(_docs(s, d)).orderBy(
-            "doc_a", "doc_b"
-        ),
         # composition of two in-window-green pieces: embed_pairs
         # (dedup_embed row + numpy-brute pytest) and resolve_pairs
         # (dedup_resolve row + union-find pytest); also the reference
@@ -1124,11 +1117,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(CASE WHEN h.doc_id != k.keep_id THEN 1 ELSE 0 END AS INT) AS is_dup
             FROM hashed h JOIN keep k USING (text_hash)
             ORDER BY doc_id
-        """,
-        "dedup_jaccard": _DOC_TOKENS_CTE
-        + """
-            SELECT doc_a, doc_b, round(jaccard, 6) AS jaccard
-            FROM jac WHERE jaccard >= 0.95 ORDER BY doc_a, doc_b
         """,
         # minhash+verify provably equals exact jaccard at this threshold
         # (recall 1 - 4e-24 with 128 perms / 32 bands; pytest-asserted)

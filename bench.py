@@ -38,7 +38,8 @@ Queries timed (post-warmup of the Spark session):
 
 Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: the cores this
 process may run on), SPARK_GRAFT_REPEAT (default 16), SPARK_GRAFT_PARTITIONS
-(default 2x cpus).
+(default 2x cpus), SPARK_GRAFT_MEM (driver memory; default half the host's
+physical memory, at most 48g).
 """
 
 from __future__ import annotations
@@ -114,10 +115,15 @@ def main() -> int:
     from text_ocr_spark.ops.text_stats import token_stats
     from text_ocr_spark.pipeline import extract_corpus, session_builder
 
+    # driver heap: half the host's physical memory (the local-mode Python
+    # workers share the host), never more than the 48g of the committed
+    # 32-core records
+    phys_gb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 30
+    mem = os.environ.get("SPARK_GRAFT_MEM", f"{min(48, max(1, phys_gb // 2))}g")
     spark = (
         session_builder(master=f"local[{cpus}]", app="text_ocr_spark-bench")
         .config("spark.sql.shuffle.partitions", str(partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "48g"))
+        .config("spark.driver.memory", mem)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -206,6 +206,8 @@ def main() -> int:
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     docs = spark.read.parquet(f"{SF}/documents.parquet")
+    # every text twice: a 50% exact-dup rate engages the collapse
+    heavy = docs.unionByName(docs.withColumn("doc_id", docs.doc_id + 100000))
 
     sections = [
         (
@@ -285,14 +287,15 @@ def main() -> int:
             extract_docs(docs.where(conv_chunk_expr(8) == 3), num_partitions=8),
         ),
         (
-            "embed_pairs with LSH candidate-block prefilter",
+            "embed_pairs with LSH candidate-block prefilter (block_size=16: "
+            "32 blocks)",
             "Tile enumeration bounded by the sign-random-projection "
             "candidate-block join: the per-(block, table, bucket) distinct "
             "set self-joins on (table, bucket), broadcasts, and only "
             "colliding block pairs become GEMM tiles — the blanket "
             "B(B+1)/2 cross join disappears above EXHAUSTIVE_BLOCK_LIMIT "
             "blocks.",
-            embed_pairs(emb, block_size=64, prefilter=True),
+            embed_pairs(emb, block_size=16),
         ),
         (
             "minhash_dedup (default at this corpus: gate-skipped collapse, "
@@ -309,9 +312,10 @@ def main() -> int:
             minhash_dedup(docs),
         ),
         (
-            "minhash_dedup (forced LSH banding, collapse engaged)",
+            "minhash_dedup over 3-shingles of a 50%-dup corpus (LSH "
+            "banding, collapse engaged)",
             "The 100 TB boilerplate path (what the gate engages whenever "
-            "the estimated exact-dup rate clears 2%): collapse exact "
+            "the exact-dup rate clears 2%): collapse exact "
             "duplicates to one representative per md5(text) (so the band "
             "self-join sees ONE signature per distinct text — "
             "million-copy boilerplate can never form an O(k^2) hot "
@@ -322,7 +326,7 @@ def main() -> int:
             "through the exact-dup groups (the quadratic duplication "
             "term lives only in this final membership equi-join, not in "
             "any band bucket).",
-            minhash_dedup(docs, dense_vocab_limit=0, collapse=True),
+            minhash_dedup(heavy, ngram=3),
         ),
         (
             "decontaminate (probe-routed dense arm — this corpus)",

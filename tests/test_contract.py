@@ -21,7 +21,6 @@ SUBSET = [
     "q1_pricing_summary",
     "events_sessionized",
     "dedup_exact",
-    "dedup_jaccard",
     "knn_topk",
     "ivf_assign",
     "token_stats",
@@ -126,8 +125,7 @@ def test_registry_head_covers_every_family():
     ):
         assert required in head, required
     assert set(tail) <= {
-        "events_quantiles_sketch", "dedup_jaccard", "embed_resolve",
-        "extract_spans_debug",
+        "events_quantiles_sketch", "embed_resolve", "extract_spans_debug",
         # r4 demotions, each pinned by an in-window row + pytest:
         # ivf_assign is a subcomponent of knn_ivf and ivf_train;
         # conversation_digest is a grouped fold over the in-window

@@ -272,11 +272,13 @@ def test_embed_incremental_matches_batch_union(spark, emb):
 def test_embed_incremental_forced_small_blocks(spark, emb):
     """Scale-only-bug protocol: block_size=16 => ~30 blocks, exercising
     the multi-block paths (wave-namespaced block ids, candidate-block
-    join, leftsemi pruning) in BOTH regimes — prefilter forced on and
-    the exhaustive fallback — each of which must equal the batch union
-    resolution."""
+    join, leftsemi pruning) in BOTH regimes — the prefilter (which the
+    block count engages by default) and the exhaustive fallback (forced
+    by raising EXHAUSTIVE_BLOCK_LIMIT) — each of which must equal the
+    batch union resolution."""
     from pyspark.sql import functions as F
 
+    from text_ocr_spark.ops import dedup
     from text_ocr_spark.ops.dedup import embed_resolve
     from text_ocr_spark.ops.incremental import (
         build_embed_index,
@@ -292,14 +294,16 @@ def test_embed_incremental_forced_small_blocks(spark, emb):
     }
     tmp = tempfile.mkdtemp(prefix="einc_blocks_")
     build_embed_index(corpus, tmp, block_size=16)
-    for pf in (True, False):
-        inc = {
-            r.vec_id: (r.cluster_id, r.is_dup)
-            for r in embed_incremental_resolve(
-                spark, delta, tmp, block_size=16, prefilter=pf
-            ).collect()
-        }
-        assert inc == batch, f"prefilter={pf}"
+    for limit in (dedup.EXHAUSTIVE_BLOCK_LIMIT, 1 << 30):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dedup, "EXHAUSTIVE_BLOCK_LIMIT", limit)
+            inc = {
+                r.vec_id: (r.cluster_id, r.is_dup)
+                for r in embed_incremental_resolve(
+                    spark, delta, tmp, block_size=16
+                ).collect()
+            }
+        assert inc == batch, f"block limit={limit}"
 
 
 def test_embed_two_wave_update(spark, emb):

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_TINY
+from tests.conftest import SF_SMALL, SF_TINY
 
 
 @pytest.fixture(scope="module")
@@ -18,28 +18,29 @@ def emb(spark):
     return spark.read.parquet(f"{SF_TINY}/embeddings.parquet")
 
 
-def test_minhash_equals_exact_jaccard(spark, docs):
+def test_minhash_equals_exact_jaccard(spark, docs, monkeypatch):
     """Both physical strategies == the exact jaccard ground truth.
 
-    minhash_dedup picks its strategy from a vocab probe; force each path
-    explicitly so the dense bitset kernel AND the LSH band+verify pipeline
-    are both pinned to the inverted-index exact result (values included).
+    minhash_dedup picks its strategy from a vocab probe; the default
+    takes the dense bitset kernel on this corpus, and DENSE_VOCAB_LIMIT
+    = 0 forces the LSH band+verify pipeline, so both are pinned to the
+    inverted-index exact result (values included).
     """
+    from text_ocr_spark.ops import dedup
     from text_ocr_spark.ops.dedup import jaccard_pairs, minhash_dedup
 
-    # force the inverted-index path: the independent ground truth
-    # (jaccard_pairs itself probe-routes to the dense kernel by default)
     exact = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in jaccard_pairs(docs, 0.95, dense_vocab_limit=0).collect()
+        for r in jaccard_pairs(docs, 0.95).collect()
     }
     dense = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in minhash_dedup(docs, 0.95, dense_vocab_limit=4096).collect()
+        for r in minhash_dedup(docs, 0.95).collect()
     }
+    monkeypatch.setattr(dedup, "DENSE_VOCAB_LIMIT", 0)
     lsh = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in minhash_dedup(docs, 0.95, dense_vocab_limit=0).collect()
+        for r in minhash_dedup(docs, 0.95).collect()
     }
     assert dense == exact
     assert lsh == exact
@@ -226,7 +227,7 @@ def test_dense_tiles_multiblock_regression(spark, docs, emb):
     assert vocab is not None
     exact = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in jaccard_pairs(docs, 0.95, dense_vocab_limit=0).collect()
+        for r in jaccard_pairs(docs, 0.95).collect()
     }
     multi = {
         (r.doc_a, r.doc_b, r.jaccard)
@@ -244,15 +245,16 @@ def test_dense_tiles_multiblock_regression(spark, docs, emb):
     assert multi_e == single and len(single) > 0
 
 
-def test_boilerplate_collapse_kills_hot_bands(spark):
+def test_boilerplate_collapse_kills_hot_bands(spark, monkeypatch):
     """One text duplicated k=512 times (the 100 TB boilerplate regime,
     VERDICT r2 top item): band-join candidate rows must be O(k) — here
     O(#distinct texts) — never the O(k^2)=130816 hot-bucket explosion,
     while the expanded pair output stays complete (all k(k-1)/2 pairs at
     jaccard 1.0) and resolution yields one cluster. Forced LSH route
-    (dense_vocab_limit=0) per the scale-only-bug protocol."""
+    (DENSE_VOCAB_LIMIT = 0) per the scale-only-bug protocol."""
     import pandas as pd
 
+    from text_ocr_spark.ops import dedup
     from text_ocr_spark.ops.dedup import (
         minhash_candidates,
         minhash_dedup,
@@ -275,13 +277,14 @@ def test_boilerplate_collapse_kills_hot_bands(spark):
     n_cand = minhash_candidates(docs512).count()
     assert n_cand <= 9 * 8 // 2  # bounded by distinct-text pairs, << k^2
 
-    pairs = minhash_dedup(docs512, 0.95, dense_vocab_limit=0)
+    monkeypatch.setattr(dedup, "DENSE_VOCAB_LIMIT", 0)
+    pairs = minhash_dedup(docs512, 0.95)
     n_boiler_pairs = pairs.filter(
         (pairs.doc_a < k) & (pairs.doc_b < k) & (pairs.jaccard == 1.0)
     ).count()
     assert n_boiler_pairs == k * (k - 1) // 2  # expansion is complete
 
-    resolved = neardup_resolve(docs512, 0.95, dense_vocab_limit=0)
+    resolved = neardup_resolve(docs512, 0.95)
     verdicts = {r.doc_id: (r.cluster_id, r.is_dup) for r in resolved.collect()}
     assert verdicts[0] == (0, 0)
     assert all(verdicts[i] == (0, 1) for i in range(1, k))
@@ -304,6 +307,7 @@ def test_collapse_expansion_invariant_random_corpora(spark, seed):
 
     import pandas as pd
 
+    from text_ocr_spark.ops import dedup
     from text_ocr_spark.ops.dedup import (
         jaccard_pairs,
         minhash_dedup,
@@ -332,13 +336,15 @@ def test_collapse_expansion_invariant_random_corpora(spark, seed):
 
     exact = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in jaccard_pairs(docs, 0.95, dense_vocab_limit=0).collect()
+        for r in jaccard_pairs(docs, 0.95).collect()
     }
     for limit in (0, 4096):  # forced LSH / adaptive (dense here)
-        got = {
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in minhash_dedup(docs, 0.95, dense_vocab_limit=limit).collect()
-        }
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dedup, "DENSE_VOCAB_LIMIT", limit)
+            got = {
+                (r.doc_a, r.doc_b, r.jaccard)
+                for r in minhash_dedup(docs, 0.95).collect()
+            }
         assert got == exact, f"route limit={limit}"
 
     parent: dict[int, int] = {}
@@ -444,11 +450,10 @@ def test_minhash_auxiliary_actions_bounded(spark, docs, monkeypatch):
     group-stats pass as a driver-blocking auxiliary action — it feeds
     the collapse gate AND the dense size cap — plus, ONLY when the rep
     count leaves the dense kernel possible, a vocab HLL pre-filter and
-    (small vocab only) the bounded vocab collect. Forcing BOTH
-    decisions (collapse=..., dense_vocab_limit=0) runs zero auxiliary
-    actions. Counted by patching the DataFrame action surface (AQE
-    splits one action into several jobs, so job counts are not the
-    honest unit)."""
+    (small vocab only) the bounded vocab collect. Counted by patching
+    the DataFrame action surface (AQE splits one action into several
+    jobs, so job counts are not the honest unit)."""
+    from text_ocr_spark.ops import dedup
     from text_ocr_spark.ops.dedup import minhash_dedup
 
     cls = type(docs)  # the RUNTIME class (pyspark.sql.classic.DataFrame)
@@ -469,34 +474,79 @@ def test_minhash_auxiliary_actions_bounded(spark, docs, monkeypatch):
 
         monkeypatch.setattr(cls, name, wrap)
 
-    # both decisions forced: zero auxiliary actions
-    minhash_dedup(docs, 0.95, dense_vocab_limit=0, collapse=True)
-    assert calls == []
-    # forced LSH, adaptive collapse: exactly the one exact-stats probe
-    minhash_dedup(docs, 0.95, dense_vocab_limit=0)
-    assert len(calls) == 1
-    calls.clear()
-    # stats + vocab HLL pre-filter (which says big vocab, so no collect)
-    minhash_dedup(docs, 0.95, dense_vocab_limit=4)
-    assert len(calls) == 2
-    calls.clear()
+    with pytest.MonkeyPatch.context() as mp:
+        # forced LSH, adaptive collapse: exactly the one exact-stats probe
+        mp.setattr(dedup, "DENSE_VOCAB_LIMIT", 0)
+        minhash_dedup(docs, 0.95)
+        assert len(calls) == 1
+        calls.clear()
+        # stats + vocab HLL pre-filter (which says big vocab, no collect)
+        mp.setattr(dedup, "DENSE_VOCAB_LIMIT", 4)
+        minhash_dedup(docs, 0.95)
+        assert len(calls) == 2
+        calls.clear()
     minhash_dedup(docs, 0.95)  # adaptive; dense on this corpus
     assert len(calls) <= 3
 
 
-def test_embed_prefilter_recall_at_many_blocks(spark, emb):
+def test_default_routes_pinned(spark, monkeypatch):
+    """Every default route decision of the dedup family at sf0.01, as
+    measured: unigram minhash_dedup and neardup_resolve take the dense
+    kernel (31-token vocabulary) without the collapse, 3-shingle
+    minhash_dedup takes LSH banding (16.2k shingles) without the
+    collapse, simhash_pairs skips the collapse, and the pretrain
+    capstone's neardup_resolve over the stripped corpus takes the
+    dense kernel with the collapse engaged. Spies on the route
+    builders record which ones each call plans."""
+    from text_ocr_spark.ops import dedup
+    from text_ocr_spark.ops.curate import _pretrain_gate, _pretrain_strip
+
+    dense, lsh, collapse = (
+        "_dense_jaccard_pairs", "_band_candidates", "collapse_exact"
+    )
+    taken: list[str] = []
+    for name in (dense, lsh, collapse):
+
+        def spy(*a, _orig=getattr(dedup, name), _name=name, **kw):
+            taken.append(_name)
+            return _orig(*a, **kw)
+
+        monkeypatch.setattr(dedup, name, spy)
+
+    def route(op, frame, **kw) -> set[str]:
+        taken.clear()
+        op(frame, **kw)
+        return set(taken)
+
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    assert route(dedup.minhash_dedup, docs) == {dense}
+    assert route(dedup.neardup_resolve, docs) == {dense}
+    assert route(dedup.minhash_dedup, docs, ngram=3) == {lsh}
+    assert route(dedup.simhash_pairs, docs) == set()
+    # the capstone's stage barriers, so resolve_pairs' own actions do
+    # not re-run the extraction
+    gated = _pretrain_gate(spark, SF_SMALL).localCheckpoint(eager=False)
+    stripped = _pretrain_strip(gated).localCheckpoint(eager=False)
+    assert route(dedup.neardup_resolve, stripped) == {collapse, dense}
+
+
+def test_embed_prefilter_recall_at_many_blocks(spark, emb, monkeypatch):
     """block_size=16 => 30+ blocks: the cross-block collision recall is
     exercised far past EXHAUSTIVE_BLOCK_LIMIT and must still be exact on
-    this corpus (ADVICE r2: recall assertion beyond the 8-block case)."""
+    this corpus (ADVICE r2: recall assertion beyond the 8-block case).
+    The default engages the prefilter here; a raised limit forces the
+    exhaustive tiles."""
+    from text_ocr_spark.ops import dedup
     from text_ocr_spark.ops.dedup import embed_pairs
 
-    exhaustive = {
-        (r.vec_a, r.vec_b, r.cos)
-        for r in embed_pairs(emb, block_size=16, prefilter=False).collect()
-    }
     pre = {
         (r.vec_a, r.vec_b, r.cos)
-        for r in embed_pairs(emb, block_size=16, prefilter=True).collect()
+        for r in embed_pairs(emb, block_size=16).collect()
+    }
+    monkeypatch.setattr(dedup, "EXHAUSTIVE_BLOCK_LIMIT", 1 << 30)
+    exhaustive = {
+        (r.vec_a, r.vec_b, r.cos)
+        for r in embed_pairs(emb, block_size=16).collect()
     }
     assert pre == exhaustive
     assert len(exhaustive) > 0
@@ -598,30 +648,34 @@ def test_resolve_pairs_refuses_unconverged_edges(spark, monkeypatch):
         spark.conf.set(coalesce_key, prior)
 
 
-def test_embed_prefilter_matches_exhaustive(spark, emb):
+def test_embed_prefilter_matches_exhaustive(spark, emb, monkeypatch):
     """LSH candidate-block tile enumeration loses nothing on the real
-    corpus (forced small blocks so the prefilter actually routes)."""
+    corpus (small blocks, and EXHAUSTIVE_BLOCK_LIMIT = 0 so the
+    prefilter actually routes)."""
+    from text_ocr_spark.ops import dedup
     from text_ocr_spark.ops.dedup import embed_pairs
 
     exhaustive = {
         (r.vec_a, r.vec_b, r.cos)
-        for r in embed_pairs(emb, block_size=64, prefilter=False).collect()
+        for r in embed_pairs(emb, block_size=64).collect()
     }
+    monkeypatch.setattr(dedup, "EXHAUSTIVE_BLOCK_LIMIT", 0)
     pre = {
         (r.vec_a, r.vec_b, r.cos)
-        for r in embed_pairs(emb, block_size=64, prefilter=True).collect()
+        for r in embed_pairs(emb, block_size=64).collect()
     }
     assert pre == exhaustive
     assert len(exhaustive) > 0
 
 
-def test_embed_prefilter_prunes_antipodal_blocks(spark):
+def test_embed_prefilter_prunes_antipodal_blocks(spark, monkeypatch):
     """Antipodal vectors agree with NO sign-random-projection plane, so
     their (singleton) blocks never share a bucket: the candidate join
     must enumerate fewer than the blanket B(B+1)/2 tiles, and the pair
     output is still exact (antipodal cos = -1 is below any threshold)."""
     import pandas as pd
 
+    from text_ocr_spark.ops import dedup
     from text_ocr_spark.ops.dedup import _candidate_block_pairs, embed_pairs
     from pyspark.sql import functions as F
 
@@ -636,13 +690,14 @@ def test_embed_prefilter_prunes_antipodal_blocks(spark):
         emb, F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks))
     ).count()
     assert cand < n_blocks * (n_blocks + 1) // 2
-    pre = {
-        (r.vec_a, r.vec_b)
-        for r in embed_pairs(emb, threshold=0.35, block_size=1, prefilter=True).collect()
-    }
     ex = {
         (r.vec_a, r.vec_b)
-        for r in embed_pairs(emb, threshold=0.35, block_size=1, prefilter=False).collect()
+        for r in embed_pairs(emb, threshold=0.35, block_size=1).collect()
+    }
+    monkeypatch.setattr(dedup, "EXHAUSTIVE_BLOCK_LIMIT", 0)
+    pre = {
+        (r.vec_a, r.vec_b)
+        for r in embed_pairs(emb, threshold=0.35, block_size=1).collect()
     }
     assert pre == ex
     # same-sign pairs all have cos = 1: 4+4 vectors -> 6+6 pairs
@@ -766,12 +821,13 @@ def test_collapse_gate_skips_on_low_dup_corpora(spark, docs, caplog):
     """r4 dup-rate gate (VERDICT r3 item 1): a corpus of distinct texts
     skips the exact-dup collapse (logged — no silent strategy change),
     the dup-heavy fixture corpus engages it, and forced-on vs forced-off
-    are output-identical on BOTH corpora — the gate is a physical
-    decision, never a semantic one."""
+    (``_gate_collapse`` patched) are output-identical on BOTH corpora —
+    the gate is a physical decision, never a semantic one."""
     import logging
 
     from pyspark.sql import functions as F
 
+    from text_ocr_spark.ops import dedup
     from text_ocr_spark.ops.dedup import (
         minhash_dedup,
         neardup_resolve,
@@ -788,6 +844,11 @@ def test_collapse_gate_skips_on_low_dup_corpora(spark, docs, caplog):
     def skipped() -> bool:
         return any("SKIPPED" in r.getMessage() for r in caplog.records)
 
+    def forced(collapse: bool, op, *args):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dedup, "_gate_collapse", lambda *_: collapse)
+            return {tuple(r) for r in op(*args).collect()}
+
     with caplog.at_level(logging.INFO, logger=logger):
         caplog.clear()
         auto = {
@@ -795,14 +856,8 @@ def test_collapse_gate_skips_on_low_dup_corpora(spark, docs, caplog):
             for r in minhash_dedup(lowdup, 0.95).collect()
         }
         assert skipped()  # zero-dup corpus: gate skips
-        forced_on = {
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in minhash_dedup(lowdup, 0.95, collapse=True).collect()
-        }
-        forced_off = {
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in minhash_dedup(lowdup, 0.95, collapse=False).collect()
-        }
+        forced_on = forced(True, minhash_dedup, lowdup, 0.95)
+        forced_off = forced(False, minhash_dedup, lowdup, 0.95)
         assert auto == forced_on == forced_off
 
         # the fixture documents corpora are (nearly) dup-free, so the
@@ -821,30 +876,15 @@ def test_collapse_gate_skips_on_low_dup_corpora(spark, docs, caplog):
 
         # forced-off still equals forced-on at a high dup rate (the
         # algebra holds in both directions at any dup rate)
-        off = {
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in minhash_dedup(heavy, 0.95, collapse=False).collect()
-        }
+        off = forced(False, minhash_dedup, heavy, 0.95)
         assert auto_h == off and len(off) > 0
 
-        sh_on = {
-            (r.doc_a, r.doc_b, r.hamming)
-            for r in simhash_pairs(heavy, collapse=True).collect()
-        }
-        sh_off = {
-            (r.doc_a, r.doc_b, r.hamming)
-            for r in simhash_pairs(heavy, collapse=False).collect()
-        }
+        sh_on = forced(True, simhash_pairs, heavy)
+        sh_off = forced(False, simhash_pairs, heavy)
         assert sh_on == sh_off and len(sh_on) > 0
 
-        rs_on = {
-            r.doc_id: (r.cluster_id, r.keep_id, r.is_dup)
-            for r in neardup_resolve(heavy, 0.95, collapse=True).collect()
-        }
-        rs_off = {
-            r.doc_id: (r.cluster_id, r.keep_id, r.is_dup)
-            for r in neardup_resolve(heavy, 0.95, collapse=False).collect()
-        }
+        rs_on = forced(True, neardup_resolve, heavy, 0.95)
+        rs_off = forced(False, neardup_resolve, heavy, 0.95)
         assert rs_on == rs_off
 
 
@@ -856,6 +896,7 @@ def test_shingle_mode_sees_word_order(spark):
     shingle so identical short docs still pair."""
     import pandas as pd
 
+    from text_ocr_spark.ops import dedup
     from text_ocr_spark.ops.dedup import jaccard_pairs, minhash_dedup
 
     words = [f"w{i}" for i in range(40)]
@@ -892,15 +933,15 @@ def test_shingle_mode_sees_word_order(spark):
     # including the sub-n whole-doc fallback), on both forced routes
     exact = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in jaccard_pairs(docs, 0.95, dense_vocab_limit=0, ngram=3).collect()
+        for r in jaccard_pairs(docs, 0.95, ngram=3).collect()
     }
     for limit in (0, 4096):
-        got = {
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in minhash_dedup(
-                docs, 0.95, dense_vocab_limit=limit, ngram=3
-            ).collect()
-        }
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dedup, "DENSE_VOCAB_LIMIT", limit)
+            got = {
+                (r.doc_a, r.doc_b, r.jaccard)
+                for r in minhash_dedup(docs, 0.95, ngram=3).collect()
+            }
         assert got == exact, f"route limit={limit}"
 
 
@@ -1028,7 +1069,7 @@ def test_probe_f2_excess_estimates_hot_pair_mass(spark):
     assert (n_reps, n_docs, f2x) == (4000, 4000, 0)
 
 
-def test_hot_group_engages_collapse_at_low_dup_rate(spark, caplog):
+def test_hot_group_engages_collapse_at_low_dup_rate(spark, caplog, monkeypatch):
     """The r3 rate-gate blind spot is closed: one 300-copy exact-dup
     group hiding among 15,500 distinct docs (dup rate 1.9% — under the
     2% rate gate) trips the hot-pair-mass statistic
@@ -1039,6 +1080,7 @@ def test_hot_group_engages_collapse_at_low_dup_rate(spark, caplog):
 
     import pandas as pd
 
+    from text_ocr_spark.ops import dedup
     from text_ocr_spark.ops.dedup import minhash_dedup
 
     k, n = 300, 15_500
@@ -1059,9 +1101,10 @@ def test_hot_group_engages_collapse_at_low_dup_rate(spark, caplog):
         assert any(
             "ENGAGED by hot-pair mass" in r.getMessage() for r in caplog.records
         )
+    monkeypatch.setattr(dedup, "_gate_collapse", lambda *_: False)
     want = {
         (r.doc_a, r.doc_b)
-        for r in minhash_dedup(docs, 0.95, collapse=False).collect()
+        for r in minhash_dedup(docs, 0.95).collect()
     }
     assert got == want
     assert len(got) == k * (k - 1) // 2  # exactly the mega-group's pairs
@@ -1111,67 +1154,3 @@ def test_ivf_trained_recall_on_clustered_corpus(spark):
     r_t = recall(trained)
     assert r_t >= 0.9, (r_p, r_t)
     assert r_t > r_p + 0.2, (r_p, r_t)
-
-
-def test_corpus_stats_carrier_one_probe_per_dag(spark, docs, monkeypatch):
-    """VERDICT r4 item 8: a DAG that runs minhash_dedup +
-    neardup_resolve + simhash_pairs over the same corpus pays the
-    probe ONCE via the CorpusStats carrier — zero further auxiliary
-    driver actions — with outputs identical to the self-probed ops;
-    stats from a different frame or tokenizer are refused."""
-    import pytest as _pytest
-
-    from pyspark.sql import functions as F
-
-    from text_ocr_spark.ops.dedup import (
-        corpus_stats,
-        minhash_dedup,
-        neardup_resolve,
-        simhash_pairs,
-    )
-
-    want_pairs = sorted(map(tuple, minhash_dedup(docs, 0.95).collect()))
-    want_res = sorted(map(tuple, neardup_resolve(docs, 0.95).collect()))
-    want_sim = sorted(map(tuple, simhash_pairs(docs).collect()))
-
-    stats = corpus_stats(docs)  # the DAG's one probe
-
-    cls = type(docs)
-    calls: list[str] = []
-    depth = {"d": 0}
-    for name in ("first", "head", "take", "collect", "count", "toPandas"):
-        orig = getattr(cls, name)
-
-        def wrap(self, *a, _orig=orig, _name=name, **kw):
-            top = depth["d"] == 0
-            depth["d"] += 1
-            try:
-                return _orig(self, *a, **kw)
-            finally:
-                depth["d"] -= 1
-                if top:
-                    calls.append(_name)
-
-        monkeypatch.setattr(cls, name, wrap)
-
-    got_pairs = minhash_dedup(docs, 0.95, stats=stats)
-    got_sim = simhash_pairs(docs, stats=stats)
-    # plan construction ran zero auxiliary actions (neardup_resolve is
-    # checked for values only below — its star-contraction fixed-point
-    # counters are inherent bounded actions, not probes)
-    assert calls == []
-    monkeypatch.undo()
-
-    got_res = neardup_resolve(docs, 0.95, stats=stats)
-    assert sorted(map(tuple, got_pairs.collect())) == want_pairs
-    assert sorted(map(tuple, got_res.collect())) == want_res
-    assert sorted(map(tuple, got_sim.collect())) == want_sim
-
-    # guard rails: wrong frame, wrong ngram, wrong dense limit
-    other = docs.where(F.col("doc_id") % 2 == 0)
-    with _pytest.raises(ValueError, match="fingerprint"):
-        minhash_dedup(other, 0.95, stats=stats)
-    with _pytest.raises(ValueError, match="ngram"):
-        minhash_dedup(docs, 0.95, ngram=3, stats=stats)
-    with _pytest.raises(ValueError, match="dense_vocab_limit"):
-        minhash_dedup(docs, 0.95, dense_vocab_limit=7, stats=stats)

@@ -128,16 +128,19 @@ def test_q5_dimension_chains_broadcast(spark):
     assert "CartesianProduct" not in p
 
 
-def test_collapse_skip_path_drops_expansion_joins(spark):
+def test_collapse_skip_path_drops_expansion_joins(spark, monkeypatch):
     """r4 dup-rate gate, physical evidence: on a low-dup corpus the
-    default minhash plan must contain strictly fewer exchanges than the
+    skip plan must contain strictly fewer exchanges than the
     forced-collapse plan (the rep semi-join + membership-expansion
     joins are gone), and zero SortAggregates either way (the known
-    string-agg demotion pitfall)."""
+    string-agg demotion pitfall). Both plans take the LSH route
+    (DENSE_VOCAB_LIMIT = 0); the collapse is forced by patching
+    ``_gate_collapse``."""
     import re as _re
 
     from pyspark.sql import functions as F
 
+    from text_ocr_spark.ops import dedup
     from text_ocr_spark.ops.dedup import minhash_dedup
 
     docs = spark.read.parquet(f"{SF_TINY}/documents.parquet")
@@ -150,8 +153,12 @@ def test_collapse_skip_path_drops_expansion_joins(spark):
     def n_exchanges(df):
         return len(_re.findall(r"\(\d+\) Exchange", plan_str(spark, df)))
 
-    skip = minhash_dedup(lowdup, 0.95, dense_vocab_limit=0, collapse=False)
-    full = minhash_dedup(lowdup, 0.95, dense_vocab_limit=0, collapse=True)
+    monkeypatch.setattr(dedup, "DENSE_VOCAB_LIMIT", 0)
+    plans = {}
+    for collapse in (False, True):
+        monkeypatch.setattr(dedup, "_gate_collapse", lambda *_, c=collapse: c)
+        plans[collapse] = minhash_dedup(lowdup, 0.95)
+    skip, full = plans[False], plans[True]
     assert n_exchanges(skip) < n_exchanges(full)
     for df in (skip, full):
         assert "SortAggregate" not in plan_str(spark, df)

@@ -4,8 +4,9 @@ Four strategies, scale-ordered:
 
 - exact:    md5 hash-groupBy — one shuffle on the hash, no pairs.
 - jaccard:  exact token-set jaccard via an inverted-index self-join —
-            the oracle-grade ground truth; quadratic in the worst case,
-            bounded by blocking on shared tokens.
+            ``jaccard_pairs``, the reference every near-dup route is
+            tested against; quadratic in the worst case, bounded by
+            blocking on shared tokens. It picks no route of its own.
 - minhash:  exact-duplicate collapse FIRST (one representative per
             md5(text) group — so million-copy boilerplate can never
             flood a band bucket with O(k^2) candidate pairs; identical
@@ -13,8 +14,7 @@ Four strategies, scale-ordered:
             representative verdicts through the groups afterwards is
             provably output-identical), then an adaptive physical
             strategy for one logical op (the broadcast-vs-sortmerge
-            analog), picked by a one-pass approx_count_distinct
-            vocabulary probe:
+            analog), picked by the corpus probe (``_probe_corpus``):
             * big vocab (real text): MinHash signatures (numpy over
               Arrow batches) -> LSH band bucket join -> exact-jaccard
               verification of candidates. Candidate generation is linear
@@ -37,6 +37,10 @@ Four strategies, scale-ordered:
             same representative-collapse before banding (identical texts
             have identical simhashes, hamming 0 <= any radius).
 
+Every physical choice (collapse or not, dense or LSH, exhaustive or
+prefiltered embedding tiles) is made from the input by the probe and
+the module constants; no op takes a parameter that forces a route.
+
 Pair OUTPUT is inherently quadratic in duplication (k exact copies are
 k(k-1)/2 true pairs no matter how they are found); the collapse moves
 that quadratic term out of the band-join shuffle/tasks and into a plain
@@ -54,7 +58,6 @@ from __future__ import annotations
 
 import hashlib
 from collections.abc import Iterator
-from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -79,22 +82,6 @@ DENSE_BLOCK = 2048
 #: quadratic — no strategy fixes that; resolve_pairs' cluster output is
 #: the scalable product there.
 DENSE_MAX_DOCS = 8 * DENSE_BLOCK
-
-
-@dataclass(frozen=True)
-class CorpusStats:
-    """One probe's worth of strategy statistics, reusable across the
-    dedup family within a DAG (VERDICT r4 item 8 — see
-    ``corpus_stats``). All counts are exact; ``vocab`` is the sorted
-    exact vocabulary when the dense kernel applies, else None."""
-
-    n_reps: int
-    n_docs: int
-    f2_excess: int
-    vocab: tuple[str, ...] | None
-    ngram: int
-    dense_vocab_limit: int
-    fingerprint: str
 
 
 def _tile_partitions(n_blocks: int, df: DataFrame) -> int:
@@ -334,8 +321,9 @@ def _probe_corpus(
     per doc), so it is scale-sane at 100 TB. Singleton keys (including
     every null-text doc, whose sentinel key is unique) contribute
     exactly 0 to the mass. The unused ``toks`` column is pruned by
-    Catalyst, so forced-route callers (``dense_vocab_limit <= 0``) pay
-    no tokenization.
+    Catalyst, so a caller that passes ``dense_vocab_limit <= 0`` pays
+    no tokenization: only ``simhash_pairs`` does, because it has no
+    dense route to pick.
 
     The vocabulary check (dense routing only) stays a second, bounded
     job gated to run ONLY when the rep count allows the dense kernel
@@ -373,44 +361,17 @@ def _probe_corpus(
 
 
 def jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.95,
-    dense_vocab_limit: int = DENSE_VOCAB_LIMIT,
-    ngram: int = 1,
-    stats: "CorpusStats | None" = None,
+    docs: DataFrame, threshold: float = 0.95, ngram: int = 1
 ) -> DataFrame:
     """Exact token-set jaccard pairs (doc_a < doc_b, jaccard >= threshold).
 
-    Two exact physical strategies, probe-routed like minhash_dedup:
-    small vocabularies take the dense bitset tile kernel (the inverted
-    index degenerates when every token is common — sum(df^2) join rows
-    grow quadratically); big vocabularies take inverted-index blocking,
-    where pairs must share >= 1 token so the self-join is on the token,
-    not a cross join. The dense cap keys on the FULL doc count (no
-    collapse here), so the probe key is doc_id itself.
+    The reference the near-dup routes are tested against: one physical
+    plan, inverted-index blocking, where pairs must share >= 1 token so
+    the self-join is on the token, not a cross join. It degenerates
+    (sum(df^2) join rows) when every token is common — the regime the
+    dense tile kernel of ``minhash_dedup`` covers.
     """
-    toks_df = _toks_of(docs, ngram)
-    if stats is not None:
-        # canonical (text-hash-keyed) stats: the dense cap here keys on
-        # the FULL doc count (no collapse in this op), which the
-        # carrier holds exactly
-        vocab, _, n_docs, _f2 = _use_stats(
-            stats, docs, ngram, dense_vocab_limit, "jaccard_pairs"
-        )
-        if vocab is not None and n_docs <= DENSE_MAX_DOCS:
-            return _dense_jaccard_pairs(
-                docs, threshold, vocab, n_docs, toks=toks_df
-            )
-    elif dense_vocab_limit > 0:  # no dup gate — skip the probe when forced
-        vocab, _, n_docs, _f2 = _probe_corpus(
-            _probe_frame(docs, ngram, key_col=F.col("doc_id")),
-            dense_vocab_limit,
-        )
-        if vocab is not None:
-            return _dense_jaccard_pairs(
-                docs, threshold, vocab, n_docs, toks=toks_df
-            )
-    tok = toks_df.select("doc_id", F.explode("toks").alias("w"))
+    tok = _toks_of(docs, ngram).select("doc_id", F.explode("toks").alias("w"))
     card = tok.groupBy("doc_id").agg(F.count("*").alias("card"))
     a, b = tok.alias("a"), tok.alias("b")
     inter = (
@@ -547,7 +508,7 @@ def _dense_jaccard_pairs(
     docs: DataFrame,
     threshold: float,
     vocab: list[str],
-    n_docs_est: int,
+    n_docs: int,
     block_size: int = DENSE_BLOCK,
     toks: DataFrame | None = None,
 ) -> DataFrame:
@@ -571,9 +532,10 @@ def _dense_jaccard_pairs(
     words = (len(vocab) + 63) // 64
     nbytes = words * 8
 
-    # n_docs_est comes from the probe's approx_count_distinct — no extra
-    # scan; block count only sets task granularity, never output values
-    n_blocks = max(1, -(-n_docs_est // block_size))
+    # n_docs is the probe's exact row count of the tiled frame (reps or
+    # docs) — no extra scan; block count only sets task granularity,
+    # never output values
+    n_blocks = max(1, -(-n_docs // block_size))
 
     tok = toks if toks is not None else _toks_of(docs)
 
@@ -677,8 +639,7 @@ def _dense_jaccard_pairs(
 #: the physical floor: it fires exactly for groups k >~ sqrt(n), whose
 #: single bucket rivals the entire rest of the shuffle; smaller groups'
 #: buckets are bounded by ~n candidate rows (corpus-order work, not
-#: unbounded k^2) and AQE skew-split absorbs them; pipelines that KNOW
-#: their skew can still force collapse=True.
+#: unbounded k^2) and AQE skew-split absorbs them.
 COLLAPSE_MIN_DUP_RATE = 0.02
 
 #: absolute floor of the hot-pair-mass gate: ~2^16 candidate pairs per
@@ -730,7 +691,6 @@ def _gate_collapse(n_reps: int, n_docs: int, f2_excess: int, op: str) -> bool:
 def _rep_neardup_pairs(
     base: DataFrame,
     threshold: float,
-    dense_vocab_limit: int,
     ngram: int = 1,
     strategy: tuple[list[str] | None, int] | None = None,
 ) -> DataFrame:
@@ -743,18 +703,19 @@ def _rep_neardup_pairs(
     the probe runs over raw docs keyed by text hash — no collapse
     shuffle in the auxiliary job — and within the final query every
     reference to the base subtree rides ONE ReuseExchange'd collapse
-    shuffle). The probe routes between the dense bitset kernel (small
-    vocab — LSH buckets would degenerate) and LSH banding + exact
-    verification (big vocab). Both are exact at the output: with 128
-    perms / 32 bands of 4 rows, LSH recall at j >= 0.95 is
-    1 - (1 - j^4)^32 ~= 1 - 4e-24, and the dense path is exhaustive, so
-    either way the result equals jaccard_pairs (pytest-asserted).
+    shuffle); None probes ``base`` here. The probe routes between the
+    dense bitset kernel (vocab within DENSE_VOCAB_LIMIT — LSH buckets
+    would degenerate) and LSH banding + exact verification (big
+    vocab). Both are exact at the output: with 128 perms / 32 bands of
+    4 rows, LSH recall at j >= 0.95 is 1 - (1 - j^4)^32 ~= 1 - 4e-24,
+    and the dense path is exhaustive, so either way the result equals
+    jaccard_pairs (pytest-asserted).
     """
     toks_df = _toks_of(base, ngram)
     if strategy is None:
         vocab, n_reps, _, _f2 = _probe_corpus(
             _probe_frame(base, ngram, key_col=F.col("doc_id")),
-            dense_vocab_limit,
+            DENSE_VOCAB_LIMIT,
         )
         strategy = (vocab, n_reps)
     vocab, n_base = strategy
@@ -768,140 +729,44 @@ def _rep_neardup_pairs(
     )
 
 
-def corpus_stats(
-    docs: DataFrame,
-    ngram: int = 1,
-    dense_vocab_limit: int = DENSE_VOCAB_LIMIT,
-) -> "CorpusStats":
-    """Run the strategy probe ONCE and return a reusable carrier
-    (VERDICT r4 item 8): a curation DAG that calls several dedup-family
-    ops on the same corpus (``minhash_dedup`` + ``neardup_resolve`` +
-    ``simhash_pairs``...) passes the result as ``stats=`` so the probe
-    executes once per DAG instead of once per op. The carrier records
-    an expression-id-normalized digest of the input's analyzed plan;
-    every consumer validates it (plus the tokenizer ngram) and raises
-    on mismatch rather than silently using stats from a different
-    corpus."""
-    vocab, n_reps, n_docs, f2x = _probe_corpus(
-        _probe_frame(docs, ngram), dense_vocab_limit
-    )
-    return CorpusStats(
-        n_reps=n_reps,
-        n_docs=n_docs,
-        f2_excess=f2x,
-        vocab=tuple(vocab) if vocab is not None else None,
-        ngram=ngram,
-        dense_vocab_limit=dense_vocab_limit,
-        fingerprint=_plan_fingerprint(docs),
-    )
-
-
-def _plan_fingerprint(df: DataFrame) -> str:
-    """Input-identity digest for CorpusStats validation: md5 of the
-    analyzed logical plan with expression ids (#123 — fresh per
-    invocation) normalized away. No data is scanned; two frames with
-    the same lineage shape agree, a different source/filter/projection
-    disagrees. Conservative by construction: a false mismatch costs
-    one re-probe, a false match cannot occur for frames that read
-    different inputs."""
-    import re
-
-    s = df._jdf.queryExecution().analyzed().toString()
-    return hashlib.md5(re.sub(r"#\d+", "#", s).encode()).hexdigest()
-
-
-def _use_stats(
-    stats: "CorpusStats", docs: DataFrame, ngram: int, dense_vocab_limit: int, op: str
-) -> tuple[list[str] | None, int, int, int]:
-    """Validate a caller-supplied CorpusStats against this op's input
-    and parameters, and unpack it in _probe_corpus return shape."""
-    if stats.ngram != ngram:
-        raise ValueError(
-            f"{op}: CorpusStats was probed with ngram={stats.ngram}, "
-            f"but this call tokenizes with ngram={ngram}"
-        )
-    if stats.dense_vocab_limit != dense_vocab_limit:
-        raise ValueError(
-            f"{op}: CorpusStats was probed with dense_vocab_limit="
-            f"{stats.dense_vocab_limit}, but this call uses "
-            f"{dense_vocab_limit} — re-probe with corpus_stats(docs, "
-            f"ngram, {dense_vocab_limit})"
-        )
-    fp = _plan_fingerprint(docs)
-    if stats.fingerprint != fp:
-        raise ValueError(
-            f"{op}: CorpusStats fingerprint does not match this input "
-            "frame — the stats were probed on a different corpus (or a "
-            "differently-shaped plan over it); re-run corpus_stats on "
-            "THIS frame"
-        )
-    vocab = list(stats.vocab) if stats.vocab is not None else None
-    return vocab, stats.n_reps, stats.n_docs, stats.f2_excess
-
-
 def _gated_neardup_pairs(
-    docs: DataFrame,
-    threshold: float,
-    dense_vocab_limit: int,
-    ngram: int,
-    collapse: bool | None,
-    op: str,
-    stats: "CorpusStats | None" = None,
+    docs: DataFrame, threshold: float, ngram: int, op: str
 ) -> tuple[DataFrame, DataFrame | None, DataFrame | None]:
     """Shared minhash_dedup / neardup_resolve core: one probe pass feeds
     BOTH the dup-rate collapse gate and the dense-vs-LSH strategy pick,
     then the verified pairs run over reps (collapse engaged) or the raw
     corpus (skipped). -> (pairs, reps, members); members is None iff the
     collapse was skipped (pairs are then already doc-level)."""
-    if stats is not None:
-        vocab, n_reps, n_docs, f2_excess = _use_stats(
-            stats, docs, ngram, dense_vocab_limit, op
-        )
-    elif collapse is not None and dense_vocab_limit <= 0:
-        # both decisions forced: no auxiliary action at all
-        vocab, n_reps, n_docs, f2_excess = None, 0, 0, 0
-    else:
-        vocab, n_reps, n_docs, f2_excess = _probe_corpus(
-            _probe_frame(docs, ngram), dense_vocab_limit
-        )
-    if collapse is None:
-        collapse = _gate_collapse(n_reps, n_docs, f2_excess, op)
-    if collapse:
+    vocab, n_reps, n_docs, f2_excess = _probe_corpus(
+        _probe_frame(docs, ngram), DENSE_VOCAB_LIMIT
+    )
+    if _gate_collapse(n_reps, n_docs, f2_excess, op):
         reps, members = collapse_exact(docs)
         pairs = _rep_neardup_pairs(
-            reps, threshold, dense_vocab_limit, ngram, strategy=(vocab, n_reps)
+            reps, threshold, ngram, strategy=(vocab, n_reps)
         )
         return pairs, reps, members
     # skipped: the dense cap re-checks against the FULL doc count (the
     # tiles would run over every doc, not one per distinct text)
-    pairs = _rep_neardup_pairs(
-        docs, threshold, dense_vocab_limit, ngram, strategy=(vocab, n_docs)
-    )
+    pairs = _rep_neardup_pairs(docs, threshold, ngram, strategy=(vocab, n_docs))
     return pairs, None, None
 
 
 def minhash_dedup(
-    docs: DataFrame,
-    threshold: float = 0.95,
-    dense_vocab_limit: int = DENSE_VOCAB_LIMIT,
-    ngram: int = 1,
-    collapse: bool | None = None,
-    stats: CorpusStats | None = None,
+    docs: DataFrame, threshold: float = 0.95, ngram: int = 1
 ) -> DataFrame:
     """Near-dup pairs at jaccard >= threshold — representative-collapse
     first (when the dup-rate probe says the corpus has exact dups worth
-    collapsing; pass ``collapse=True/False`` to force), then the
-    adaptive verified-banding of ``_rep_neardup_pairs``, then expansion
-    of the verified pairs back through the exact-dup groups (provably
-    output-identical to banding the raw corpus; the quadratic
-    duplication term lives only in the final membership join, never in
-    a band bucket). ``ngram > 1`` dedups on w-shingles instead of token
-    sets (order-sensitive, the production near-dup unit). Equals
-    jaccard_pairs on any corpus (pytest-asserted). ``stats`` (from
-    ``corpus_stats`` on the same frame) skips the probe entirely."""
+    collapsing), then the adaptive verified-banding of
+    ``_rep_neardup_pairs``, then expansion of the verified pairs back
+    through the exact-dup groups (provably output-identical to banding
+    the raw corpus; the quadratic duplication term lives only in the
+    final membership join, never in a band bucket). ``ngram > 1`` dedups
+    on w-shingles instead of token sets (order-sensitive, the production
+    near-dup unit). Equals jaccard_pairs on any corpus
+    (pytest-asserted)."""
     pairs, _reps, members = _gated_neardup_pairs(
-        docs, threshold, dense_vocab_limit, ngram, collapse, "minhash_dedup",
-        stats=stats,
+        docs, threshold, ngram, "minhash_dedup"
     )
     if members is None:
         return pairs
@@ -1071,12 +936,7 @@ def resolve_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
 
 
 def neardup_resolve(
-    docs: DataFrame,
-    threshold: float = 0.95,
-    dense_vocab_limit: int = DENSE_VOCAB_LIMIT,
-    ngram: int = 1,
-    collapse: bool | None = None,
-    stats: CorpusStats | None = None,
+    docs: DataFrame, threshold: float = 0.95, ngram: int = 1
 ) -> DataFrame:
     """Verified rep pairs -> connected components -> keep/drop per doc.
 
@@ -1091,8 +951,7 @@ def neardup_resolve(
     member join degenerates to identity there, so it is elided).
     """
     pairs, reps, members = _gated_neardup_pairs(
-        docs, threshold, dense_vocab_limit, ngram, collapse,
-        "neardup_resolve", stats=stats,
+        docs, threshold, ngram, "neardup_resolve"
     )
     if members is None:
         return resolve_pairs(
@@ -1317,7 +1176,6 @@ def embed_pairs(
     emb: DataFrame,
     threshold: float = EMBED_THRESHOLD,
     block_size: int = DENSE_BLOCK,
-    prefilter: bool | None = None,
     n_vecs: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by embedding cosine: (vec_a, vec_b, round(cos, 6)).
@@ -1329,14 +1187,13 @@ def embed_pairs(
 
     Tile enumeration is the scale knob (VERDICT r1): blanket B(B+1)/2
     enumeration is exact but O(n^2 d) — at 1B vectors that's ~5x10^9
-    tiles. Above EXHAUSTIVE_BLOCK_LIMIT blocks (prefilter=None picks
-    automatically; pass True/False to force) tiles route through the
+    tiles. Above EXHAUSTIVE_BLOCK_LIMIT blocks tiles route through the
     sign-random-projection candidate-block join instead, bounding work
     to colliding regions; block-granular collision keeps recall near 1
     (exact on any corpus whose >= threshold pairs collide in >= 1 of the
     8 tables — pytest asserts equality vs the exhaustive path at forced
-    small blocks, incl. block_size=16 => 30+ blocks). When the auto
-    switch engages it is LOGGED (no silent exact->probabilistic cap,
+    small blocks, incl. block_size=16 => 30+ blocks). When the switch
+    engages it is LOGGED (no silent exact->probabilistic cap,
     ADVICE r2): a dropped pair is possible only if two >= threshold
     blocks collide in none of the 8 tables, P ~ (1 - (1-theta/pi)^4)^8
     per table-miss at the pair level and strictly weaker block-level.
@@ -1347,18 +1204,17 @@ def embed_pairs(
     if n_vecs is None:
         n_vecs = emb.count()  # metadata-only count on a parquet source
     n_blocks = max(1, -(-n_vecs // block_size))
-    if prefilter is None:
-        prefilter = n_blocks > EXHAUSTIVE_BLOCK_LIMIT
-        if prefilter:
-            import logging
+    prefilter = n_blocks > EXHAUSTIVE_BLOCK_LIMIT
+    if prefilter:
+        import logging
 
-            logging.getLogger(__name__).info(
-                "embed_pairs: LSH candidate-block prefilter ENGAGED "
-                "(%d blocks > %d); tile enumeration is now collision-"
-                "bounded, recall asserted by tests/test_ops.py",
-                n_blocks,
-                EXHAUSTIVE_BLOCK_LIMIT,
-            )
+        logging.getLogger(__name__).info(
+            "embed_pairs: LSH candidate-block prefilter ENGAGED "
+            "(%d blocks > %d); tile enumeration is now collision-"
+            "bounded, recall asserted by tests/test_ops.py",
+            n_blocks,
+            EXHAUSTIVE_BLOCK_LIMIT,
+        )
     block = F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks))
     blocks = (
         emb.select("vec_id", "embedding")
@@ -1454,12 +1310,7 @@ def _simhash_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": np.array(sh, dtype=np.uint64).astype(np.int64)})
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    radius: int = 3,
-    collapse: bool | None = None,
-    stats: CorpusStats | None = None,
-) -> DataFrame:
+def simhash_pairs(docs: DataFrame, radius: int = 3) -> DataFrame:
     """Near-dup pairs with hamming(simhash_a, simhash_b) <= radius.
 
     Exact-duplicate collapse first (identical texts have identical
@@ -1469,25 +1320,9 @@ def simhash_pairs(
     contributes ONE row per band, never an O(k^2) hot bucket. The same
     dup-rate gate as minhash_dedup skips the collapse on low-dup
     corpora (its probe is the exact group-stats pass — no tokenization;
-    simhash has no dense route to pick). A caller-supplied ``stats``
-    skips the probe; only its counts are used, so any unigram-probed
-    CorpusStats of this frame works regardless of its vocab fields."""
-    if collapse is None:
-        if stats is not None:
-            if stats.fingerprint != _plan_fingerprint(docs):
-                raise ValueError(
-                    "simhash_pairs: CorpusStats fingerprint does not "
-                    "match this input frame — re-run corpus_stats"
-                )
-            n_reps, n_docs, f2_excess = (
-                stats.n_reps, stats.n_docs, stats.f2_excess,
-            )
-        else:
-            _, n_reps, n_docs, f2_excess = _probe_corpus(
-                _probe_frame(docs), 0
-            )
-        collapse = _gate_collapse(n_reps, n_docs, f2_excess, "simhash_pairs")
-    if not collapse:
+    simhash has no dense route to pick)."""
+    _, n_reps, n_docs, f2_excess = _probe_corpus(_probe_frame(docs), 0)
+    if not _gate_collapse(n_reps, n_docs, f2_excess, "simhash_pairs"):
         return _simhash_rep_pairs(docs, radius)
     reps, members = collapse_exact(docs)
     rep_pairs = _simhash_rep_pairs(reps, radius)

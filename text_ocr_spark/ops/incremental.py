@@ -49,7 +49,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from text_ocr_spark.ops.dedup import (
-    DENSE_VOCAB_LIMIT,
     _band_candidates,
     _rep_neardup_pairs,
     _toks_of,
@@ -156,7 +155,7 @@ def build_neardup_index(
         "doc_id", "rep_id"
     ).write.mode("overwrite").parquet(p["bands"])
 
-    rep_pairs = _rep_neardup_pairs(rep_docs, threshold, DENSE_VOCAB_LIMIT, ngram)
+    rep_pairs = _rep_neardup_pairs(rep_docs, threshold, ngram)
     resolved = resolve_pairs(
         rep_docs.select("doc_id"), rep_pairs.select("doc_a", "doc_b")
     ).select(F.col("doc_id").alias("rep_id"), "cluster_id")
@@ -407,7 +406,6 @@ def _embed_edges(
     path: str,
     thr: float,
     block_size: int,
-    prefilter: bool | None,
 ) -> DataFrame:
     """(u, v) component edges for a prepared delta frame: verified
     delta->old tile pairs, verified delta<->delta pairs (exact
@@ -442,21 +440,18 @@ def _embed_edges(
     n_dblocks = max(1, -(-n_delta // block_size))
     old_block_list = bb_old.select("block").distinct()
     n_oblocks = old_block_list.count()
-    if prefilter is None:
-        prefilter = (n_dblocks + n_oblocks) > EXHAUSTIVE_BLOCK_LIMIT
-        if prefilter:
-            import logging
+    if (n_dblocks + n_oblocks) > EXHAUSTIVE_BLOCK_LIMIT:
+        import logging
 
-            logging.getLogger(__name__).info(
-                "embed_incremental: LSH candidate-block prefilter ENGAGED "
-                "(%d delta + %d stored blocks > %d); delta->old tiles are "
-                "now collision-bounded (same recall surface as "
-                "embed_pairs' prefilter, equality-pytested)",
-                n_dblocks,
-                n_oblocks,
-                EXHAUSTIVE_BLOCK_LIMIT,
-            )
-    if prefilter:
+        logging.getLogger(__name__).info(
+            "embed_incremental: LSH candidate-block prefilter ENGAGED "
+            "(%d delta + %d stored blocks > %d); delta->old tiles are "
+            "now collision-bounded (same recall surface as "
+            "embed_pairs' prefilter, equality-pytested)",
+            n_dblocks,
+            n_oblocks,
+            EXHAUSTIVE_BLOCK_LIMIT,
+        )
         bb_new = _delta_blockbuckets(delta)
         cand_blocks = (
             bb_new.alias("n")
@@ -539,14 +534,13 @@ def embed_incremental_edges(
     path: str,
     threshold: float | None = None,
     block_size: int | None = None,
-    prefilter: bool | None = None,
 ) -> DataFrame:
     from text_ocr_spark.ops.dedup import DENSE_BLOCK, EMBED_THRESHOLD
 
     thr = EMBED_THRESHOLD if threshold is None else threshold
     bs = DENSE_BLOCK if block_size is None else block_size
     delta, n_delta = _delta_frame(spark, new_vecs, path, bs)
-    return _embed_edges(spark, delta, n_delta, path, thr, bs, prefilter)
+    return _embed_edges(spark, delta, n_delta, path, thr, bs)
 
 
 def embed_incremental_resolve(
@@ -555,16 +549,13 @@ def embed_incremental_resolve(
     path: str,
     threshold: float | None = None,
     block_size: int | None = None,
-    prefilter: bool | None = None,
 ) -> DataFrame:
     """-> (vec_id, cluster_id, keep_id, is_dup) for the DELTA vectors,
     equal to batch embed_resolve(corpus UNION delta) restricted to the
     delta (same contraction argument as the text side; exact below
     EXHAUSTIVE_BLOCK_LIMIT total blocks, prefilter recall above it —
     equality-pytested at forced small blocks)."""
-    edges = embed_incremental_edges(
-        spark, new_vecs, path, threshold, block_size, prefilter
-    )
+    edges = embed_incremental_edges(spark, new_vecs, path, threshold, block_size)
     resolved = resolve_pairs(
         new_vecs.select(F.col("vec_id").alias("doc_id")),
         edges.select(F.col("u").alias("doc_a"), F.col("v").alias("doc_b")),
@@ -580,7 +571,6 @@ def update_embed_index(
     path: str,
     threshold: float | None = None,
     block_size: int | None = None,
-    prefilter: bool | None = None,
 ) -> DataFrame:
     """Fold a vector delta into the index (append-only) and return its
     verdicts — the embedding twin of ``update_index``: appends the
@@ -601,9 +591,7 @@ def update_embed_index(
     )
 
     delta, n_delta = _delta_frame(spark, new_vecs, path, bs)
-    edges = _embed_edges(
-        spark, delta, n_delta, path, thr, bs, prefilter
-    ).localCheckpoint()
+    edges = _embed_edges(spark, delta, n_delta, path, thr, bs).localCheckpoint()
     resolved = resolve_pairs(
         new_vecs.select(F.col("vec_id").alias("doc_id")),
         edges.select(F.col("u").alias("doc_a"), F.col("v").alias("doc_b")),
