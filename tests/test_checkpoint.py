@@ -3,6 +3,7 @@ rerun, output identical to a single-shot run."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import threading
 
@@ -45,7 +46,8 @@ def test_resume_after_partial_commit(spark, tmp_path):
 
     # job budget per call: one `documents` schema read, then per chunk
     # the salted exchange and the write (manifest metrics are observed
-    # during the write, not read back)
+    # during the write, not read back). Exact, not an upper bound: a
+    # pool thread that dropped the caller's job group would count 0
     sc = spark.sparkContext
     out = str(tmp_path / "run")
     sc.setJobGroup("resume-killed", "resume-killed")
@@ -54,14 +56,15 @@ def test_resume_after_partial_commit(spark, tmp_path):
             spark, SF_TINY, out, run_id="r1", n_chunks=4,
             num_partitions=6, fail_after=2,
         )
-    assert _jobs_in_group(spark, "resume-killed") <= 1 + 2 * 2
-    assert len(committed_chunks(out)) == 2  # two chunks survived the kill
+    assert _jobs_in_group(spark, "resume-killed") == 1 + 2 * 2
+    # exactly the first two pending chunks survived the kill
+    assert set(committed_chunks(out)) == {0, 1}
 
     sc.setJobGroup("resume-resumed", "resume-resumed")
     stats = resumable_extract(
         spark, SF_TINY, out, run_id="r1-resume", n_chunks=4, num_partitions=6
     )
-    assert _jobs_in_group(spark, "resume-resumed") <= 1 + 2 * 2
+    assert _jobs_in_group(spark, "resume-resumed") == 1 + 2 * 2
     assert stats["chunks_skipped"] == 2 and stats["chunks_run"] == 2
     assert _collect(read_extracted(spark, out)) == single
     assert stats["rows_out"] == len(single)
@@ -87,6 +90,66 @@ def test_resume_refuses_changed_input(spark, tmp_path):
             spark, SF_TINY, out, run_id="r2b", n_chunks=2,
             num_partitions=4, snapshot_id="different-snapshot",
         )
+
+
+def test_resume_refuses_subsecond_input_change(spark, tmp_path):
+    """A same-size rewrite of the input within the same second is
+    another snapshot: the fingerprint keys on the mtime in ns."""
+    from text_ocr_spark.checkpoint import resumable_extract
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    docs = sf / "documents.parquet"
+    shutil.copyfile(f"{SF_TINY}/documents.parquet", docs)
+    second = 1_700_000_000 * 10**9
+    os.utime(docs, ns=(second + 100_000_000, second + 100_000_000))
+    out = str(tmp_path / "run")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        resumable_extract(
+            spark, str(sf), out, run_id="r6", n_chunks=2,
+            num_partitions=4, fail_after=1,
+        )
+    os.utime(docs, ns=(second + 600_000_000, second + 600_000_000))
+    with pytest.raises(ValueError, match="another input snapshot"):
+        resumable_extract(
+            spark, str(sf), out, run_id="r6b", n_chunks=2, num_partitions=4
+        )
+
+
+def test_chunk_failure_leaves_run_resumable(spark, tmp_path, monkeypatch):
+    """A chunk that fails mid-pool raises out of resumable_extract and
+    leaves no manifest; the chunks ran on more than one thread, and a
+    rerun completes the output of a single-shot run."""
+    from text_ocr_spark import checkpoint
+    from text_ocr_spark.checkpoint import committed_chunks, read_extracted
+    from text_ocr_spark.pipeline import extract_corpus
+
+    commit = checkpoint._commit_chunk
+    threads = set()
+
+    def failing_commit(out_dir, rec):
+        threads.add(threading.get_ident())
+        if rec["chunk_id"] == 1:
+            raise OSError("chunk 1 lost its commit")
+        commit(out_dir, rec)
+
+    out = str(tmp_path / "run7")
+    monkeypatch.setattr(checkpoint, "_commit_chunk", failing_commit)
+    with pytest.raises(OSError, match="chunk 1 lost"):
+        checkpoint.resumable_extract(
+            spark, SF_TINY, out, run_id="r7", n_chunks=4, num_partitions=4
+        )
+    assert 1 not in committed_chunks(out)
+    assert len(threads) > 1
+
+    monkeypatch.setattr(checkpoint, "_commit_chunk", commit)
+    stats = checkpoint.resumable_extract(
+        spark, SF_TINY, out, run_id="r7-resume", n_chunks=4, num_partitions=4
+    )
+    assert stats["chunks_run"] + stats["chunks_skipped"] == 4
+    assert stats["chunks_run"] >= 1
+    single = _collect(extract_corpus(spark, SF_TINY, num_partitions=6))
+    assert _collect(read_extracted(spark, out)) == single
 
 
 def test_manifest_carries_lineage(spark, tmp_path):

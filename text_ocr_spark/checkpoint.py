@@ -11,6 +11,11 @@ the graft makes restartability a first-class table-scale property:
   ``out/extracted/chunk=<id>/`` first, then a manifest row is renamed
   into ``out/manifest/`` (rename-as-commit). A killed run leaves either
   a committed chunk (skipped on restart) or an uncommitted one (rerun);
+- the pending chunks run concurrently from a pool of driver threads
+  (at most one per executor core and per driver core), so they commit
+  in any order, and a killed driver loses at most the chunks in flight,
+  one per pool thread. A chunk that fails stops the queued ones from
+  starting; those in flight still commit;
 - the manifest row carries the lineage/metrics (FIXTURES.md §4):
   ``run_id``, ``chunk_id``, ``snapshot_id`` (the input snapshot),
   ``rows_out``, ``n_<kind>`` for each of html/pdf/ocr/plain/empty,
@@ -37,9 +42,11 @@ import json
 import os
 import time
 import uuid
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from text_ocr_spark.pipeline import (
     LINEAGE_KINDS,
@@ -104,13 +111,19 @@ def resumable_extract(
     """Run (or resume) the extraction, committing chunk by chunk.
 
     Identical final output to a single-shot run — pytest kills a run
-    mid-way (``fail_after``) and asserts the resumed result matches.
-    Returns {"chunks_run": int, "chunks_skipped": int, "rows_out": int}.
+    mid-way (``fail_after``: exactly the first ``fail_after`` pending
+    chunks commit, then it raises) and asserts the resumed result
+    matches. Returns {"chunks_run": int, "chunks_skipped": int,
+    "rows_out": int}.
 
     At 100 TB each chunk is an independent bounded job (conversation-
     bucket pruned scan -> salted exchange -> Arrow extract -> append),
-    so a restart loses at most one chunk of work, and the manifest is
-    the per-partition lineage table the north_rule asks for.
+    and the manifest is the per-partition lineage table the north_rule
+    asks for. The pending chunks run from a pool of driver threads, as
+    wide as the executor cores and the driver's cores allow, so chunks
+    commit concurrently and in any order. After the first error no
+    queued chunk starts and the chunks in flight finish and commit, so
+    a restart loses at most one pool's width of in-flight work.
     """
     snapshot_id = snapshot_id or _snapshot_fingerprint(sf_dir)
     done = committed_chunks(out_dir)
@@ -122,20 +135,9 @@ def resumable_extract(
 
     chunk_of = conv_chunk_expr(n_chunks)
     observed = [F.count("*").alias("rows_out"), *lineage_counts()]
-    docs = None  # read on the first chunk that runs: a finished run issues no job
-    ran = 0
-    skipped = 0
-    rows_out = 0
-    for cid in range(n_chunks):
-        if cid in done:
-            skipped += 1
-            rows_out += int(done[cid]["rows_out"])
-            continue
-        if fail_after is not None and ran >= fail_after:
-            raise RuntimeError(f"injected failure after {ran} chunks")
+
+    def _run_chunk(docs: DataFrame, cid: int) -> dict:
         t0 = time.time()
-        if docs is None:
-            docs = _read_docs(spark, sf_dir, 1)
         # chunk predicate computed from doc_id on the SCAN side: each
         # chunk's job reads, exchanges, and extracts only its own
         # conversations. Filtering the extraction OUTPUT instead (the
@@ -167,9 +169,40 @@ def resumable_extract(
             **{f"n_{k}": int(metrics[f"n_{k}"] or 0) for k in LINEAGE_KINDS},
         }
         _commit_chunk(out_dir, rec)
-        ran += 1
-        rows_out += rec["rows_out"]
-    return {"chunks_run": ran, "chunks_skipped": skipped, "rows_out": rows_out}
+        return rec
+
+    pending = [cid for cid in range(n_chunks) if cid not in done]
+    todo = pending if fail_after is None else pending[:fail_after]
+    recs: list[dict] = []
+    if todo:  # a finished run reads no input and issues no job
+        docs = _read_docs(spark, sf_dir, 1)
+        # executor cores bound the useful overlap, driver cores the threads
+        width = min(
+            len(todo),
+            spark.sparkContext.defaultParallelism,
+            len(os.sched_getaffinity(0)),
+        )
+        with ThreadPoolExecutor(width) as pool:
+            # one wrap per chunk: each carries its own copy of the caller's
+            # local properties (job group included), because the SQL
+            # execution id a write sets there must not leak between chunks
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(_run_chunk), docs, cid)
+                for cid in todo
+            ]
+            try:
+                wait(futures, return_when=FIRST_EXCEPTION)
+            finally:
+                for fut in futures:
+                    fut.cancel()  # a no-op on chunks that started
+        recs = [fut.result() for fut in futures if not fut.cancelled()]
+    if fail_after is not None and len(pending) > fail_after:
+        raise RuntimeError(f"injected failure after {fail_after} chunks")
+    return {
+        "chunks_run": len(recs),
+        "chunks_skipped": len(done),
+        "rows_out": sum(int(rec["rows_out"]) for rec in [*done.values(), *recs]),
+    }
 
 
 def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -182,4 +215,4 @@ def _snapshot_fingerprint(sf_dir: str) -> str:
     sizes. Good enough to refuse resuming over changed input."""
     path = os.path.join(sf_dir, "documents.parquet")
     st = os.stat(path)
-    return f"{os.path.basename(path)}:{st.st_size}:{int(st.st_mtime)}"
+    return f"{os.path.basename(path)}:{st.st_size}:{st.st_mtime_ns}"

@@ -448,9 +448,14 @@ def pretrain_pipeline(
     Plan shape (gated per segment in tests/test_cleaning.py): the chain
     materializes THREE stage boundaries — the gated corpus after
     stage 1, the stripped corpus after stage 2, the clean corpus after
-    stage 3 — via lazy localCheckpoint, the local stand-in for the
-    stage-output Iceberg writes a production pipeline performs between
-    major phases. Without a barrier, every downstream self-join arm
+    stage 3 — via localCheckpoint(eager=False), the local stand-in for
+    the stage-output Iceberg writes a production pipeline performs
+    between major phases. The barriers are only partly lazy: under AQE
+    the call itself runs every shuffle stage below the barrier (its
+    stages show as ``localCheckpoint at ...`` in the event log, and the
+    call blocks until they finish); only the final, post-shuffle stage
+    is deferred to the first action that reads the barrier. Without a
+    barrier, every downstream self-join arm
     (dup_spans' window/token-index/passthrough references, banding a/b,
     membership joins, verdict attaches, DSIR's two passes) would
     re-plan the whole upstream: the arms prune different columns, so
@@ -464,7 +469,7 @@ def pretrain_pipeline(
     (whose final segment is Arrow-free — conv/turn re-attach by the
     pure inverse key, never a join back through extraction). Bounded
     auxiliary actions (the dedup probe, the CC star-forest checks over
-    lazily localCheckpointed edges, decontamination's test-side probe,
+    localCheckpoint(eager=False) edges, decontamination's test-side probe,
     DSIR's <= n_buckets model build) are the ops' own documented driver
     actions."""
     gated = _pretrain_gate(spark, sf_dir).localCheckpoint(eager=False)
