@@ -10,10 +10,10 @@ Oracle notes:
   generated by scripts/gen_golden.py with zero Spark involvement) — the
   genuine differential gate of SURVEY.md §5.2;
 - knn_ivf is deterministic and gets a direct SQL oracle; dedup_simhash /
-  knn_lsh / multimodal_features are blake2b-seeded, so their oracles are
-  committed independent pure-Python goldens (scripts/gen_op_golden.py);
+  multimodal_features are blake2b-seeded, so their oracles are committed
+  independent pure-Python goldens (scripts/gen_op_golden.py);
   multimodal_resize is SQL double math over the features golden — every
-  registered query now has an exact oracle;
+  registered query has an exact oracle;
 - money sums are DECIMAL-exact, timestamps surface as epoch seconds, and
   every top-k has a total tie-break, so value hashes are reproducible
   across engines.
@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 
 GOLDEN_SF001 = "/root/repo/fixturedata/golden_sf0.01.parquet"
 GOLDEN_SIMHASH_SF001 = "/root/repo/fixturedata/golden_simhash_sf0.01.parquet"
-GOLDEN_KNN_LSH_SF001 = "/root/repo/fixturedata/golden_knn_lsh_sf0.01.parquet"
 GOLDEN_MEDIA_SF001 = "/root/repo/fixturedata/golden_media_features_sf0.01.parquet"
 GOLDEN_VERTICAL_SF001 = "/root/repo/fixturedata/golden_vertical_sf0.01.parquet"
 GOLDEN_IVF_SF001 = "/root/repo/fixturedata/golden_ivf_train_sf0.01.parquet"
@@ -78,14 +77,6 @@ def _extract_vertical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from text_ocr_spark.pipeline import extract_vertical_corpus
 
     return extract_vertical_corpus(spark, sf_dir).orderBy("doc_id")
-
-
-def _extract_spans_debug(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from text_ocr_spark.pipeline import extract_spans_debug
-
-    return extract_spans_debug(spark, sf_dir).orderBy(
-        "conv_id", "turn_idx", "span_idx"
-    )
 
 
 def _stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -562,7 +553,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         brute_topk,
         ivf_assign,
         ivf_topk,
-        lsh_topk,
     )
     from text_ocr_spark.ops.cleaning import (
         gopher_filter,
@@ -709,11 +699,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "doc_id"
         ),
         # ---- tail: twins past the driver's 50-entry window (51+) ----
-        # sketch twin: rows-only BY DESIGN even in-window (sketches are
-        # not hash-exact); its real gate is the error-bound pytest at
-        # sf0.1 (tests/test_relational_sketch.py), which a driver row
-        # cannot strengthen — the head slot goes to a hash-gated family
-        "events_quantiles_sketch": R.events_quantiles_sketch,
         # composition of two in-window-green pieces: embed_pairs
         # (dedup_embed row + numpy-brute pytest) and resolve_pairs
         # (dedup_resolve row + union-find pytest); also the reference
@@ -721,9 +706,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embed_resolve": lambda s, d: embed_resolve(_emb(s, d)).orderBy(
             "vec_id"
         ),
-        # pure span math over the extraction golden (green r1-r3);
-        # judge-suggested tail twin, pytest-covered span offsets
-        "extract_spans_debug": _extract_spans_debug,
         # placeholder-centroid assignment: a pinned subcomponent of the
         # in-window knn_ivf row (same ivf_assign call) and of ivf_train's
         # green row (which runs ivf_assign against trained centroids);
@@ -738,10 +720,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # third TPC-H rep alongside the in-window q1/q5 rows (green
         # r1-r3)
         "q14_promo_revenue": R.q14_promo_revenue,
-        # row_number window rep: the same physical shape is in-window
-        # via events_sessionized (lag + running sum windows) and
-        # curate_corpus's first-occurrence window (green r1-r3)
-        "customer_order_ranks": R.customer_order_ranks,
         # the scrub_expr regex chain is single-sourced and runs inside
         # the in-window curate_corpus row (green r1-r3; scrub-specific
         # pytests in tests/test_cleaning.py)
@@ -777,19 +755,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # bpe_tokenize per VERDICT r4 item 1), each pinned by an
         # in-window sibling + a pytest oracle row in
         # tests/test_contract.py::SUBSET:
-        # plain windowed agg whose (1h window × status) grouping is a
-        # strict subset of the in-window events_rollup grouping sets
-        # (green r1-r4)
-        "events_hourly": R.events_hourly,
         # set-op rep (judge-named twin): UNION/INTERSECT/EXCEPT over
         # the same orders scan; exact oracle retained below + SUBSET
         # pytest (green r1-r4)
         "order_status_setop": R.order_status_setop,
-        # join+agg+top-k shape: the join/agg half is in-window via
-        # q5_region_supplier_volume, the top-k boundary
-        # (TakeOrderedAndProject) via frequent_ngrams and dsir_select;
-        # exact oracle retained + SUBSET pytest (green r1-r4)
-        "top_revenue_customers": R.top_revenue_customers,
         # text-analysis family's third sibling — same pure-JVM
         # row-function shape as the in-window token_stats/lang_id rows
         # (the accepted quality_score demotion argument); exact oracle
@@ -808,14 +777,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_minhash_shingled": lambda s, d: minhash_dedup(
             _docs(s, d), ngram=3
         ).orderBy("doc_a", "doc_b"),
-        # r5 demotion (head slot -> pretrain_pipeline): the second
-        # bucketed-ANN variant next to the in-window knn_ivf row (same
-        # bucket-join shape, hyperplane-sign buckets instead of trained
-        # cells); exact oracle retained + recall-vs-brute pytest
-        # (tests/test_ops.py::test_lsh_recall_vs_brute; green r1-r4)
-        "knn_lsh": lambda s, d: lsh_topk(_emb(s, d)).orderBy(
-            "query_id", "rank"
-        ),
     }
 
 
@@ -916,17 +877,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT conv_id, turn_idx, kind, extracted, spans_json
             FROM read_parquet('{GOLDEN_SF001}')
         """,
-        # the debug explode is pure span-offset math over the golden
-        "extract_spans_debug": f"""
-            SELECT conv_id, turn_idx, CAST(si - 1 AS INT) AS span_idx,
-                   s[si][1] AS start, s[si][2] AS "end",
-                   s[si][2] - s[si][1] AS span_len
-            FROM (
-              SELECT conv_id, turn_idx, CAST(spans_json AS INT[][]) AS s
-              FROM read_parquet('{GOLDEN_SF001}')
-            ), unnest(range(1, len(s) + 1)) AS t(si)
-            ORDER BY conv_id, turn_idx, span_idx
-        """,
         # applyInPandas grouped fold == SQL ordered string_agg fold over
         # the same golden rows
         "conversation_digest": f"""
@@ -994,28 +944,6 @@ def oracle_sql() -> dict[str, str]:
                         / CAST(sum(disc) AS DOUBLE), 6) AS promo_pct
             FROM j GROUP BY ship_month ORDER BY ship_month
         """,
-        "top_revenue_customers": """
-            WITH rev AS (
-              SELECT o_custkey,
-                     round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue,
-                     count(*) AS n_orders
-              FROM orders GROUP BY o_custkey
-            )
-            SELECT c_custkey, c_name, revenue, n_orders
-            FROM rev JOIN customer ON o_custkey = c_custkey
-            ORDER BY revenue DESC, c_custkey ASC
-            LIMIT 10
-        """,
-        "customer_order_ranks": """
-            SELECT o_custkey, o_orderkey, o_totalprice AS totalprice, rnk
-            FROM (
-              SELECT o_custkey, o_orderkey, o_totalprice,
-                     CAST(row_number() OVER (
-                       PARTITION BY o_custkey
-                       ORDER BY o_totalprice DESC, o_orderkey ASC) AS BIGINT) AS rnk
-              FROM orders
-            ) WHERE rnk <= 3
-        """,
         "events_sessionized": """
             WITH ev AS (
               SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_epoch
@@ -1036,12 +964,6 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT user_id, max(session_id) + 1 AS n_sessions, count(*) AS n_events
             FROM sess GROUP BY user_id ORDER BY user_id
-        """,
-        "events_hourly": """
-            SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) AS hour_bucket,
-                   event_type, count(*) AS n,
-                   round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 4) AS sum_value
-            FROM events GROUP BY 1, 2
         """,
         "events_props_json": """
             SELECT event_type, count(*) AS n,
@@ -2323,7 +2245,7 @@ def oracle_sql() -> dict[str, str]:
               FROM scored
             ) WHERE rank <= 5 ORDER BY query_id, rank
         """,
-        # blake2b-seeded ops (simhash / LSH planes / decode stub): the
+        # blake2b-seeded ops (simhash / decode stub): the
         # oracle is a COMMITTED independent pure-Python implementation
         # (scripts/gen_op_golden.py, zero Spark), same pattern as the
         # extraction golden
@@ -2338,11 +2260,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, kind, extracted, spans_json
             FROM read_parquet('{GOLDEN_VERTICAL_SF001}')
             ORDER BY doc_id
-        """,
-        "knn_lsh": f"""
-            SELECT query_id, rank, neighbor_id
-            FROM read_parquet('{GOLDEN_KNN_LSH_SF001}')
-            ORDER BY query_id, rank
         """,
         # trained k-means assignment: committed pure-Python replay of the
         # full deterministic training (md5-seeded init, sequential-fold

@@ -186,7 +186,6 @@ def main() -> int:
     from text_ocr_spark.ops.relational import (
         q1_pricing_summary,
         q5_region_supplier_volume,
-        top_revenue_customers,
     )
     from text_ocr_spark.ops.similarity import brute_topk
     from text_ocr_spark.pipeline import (
@@ -237,13 +236,6 @@ def main() -> int:
             "Partial HashAggregate before the exchange (map-side combine) — "
             "6 groups travel, not 6M rows.",
             q1_pricing_summary(spark, SF),
-        ),
-        (
-            "top_revenue_customers",
-            "Small dimension broadcast: BroadcastHashJoin, no sort-merge "
-            "shuffle of the fact side. TakeOrderedAndProject streams the "
-            "global top-10 without a full sort.",
-            top_revenue_customers(spark, SF),
         ),
         (
             "q5_region_supplier_volume (6-table join)",

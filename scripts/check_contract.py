@@ -53,6 +53,10 @@ def main(names: list[str]) -> int:
     todo = names or list(qs)
     failures = []
     for name in todo:
+        if name not in oracles:
+            print(f"FAIL {name}: no oracle")
+            failures.append(name)
+            continue
         t0 = time.time()
         try:
             got = qs[name](spark, SF_DIR).toPandas()
@@ -61,9 +65,6 @@ def main(names: list[str]) -> int:
             failures.append(name)
             continue
         dt_s = time.time() - t0
-        if name not in oracles:
-            print(f"ok?  {name}: rows-only ({len(got)} rows, {dt_s:.1f}s) — no oracle")
-            continue
         try:
             want = con.sql(oracles[name]).df()
         except Exception as e:  # noqa: BLE001

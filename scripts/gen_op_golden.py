@@ -1,17 +1,28 @@
 """Generate committed golden fixtures for the ops whose oracles are not
-SQL-expressible (blake2b-seeded LSH / simhash / decode stubs). Pure
-Python + numpy over the driver's parquet tables — no Spark involved, so
-these are genuine independent differential oracles (same published spec,
-separate implementation), exactly like scripts/gen_golden.py does for the
-extraction pipeline.
+SQL-expressible (blake2b-seeded simhash / decode stubs, deterministic
+training replays). Pure Python + numpy over the driver's parquet
+tables — no Spark involved, so these are genuine independent
+differential oracles (same published spec, separate implementation),
+exactly like scripts/gen_golden.py does for the extraction pipeline.
 
     python scripts/gen_op_golden.py [sf0.01 ...]
 
-Writes, per sf:
+Writes once:
+  fixturedata/langid_weights.parquet             (lang, b, w_micro)
+and, per sf:
   fixturedata/golden_simhash_<sf>.parquet        (doc_a, doc_b, hamming)
-  fixturedata/golden_knn_lsh_<sf>.parquet        (query_id, rank, neighbor_id)
   fixturedata/golden_media_features_<sf>.parquet (doc_id, media_type,
       n_bytes, width, height, feat_mean, feat_dim)
+  fixturedata/golden_ivf_train_<sf>.parquet      (vec_id, centroid_id)
+  fixturedata/golden_bpe_<sf>.parquet            (doc_id, n_bpe, bpe_joined)
+  fixturedata/golden_langid_<sf>.parquet         (doc_id, n_grams, lang_pred,
+      z_micro)
+  fixturedata/golden_quality_clf_<sf>.parquet    (doc_id, n_tokens, z_micro,
+      prob, keep)
+  fixturedata/golden_semdedup_<sf>.parquet       (vec_id, centroid_id,
+      cluster_id, keep_id, is_dup)
+  fixturedata/golden_vertical_<sf>.parquet       (doc_id, kind, extracted,
+      spans_json)
 
 Floating-point discipline: cosines are computed as a LEFT-TO-RIGHT
 sequential double fold over the array (acc += float64(a_i)*float64(b_i)),
@@ -35,10 +46,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 SIMHASH_BITS = 64
-LSH_TABLES = 8
-LSH_PLANES = 4
-N_QUERIES = 10
-TOP_K = 5
 
 
 # --------------------------------------------------------------------------
@@ -87,19 +94,8 @@ def golden_simhash(docs: pd.DataFrame, radius: int = 3) -> pd.DataFrame:
 
 
 # --------------------------------------------------------------------------
-# sign-random-projection LSH top-k (spec: ops/similarity.py)
+# float64 cosine (spec: ops/similarity.py cosine_col)
 # --------------------------------------------------------------------------
-
-def hyperplanes(dim: int, n: int) -> np.ndarray:
-    planes = np.empty((n, dim), dtype=np.float64)
-    for i in range(n):
-        d = hashlib.blake2b(
-            f"plane:{i}".encode(), digest_size=dim // 8 + 1
-        ).digest()
-        bits = np.unpackbits(np.frombuffer(d, dtype=np.uint8))[:dim]
-        planes[i] = np.where(bits == 1, 1.0, -1.0)
-    return planes
-
 
 def seq_cosine(a: list[float], b: list[float]) -> float:
     """Left-to-right double fold — Spark's F.aggregate operation order."""
@@ -113,39 +109,6 @@ def seq_cosine(a: list[float], b: list[float]) -> float:
     for y in b:
         nb += y * y
     return dot / (math.sqrt(na) * math.sqrt(nb))
-
-
-def golden_knn_lsh(emb: pd.DataFrame) -> pd.DataFrame:
-    ids = emb["vec_id"].to_numpy()
-    # float32 storage cast element-wise to float64, like Spark's
-    # x.cast('double') inside the fold
-    vecs = {
-        int(i): [float(np.float32(v)) for v in e]
-        for i, e in zip(ids, emb["embedding"])
-    }
-    mat = np.array([vecs[int(i)] for i in ids], dtype=np.float64)
-    planes = hyperplanes(mat.shape[1], LSH_TABLES * LSH_PLANES)
-    signs = (mat @ planes.T) > 0
-    buckets = {}
-    for t in range(LSH_TABLES):
-        seg = signs[:, t * LSH_PLANES : (t + 1) * LSH_PLANES]
-        buckets[t] = (seg.astype(np.int64) << np.arange(LSH_PLANES)).sum(axis=1)
-    pos = {int(i): k for k, i in enumerate(ids)}
-    rows = []
-    for q in sorted(i for i in vecs if i < N_QUERIES):
-        cands = set()
-        for t in range(LSH_TABLES):
-            qb = buckets[t][pos[q]]
-            for j, i in enumerate(ids):
-                if i >= N_QUERIES and buckets[t][j] == qb:
-                    cands.add(int(i))
-        scored = sorted(
-            ((seq_cosine(vecs[q], vecs[c]), c) for c in cands),
-            key=lambda x: (-x[0], x[1]),
-        )
-        for rank, (_, c) in enumerate(scored[:TOP_K], start=1):
-            rows.append((q, rank, c))
-    return pd.DataFrame(rows, columns=["query_id", "rank", "neighbor_id"])
 
 
 # --------------------------------------------------------------------------
@@ -636,13 +599,6 @@ def main(sfs: list[str]) -> None:
                 [("doc_a", pa.int64()), ("doc_b", pa.int64()), ("hamming", pa.int32())]
             ),
             f"fixturedata/golden_simhash_{sf}.parquet",
-        )
-        _write(
-            golden_knn_lsh(emb),
-            pa.schema(
-                [("query_id", pa.int64()), ("rank", pa.int32()), ("neighbor_id", pa.int64())]
-            ),
-            f"fixturedata/golden_knn_lsh_{sf}.parquet",
         )
         _write(
             golden_media_features(docs),

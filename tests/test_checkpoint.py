@@ -92,6 +92,42 @@ def test_resume_refuses_changed_input(spark, tmp_path):
         )
 
 
+def test_resume_refuses_changed_chunk_split(spark, tmp_path):
+    """Chunk ids from another split name other conversations: resuming
+    a killed run under a different n_chunks (either way) must refuse,
+    not count them done (fewer turns) or rerun them (duplicate turns).
+    A record that does not name its split is refused too."""
+    from text_ocr_spark.checkpoint import (
+        _commit_chunk,
+        committed_chunks,
+        resumable_extract,
+    )
+
+    for killed, resumed in ((4, 2), (2, 4)):
+        out = str(tmp_path / f"run-{killed}-{resumed}")
+        with pytest.raises(RuntimeError, match="injected failure"):
+            resumable_extract(
+                spark, SF_TINY, out, run_id="r8", n_chunks=killed,
+                num_partitions=4, fail_after=1,
+            )
+        assert all(
+            rec["n_chunks"] == killed for rec in committed_chunks(out).values()
+        )
+        with pytest.raises(ValueError, match="another n_chunks"):
+            resumable_extract(
+                spark, SF_TINY, out, run_id="r8b", n_chunks=resumed,
+                num_partitions=4,
+            )
+
+    for rec in committed_chunks(out).values():
+        del rec["n_chunks"]
+        _commit_chunk(out, rec)
+    with pytest.raises(ValueError, match="another n_chunks"):
+        resumable_extract(
+            spark, SF_TINY, out, run_id="r8c", n_chunks=killed, num_partitions=4
+        )
+
+
 def test_resume_refuses_subsecond_input_change(spark, tmp_path):
     """A same-size rewrite of the input within the same second is
     another snapshot: the fingerprint keys on the mtime in ns."""

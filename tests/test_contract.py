@@ -29,9 +29,7 @@ SUBSET = [
     "doc_fingerprint",
     # r5 demotions: keep a pytest oracle row on each while out of the
     # driver window
-    "events_hourly",
     "order_status_setop",
-    "top_revenue_customers",
     "multimodal_meta",
     "gopher_filter",
     "dedup_minhash",
@@ -76,13 +74,9 @@ def test_entry_smoke(spark):
 def test_every_query_has_oracle_or_reason():
     import __spark_entry__ as e
 
-    qs, os_ = set(e.queries()), set(e.oracle_sql())
-    assert os_ <= qs
-    # since r2 every registered query carries an exact oracle, with ONE
-    # documented exception: sketches cannot be hash-exact, so the sketch
-    # twin is rows-only by design and its real gate is the error-bound
-    # pytest (tests/test_relational_sketch.py)
-    assert qs - os_ == {"events_quantiles_sketch"}
+    # every registered query carries an exact oracle, and every oracle
+    # belongs to a registered query
+    assert set(e.queries()) == set(e.oracle_sql())
 
 
 @pytest.mark.parametrize("name", SUBSET)
@@ -125,17 +119,14 @@ def test_registry_head_covers_every_family():
     ):
         assert required in head, required
     assert set(tail) <= {
-        "events_quantiles_sketch", "embed_resolve", "extract_spans_debug",
+        "embed_resolve",
         # r4 demotions, each pinned by an in-window row + pytest:
         # ivf_assign is a subcomponent of knn_ivf and ivf_train;
         # conversation_digest is a grouped fold over the in-window
         # extract_transcripts output; q14 is the third TPC-H rep next
-        # to q1/q5; customer_order_ranks' row_number shape is in-window
-        # via events_sessionized and curate_corpus
-        # pii_scrub's scrub_expr is single-sourced inside the in-window
-        # curate_corpus row
-        "ivf_assign", "conversation_digest",
-        "q14_promo_revenue", "customer_order_ranks", "pii_scrub",
+        # to q1/q5; pii_scrub's scrub_expr is single-sourced inside the
+        # in-window curate_corpus row
+        "ivf_assign", "conversation_digest", "q14_promo_revenue", "pii_scrub",
         # strip_dup_spans = the in-window dup_spans row + one doc_id
         # join + JVM token cuts (cut edges pytest-pinned in
         # tests/test_span_dedup.py)
@@ -152,19 +143,10 @@ def test_registry_head_covers_every_family():
         # r5 demotions (head slots -> the four r4 families, VERDICT r4
         # item 1), each with an exact oracle retained AND a pytest
         # oracle row via SUBSET above:
-        # events_hourly's (1h window × status) grouping is a subset of
-        # in-window events_rollup's grouping sets; order_status_setop
-        # is the judge-named set-op twin; top_revenue_customers'
-        # join/agg half is in-window via q5 and its top-k boundary via
-        # frequent_ngrams/dsir_select;
+        # order_status_setop is the judge-named set-op twin;
         # doc_fingerprint is the text-analysis family's third sibling
         # (the accepted quality_score demotion argument)
-        "events_hourly", "order_status_setop", "top_revenue_customers",
-        "doc_fingerprint",
-        # r5 demotion (head slot -> pretrain_pipeline): second
-        # bucketed-ANN variant next to in-window knn_ivf; recall pytest
-        # + retained exact oracle
-        "knn_lsh",
+        "order_status_setop", "doc_fingerprint",
         # r5 demotion (head slot -> lang_id_trained): parameter twin of
         # in-window dedup_minhash (ngram=3 w-shingle tokenizer, which
         # also runs in-window via pretrain_pipeline's ngram=3

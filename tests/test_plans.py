@@ -38,9 +38,9 @@ def test_q1_filter_pushdown_and_pruning(spark):
 
 
 def test_small_dim_join_broadcasts(spark):
-    from text_ocr_spark.ops.relational import top_revenue_customers
+    from text_ocr_spark.ops.relational import q5_region_supplier_volume
 
-    p = plan_str(spark, top_revenue_customers(spark, SF_TINY))
+    p = plan_str(spark, q5_region_supplier_volume(spark, SF_TINY))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
 
@@ -70,11 +70,11 @@ def test_extract_pipeline_exchange_budget(spark):
 
 
 def test_jvm_only_ops_have_no_python_stage(spark):
-    from text_ocr_spark.ops.relational import events_hourly
+    from text_ocr_spark.ops.relational import events_rollup
     from text_ocr_spark.ops.text_stats import token_stats
 
     docs = spark.read.parquet(f"{SF_TINY}/documents.parquet")
-    for df in (token_stats(docs), events_hourly(spark, SF_TINY)):
+    for df in (token_stats(docs), events_rollup(spark, SF_TINY)):
         p = plan_str(spark, df)
         assert "MapInPandas" not in p
         assert "BatchEvalPython" not in p

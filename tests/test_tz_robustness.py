@@ -15,7 +15,7 @@ SF = "/root/testdata/sf0.001"
 QUERIES = [
     "q1_pricing_summary",
     "events_sessionized",
-    "events_hourly",
+    "events_rollup",
     "events_props_json",
     "transcript_index",
 ]

@@ -17,7 +17,8 @@ the graft makes restartability a first-class table-scale property:
   one per pool thread. A chunk that fails stops the queued ones from
   starting; those in flight still commit;
 - the manifest row carries the lineage/metrics (FIXTURES.md §4):
-  ``run_id``, ``chunk_id``, ``snapshot_id`` (the input snapshot),
+  ``run_id``, ``chunk_id``, ``n_chunks`` (the split; resuming under
+  another one is refused), ``snapshot_id`` (the input snapshot),
   ``rows_out``, ``n_<kind>`` for each of html/pdf/ocr/plain/empty,
   ``bytes_in``, ``bytes_out`` and ``wall_ms``. The counts are observed
   (``DataFrame.observe``) while the chunk's parquet is written, so a
@@ -132,6 +133,12 @@ def resumable_extract(
         raise ValueError(
             f"manifest was committed against another input snapshot: {stale}"
         )
+    # chunk ids only mean the same conversations under the same split
+    resplit = [cid for cid, rec in done.items() if rec.get("n_chunks") != n_chunks]
+    if resplit:
+        raise ValueError(
+            f"manifest was committed under another n_chunks: {resplit}"
+        )
 
     chunk_of = conv_chunk_expr(n_chunks)
     observed = [F.count("*").alias("rows_out"), *lineage_counts()]
@@ -161,6 +168,7 @@ def resumable_extract(
         rec = {
             "run_id": run_id,
             "chunk_id": cid,
+            "n_chunks": n_chunks,
             "snapshot_id": snapshot_id,
             "rows_out": int(metrics["rows_out"] or 0),
             "bytes_in": int(metrics["bytes_in"] or 0),

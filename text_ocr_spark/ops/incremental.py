@@ -353,12 +353,6 @@ def build_embed_index(
     )
 
 
-def init_embed_index(spark: SparkSession, path: str) -> None:
-    build_embed_index(
-        spark.createDataFrame([], "vec_id long, embedding array<float>"), path
-    )
-
-
 def _next_wave(stored_vecs: DataFrame) -> int:
     row = stored_vecs.agg(
         F.max(F.shiftrightunsigned("block", _WAVE_SHIFT)).alias("w")

@@ -1,13 +1,13 @@
 """Relational operator coverage over the driver's TPC-H-ish tables
 (SURVEY.md §2.G checklist: scan, filter, projection, aggregation, join,
-window, sort/limit/top-k, set ops, scalar/string/date/json functions).
+window, sort, set ops, scalar/string/date/json functions).
 
 Determinism rules for the DuckDB cross-check:
 - money/value sums computed in DECIMAL(18,4) (associative, engine-order
   independent), cast to DOUBLE only at the end;
 - timestamps never surface raw: epoch seconds / epoch-hour buckets only
   (session-timezone-proof);
-- every top-k has a total tie-break.
+- every ordering has a total tie-break.
 """
 
 from __future__ import annotations
@@ -59,46 +59,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def top_revenue_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast join orders x customer, top 10 by revenue (tie: custkey)."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    rev = (
-        orders.groupBy("o_custkey")
-        .agg(
-            F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(18,4)")).cast("double"),
-                4,
-            ).alias("revenue"),
-            F.count("*").alias("n_orders"),
-        )
-    )
-    return (
-        rev.join(F.broadcast(cust), rev.o_custkey == cust.c_custkey)
-        .select("c_custkey", "c_name", "revenue", "n_orders")
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(10)
-    )
-
-
-def customer_order_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window top-3 orders per customer by totalprice (tie: orderkey)."""
-    orders = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        orders.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= 3)
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            F.col("o_totalprice").alias("totalprice"),
-            "rnk",
-        )
-    )
-
-
 def events_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization: lag + 30-min-gap cumsum -> sessions per user."""
     ev = _t(spark, sf_dir, "events").withColumn(
@@ -120,23 +80,6 @@ def events_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_events"),
         )
         .orderBy("user_id")
-    )
-
-
-def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Epoch-hour bucket aggregation (timezone-proof date_trunc analog)."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.withColumn(
-            "hour_bucket", F.floor(F.unix_timestamp("ts") / 3600).cast("long")
-        )
-        .groupBy("hour_bucket", "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 4
-            ).alias("sum_value"),
-        )
     )
 
 
@@ -262,12 +205,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile aggregation per event_type: exact percentiles p50/p90/p99
     of value (linear interpolation — identical semantics to DuckDB's
-    quantile_cont, cross-checked to the double).
-
-    Exact percentile is the oracle-able face; ``events_quantiles_sketch``
-    below is the 100 TB twin — bounded-memory mergeable sketches whose
-    error bounds are pytest-gated at sf0.1 (VERDICT r2 item 4).
-    """
+    quantile_cont, cross-checked to the double)."""
     ev = _t(spark, sf_dir, "events")
     return (
         ev.groupBy("event_type")
@@ -275,46 +213,6 @@ def events_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
             F.round(F.expr("percentile(value, 0.9)"), 6).alias("p90"),
             F.round(F.expr("percentile(value, 0.99)"), 6).alias("p99"),
-            F.count("*").alias("n"),
-        )
-        .orderBy("event_type")
-    )
-
-
-#: percentile_approx accuracy knob: the returned element's RANK is within
-#: n/SKETCH_ACCURACY of the requested one (Greenwald-Khanna bound) —
-#: pytest-gated against the exact percentiles at sf0.1.
-SKETCH_ACCURACY = 10_000
-#: HLL relative standard deviation for the distinct-user sketch; the
-#: pytest gate allows 4 standard deviations.
-SKETCH_RSD = 0.02
-
-
-def events_quantiles_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch twin of ``events_quantiles`` — the shape a 100 TB run uses.
-
-    percentile_approx is a bounded-memory mergeable rank sketch
-    (Greenwald-Khanna): each returned value's rank error is at most
-    n / SKETCH_ACCURACY (deterministic bound). approx_count_distinct is
-    HLL++ at rsd=SKETCH_RSD. Both aggregate map-side and merge, so one
-    pass, no sort, no full-value shuffle — vs the exact percentile's
-    per-group value collection.
-
-    A sketch cannot be contract-exact against an exact-SQL oracle; the
-    honest gate is the error-bound pytest
-    (tests/test_relational_sketch.py, run at sf0.1). The contract face
-    carries exact group counts (n) so the driver's rows-only check still
-    pins cardinality. Sorted output; deterministic for a fixed input and
-    partitioning.
-    """
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            F.percentile_approx("value", F.lit(0.5), F.lit(SKETCH_ACCURACY)).alias("p50_sketch"),
-            F.percentile_approx("value", F.lit(0.9), F.lit(SKETCH_ACCURACY)).alias("p90_sketch"),
-            F.percentile_approx("value", F.lit(0.99), F.lit(SKETCH_ACCURACY)).alias("p99_sketch"),
-            F.approx_count_distinct("user_id", rsd=SKETCH_RSD).alias("n_users_sketch"),
             F.count("*").alias("n"),
         )
         .orderBy("event_type")

@@ -6,9 +6,9 @@
 - ivf_assign:  IVF building block — assign every vector to its nearest
                centroid (broadcast centroids, argmax cosine). At scale the
                search probes only matching cells.
-- lsh_topk:    sign-random-projection LSH — deterministic hyperplanes,
-               bucket join, top-k within bucket. The approximate scale
-               path; recall vs brute_topk is pytest-asserted.
+- lsh_buckets: sign-random-projection LSH buckets from deterministic
+               hyperplanes — the blocking step of ``dedup.embed_pairs``
+               and of the incremental embed index.
 
 Cosines are computed in float64 from the float32 inputs, summed in array
 order (F.aggregate is a sequential fold), matching the DuckDB oracle's
@@ -308,41 +308,4 @@ def _bucket_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def lsh_buckets(emb: DataFrame) -> DataFrame:
     return emb.select("vec_id", "embedding").mapInPandas(
         _bucket_rows, schema="vec_id long, table int, bucket long"
-    )
-
-
-def lsh_topk(emb: DataFrame, *, n_queries: int = 10, k: int = 5) -> DataFrame:
-    """Approximate top-k: candidates share an LSH bucket with the query in
-    >= 1 of the LSH_TABLES tables (multi-table OR-amplification).
-
-    -> (query_id, rank, neighbor_id). A query whose buckets hold < k
-    candidates returns fewer rows (documented approximation, no silent
-    fallback scan).
-    """
-    b = lsh_buckets(emb)
-    q = b.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), "table", "bucket"
-    )
-    c = b.filter(F.col("vec_id") >= n_queries).select(
-        F.col("vec_id").alias("neighbor_id"), "table", "bucket"
-    )
-    cand = c.join(F.broadcast(q), ["table", "bucket"]).select(
-        "query_id", "neighbor_id"
-    ).distinct()
-    qv = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    cv = emb.filter(F.col("vec_id") >= n_queries).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
-    )
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn("cos", cosine_col("qv", "cv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
     )

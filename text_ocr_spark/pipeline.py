@@ -504,26 +504,6 @@ def extract_vertical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def extract_spans_debug(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Debug-sink analog (SURVEY.md §2 A7: per-region overlay rows):
-    one row per extracted span, JVM-side posexplode of the typed span
-    column. Span-less turns emit nothing, mirroring the reference's
-    draw path (only detected regions are drawn)."""
-    ex = with_span_structs(extract_corpus(spark, sf_dir))
-    return ex.select(
-        "conv_id",
-        "turn_idx",
-        F.posexplode("spans").alias("span_idx", "s"),
-    ).select(
-        "conv_id",
-        "turn_idx",
-        F.col("span_idx").cast("int").alias("span_idx"),
-        F.col("s.start").alias("start"),
-        F.col("s.end").alias("end"),
-        (F.col("s.end") - F.col("s.start")).alias("span_len"),
-    )
-
-
 def conversation_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-iterator surface: applyInPandas keyed by conv_id — the
     per-conversation fold the north_rule's grouped UDFs exist for.

@@ -104,21 +104,6 @@ def read_transcripts_iceberg(
     return _canon(reader.table(table))
 
 
-def write_extracted(
-    df: DataFrame, target: str, *, fmt: str = "parquet", mode: str = "append"
-) -> None:
-    """Sink: parquet dir (sandbox) or Iceberg table name (production).
-
-    On Iceberg, `writeTo(...).append()` gives atomic snapshot commits;
-    the parquet path approximates that with directory-level appends and
-    the checkpoint module's rename-commit manifest.
-    """
-    if fmt == "iceberg":
-        df.writeTo(target).append()
-        return
-    df.write.mode(mode).parquet(target)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,
