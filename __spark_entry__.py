@@ -21,30 +21,34 @@ Oracle notes:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-GOLDEN_SF001 = "/root/repo/fixturedata/golden_sf0.01.parquet"
-GOLDEN_SIMHASH_SF001 = "/root/repo/fixturedata/golden_simhash_sf0.01.parquet"
-GOLDEN_MEDIA_SF001 = "/root/repo/fixturedata/golden_media_features_sf0.01.parquet"
-GOLDEN_VERTICAL_SF001 = "/root/repo/fixturedata/golden_vertical_sf0.01.parquet"
-GOLDEN_IVF_SF001 = "/root/repo/fixturedata/golden_ivf_train_sf0.01.parquet"
-GOLDEN_SEMDEDUP_SF001 = "/root/repo/fixturedata/golden_semdedup_sf0.01.parquet"
-GOLDEN_QCLF_SF001 = "/root/repo/fixturedata/golden_quality_clf_sf0.01.parquet"
-GOLDEN_BPE_SF001 = "/root/repo/fixturedata/golden_bpe_sf0.01.parquet"
-GOLDEN_LANGID_SF001 = "/root/repo/fixturedata/golden_langid_sf0.01.parquet"
-LANGID_WEIGHTS = "/root/repo/fixturedata/langid_weights.parquet"
+#: committed goldens and weights, found beside this module so each checkout
+#: reads its own
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixturedata")
+GOLDEN_SF001 = os.path.join(FIXTURES, "golden_sf0.01.parquet")
+GOLDEN_SIMHASH_SF001 = os.path.join(FIXTURES, "golden_simhash_sf0.01.parquet")
+GOLDEN_MEDIA_SF001 = os.path.join(FIXTURES, "golden_media_features_sf0.01.parquet")
+GOLDEN_VERTICAL_SF001 = os.path.join(FIXTURES, "golden_vertical_sf0.01.parquet")
+GOLDEN_IVF_SF001 = os.path.join(FIXTURES, "golden_ivf_train_sf0.01.parquet")
+GOLDEN_SEMDEDUP_SF001 = os.path.join(FIXTURES, "golden_semdedup_sf0.01.parquet")
+GOLDEN_QCLF_SF001 = os.path.join(FIXTURES, "golden_quality_clf_sf0.01.parquet")
+GOLDEN_BPE_SF001 = os.path.join(FIXTURES, "golden_bpe_sf0.01.parquet")
+GOLDEN_LANGID_SF001 = os.path.join(FIXTURES, "golden_langid_sf0.01.parquet")
+LANGID_WEIGHTS = os.path.join(FIXTURES, "langid_weights.parquet")
 
 GOLDEN_COLS = ["conv_id", "turn_idx", "kind", "extracted", "spans_json"]
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction pipeline on /root/testdata/sf0.001."""
-    from text_ocr_spark.pipeline import run_extraction
+    from text_ocr_spark.pipeline import extract_corpus, ordered
 
-    out = run_extraction(spark, "/root/testdata/sf0.001")
+    out = ordered(extract_corpus(spark, "/root/testdata/sf0.001"))
     return out.select(*GOLDEN_COLS)
 
 
@@ -53,9 +57,9 @@ def entry(spark: SparkSession) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def _extract_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from text_ocr_spark.pipeline import run_extraction
+    from text_ocr_spark.pipeline import extract_corpus, ordered
 
-    return run_extraction(spark, sf_dir).select(*GOLDEN_COLS)
+    return ordered(extract_corpus(spark, sf_dir)).select(*GOLDEN_COLS)
 
 
 def _transcript_index(spark: SparkSession, sf_dir: str) -> DataFrame:

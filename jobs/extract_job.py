@@ -4,7 +4,7 @@ Usage (north_rule launch shape, SURVEY.md §3.4):
 
     spark-submit --master local[32] --py-files engine.zip \
         jobs/extract_job.py --sf-dir /root/testdata/sf0.001 \
-        --out /tmp/extracted --run-id run1 [--partitions 64] [--salt 16]
+        --out /tmp/extracted --run-id run1 [--partitions 64]
 
 Writes the ordered extraction output as parquet to <out>/extracted and the
 per-partition lineage/metrics rows to <out>/metrics.
@@ -23,17 +23,8 @@ def main(argv: list[str]) -> int:
     ap.add_argument("--out", required=True, help="output directory")
     ap.add_argument("--run-id", default="adhoc")
     ap.add_argument("--partitions", type=int, default=None)
-    ap.add_argument("--salt", type=int, default=16)
     ap.add_argument("--repeat", type=int, default=1, help="corpus replication (bench)")
     ap.add_argument("--skip-write", action="store_true", help="count only (bench)")
-    ap.add_argument(
-        "--max-chars", type=int, default=None,
-        help="B2 bounded-analysis window (chars); default kernels constant",
-    )
-    ap.add_argument(
-        "--pad-frac", type=float, default=0.0,
-        help="D6 span context padding fraction (default off)",
-    )
     args = ap.parse_args(argv)
 
     from text_ocr_spark.pipeline import (
@@ -74,19 +65,10 @@ def main(argv: list[str]) -> int:
     # one un-replicated pass primes codegen/AQE/scan codepaths so the
     # timed window reports steady-state throughput (the regime a
     # 10^12-turn job lives in), not first-query JIT
-    extract_corpus(
-        spark, args.sf_dir, repeat=1,
-        salt_buckets=args.salt, num_partitions=args.partitions,
-    ).count()
+    extract_corpus(spark, args.sf_dir, num_partitions=args.partitions).count()
     t0 = time.time()
     extracted = extract_corpus(
-        spark,
-        args.sf_dir,
-        repeat=args.repeat,
-        salt_buckets=args.salt,
-        num_partitions=args.partitions,
-        max_chars=args.max_chars,
-        pad_frac=args.pad_frac,
+        spark, args.sf_dir, repeat=args.repeat, num_partitions=args.partitions
     )
     if args.skip_write:
         n = extracted.count()

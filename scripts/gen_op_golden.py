@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 from collections import Counter
@@ -509,9 +510,8 @@ def golden_langid_weights() -> pd.DataFrame:
     """Independent pure-Python retrain of the committed lang-id model
     over the deterministic fixture (ops/lang_clf.py::langid_fixture is
     replayed here verbatim — md5 arithmetic only)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
+    scripts_dir = os.path.dirname(os.path.abspath(__file__))
+    sys.path.insert(0, os.path.dirname(scripts_dir))
     from text_ocr_spark.ops.lang_clf import langid_fixture
 
     fx = langid_fixture()

@@ -128,6 +128,18 @@ def test_resume_refuses_changed_chunk_split(spark, tmp_path):
         )
 
 
+@pytest.mark.parametrize("n_chunks", [0, -3])
+def test_refuses_chunk_count_below_one(spark, tmp_path, n_chunks):
+    """Fewer than one chunk would run no chunk and report success with
+    nothing written; it must fail before any read."""
+    from text_ocr_spark.checkpoint import resumable_extract
+
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match="n_chunks must be >= 1"):
+        resumable_extract(spark, SF_TINY, out, run_id="r9", n_chunks=n_chunks)
+    assert not os.path.exists(out)
+
+
 def test_resume_refuses_subsecond_input_change(spark, tmp_path):
     """A same-size rewrite of the input within the same second is
     another snapshot: the fingerprint keys on the mtime in ns."""

@@ -4,6 +4,8 @@ sweep lives in scripts/check_contract.py at sf0.01)."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import numpy as np
 import pandas as pd
@@ -69,6 +71,30 @@ def test_entry_smoke(spark):
     assert [f.name for f in df.schema.fields] == [
         "conv_id", "turn_idx", "kind", "extracted", "spans_json",
     ]
+
+
+def test_entry_paths_follow_the_checkout(tmp_path):
+    """A copy of the contract module reads the goldens and weights beside
+    itself, not those of the checkout it was copied from."""
+    import importlib.util
+    import shutil
+
+    import __spark_entry__ as e
+
+    copy = tmp_path / "__spark_entry__.py"
+    shutil.copy(e.__file__, copy)
+    spec = importlib.util.spec_from_file_location("entry_copy", copy)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    paths = {
+        name: value
+        for name, value in vars(mod).items()
+        if (name.startswith("GOLDEN_") or name == "LANGID_WEIGHTS")
+        and isinstance(value, str)
+    }
+    assert len(paths) == 10
+    for name, value in paths.items():
+        assert value.startswith(str(tmp_path) + os.sep), (name, value)
 
 
 def test_every_query_has_oracle_or_reason():

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 from collections import Counter
 
 import pandas as pd
@@ -14,8 +15,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
-LANGID_WEIGHTS = "/root/repo/fixturedata/langid_weights.parquet"
-GOLDEN_LANGID = "/root/repo/fixturedata/golden_langid_sf0.01.parquet"
+FIXTURES = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixturedata"
+)
+LANGID_WEIGHTS = os.path.join(FIXTURES, "langid_weights.parquet")
+GOLDEN_LANGID = os.path.join(FIXTURES, "golden_langid_sf0.01.parquet")
 
 B_SMALL = 512
 ITERS_SMALL = 3

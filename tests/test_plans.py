@@ -37,14 +37,6 @@ def test_q1_filter_pushdown_and_pruning(spark):
     }
 
 
-def test_small_dim_join_broadcasts(spark):
-    from text_ocr_spark.ops.relational import q5_region_supplier_volume
-
-    p = plan_str(spark, q5_region_supplier_volume(spark, SF_TINY))
-    assert "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
-
-
 def test_brute_topk_broadcasts_queries(spark):
     from text_ocr_spark.ops.similarity import brute_topk
 

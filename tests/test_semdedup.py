@@ -23,11 +23,13 @@ def _replay(rows, k, iters, thr=THR):
     """Pure-Python SemDeDup twin (independent of the committed golden's
     scale/params): replayed k-means, per-cell numpy cosine matrices,
     union-find, keep = min (micro-cos-to-centroid, vec_id)."""
+    import os
     import sys
 
     import numpy as np
 
-    sys.path.insert(0, "/root/repo/scripts")
+    tests_dir = os.path.dirname(os.path.abspath(__file__))
+    sys.path.insert(0, os.path.join(os.path.dirname(tests_dir), "scripts"))
     from gen_op_golden import _half_up, replay_kmeans, seq_cosine
 
     vecs = {

@@ -11,7 +11,7 @@ from tests.conftest import SF_TINY
 def test_hot_conversation_spreads_over_salt_buckets(spark):
     from text_ocr_spark.pipeline import extract_corpus
 
-    ex = extract_corpus(spark, SF_TINY, salt_buckets=16, num_partitions=16)
+    ex = extract_corpus(spark, SF_TINY, num_partitions=16)
     parts = (
         ex.where(F.col("conv_id") == "conv-skew")
         .select("part_id")
@@ -25,7 +25,7 @@ def test_hot_conversation_spreads_over_salt_buckets(spark):
 def test_partition_balance_bounded(spark):
     from text_ocr_spark.pipeline import extract_corpus, lineage_metrics
 
-    ex = extract_corpus(spark, SF_TINY, salt_buckets=16, num_partitions=8)
+    ex = extract_corpus(spark, SF_TINY, num_partitions=8)
     m = lineage_metrics(ex, run_id="skew").toPandas()
     # max partition carries < 3x the mean (500 rows over 8 partitions)
     assert m.rows_out.max() < 3 * m.rows_out.mean()

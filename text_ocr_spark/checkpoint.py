@@ -51,7 +51,6 @@ from pyspark.util import inheritable_thread_target
 
 from text_ocr_spark.pipeline import (
     LINEAGE_KINDS,
-    SALT_BUCKETS,
     _read_docs,
     conv_chunk_expr,
     extract_docs,
@@ -104,7 +103,6 @@ def resumable_extract(
     *,
     run_id: str,
     n_chunks: int = 8,
-    salt_buckets: int = SALT_BUCKETS,
     num_partitions: int | None = None,
     fail_after: int | None = None,
     snapshot_id: str | None = None,
@@ -126,6 +124,9 @@ def resumable_extract(
     queued chunk starts and the chunks in flight finish and commit, so
     a restart loses at most one pool's width of in-flight work.
     """
+    if n_chunks < 1:
+        # range(n_chunks) would be empty: no chunk runs, nothing is written
+        raise ValueError(f"n_chunks must be >= 1, got {n_chunks}")
     snapshot_id = snapshot_id or _snapshot_fingerprint(sf_dir)
     done = committed_chunks(out_dir)
     stale = [cid for cid, rec in done.items() if rec["snapshot_id"] != snapshot_id]
@@ -151,11 +152,7 @@ def resumable_extract(
         # equivalent chunk_col(n)==cid on conv_id) would sit above the
         # MapInPandas node, which Catalyst cannot push a predicate
         # below — re-running the full Python extraction once per chunk.
-        ex = extract_docs(
-            docs.where(chunk_of == cid),
-            salt_buckets=salt_buckets,
-            num_partitions=num_partitions,
-        )
+        ex = extract_docs(docs.where(chunk_of == cid), num_partitions=num_partitions)
         # the observe node sits in the write's result stage, above the
         # Arrow stage with no exchange over it: each task's metrics are
         # applied once, so a retried task cannot double-count. An

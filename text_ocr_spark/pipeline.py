@@ -42,11 +42,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from text_ocr_spark.fixtures import build_payload, build_vertical
-from text_ocr_spark.kernels.constants import MAX_ANALYSIS_CHARS
 from text_ocr_spark.kernels.extract import extract_payload
 from text_ocr_spark.oracle import spans_to_json
 
-#: default number of salt buckets for the hot-conversation shuffle
+#: salt buckets for the hot-conversation shuffle; read at call time, so a
+#: test can patch the module attribute
 SALT_BUCKETS = 16
 
 TRANSCRIPT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
@@ -124,19 +124,14 @@ def _gen_payloads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-def build_transcripts(
-    spark: SparkSession, sf_dir: str, *, repeat: int = 1
-) -> DataFrame:
+def build_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents parquet -> transcripts DataFrame (input_hint shape).
 
     Payloads via mapInPandas (pure-function builders, order independent);
     conv/turn/role/ts metadata via JVM-side expressions on doc_id — kept
     SQL-expressible so the DuckDB oracle can rebuild it (fixtures.conv_of).
-
-    repeat > 1 replicates the corpus with offset doc_ids (bench scaling
-    only — payloads stay deterministic per synthetic doc_id).
     """
-    docs = _read_docs(spark, sf_dir, repeat)
+    docs = _read_docs(spark, sf_dir, 1)
     # a small parquet arrives as 1-2 splits; spread the Python payload
     # builders over the cluster (cheap shuffle: raw doc text only)
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
@@ -222,10 +217,7 @@ def _na_to_none(v: Any) -> Any:
 
 
 def _extract_columns(
-    payloads: Iterable[Any],
-    tools: Iterable[Any],
-    max_chars: int = MAX_ANALYSIS_CHARS,
-    pad_frac: float = 0.0,
+    payloads: Iterable[Any], tools: Iterable[Any]
 ) -> dict[str, Any]:
     """The one kernel loop: ``extract_payload`` over one batch.
 
@@ -242,9 +234,7 @@ def _extract_columns(
     bytes_out: list[int] = []
     for text, tool in zip(payloads, tools):
         t = _na_to_none(text)
-        kind, extracted, spans = extract_payload(
-            t, _na_to_none(tool), max_chars=max_chars, pad_frac=pad_frac
-        )
+        kind, extracted, spans = extract_payload(t, _na_to_none(tool))
         kinds.append(kind)
         texts.append(extracted)
         spans_json.append(spans_to_json(spans))
@@ -269,19 +259,13 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(
             {
                 **{c: pdf[c] for c in _PASS_COLS},
-                **_extract_columns(
-                    pdf["text"], pdf["tool"],
-                    max_chars=MAX_ANALYSIS_CHARS, pad_frac=0.0,
-                ),
+                **_extract_columns(pdf["text"], pdf["tool"]),
             }
         )
 
 
 def extract_transcripts(
-    df: DataFrame,
-    *,
-    salt_buckets: int = SALT_BUCKETS,
-    num_partitions: int | None = None,
+    df: DataFrame, *, num_partitions: int | None = None
 ) -> DataFrame:
     """transcripts -> extracted rows (one per turn, always).
 
@@ -290,7 +274,7 @@ def extract_transcripts(
     the Window/sort that restores ordering runs on unsalted keys afterwards.
     """
     narrow = df.select(*_PASS_COLS, "text")
-    salt = F.pmod(F.xxhash64("turn_idx"), F.lit(salt_buckets))
+    salt = F.pmod(F.xxhash64("turn_idx"), F.lit(SALT_BUCKETS))
     if num_partitions:
         salted = narrow.repartition(num_partitions, F.col("conv_id"), salt)
     else:
@@ -298,29 +282,25 @@ def extract_transcripts(
     return salted.mapInPandas(_extract_batches, schema=EXTRACT_SCHEMA)
 
 
-def _gen_extract_batches_fn(max_chars: int | None, pad_frac: float):
-    """Fused payload-build + extraction (single Arrow stage), with the
-    B2 window bound and D6 padding flag captured in the closure.
+def _extract_doc_batches(
+    batches: Iterator[pd.DataFrame],
+) -> Iterator[pd.DataFrame]:
+    """Fused payload-build + extraction (single Arrow stage).
 
     Input is deliberately just (doc_id, text): every other transcript
     column (conv_id/turn_idx/role/ts) is a pure JVM expression on doc_id
     attached AFTER this stage — strings/timestamps that merely pass
     through a pandas UDF cost Arrow+object conversion for nothing.
     """
-    mc = MAX_ANALYSIS_CHARS if max_chars is None else max_chars
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, tools = _build_payloads(pdf)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "tool": tools,
-                    **_extract_columns(payloads, tools, mc, pad_frac),
-                }
-            )
-
-    return gen
+    for pdf in batches:
+        payloads, tools = _build_payloads(pdf)
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"],
+                "tool": tools,
+                **_extract_columns(payloads, tools),
+            }
+        )
 
 
 _FUSED_SCHEMA = (
@@ -346,35 +326,23 @@ def extract_corpus(
     sf_dir: str,
     *,
     repeat: int = 1,
-    salt_buckets: int = SALT_BUCKETS,
     num_partitions: int | None = None,
-    max_chars: int | None = None,
-    pad_frac: float = 0.0,
 ) -> DataFrame:
     """documents at sf_dir -> extracted rows; the one-exchange fast path
-    (``extract_docs`` over one scan of ``documents.parquet``)."""
+    (``extract_docs`` over one scan of ``documents.parquet``).
+
+    repeat > 1 replicates the corpus with offset doc_ids (bench scaling
+    only — payloads stay deterministic per synthetic doc_id).
+    """
     return extract_docs(
-        _read_docs(spark, sf_dir, repeat),
-        salt_buckets=salt_buckets,
-        num_partitions=num_partitions,
-        max_chars=max_chars,
-        pad_frac=pad_frac,
+        _read_docs(spark, sf_dir, repeat), num_partitions=num_partitions
     )
 
 
 def extract_docs(
-    docs: DataFrame,
-    *,
-    salt_buckets: int = SALT_BUCKETS,
-    num_partitions: int | None = None,
-    max_chars: int | None = None,
-    pad_frac: float = 0.0,
+    docs: DataFrame, *, num_partitions: int | None = None
 ) -> DataFrame:
     """(doc_id, text) rows -> extracted rows.
-
-    ``max_chars``/``pad_frac`` surface the B2 bounded-analysis window
-    and the D6 span-padding flag (kernels/extract.py) at the pipeline
-    API; defaults preserve golden-exact output.
 
     Physical plan: scan -> ONE salted exchange of (doc_id, text) rows
     (the partitioning keys are computed expressions — no metadata
@@ -391,20 +359,13 @@ def extract_docs(
     data files instead of merely rows).
     """
     docs = docs.select("doc_id", "text")
-    if salt_buckets <= 0:
-        # no exchange: trust the source partitioning (an Iceberg table
-        # bucketed on conv_id arrives pre-spread, skew pre-defused)
-        salted = docs
+    d = F.col("doc_id")
+    salt = F.pmod(F.xxhash64(_turn_idx_expr(d)), F.lit(SALT_BUCKETS))
+    if num_partitions:
+        salted = docs.repartition(num_partitions, _conv_id_expr(d), salt)
     else:
-        d = F.col("doc_id")
-        salt = F.pmod(F.xxhash64(_turn_idx_expr(d)), F.lit(salt_buckets))
-        if num_partitions:
-            salted = docs.repartition(num_partitions, _conv_id_expr(d), salt)
-        else:
-            salted = docs.repartition(_conv_id_expr(d), salt)
-    raw = salted.mapInPandas(
-        _gen_extract_batches_fn(max_chars, pad_frac), schema=_FUSED_SCHEMA
-    )
+        salted = docs.repartition(_conv_id_expr(d), salt)
+    raw = salted.mapInPandas(_extract_doc_batches, schema=_FUSED_SCHEMA)
     return _with_transcript_meta(raw).select(*EXTRACT_SCHEMA_COLS)
 
 
@@ -537,16 +498,3 @@ def conversation_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         digest, "conv_id string, n_turns long, digest string, sum_chars long"
     )
 
-
-def run_extraction(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    salt_buckets: int = SALT_BUCKETS,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Convenience: documents at sf_dir -> ordered extraction output."""
-    ex = extract_corpus(
-        spark, sf_dir, salt_buckets=salt_buckets, num_partitions=num_partitions
-    )
-    return ordered(ex, num_partitions=num_partitions)

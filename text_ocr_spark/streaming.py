@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from text_ocr_spark.pipeline import SALT_BUCKETS, extract_transcripts
+from text_ocr_spark.pipeline import extract_transcripts
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
@@ -53,7 +53,6 @@ def stream_extract(
     out_dir: str,
     checkpoint_dir: str,
     *,
-    salt_buckets: int = SALT_BUCKETS,
     num_partitions: int | None = None,
     available_now: bool = True,
 ) -> StreamingQuery:
@@ -66,7 +65,7 @@ def stream_extract(
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         out = extract_transcripts(
-            batch_df, salt_buckets=salt_buckets, num_partitions=num_partitions
+            batch_df, num_partitions=num_partitions
         ).withColumn("epoch_id", F.lit(epoch_id))
         write_epoch(out, out_dir)
 
