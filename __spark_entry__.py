@@ -293,9 +293,7 @@ def _ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     from text_ocr_spark.ops.similarity import ivf_assign, ivf_train
 
     emb = _emb(spark, sf_dir)
-    return ivf_assign(emb, centroids=ivf_train(emb, k=8, iters=4)).orderBy(
-        "vec_id"
-    )
+    return ivf_assign(emb, centroids=ivf_train(emb)).orderBy("vec_id")
 
 
 def _decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -526,7 +524,7 @@ def _semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (scripts/gen_op_golden.py::golden_semdedup)."""
     from text_ocr_spark.ops.dedup import semdedup
 
-    return semdedup(_emb(spark, sf_dir), k=8, iters=4).orderBy("vec_id")
+    return semdedup(_emb(spark, sf_dir)).orderBy("vec_id")
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -711,9 +709,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "vec_id"
         ),
         # placeholder-centroid assignment: a pinned subcomponent of the
-        # in-window knn_ivf row (same ivf_assign call) and of ivf_train's
-        # green row (which runs ivf_assign against trained centroids);
-        # green r1-r3, plus tests/test_similarity.py unit coverage
+        # in-window knn_ivf row (which assigns its corpus through the
+        # same code) and of ivf_train's green row (which runs ivf_assign
+        # against trained centroids); green r1-r3, plus unit coverage in
+        # tests/test_ops.py
         "ivf_assign": lambda s, d: ivf_assign(_emb(s, d)).orderBy("vec_id"),
         # r4 demotions (head slots went to the three new pipeline
         # families dup_spans/strip_dup_spans/sample_stratified), each

@@ -121,7 +121,7 @@ def _semdedup_df(spark):
     from text_ocr_spark.ops.dedup import semdedup
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    return semdedup(emb, k=8, iters=1)
+    return semdedup(emb)
 
 
 def _decontaminate_ngrams_df(spark, docs):
@@ -133,13 +133,25 @@ def _decontaminate_ngrams_df(spark, docs):
     return decontaminate_ngrams(docs, test, ngram=13)
 
 
-def _decontaminate_df(spark, docs, dense=None):
+def _decontaminate_df(docs, mod=13, ngram=1):
     from pyspark.sql import functions as F
 
     from text_ocr_spark.ops.decontam import decontaminate
 
-    test = docs.where(F.col("doc_id") % 13 == 0).select("doc_id", "text")
-    return decontaminate(docs, test, threshold=0.8, dense=dense)
+    test = docs.where(F.col("doc_id") % mod == 0).select("doc_id", "text")
+    return decontaminate(docs, test, threshold=0.8, ngram=ngram)
+
+
+def _embed_prefilter_df(emb):
+    """The prefilter engages past EXHAUSTIVE_BLOCK_LIMIT blocks, i.e.
+    over 16 x DENSE_BLOCK vectors; this corpus holds 500, so DENSE_BLOCK
+    is patched to 16 while the plan is built."""
+    from unittest import mock
+
+    from text_ocr_spark.ops import dedup
+
+    with mock.patch.object(dedup, "DENSE_BLOCK", 16):
+        return dedup.embed_pairs(emb)
 
 
 def _pretrain_segments(spark):
@@ -180,7 +192,7 @@ def _langid_classify_df(spark, docs):
 
 
 def main() -> int:
-    from text_ocr_spark.ops.dedup import embed_pairs, minhash_dedup
+    from text_ocr_spark.ops.dedup import minhash_dedup
     from text_ocr_spark.ops.text_stats import frequent_ngrams
     from text_ocr_spark.ops.joins import purchase_error_window, purchases_asof_view
     from text_ocr_spark.ops.relational import (
@@ -279,15 +291,15 @@ def main() -> int:
             extract_docs(docs.where(conv_chunk_expr(8) == 3), num_partitions=8),
         ),
         (
-            "embed_pairs with LSH candidate-block prefilter (block_size=16: "
-            "32 blocks)",
+            "embed_pairs with LSH candidate-block prefilter (DENSE_BLOCK "
+            "patched to 16: 32 blocks)",
             "Tile enumeration bounded by the sign-random-projection "
             "candidate-block join: the per-(block, table, bucket) distinct "
             "set self-joins on (table, bucket), broadcasts, and only "
             "colliding block pairs become GEMM tiles — the blanket "
             "B(B+1)/2 cross join disappears above EXHAUSTIVE_BLOCK_LIMIT "
             "blocks.",
-            embed_pairs(emb, block_size=16),
+            _embed_prefilter_df(emb),
         ),
         (
             "minhash_dedup (default at this corpus: gate-skipped collapse, "
@@ -337,10 +349,11 @@ def main() -> int:
             "shuffle), and the final verdict attach scans train as "
             "doc_id-only (ReadSchema pruned; AQE broadcasts the bounded "
             "match set at runtime).",
-            _decontaminate_df(spark, docs),
+            _decontaminate_df(docs),
         ),
         (
-            "decontaminate (forced inverted-index arm)",
+            "decontaminate (inverted-index arm — 3-shingles of a 1-in-3 "
+            "test slice, over 4096 distinct)",
             "The big-eval-suite route (test corpus over 4096 docs or "
             "4096 distinct tokens): train tokens join exploded test "
             "tokens on the token — pairs must share >= 1 token, the "
@@ -348,7 +361,7 @@ def main() -> int:
             "map-side-combined (cardinalities ride as long min()s), and "
             "the output is bounded by true cross-candidate mass. No "
             "Python anywhere on this route (pytest plan gate).",
-            _decontaminate_df(spark, docs, dense=False),
+            _decontaminate_df(docs, mod=3, ngram=3),
         ),
         (
             "frequent_ngrams (corpus boilerplate profile)",
@@ -469,7 +482,7 @@ def main() -> int:
             "semdedup (within-cell semantic dedup)",
             "Pairwise work is bounded by the k-means partition: the "
             "trained centroids broadcast into the assignment, cells "
-            "split into PER-CELL-adaptive ceil(n_c/block_size) xxhash64 "
+            "split into PER-CELL-adaptive ceil(n_c/DENSE_BLOCK) xxhash64 "
             "sub-blocks (the k-row size frame broadcasts), and only "
             "same-cell sub-block pairs reach the shared GEMM tile "
             "kernel — one bounded mapInPandas, never an O(n^2) pair "

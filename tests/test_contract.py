@@ -97,6 +97,39 @@ def test_entry_paths_follow_the_checkout(tmp_path):
         assert value.startswith(str(tmp_path) + os.sep), (name, value)
 
 
+def test_embedding_family_takes_only_its_input():
+    """The 11 embedding entry points keep a settable value only where two
+    real callers need different ones: the centroids of ivf_assign (the
+    ivf_train and ivf_assign rows) and of ivf_topk, and embed_pairs'
+    n_vecs (the incremental index passes its delta count)."""
+    import inspect
+
+    from text_ocr_spark.ops import dedup, incremental, similarity
+
+    family = [
+        similarity.brute_topk,
+        similarity.ivf_assign,
+        similarity.ivf_train,
+        similarity.ivf_topk,
+        dedup.embed_pairs,
+        dedup.embed_resolve,
+        dedup.semdedup,
+        incremental.build_embed_index,
+        incremental.embed_incremental_edges,
+        incremental.embed_incremental_resolve,
+        incremental.update_embed_index,
+    ]
+    settable = {
+        f"{fn.__name__}.{name}"
+        for fn in family
+        for name, p in inspect.signature(fn).parameters.items()
+        if p.default is not inspect.Parameter.empty
+    }
+    assert settable == {
+        "ivf_assign.centroids", "ivf_topk.centroids", "embed_pairs.n_vecs",
+    }
+
+
 def test_every_query_has_oracle_or_reason():
     import __spark_entry__ as e
 

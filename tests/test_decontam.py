@@ -8,12 +8,17 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from text_ocr_spark.ops import decontam
 from text_ocr_spark.ops.decontam import decontaminate
 from text_ocr_spark.ops.text_stats import frequent_ngrams
 
 
 def _tr(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 @pytest.fixture(scope="module")
@@ -114,15 +119,11 @@ def test_shingle_mode_sees_word_order(spark):
     assert tri["contaminated"] == 0
 
 
-def test_inverted_route_plan_is_pure_jvm(spark):
+def test_inverted_route_plan_is_pure_jvm(spark, monkeypatch):
+    monkeypatch.setattr(decontam, "DENSE_MAX_TEST_DOCS", 0)
     train = _tr(spark, [(1, "a b"), (2, "c d")])
     test = _tr(spark, [(9, "a b")])
-    p = (
-        decontaminate(train, test, dense=False)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    p = _plan(decontaminate(train, test))
     assert "MapInPandas" not in p
     assert "BatchEvalPython" not in p
     assert "ArrowEvalPython" not in p
@@ -137,21 +138,17 @@ def test_dense_route_plan_one_arrow_stage_no_near_join(spark):
 
     train = _tr(spark, [(i, f"tok{i} common words") for i in range(6)])
     test = _tr(spark, [(900, "common words tokX")])
-    p = (
-        decontaminate(train, test, dense=True)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    p = _plan(decontaminate(train, test))
     assert len(re.findall(r"MapInPandas", p)) == 1
     assert "BatchEvalPython" not in p
 
 
-def test_routes_agree_on_randomized_corpus(spark):
+def test_routes_agree_on_randomized_corpus(spark, monkeypatch):
     """Both physical routes are the same exact operator: identical
     verdicts, kinds, best ids, and bit-identical jaccard doubles on a
     seeded random corpus with exact dups, near dups, nulls, and
-    threshold-boundary pairs."""
+    threshold-boundary pairs. The probe picks the dense arm here; a
+    zero doc cap forces the inverted one."""
     import random
 
     rng = random.Random(41)
@@ -166,22 +163,27 @@ def test_routes_agree_on_randomized_corpus(spark):
     ] + [(215, train_rows[3][1]), (216, None)]  # verbatim leak + null
     train, test = _tr(spark, train_rows), _tr(spark, test_rows)
     for thr in (0.5, 0.8):
-        a = decontaminate(train, test, threshold=thr, dense=True)
-        b = decontaminate(train, test, threshold=thr, dense=False)
+        a = decontaminate(train, test, threshold=thr)
+        with monkeypatch.context() as mp:
+            mp.setattr(decontam, "DENSE_MAX_TEST_DOCS", 0)
+            b = decontaminate(train, test, threshold=thr)
+        assert "MapInPandas" in _plan(a)
+        assert "MapInPandas" not in _plan(b)
         ra = [tuple(r) for r in a.orderBy("doc_id").collect()]
         rb = [tuple(r) for r in b.orderBy("doc_id").collect()]
         assert ra == rb
         assert any(r[2] == "exact" for r in ra)  # the leak was caught
 
 
-def test_dense_forced_but_caps_exceeded_raises(spark):
-    from text_ocr_spark.ops.decontam import DENSE_MAX_TEST_DOCS  # noqa: F401
-
+def test_vocab_cap_falls_back_to_inverted(spark):
+    """One test doc with DENSE_VOCAB_LIMIT + 1 distinct tokens: the
+    probe must take the inverted arm (no Arrow stage) instead of
+    building 4097-bit masks."""
     train = _tr(spark, [(1, "a b")])
-    # vocab cap: > DENSE_VOCAB_LIMIT distinct tokens on the test side
     big_vocab = _tr(spark, [(9, " ".join(f"t{i}" for i in range(4097)))])
-    with pytest.raises(ValueError, match="dense route forced"):
-        decontaminate(train, big_vocab, dense=True)
+    out = decontaminate(train, big_vocab)
+    assert "MapInPandas" not in _plan(out)
+    assert out.first()["contaminated"] == 0
 
 
 # ---------------------------------------------------------------------------
@@ -235,27 +237,16 @@ def test_frequent_ngrams_plan_takeordered(spark):
     assert "MapInPandas" not in p and "BatchEvalPython" not in p
 
 
-def test_dense_doc_cap_forced_raises_and_probe_falls_back(spark):
-    """The DENSE_MAX_TEST_DOCS cap itself: a tiny-vocab test corpus
-    with too many DOCS must refuse the forced dense route (the cap
-    bounds the driver collect and the broadcast), and the probe
-    (dense=None) must fall back to the inverted arm instead of
-    collecting >4096 masks."""
-    from text_ocr_spark.ops.decontam import DENSE_MAX_TEST_DOCS
-
+def test_doc_cap_falls_back_to_inverted(spark):
+    """The DENSE_MAX_TEST_DOCS cap itself (it bounds the driver collect
+    and the broadcast): a tiny-vocab test corpus with too many DOCS must
+    take the inverted arm instead of collecting >4096 masks."""
     train = _tr(spark, [(1, "a b")])
-    n = DENSE_MAX_TEST_DOCS + 1
+    n = decontam.DENSE_MAX_TEST_DOCS + 1
     big_docs = spark.range(n).select(
         F.col("id").alias("doc_id"), F.lit("a b").alias("text")
     )
-    with pytest.raises(ValueError, match="dense route forced"):
-        decontaminate(train, big_docs, dense=True)
-    p = (
-        decontaminate(train, big_docs, dense=None)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    p = _plan(decontaminate(train, big_docs))
     assert "MapInPandas" not in p  # inverted arm: pure JVM
 
 

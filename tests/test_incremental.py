@@ -269,8 +269,8 @@ def test_embed_incremental_matches_batch_union(spark, emb):
     assert any(v[2] == 1 for v in inc.values())  # delta really clusters
 
 
-def test_embed_incremental_forced_small_blocks(spark, emb):
-    """Scale-only-bug protocol: block_size=16 => ~30 blocks, exercising
+def test_embed_incremental_forced_small_blocks(spark, emb, monkeypatch):
+    """Scale-only-bug protocol: DENSE_BLOCK=16 => ~30 blocks, exercising
     the multi-block paths (wave-namespaced block ids, candidate-block
     join, leftsemi pruning) in BOTH regimes — the prefilter (which the
     block count engages by default) and the exhaustive fallback (forced
@@ -293,15 +293,14 @@ def test_embed_incremental_forced_small_blocks(spark, emb):
         if r.vec_id % 5 == 4
     }
     tmp = tempfile.mkdtemp(prefix="einc_blocks_")
-    build_embed_index(corpus, tmp, block_size=16)
+    monkeypatch.setattr(dedup, "DENSE_BLOCK", 16)
+    build_embed_index(corpus, tmp)
     for limit in (dedup.EXHAUSTIVE_BLOCK_LIMIT, 1 << 30):
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(dedup, "EXHAUSTIVE_BLOCK_LIMIT", limit)
             inc = {
                 r.vec_id: (r.cluster_id, r.is_dup)
-                for r in embed_incremental_resolve(
-                    spark, delta, tmp, block_size=16
-                ).collect()
+                for r in embed_incremental_resolve(spark, delta, tmp).collect()
             }
         assert inc == batch, f"block limit={limit}"
 

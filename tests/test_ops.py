@@ -187,12 +187,13 @@ def test_media_resize_dims(spark, docs):
         assert abs(want_ratio - got_ratio) / want_ratio < 0.1
 
 
-def test_dense_tiles_multiblock_regression(spark, docs, emb):
+def test_dense_tiles_multiblock_regression(spark, docs, emb, monkeypatch):
     """Forced small blocks (many cross-block tiles) must equal the
     single-block result — guards the cross-tile pair-orientation bug
     that only appears at multi-block scale."""
     import numpy as np
 
+    from text_ocr_spark.ops import dedup
     from text_ocr_spark.ops.dedup import (
         _dense_jaccard_pairs,
         _probe_corpus,
@@ -225,9 +226,9 @@ def test_dense_tiles_multiblock_regression(spark, docs, emb):
     single = {
         (r.vec_a, r.vec_b, r.cos) for r in embed_pairs(emb).collect()
     }
+    monkeypatch.setattr(dedup, "DENSE_BLOCK", 64)
     multi_e = {
-        (r.vec_a, r.vec_b, r.cos)
-        for r in embed_pairs(emb, block_size=64).collect()
+        (r.vec_a, r.vec_b, r.cos) for r in embed_pairs(emb).collect()
     }
     assert multi_e == single and len(single) > 0
 
@@ -518,22 +519,19 @@ def test_default_routes_pinned(spark, monkeypatch):
 
 
 def test_embed_prefilter_recall_at_many_blocks(spark, emb, monkeypatch):
-    """block_size=16 => 30+ blocks: the cross-block collision recall is
+    """DENSE_BLOCK=16 => 30+ blocks: the cross-block collision recall is
     exercised far past EXHAUSTIVE_BLOCK_LIMIT and must still be exact on
     this corpus (ADVICE r2: recall assertion beyond the 8-block case).
-    The default engages the prefilter here; a raised limit forces the
-    exhaustive tiles."""
+    The default limit engages the prefilter here; a raised limit forces
+    the exhaustive tiles."""
     from text_ocr_spark.ops import dedup
     from text_ocr_spark.ops.dedup import embed_pairs
 
-    pre = {
-        (r.vec_a, r.vec_b, r.cos)
-        for r in embed_pairs(emb, block_size=16).collect()
-    }
+    monkeypatch.setattr(dedup, "DENSE_BLOCK", 16)
+    pre = {(r.vec_a, r.vec_b, r.cos) for r in embed_pairs(emb).collect()}
     monkeypatch.setattr(dedup, "EXHAUSTIVE_BLOCK_LIMIT", 1 << 30)
     exhaustive = {
-        (r.vec_a, r.vec_b, r.cos)
-        for r in embed_pairs(emb, block_size=16).collect()
+        (r.vec_a, r.vec_b, r.cos) for r in embed_pairs(emb).collect()
     }
     assert pre == exhaustive
     assert len(exhaustive) > 0
@@ -642,15 +640,12 @@ def test_embed_prefilter_matches_exhaustive(spark, emb, monkeypatch):
     from text_ocr_spark.ops import dedup
     from text_ocr_spark.ops.dedup import embed_pairs
 
+    monkeypatch.setattr(dedup, "DENSE_BLOCK", 64)
     exhaustive = {
-        (r.vec_a, r.vec_b, r.cos)
-        for r in embed_pairs(emb, block_size=64).collect()
+        (r.vec_a, r.vec_b, r.cos) for r in embed_pairs(emb).collect()
     }
     monkeypatch.setattr(dedup, "EXHAUSTIVE_BLOCK_LIMIT", 0)
-    pre = {
-        (r.vec_a, r.vec_b, r.cos)
-        for r in embed_pairs(emb, block_size=64).collect()
-    }
+    pre = {(r.vec_a, r.vec_b, r.cos) for r in embed_pairs(emb).collect()}
     assert pre == exhaustive
     assert len(exhaustive) > 0
 
@@ -672,20 +667,15 @@ def test_embed_prefilter_prunes_antipodal_blocks(spark, monkeypatch):
         pd.DataFrame({"vec_id": [r[0] for r in rows],
                       "embedding": [r[1] for r in rows]})
     ).select("vec_id", F.col("embedding").cast("array<float>").alias("embedding"))
-    n_blocks = 8  # block_size=1 -> singleton blocks
+    n_blocks = 8  # DENSE_BLOCK=1 -> singleton blocks
     cand = _candidate_block_pairs(
         emb, F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks))
     ).count()
     assert cand < n_blocks * (n_blocks + 1) // 2
-    ex = {
-        (r.vec_a, r.vec_b)
-        for r in embed_pairs(emb, threshold=0.35, block_size=1).collect()
-    }
+    monkeypatch.setattr(dedup, "DENSE_BLOCK", 1)
+    ex = {(r.vec_a, r.vec_b) for r in embed_pairs(emb).collect()}
     monkeypatch.setattr(dedup, "EXHAUSTIVE_BLOCK_LIMIT", 0)
-    pre = {
-        (r.vec_a, r.vec_b)
-        for r in embed_pairs(emb, threshold=0.35, block_size=1).collect()
-    }
+    pre = {(r.vec_a, r.vec_b) for r in embed_pairs(emb).collect()}
     assert pre == ex
     # same-sign pairs all have cos = 1: 4+4 vectors -> 6+6 pairs
     assert len(ex) == 12
@@ -932,7 +922,7 @@ def test_shingle_mode_sees_word_order(spark):
         assert got == exact, f"route limit={limit}"
 
 
-def test_ivf_train_objective_and_golden(spark):
+def test_ivf_train_objective_and_golden(spark, monkeypatch):
     """VERDICT r3 item 4: distributed Lloyd's k-means. (a) the trained
     centroids strictly improve the k-means objective (mean max-cosine to
     the assigned centroid) over the vec_id<8 placeholder AND over the
@@ -949,6 +939,7 @@ def test_ivf_train_objective_and_golden(spark):
 
     from pyspark.sql import functions as F
 
+    from text_ocr_spark.ops import similarity
     from text_ocr_spark.ops.similarity import (
         cosine_col,
         ivf_assign,
@@ -972,8 +963,9 @@ def test_ivf_train_objective_and_golden(spark):
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").cast("array<double>").alias("cv"),
     )
-    one = ivf_train(emb, k=8, iters=1)
-    four = ivf_train(emb, k=8, iters=4)
+    four = ivf_train(emb)  # the defaults: KMEANS_K=8, KMEANS_ITERS=4
+    monkeypatch.setattr(similarity, "KMEANS_ITERS", 1)
+    one = ivf_train(emb)
     o_p, o_1, o_4 = objective(placeholder), objective(one), objective(four)
     assert o_1 > o_p  # one Lloyd step already beats raw seed vectors
     assert o_4 >= o_1  # Lloyd's objective is monotone
@@ -1097,7 +1089,7 @@ def test_hot_group_engages_collapse_at_low_dup_rate(spark, caplog, monkeypatch):
     assert len(got) == k * (k - 1) // 2  # exactly the mega-group's pairs
 
 
-def test_ivf_trained_recall_on_clustered_corpus(spark):
+def test_ivf_trained_recall_on_clustered_corpus(spark, monkeypatch):
     """The regime IVF exists for: a corpus with REAL cluster structure.
     The placeholder centroids (vec_id < 8 = eight noisy points of ONE
     cluster) cannot route probes; trained Lloyd's centroids recover the
@@ -1108,6 +1100,7 @@ def test_ivf_trained_recall_on_clustered_corpus(spark):
     md5-seeded, fixed-point-exact training.)"""
     import numpy as np
 
+    from text_ocr_spark.ops import similarity
     from text_ocr_spark.ops.similarity import brute_topk, ivf_topk, ivf_train
 
     rng = np.random.default_rng(7)
@@ -1137,7 +1130,8 @@ def test_ivf_trained_recall_on_clustered_corpus(spark):
         }
         & brute
     ) / len(brute)
-    trained = ivf_train(emb, k=8, iters=6)
+    monkeypatch.setattr(similarity, "KMEANS_ITERS", 6)
+    trained = ivf_train(emb)
     r_t = recall(trained)
     assert r_t >= 0.9, (r_p, r_t)
     assert r_t > r_p + 0.2, (r_p, r_t)

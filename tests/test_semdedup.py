@@ -1,7 +1,8 @@
 """SemDeDup (ops/dedup.py::semdedup): pure-Python replay equality at a
-non-default (k, iters), the paper's farthest-from-centroid keep rule,
-within-cell-only pairing, sub-block differential, and partition
-independence."""
+non-default (KMEANS_K, KMEANS_ITERS), the paper's farthest-from-centroid
+keep rule, within-cell-only pairing, sub-block differentials at a
+patched DENSE_BLOCK, and partition independence of training and dedup
+alike. Tests set the cells through the patched similarity constants."""
 
 from __future__ import annotations
 
@@ -17,6 +18,17 @@ def emb(spark):
     return spark.read.parquet(f"{SF_TINY}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
+
+
+def _kmeans(monkeypatch, k, iters):
+    from text_ocr_spark.ops import similarity
+
+    monkeypatch.setattr(similarity, "KMEANS_K", k)
+    monkeypatch.setattr(similarity, "KMEANS_ITERS", iters)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
 
 
 def _replay(rows, k, iters, thr=THR):
@@ -74,27 +86,30 @@ def _replay(rows, k, iters, thr=THR):
     return out
 
 
-def test_semdedup_matches_pure_python_replay(spark, emb):
+def test_semdedup_matches_pure_python_replay(spark, emb, monkeypatch):
     from text_ocr_spark.ops.dedup import semdedup
 
+    _kmeans(monkeypatch, 5, 2)
     got = {
         r.vec_id: (r.centroid_id, r.cluster_id, r.keep_id, r.is_dup)
-        for r in semdedup(emb, k=5, iters=2).collect()
+        for r in semdedup(emb).collect()
     }
     want = _replay(emb.collect(), k=5, iters=2)
     assert got == want
     assert sum(1 for v in got.values() if v[3] == 1) > 0  # real dups exist
 
 
-def test_semdedup_keep_rule_is_farthest_from_centroid(spark, emb):
+def test_semdedup_keep_rule_is_farthest_from_centroid(spark, emb, monkeypatch):
     """In every multi-member cluster the keeper must be the member with
     the minimal (cos-to-centroid, vec_id) — NOT necessarily the min id
-    (embed_resolve's rule); the fixture corpus must distinguish them."""
+    (embed_resolve's rule); the fixture corpus must distinguish them.
+    semdedup trains the same (deterministic) cells as ivf_train here."""
     from text_ocr_spark.ops.dedup import semdedup
     from text_ocr_spark.ops.similarity import cosine_col, ivf_train
 
-    cents = ivf_train(emb, k=5, iters=2)
-    out = semdedup(emb, k=5, iters=2, centroids=cents)
+    _kmeans(monkeypatch, 5, 2)
+    cents = ivf_train(emb)
+    out = semdedup(emb)
     ccos = {
         r.vec_id: r.c
         for r in emb.join(
@@ -124,12 +139,13 @@ def test_semdedup_keep_rule_is_farthest_from_centroid(spark, emb):
     assert any(keep[c] != min(m) for c, m in multi.items())
 
 
-def test_semdedup_pairs_are_within_cell_only(spark, emb):
+def test_semdedup_pairs_are_within_cell_only(spark, emb, monkeypatch):
     """Every duplicate component must live inside ONE k-means cell —
     cross-cell duplicates are out of scope by the paper's design."""
     from text_ocr_spark.ops.dedup import semdedup
 
-    rows = semdedup(emb, k=5, iters=2).collect()
+    _kmeans(monkeypatch, 5, 2)
+    rows = semdedup(emb).collect()
     cell_of = {r.vec_id: r.centroid_id for r in rows}
     comp: dict[int, set[int]] = {}
     for r in rows:
@@ -137,43 +153,33 @@ def test_semdedup_pairs_are_within_cell_only(spark, emb):
     assert all(len(cells) == 1 for cells in comp.values())
 
 
-def test_semdedup_subblock_differential(spark, emb):
-    """Forcing tiny sub-blocks (block_size=16 -> many tiles per cell)
+def test_semdedup_subblock_differential(spark, emb, monkeypatch):
+    """Forcing tiny sub-blocks (DENSE_BLOCK=16 -> many tiles per cell)
     must not change a single verdict vs the one-tile-per-cell run."""
-    from text_ocr_spark.ops.dedup import semdedup
+    from text_ocr_spark.ops import dedup
 
-    a = sorted(map(tuple, semdedup(emb, k=4, iters=1).collect()))
-    b = sorted(
-        map(tuple, semdedup(emb, k=4, iters=1, block_size=16).collect())
-    )
-    assert a == b
+    _kmeans(monkeypatch, 4, 1)
+    a = _rows(dedup.semdedup(emb))
+    monkeypatch.setattr(dedup, "DENSE_BLOCK", 16)
+    assert _rows(dedup.semdedup(emb)) == a
 
 
-def test_semdedup_megacell_stays_block_bounded(spark, emb):
+def test_semdedup_megacell_stays_block_bounded(spark, emb, monkeypatch):
     """One cell holding the whole corpus (k=1) must still split into
-    ~block_size sub-blocks (the ADAPTIVE per-cell count — a global
+    ~DENSE_BLOCK sub-blocks (the ADAPTIVE per-cell count — a global
     count keyed on k would make this one cell's tiles k times bigger),
-    and the verdicts must match the one-tile run exactly."""
+    and the verdicts must match the one-tile run exactly. Each call
+    trains its own cell."""
     from pyspark.sql import functions as F
 
-    from text_ocr_spark.ops.dedup import semdedup
-    from text_ocr_spark.ops.similarity import ivf_train
+    from text_ocr_spark.ops import dedup
 
-    cents = ivf_train(emb, k=1, iters=1)
-    big = sorted(
-        map(tuple, semdedup(emb, k=1, iters=1, centroids=cents).collect())
-    )
-    small = sorted(
-        map(
-            tuple,
-            semdedup(
-                emb, k=1, iters=1, centroids=cents, block_size=32
-            ).collect(),
-        )
-    )
-    assert big == small
-    # the adaptive sub count at block_size=32 over 500 one-cell vectors:
-    # 16 sub-blocks, max occupancy well under a few x block_size
+    _kmeans(monkeypatch, 1, 1)
+    big = _rows(dedup.semdedup(emb))
+    monkeypatch.setattr(dedup, "DENSE_BLOCK", 32)
+    assert _rows(dedup.semdedup(emb)) == big
+    # the adaptive sub count at DENSE_BLOCK=32 over 500 one-cell vectors:
+    # 16 sub-blocks, max occupancy well under a few x DENSE_BLOCK
     n = emb.count()
     n_sub = -(-n // 32)
     occ = (
@@ -188,13 +194,11 @@ def test_semdedup_megacell_stays_block_bounded(spark, emb):
     assert occ <= 4 * 32
 
 
-def test_semdedup_partition_independence(spark, emb):
+def test_semdedup_partition_independence(spark, emb, monkeypatch):
+    """Each call trains its own cells, so the k-means training is held
+    to partition independence as well as the dedup."""
     from text_ocr_spark.ops.dedup import semdedup
-    from text_ocr_spark.ops.similarity import ivf_train
 
-    cents = ivf_train(emb, k=4, iters=1)
-    a = semdedup(emb, k=4, iters=1, centroids=cents)
-    b = semdedup(
-        emb.repartition(13, "embedding"), k=4, iters=1, centroids=cents
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    _kmeans(monkeypatch, 4, 1)
+    a = _rows(semdedup(emb))
+    assert _rows(semdedup(emb.repartition(13, "embedding"))) == a

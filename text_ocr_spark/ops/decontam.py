@@ -217,7 +217,6 @@ def decontaminate(
     test: DataFrame,
     threshold: float = 0.8,
     ngram: int = 1,
-    dense: bool | None = None,
 ) -> DataFrame:
     """-> (doc_id, contaminated, match_kind, best_test_id, best_jaccard)
     for EVERY train doc (a verdict table, like gopher_filter — consumers
@@ -229,11 +228,11 @@ def decontaminate(
     contaminated (they match nothing, mirroring tokens_col's NULL
     discipline).
 
-    ``dense`` forces the near-arm route (None = probe: two bounded
-    driver actions over the TEST side only — a count and a
-    <= DENSE_VOCAB_LIMIT+1-row vocab collect, the same bounded-probe
-    idiom as dedup._probe_corpus; the 100 TB train side is never
-    touched by the probe)."""
+    The near-arm route comes from a probe: two bounded driver actions
+    over the TEST side only — a <= DENSE_VOCAB_LIMIT+1-row vocab
+    collect and a count, the same bounded-probe idiom as
+    dedup._probe_corpus; the 100 TB train side is never touched by the
+    probe. Tests force the inverted arm with DENSE_MAX_TEST_DOCS = 0."""
     tr = train.select("doc_id", "text")
     te = test.select(F.col("doc_id").alias("test_id"), "text")
 
@@ -255,25 +254,14 @@ def decontaminate(
         )
     )
 
-    vocab: list[str] | None = None
-    if dense is None or dense:
-        rows = (
-            te.select(F.explode(tokens_col("text", ngram)).alias("w"))
-            .distinct()
-            .limit(DENSE_VOCAB_LIMIT + 1)
-            .collect()
-        )
-        if len(rows) <= DENSE_VOCAB_LIMIT and (
-            te.count() <= DENSE_MAX_TEST_DOCS
-        ):
-            vocab = sorted(r.w for r in rows)
-        elif dense:
-            raise ValueError(
-                "dense route forced but the test corpus exceeds "
-                f"DENSE_VOCAB_LIMIT={DENSE_VOCAB_LIMIT} tokens or "
-                f"DENSE_MAX_TEST_DOCS={DENSE_MAX_TEST_DOCS} docs"
-            )
-    if vocab is not None:
+    rows = (
+        te.select(F.explode(tokens_col("text", ngram)).alias("w"))
+        .distinct()
+        .limit(DENSE_VOCAB_LIMIT + 1)
+        .collect()
+    )
+    if len(rows) <= DENSE_VOCAB_LIMIT and te.count() <= DENSE_MAX_TEST_DOCS:
+        vocab = sorted(r.w for r in rows)
         near_pairs = _near_dense_cross(tr, te, threshold, ngram, vocab)
     else:
         near_pairs = _near_inverted(tr, te, threshold, ngram)

@@ -969,12 +969,11 @@ def neardup_resolve(
     )
 
 
-def embed_resolve(emb: DataFrame, threshold: float | None = None) -> DataFrame:
+def embed_resolve(emb: DataFrame) -> DataFrame:
     """Embedding-cosine near-dup clusters: embed_pairs -> connected
     components -> (vec_id, cluster_id, keep_id, is_dup) — the keep/drop
     decision for the embedding modality, same resolution machinery."""
-    thr = EMBED_THRESHOLD if threshold is None else threshold
-    pairs = embed_pairs(emb, thr).select(
+    pairs = embed_pairs(emb).select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
     nodes = emb.select(F.col("vec_id").alias("doc_id"))
@@ -989,16 +988,7 @@ def embed_resolve(emb: DataFrame, threshold: float | None = None) -> DataFrame:
 SEMDEDUP_COS_SCALE = 1_000_000
 
 
-def semdedup(
-    emb: DataFrame,
-    threshold: float | None = None,
-    *,
-    k: int = 8,
-    iters: int = 4,
-    centroids: DataFrame | None = None,
-    block_size: int = DENSE_BLOCK,
-    n_vecs: int | None = None,
-) -> DataFrame:
+def semdedup(emb: DataFrame) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): cluster embeddings with k-means,
     find cosine near-duplicates WITHIN each cluster only, and per
     duplicate group keep the example with the LOWEST cosine to its
@@ -1011,48 +1001,40 @@ def semdedup(
 
     Scale shape (the reason SemDeDup exists at 100 TB): the k-means
     partition bounds pairwise work to within-cell tiles — O(sum_c n_c^2)
-    instead of O(n^2) — and a cell larger than ``block_size`` splits
+    instead of O(n^2) — and a cell larger than DENSE_BLOCK splits
     into deterministic xxhash64 sub-blocks so no single task ever
-    materializes more than a block_size^2 cosine tile (the exact GEMM
+    materializes more than a DENSE_BLOCK^2 cosine tile (the exact GEMM
     kernel shared with embed_pairs / the incremental embedding index).
     Cross-cell duplicates are out of scope BY DESIGN (the paper's
     approximation); callers needing global recall use embed_resolve.
     All aggregates are long-only HashAggregates (the min-cos keeper is
     a two-pass min + back-join, never a min_by over wide rows); the
-    only driver actions are ivf_train's bounded k*d-row updates and the
-    n_vecs metadata count.
+    only driver actions are ivf_train's bounded k*d-row updates and one
+    metadata count.
 
     Deterministic end to end (seeded k-means init, sequential-fold
     centroid cosines quantized to micro units, exact tile kernel,
     total tie-breaks) => oracle-able via a committed pure-Python
     replay (scripts/gen_op_golden.py::golden_semdedup).
     """
-    from text_ocr_spark.ops.similarity import (
-        cosine_col,
-        ivf_assign,
-        ivf_train,
-    )
+    from text_ocr_spark.ops import similarity
 
-    thr = EMBED_THRESHOLD if threshold is None else threshold
-    cents = (
-        centroids if centroids is not None else ivf_train(emb, k=k, iters=iters)
-    )
-    assigned = ivf_assign(emb, centroids=cents)  # (vec_id, centroid_id)
+    cents = similarity.ivf_train(emb)  # KMEANS_K rows
+    assigned = similarity.ivf_assign(emb, centroids=cents)  # (vec_id, centroid_id)
     tagged = emb.select("vec_id", "embedding").join(assigned, "vec_id")
 
     # within-cell sub-blocking, ADAPTIVE per cell: a cell of n_c members
-    # splits into ceil(n_c / block_size) xxhash64 sub-blocks, so the
-    # expected sub-block stays ~block_size whether cells are balanced or
+    # splits into ceil(n_c / DENSE_BLOCK) xxhash64 sub-blocks, so the
+    # expected sub-block stays ~DENSE_BLOCK whether cells are balanced or
     # one mega-cell holds half the corpus — a GLOBAL sub count would
-    # either leave k*block_size-sized tiles in skewed cells or shatter
+    # either leave k*DENSE_BLOCK-sized tiles in skewed cells or shatter
     # small cells into thousands of near-empty tiles. The k-row size
     # frame broadcasts (centroids already do).
-    if n_vecs is None:
-        n_vecs = emb.count()  # metadata-only on a parquet source
+    n_vecs = emb.count()  # metadata-only on a parquet source
     sizes = assigned.groupBy("centroid_id").agg(F.count("*").alias("n_c"))
     n_sub_col = F.greatest(
         F.lit(1).cast("long"),
-        F.ceil(F.col("n_c") / F.lit(block_size)).cast("long"),
+        F.ceil(F.col("n_c") / F.lit(DENSE_BLOCK)).cast("long"),
     )
     blocks = (
         tagged.join(F.broadcast(sizes), "centroid_id")
@@ -1064,7 +1046,7 @@ def semdedup(
     # block_a == block_b triangle rule needs a per-tile-unique id, so
     # sub ids are offset by centroid via a stride no cell's sub count
     # can reach (global worst case: one cell holding every vector)
-    stride = max(1, -(-n_vecs // block_size)) + 1
+    stride = max(1, -(-n_vecs // DENSE_BLOCK)) + 1
     tiles = (
         blocks.alias("a")
         .join(
@@ -1082,10 +1064,11 @@ def semdedup(
             F.col("a.vecs").alias("vecs_a"),
             F.col("b.vecs").alias("vecs_b"),
         )
-        .repartition(_tile_partitions(max(k, stride - 1), emb))
+        .repartition(_tile_partitions(max(similarity.KMEANS_K, stride - 1), emb))
     )
     pairs = tiles.mapInPandas(
-        make_cosine_tile_fn(thr), schema="vec_a long, vec_b long, cos double"
+        make_cosine_tile_fn(EMBED_THRESHOLD),
+        schema="vec_a long, vec_b long, cos double",
     ).select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
 
     clusters = resolve_pairs(
@@ -1102,7 +1085,7 @@ def semdedup(
         .select(
             "vec_id",
             "centroid_id",
-            F.round(cosine_col("embedding", "cv") * SEMDEDUP_COS_SCALE)
+            F.round(similarity.cosine_col("embedding", "cv") * SEMDEDUP_COS_SCALE)
             .cast("long")
             .alias("ccos"),
         )
@@ -1172,12 +1155,7 @@ def _candidate_block_pairs(emb: DataFrame, block: F.Column) -> DataFrame:
     )
 
 
-def embed_pairs(
-    emb: DataFrame,
-    threshold: float = EMBED_THRESHOLD,
-    block_size: int = DENSE_BLOCK,
-    n_vecs: int | None = None,
-) -> DataFrame:
+def embed_pairs(emb: DataFrame, n_vecs: int | None = None) -> DataFrame:
     """Near-dup pairs by embedding cosine: (vec_a, vec_b, round(cos, 6)).
 
     Distributed blocked GEMM: vectors hash into B blocks, each enumerated
@@ -1190,9 +1168,9 @@ def embed_pairs(
     tiles. Above EXHAUSTIVE_BLOCK_LIMIT blocks tiles route through the
     sign-random-projection candidate-block join instead, bounding work
     to colliding regions; block-granular collision keeps recall near 1
-    (exact on any corpus whose >= threshold pairs collide in >= 1 of the
-    8 tables — pytest asserts equality vs the exhaustive path at forced
-    small blocks, incl. block_size=16 => 30+ blocks). When the switch
+    (exact on any corpus whose >= EMBED_THRESHOLD pairs collide in >= 1
+    of the 8 tables — pytest asserts equality vs the exhaustive path at
+    a patched DENSE_BLOCK, incl. 16 => 30+ blocks). When the switch
     engages it is LOGGED (no silent exact->probabilistic cap,
     ADVICE r2): a dropped pair is possible only if two >= threshold
     blocks collide in none of the 8 tables, P ~ (1 - (1-theta/pi)^4)^8
@@ -1203,7 +1181,7 @@ def embed_pairs(
     """
     if n_vecs is None:
         n_vecs = emb.count()  # metadata-only count on a parquet source
-    n_blocks = max(1, -(-n_vecs // block_size))
+    n_blocks = max(1, -(-n_vecs // DENSE_BLOCK))
     prefilter = n_blocks > EXHAUSTIVE_BLOCK_LIMIT
     if prefilter:
         import logging
@@ -1241,7 +1219,8 @@ def embed_pairs(
     ).repartition(_tile_partitions(n_blocks, emb))
 
     return tiles.mapInPandas(
-        make_cosine_tile_fn(threshold), schema="vec_a long, vec_b long, cos double"
+        make_cosine_tile_fn(EMBED_THRESHOLD),
+        schema="vec_a long, vec_b long, cos double",
     ).select("vec_a", "vec_b", F.round("cos", 6).alias("cos"))
 
 

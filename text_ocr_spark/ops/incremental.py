@@ -300,20 +300,17 @@ def _epaths(path: str) -> dict[str, str]:
     return p
 
 
-def _block_col(wave: int, block_size: int, n_vecs: int) -> F.Column:
-    n_blocks = max(1, -(-n_vecs // block_size))
+def _block_col(wave: int, n_vecs: int) -> F.Column:
+    from text_ocr_spark.ops.dedup import DENSE_BLOCK
+
+    n_blocks = max(1, -(-n_vecs // DENSE_BLOCK))
     return (
         F.lit(int(wave) << _WAVE_SHIFT)
         + F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks))
     ).alias("block")
 
 
-def build_embed_index(
-    emb: DataFrame,
-    path: str,
-    threshold: float | None = None,
-    block_size: int | None = None,
-) -> None:
+def build_embed_index(emb: DataFrame, path: str) -> None:
     """Batch-resolve the vector corpus and persist the probe index:
 
     - ``vecs/``        (vec_id, embedding, block) — wave-0 blocks;
@@ -327,16 +324,14 @@ def build_embed_index(
     its own node. Delta recall matches embed_pairs' prefilter recall
     (block-granular collision, equality-pytested on this corpus).
     """
-    from text_ocr_spark.ops.dedup import DENSE_BLOCK, EMBED_THRESHOLD, embed_resolve
+    from text_ocr_spark.ops.dedup import embed_resolve
     from text_ocr_spark.ops.similarity import lsh_buckets
 
-    thr = EMBED_THRESHOLD if threshold is None else threshold
-    bs = DENSE_BLOCK if block_size is None else block_size
     spark = emb.sparkSession
     p = _epaths(path)
     n = emb.count()
     emb.select("vec_id", "embedding").withColumn(
-        "block", _block_col(0, bs, max(n, 1))
+        "block", _block_col(0, max(n, 1))
     ).write.mode("overwrite").parquet(p["vecs"])
 
     stored = spark.read.parquet(p["vecs"])
@@ -345,7 +340,7 @@ def build_embed_index(
     ).select("block", "table", "bucket").distinct().write.mode(
         "overwrite"
     ).parquet(p["blockbuckets"])
-    embed_resolve(stored.select("vec_id", "embedding"), thr).select(
+    embed_resolve(stored.select("vec_id", "embedding")).select(
         "vec_id", "cluster_id"
     ).write.mode("overwrite").parquet(p["clusters"])
     spark.createDataFrame([], "u long, v long").write.mode("overwrite").parquet(
@@ -361,7 +356,7 @@ def _next_wave(stored_vecs: DataFrame) -> int:
 
 
 def _delta_frame(
-    spark: SparkSession, new_vecs: DataFrame, path: str, block_size: int
+    spark: SparkSession, new_vecs: DataFrame, path: str
 ) -> tuple[DataFrame, int]:
     """Wave-namespaced delta blocks; ONE count / max-wave probe pair.
 
@@ -377,7 +372,7 @@ def _delta_frame(
     n_delta = new_vecs.count()
     wave = _next_wave(stored)
     delta = new_vecs.select("vec_id", "embedding").withColumn(
-        "block", _block_col(wave, block_size, max(n_delta, 1))
+        "block", _block_col(wave, max(n_delta, 1))
     )
     return delta, n_delta
 
@@ -394,12 +389,7 @@ def _delta_blockbuckets(delta: DataFrame) -> DataFrame:
 
 
 def _embed_edges(
-    spark: SparkSession,
-    delta: DataFrame,
-    n_delta: int,
-    path: str,
-    thr: float,
-    block_size: int,
+    spark: SparkSession, delta: DataFrame, n_delta: int, path: str
 ) -> DataFrame:
     """(u, v) component edges for a prepared delta frame: verified
     delta->old tile pairs, verified delta<->delta pairs (exact
@@ -408,6 +398,8 @@ def _embed_edges(
     never re-hashed — only colliding (or, below EXHAUSTIVE_BLOCK_LIMIT
     total blocks, ALL) old blocks' vectors are read into tiles."""
     from text_ocr_spark.ops.dedup import (
+        DENSE_BLOCK,
+        EMBED_THRESHOLD,
         EXHAUSTIVE_BLOCK_LIMIT,
         _tile_partitions,
         embed_pairs,
@@ -431,7 +423,7 @@ def _embed_edges(
 
     # block census: delta count is known; old blocks come from the tiny
     # blockbuckets table (|blocks| x 8 tables x <= 16 buckets rows)
-    n_dblocks = max(1, -(-n_delta // block_size))
+    n_dblocks = max(1, -(-n_delta // DENSE_BLOCK))
     old_block_list = bb_old.select("block").distinct()
     n_oblocks = old_block_list.count()
     if (n_dblocks + n_oblocks) > EXHAUSTIVE_BLOCK_LIMIT:
@@ -494,14 +486,12 @@ def _embed_edges(
         .repartition(_tile_partitions(max(n_dblocks, n_oblocks, 1), delta))
     )
     cross = tiles.mapInPandas(
-        make_cosine_tile_fn(thr), schema="vec_a long, vec_b long, cos double"
+        make_cosine_tile_fn(EMBED_THRESHOLD),
+        schema="vec_a long, vec_b long, cos double",
     ).select("vec_a", "vec_b")
 
     nn = embed_pairs(
-        delta.select("vec_id", "embedding"),
-        thr,
-        block_size=block_size,
-        n_vecs=n_delta,
+        delta.select("vec_id", "embedding"), n_vecs=n_delta
     ).select("vec_a", "vec_b")
 
     pairs = cross.unionByName(nn)
@@ -523,33 +513,21 @@ def _embed_edges(
 
 
 def embed_incremental_edges(
-    spark: SparkSession,
-    new_vecs: DataFrame,
-    path: str,
-    threshold: float | None = None,
-    block_size: int | None = None,
+    spark: SparkSession, new_vecs: DataFrame, path: str
 ) -> DataFrame:
-    from text_ocr_spark.ops.dedup import DENSE_BLOCK, EMBED_THRESHOLD
-
-    thr = EMBED_THRESHOLD if threshold is None else threshold
-    bs = DENSE_BLOCK if block_size is None else block_size
-    delta, n_delta = _delta_frame(spark, new_vecs, path, bs)
-    return _embed_edges(spark, delta, n_delta, path, thr, bs)
+    delta, n_delta = _delta_frame(spark, new_vecs, path)
+    return _embed_edges(spark, delta, n_delta, path)
 
 
 def embed_incremental_resolve(
-    spark: SparkSession,
-    new_vecs: DataFrame,
-    path: str,
-    threshold: float | None = None,
-    block_size: int | None = None,
+    spark: SparkSession, new_vecs: DataFrame, path: str
 ) -> DataFrame:
     """-> (vec_id, cluster_id, keep_id, is_dup) for the DELTA vectors,
     equal to batch embed_resolve(corpus UNION delta) restricted to the
     delta (same contraction argument as the text side; exact below
     EXHAUSTIVE_BLOCK_LIMIT total blocks, prefilter recall above it —
-    equality-pytested at forced small blocks)."""
-    edges = embed_incremental_edges(spark, new_vecs, path, threshold, block_size)
+    equality-pytested at a patched DENSE_BLOCK)."""
+    edges = embed_incremental_edges(spark, new_vecs, path)
     resolved = resolve_pairs(
         new_vecs.select(F.col("vec_id").alias("doc_id")),
         edges.select(F.col("u").alias("doc_a"), F.col("v").alias("doc_b")),
@@ -560,11 +538,7 @@ def embed_incremental_resolve(
 
 
 def update_embed_index(
-    spark: SparkSession,
-    new_vecs: DataFrame,
-    path: str,
-    threshold: float | None = None,
-    block_size: int | None = None,
+    spark: SparkSession, new_vecs: DataFrame, path: str
 ) -> DataFrame:
     """Fold a vector delta into the index (append-only) and return its
     verdicts — the embedding twin of ``update_index``: appends the
@@ -573,10 +547,6 @@ def update_embed_index(
     is built ONCE and the edge set is localCheckpointed, so the GEMM
     probe does not re-run for the merge-edge write (review finding r3).
     """
-    from text_ocr_spark.ops.dedup import DENSE_BLOCK, EMBED_THRESHOLD
-
-    thr = EMBED_THRESHOLD if threshold is None else threshold
-    bs = DENSE_BLOCK if block_size is None else block_size
     p = _epaths(path)
     # same delta-id exclusion as _embed_edges: a retry must not treat
     # the crashed attempt's half-written cluster rows as old labels
@@ -584,8 +554,8 @@ def update_embed_index(
         new_vecs.select("vec_id"), "vec_id", "left_anti"
     )
 
-    delta, n_delta = _delta_frame(spark, new_vecs, path, bs)
-    edges = _embed_edges(spark, delta, n_delta, path, thr, bs).localCheckpoint()
+    delta, n_delta = _delta_frame(spark, new_vecs, path)
+    edges = _embed_edges(spark, delta, n_delta, path).localCheckpoint()
     resolved = resolve_pairs(
         new_vecs.select(F.col("vec_id").alias("doc_id")),
         edges.select(F.col("u").alias("doc_a"), F.col("v").alias("doc_b")),

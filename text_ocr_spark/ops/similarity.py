@@ -4,12 +4,16 @@
                higher-order functions — no Python in the hot path). The
                correctness baseline; O(Q x N).
 - ivf_assign:  IVF building block — assign every vector to its nearest
-               centroid (broadcast centroids, argmax cosine). At scale the
-               search probes only matching cells.
+               centroid (broadcast centroids, argmax cosine).
+- ivf_train:   distributed Lloyd's k-means -> trained centroids for
+               ivf_assign / ivf_topk.
+- ivf_topk:    IVF probe search — the corpus assigns through ivf_assign's
+               code, each query scans only its n_probe nearest cells.
 - lsh_buckets: sign-random-projection LSH buckets from deterministic
                hyperplanes — the blocking step of ``dedup.embed_pairs``
                and of the incremental embed index.
 
+Every search and assignment ranks through ONE window (_rank_cosine).
 Cosines are computed in float64 from the float32 inputs, summed in array
 order (F.aggregate is a sequential fold), matching the DuckDB oracle's
 list_cosine_similarity to the ulp.
@@ -32,6 +36,18 @@ from pyspark.sql import functions as F
 #: clusters at real scale.
 LSH_TABLES = 8
 LSH_PLANES = 4
+
+#: the fixture surface's fixed shape, shared with the DuckDB oracles:
+#: vec_id < N_QUERIES are the queries and the rest the corpus, TOP_K
+#: neighbors each; vec_id < N_CENTROIDS are the placeholder centroids,
+#: and each query probes its N_PROBE nearest cells.
+N_QUERIES = 10
+TOP_K = 5
+N_CENTROIDS = 8
+N_PROBE = 2
+#: ivf_train's cell count and its fixed Lloyd's iteration count
+KMEANS_K = 8
+KMEANS_ITERS = 4
 
 
 def _dot(a: str, b: str) -> F.Column:
@@ -56,59 +72,69 @@ def cosine_col(a: str, b: str) -> F.Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def brute_topk(
-    emb: DataFrame, *, n_queries: int = 10, k: int = 5
+def _rank_cosine(
+    rows: DataFrame,
+    cands: DataFrame,
+    key: str,
+    tie: str,
+    n: int,
+    on: str | None = None,
 ) -> DataFrame:
-    """Top-k cosine neighbors of vec_id < n_queries among vec_id >= n_queries.
+    """Pair every row (vector ``embedding``) with the broadcast ``cands``
+    (vector ``cv``) — all of them, or those equal on ``on`` — and keep
+    each ``key``'s first ``n`` pairs by (cosine desc, ``tie`` asc),
+    numbered 1..n in ``rank``."""
+    c = F.broadcast(cands)
+    pairs = rows.crossJoin(c) if on is None else rows.join(c, on)
+    w = Window.partitionBy(key).orderBy(F.desc("cos"), F.asc(tie))
+    return (
+        pairs.withColumn("cos", cosine_col("embedding", "cv"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= n)
+    )
+
+
+def brute_topk(emb: DataFrame) -> DataFrame:
+    """Top-TOP_K cosine neighbors of vec_id < N_QUERIES among
+    vec_id >= N_QUERIES.
 
     -> (query_id, rank, neighbor_id). Ties broken by neighbor_id asc.
     """
-    q = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("cv")
     )
-    c = emb.filter(F.col("vec_id") >= n_queries).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
+    c = emb.filter(F.col("vec_id") >= N_QUERIES).select(
+        F.col("vec_id").alias("neighbor_id"), "embedding"
     )
-    scored = c.crossJoin(F.broadcast(q)).withColumn("cos", cosine_col("qv", "cv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
+    return _rank_cosine(c, q, "query_id", "neighbor_id", TOP_K).select(
+        "query_id", "rank", "neighbor_id"
     )
 
 
-def ivf_assign(
-    emb: DataFrame,
-    *,
-    n_centroids: int = 8,
-    centroids: DataFrame | None = None,
-) -> DataFrame:
+def _placeholder(emb: DataFrame) -> DataFrame:
+    """The vec_id < N_CENTROIDS fixture vectors as (centroid_id, cv)."""
+    return emb.filter(F.col("vec_id") < N_CENTROIDS).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cv")
+    )
+
+
+def _assign(emb: DataFrame, cent: DataFrame) -> DataFrame:
+    """-> (vec_id, embedding, centroid_id) against (centroid_id, cv)."""
+    return _rank_cosine(
+        emb.select("vec_id", "embedding"), cent, "vec_id", "centroid_id", 1
+    ).select("vec_id", "embedding", "centroid_id")
+
+
+def ivf_assign(emb: DataFrame, *, centroids: DataFrame | None = None) -> DataFrame:
     """Assign each vector to its max-cosine centroid.
 
     -> (vec_id, centroid_id). Ties broken by centroid_id asc. By default
-    the centroids are the vec_id < n_centroids fixture vectors; pass
+    the centroids are the vec_id < N_CENTROIDS fixture vectors; pass
     ``centroids`` (centroid_id, cv) — e.g. from ``ivf_train`` — to
     assign against trained cells.
     """
-    cent = (
-        centroids
-        if centroids is not None
-        else emb.filter(F.col("vec_id") < n_centroids).select(
-            F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cv")
-        )
-    )
-    scored = emb.select("vec_id", "embedding").crossJoin(
-        F.broadcast(cent)
-    ).withColumn("cos", cosine_col("embedding", "cv"))
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("centroid_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "centroid_id")
-    )
+    cent = _placeholder(emb) if centroids is None else centroids
+    return _assign(emb, cent).select("vec_id", "centroid_id")
 
 
 #: fixed-point scale for the EXACT k-means mean update: per-dimension
@@ -123,12 +149,12 @@ def ivf_assign(
 KMEANS_SCALE = 1 << 24
 
 
-def ivf_train(emb: DataFrame, *, k: int = 8, iters: int = 4) -> DataFrame:
-    """Distributed Lloyd's k-means over the embedding column -> trained
-    centroids (centroid_id, cv array<double>) for ``ivf_assign`` /
+def ivf_train(emb: DataFrame) -> DataFrame:
+    """Distributed Lloyd's k-means over the embedding column -> KMEANS_K
+    trained centroids (centroid_id, cv array<double>) for ``ivf_assign`` /
     ``ivf_topk`` (VERDICT r3 item 4 — real centroids are the part of
-    IVF that matters at 100 TB; the vec_id < k placeholder is fixture
-    plumbing).
+    IVF that matters at 100 TB; the vec_id < N_CENTROIDS placeholder
+    is fixture plumbing).
 
     Fully JVM hot path, no Python per row:
     - init: the k vectors with the smallest (md5(vec_id), vec_id) — a
@@ -146,14 +172,14 @@ def ivf_train(emb: DataFrame, *, k: int = 8, iters: int = 4) -> DataFrame:
 
     Deterministic end to end (seeded init, exact integer sums, total
     tie-breaks), so the trained ASSIGNMENT is oracle-able via a
-    committed pure-Python golden. Fixed ``iters`` — no early-stop
+    committed pure-Python golden. Fixed KMEANS_ITERS — no early-stop
     heuristic to replicate.
     """
     spark = emb.sparkSession
     init = (
         emb.select("vec_id", "embedding")
         .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(k)
+        .limit(KMEANS_K)
         .collect()
     )
     # float32 -> float64 is exact; centroids live as driver float64s
@@ -167,7 +193,7 @@ def ivf_train(emb: DataFrame, *, k: int = 8, iters: int = 4) -> DataFrame:
             "centroid_id int, cv array<double>",
         )
 
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         assigned = ivf_assign(emb, centroids=cent_df())
         sums = (
             emb.join(assigned, "vec_id")
@@ -197,78 +223,31 @@ def ivf_train(emb: DataFrame, *, k: int = 8, iters: int = 4) -> DataFrame:
     return cent_df()
 
 
-def ivf_topk(
-    emb: DataFrame,
-    *,
-    n_queries: int = 10,
-    k: int = 5,
-    n_centroids: int = 8,
-    n_probe: int = 2,
-    centroids: DataFrame | None = None,
-) -> DataFrame:
+def ivf_topk(emb: DataFrame, *, centroids: DataFrame | None = None) -> DataFrame:
     """IVF probe search: rank centroids per query, scan only the top
-    n_probe cells' members, then top-k within the candidates.
+    N_PROBE cells' members, then top-TOP_K within the candidates.
 
     The scale path for ANN over a clustered corpus: the corpus shuffles
-    ONCE on its cell assignment; each query touches n_probe/n_centroids
-    of the data. Approximate (recall asserted in pytest vs brute_topk);
-    -> (query_id, rank, neighbor_id). Pass ``centroids`` (centroid_id,
-    cv) from ``ivf_train`` to probe trained cells instead of the
-    vec_id < n_centroids placeholder.
+    ONCE on its cell assignment (ivf_assign's code); each query touches
+    N_PROBE/N_CENTROIDS of the data. Approximate (recall asserted in
+    pytest vs brute_topk); -> (query_id, rank, neighbor_id). Pass
+    ``centroids`` (centroid_id, cv) from ``ivf_train`` to probe trained
+    cells instead of the vec_id < N_CENTROIDS placeholder, which comes
+    from the full ``emb`` (the corpus holds no vec_id < N_QUERIES).
     """
-    cent = (
-        centroids
-        if centroids is not None
-        else emb.filter(F.col("vec_id") < n_centroids).select(
-            F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cv")
-        )
+    cent = _placeholder(emb) if centroids is None else centroids
+    cells = _assign(emb.filter(F.col("vec_id") >= N_QUERIES), cent).select(
+        F.col("vec_id").alias("neighbor_id"), "embedding", "centroid_id"
     )
-    corpus = emb.filter(F.col("vec_id") >= n_queries)
-    assigned = (
-        corpus.select("vec_id", "embedding")
-        .crossJoin(F.broadcast(cent))
-        .withColumn("cos", cosine_col("embedding", "cv"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(
-                    F.desc("cos"), F.asc("centroid_id")
-                )
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("cv_n"),
-            "centroid_id",
-        )
+    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), "embedding"
     )
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    probes = (
-        queries.crossJoin(F.broadcast(cent))
-        .withColumn("cos", cosine_col("qv", "cv"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("cos"), F.asc("centroid_id")
-                )
-            ),
-        )
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "qv", "centroid_id")
-    )
-    scored = assigned.join(F.broadcast(probes), "centroid_id").withColumn(
-        "cos", cosine_col("qv", "cv_n")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
-    )
+    probes = _rank_cosine(
+        queries, cent, "query_id", "centroid_id", N_PROBE
+    ).select("query_id", F.col("embedding").alias("cv"), "centroid_id")
+    return _rank_cosine(
+        cells, probes, "query_id", "neighbor_id", TOP_K, on="centroid_id"
+    ).select("query_id", "rank", "neighbor_id")
 
 
 # --------------------------------------------------------------------------
