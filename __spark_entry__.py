@@ -326,7 +326,7 @@ def _decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _frequent_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from text_ocr_spark.ops.text_stats import frequent_ngrams
 
-    return frequent_ngrams(_docs(spark, sf_dir), n=3, k=20).orderBy("rank")
+    return frequent_ngrams(_docs(spark, sf_dir)).orderBy("rank")
 
 
 def _dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -350,9 +350,9 @@ _SAMPLE_FRACTIONS = {"en": 0.25, "de": 1.0, "fr": 0.5, "es": 0.0}
 def _sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     from text_ocr_spark.ops.curate import sample_stratified
 
-    return sample_stratified(
-        _docs(spark, sf_dir), _SAMPLE_FRACTIONS, key_col="lang", seed=42
-    ).orderBy("doc_id")
+    return sample_stratified(_docs(spark, sf_dir), _SAMPLE_FRACTIONS).orderBy(
+        "doc_id"
+    )
 
 
 def _c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -374,15 +374,14 @@ def _c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget sharding surface: 2048-token shards, bucket_size 64
-    so the two-level prefix sum exercises REAL multi-bucket offsets at
-    sf0.01 (500 docs -> 8 buckets), not the degenerate one-bucket case;
-    output is bucket-size-invariant (pytest differential)."""
+    """Token-budget sharding surface: 2048-token shards in doc_id
+    order. At sf0.01 the 500 docs fill one prefix-sum bucket; the
+    multi-bucket offsets are pinned by the pytest differential over
+    bucket sizes 1, 7 and 10^9, because the output does not depend on
+    the bucket size."""
     from text_ocr_spark.ops.curate import pack_shards
 
-    return pack_shards(_docs(spark, sf_dir), max_tokens=2048, bucket_size=64).orderBy(
-        "doc_id"
-    )
+    return pack_shards(_docs(spark, sf_dir), max_tokens=2048).orderBy("doc_id")
 
 
 def _pack_shards_shuffled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -403,10 +402,7 @@ def _sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from text_ocr_spark.ops.curate import sample_weighted
 
     return sample_weighted(
-        _docs(spark, sf_dir),
-        {"en": 0.25, "de": 2.5, "fr": 1.0, "es": 0.0},
-        key_col="lang",
-        seed=42,
+        _docs(spark, sf_dir), {"en": 0.25, "de": 2.5, "fr": 1.0, "es": 0.0}
     ).orderBy("doc_id", "epoch")
 
 
@@ -467,19 +463,18 @@ def _dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Learned-BPE surface: train 40 merges on the corpus' own
-    word-frequency dictionary (40 < saturation for the fixture's
-    31-word vocabulary, so the output carries genuine SUBWORD splits),
-    tokenize the full corpus, and emit the space-joined token stream
-    (BPE symbols never contain spaces, so the join is lossless for the
-    hash compare). Oracle = committed independent pure-Python replay
+    """Learned-BPE surface: train bpe.N_MERGES = 40 merges on the
+    corpus' own word-frequency dictionary (40 < saturation for the
+    fixture's 31-word vocabulary, so the output carries genuine SUBWORD
+    splits), tokenize the full corpus, and emit the space-joined token
+    stream (BPE symbols never contain spaces, so the join is lossless
+    for the hash compare). Oracle = committed independent pure-Python replay
     (gen_op_golden.py::golden_bpe)."""
     from text_ocr_spark.ops.bpe import bpe_tokenize, bpe_train
 
     docs = _docs(spark, sf_dir)
-    merges = bpe_train(docs, n_merges=40)
     return (
-        bpe_tokenize(docs, merges)
+        bpe_tokenize(docs, bpe_train(docs))
         .select(
             "doc_id",
             "n_bpe",

@@ -70,15 +70,14 @@ def _c4_line_filter_df(docs):
 def _pack_shards_df(docs):
     from text_ocr_spark.ops.curate import pack_shards
 
-    return pack_shards(docs, max_tokens=2048, bucket_size=64)
+    return pack_shards(docs, max_tokens=2048)
 
 
 def _sample_stratified_df(docs):
     from text_ocr_spark.ops.curate import sample_stratified
 
-    return sample_stratified(
-        docs, {"en": 0.25, "de": 1.0, "fr": 0.5, "es": 0.0}, "lang"
-    )
+    fractions = {"en": 0.25, "de": 1.0, "fr": 0.5, "es": 0.0}
+    return sample_stratified(docs, fractions)
 
 
 def _lm_perplexity_df(spark, docs):
@@ -102,7 +101,7 @@ def _dsir_select_df(spark, docs):
 def _bpe_tokenize_df(spark, docs):
     from text_ocr_spark.ops.bpe import bpe_tokenize, bpe_train
 
-    return bpe_tokenize(docs, bpe_train(docs, n_merges=40))
+    return bpe_tokenize(docs, bpe_train(docs))
 
 
 def _quality_classify_df(spark, docs):
@@ -114,7 +113,7 @@ def _quality_classify_df(spark, docs):
     neg = docs.where(
         (F.col("doc_id") % 11 != 0) & (F.col("doc_id") % 3 == 0)
     ).select("doc_id", "text")
-    return quality_classify(docs, quality_train(pos, neg, iters=1))
+    return quality_classify(docs, quality_train(pos, neg))
 
 
 def _semdedup_df(spark):
@@ -371,7 +370,7 @@ def main() -> int:
             "heap per partition + k-row driver merge), never a global "
             "sort of the shingle vocabulary — the property that keeps "
             "the op viable when the vocabulary is billions of rows.",
-            frequent_ngrams(docs, n=3, k=20),
+            frequent_ngrams(docs),
         ),
         (
             "incremental dedup delta probe (index side joins only)",
@@ -430,10 +429,10 @@ def main() -> int:
             "pack_shards (token-budget sharding)",
             "Two-level distributed prefix sum: the per-bucket token "
             "sums aggregate map-side-combined, the ONLY non-partitioned "
-            "window runs over that small bucket frame (n/bucket_size "
+            "window runs over that small bucket frame (n/BUCKET_SIZE "
             "rows), offsets broadcast-join back, and the corpus-wide "
             "cumsum windows BY bucket — parallel, each task bounded by "
-            "bucket_size. A naive global-order window would collapse "
+            "BUCKET_SIZE. A naive global-order window would collapse "
             "the corpus into one task; output is pytest-pinned "
             "identical to that form.",
             _pack_shards_df(docs),

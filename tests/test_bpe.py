@@ -1,12 +1,15 @@
 """Learned BPE (ops/bpe.py): hand-computed Sennrich-example merges,
 encoder semantics, determinism/partition independence, NULL/empty
-discipline, pack_shards composition, and the plan gates (train = one
-aggregate + TakeOrdered; tokenize = one map-only Arrow stage)."""
+discipline, and the plan gates (train = one aggregate + TakeOrdered;
+tokenize = one map-only Arrow stage). Tests set the merge count by
+patching ``bpe.N_MERGES``."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+
+from text_ocr_spark.ops import bpe
 
 SF_TINY = "/root/testdata/sf0.001"
 
@@ -18,7 +21,7 @@ def docs(spark):
     )
 
 
-def test_bpe_learns_the_sennrich_example(spark):
+def test_bpe_learns_the_sennrich_example(spark, monkeypatch):
     """The paper's worked corpus {low:5, lower:2, newest:6, widest:3}
     under the subword-nmt formulation (</w> fused onto the last char).
     Hand-derived: (e,s) 9 beats (s,t</w>) 9 lexicographically;
@@ -33,9 +36,9 @@ def test_bpe_learns_the_sennrich_example(spark):
         + [(300 + i, "widest") for i in range(3)]
     )
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    monkeypatch.setattr(bpe, "N_MERGES", 4)
     merges = [
-        (r.left, r.right)
-        for r in bpe_train(df, n_merges=4).orderBy("rank").collect()
+        (r.left, r.right) for r in bpe_train(df).orderBy("rank").collect()
     ]
     assert merges == [("e", "s"), ("es", "t</w>"), ("l", "o"), ("e", "w")]
 
@@ -54,13 +57,14 @@ def test_bpe_encoder_applies_lowest_rank_first(spark):
     assert encode_word("", {}) == []
 
 
-def test_bpe_tokenize_matches_driver_side_encoding(spark, docs):
+def test_bpe_tokenize_matches_driver_side_encoding(spark, docs, monkeypatch):
     """The distributed Arrow stage must equal per-row driver encoding
     with the same trained merges (memoization and batching are pure
     plumbing)."""
     from text_ocr_spark.ops.bpe import bpe_tokenize, bpe_train, encode_word
 
-    merges = bpe_train(docs, n_merges=30)
+    monkeypatch.setattr(bpe, "N_MERGES", 30)
+    merges = bpe_train(docs)
     ranks = {
         (r.left, r.right): r.rank for r in merges.collect()
     }
@@ -79,11 +83,12 @@ def test_bpe_tokenize_matches_driver_side_encoding(spark, docs):
         assert got[r.doc_id] == (toks, len(toks))
 
 
-def test_bpe_partition_independence(spark, docs):
+def test_bpe_partition_independence(spark, docs, monkeypatch):
     from text_ocr_spark.ops.bpe import bpe_tokenize, bpe_train
 
-    a = bpe_train(docs, n_merges=25)
-    b = bpe_train(docs.repartition(13, "text"), n_merges=25)
+    monkeypatch.setattr(bpe, "N_MERGES", 25)
+    a = bpe_train(docs)
+    b = bpe_train(docs.repartition(13, "text"))
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
     ta = bpe_tokenize(docs, a).select("doc_id", "n_bpe")
     tb = bpe_tokenize(docs.repartition(7), a).select("doc_id", "n_bpe")
@@ -92,14 +97,15 @@ def test_bpe_partition_independence(spark, docs):
     )
 
 
-def test_bpe_null_empty_and_saturation(spark):
+def test_bpe_null_empty_and_saturation(spark, monkeypatch):
     from text_ocr_spark.ops.bpe import bpe_tokenize, bpe_train
 
     df = spark.createDataFrame(
         [(1, None), (2, ""), (3, " \t "), (4, "aaa aaa bb")],
         "doc_id long, text string",
     )
-    merges = bpe_train(df, n_merges=100)  # far past saturation
+    monkeypatch.setattr(bpe, "N_MERGES", 100)  # far past saturation
+    merges = bpe_train(df)
     got = {
         r.doc_id: (list(r.bpe_tokens), r.n_bpe)
         for r in bpe_tokenize(df, merges).collect()
@@ -107,11 +113,11 @@ def test_bpe_null_empty_and_saturation(spark):
     assert got[1] == ([], 0) and got[2] == ([], 0) and got[3] == ([], 0)
     # saturated: every word is one token
     assert got[4] == (["aaa</w>", "aaa</w>", "bb</w>"], 3)
-    # the merge loop stops when no pairs remain (never pads to n_merges)
+    # the merge loop stops when no pairs remain (never pads to N_MERGES)
     assert merges.count() < 100
 
 
-def test_bpe_unicode_whitespace_matches_lm_tokens(spark):
+def test_bpe_unicode_whitespace_matches_lm_tokens(spark, monkeypatch):
     """ADVICE r4 regression: train/apply tokenizer symmetry on the full
     Unicode whitespace class. lm_tokens (which feeds bpe_train) splits
     ONLY on [ \\t\\n\\f\\r]+ — \\x0b, \\xa0, \\u2028 are word bytes,
@@ -130,7 +136,8 @@ def test_bpe_unicode_whitespace_matches_lm_tokens(spark):
         ],
         "doc_id long, text string",
     )
-    merges = bpe_train(df, n_merges=50)
+    monkeypatch.setattr(bpe, "N_MERGES", 50)
+    merges = bpe_train(df)
     got = {
         r.doc_id: list(r.bpe_tokens)
         for r in bpe_tokenize(df, merges).collect()
@@ -147,36 +154,7 @@ def test_bpe_unicode_whitespace_matches_lm_tokens(spark):
         assert got[d] == want[d], (d, got[d], want[d])
 
 
-def test_bpe_counts_feed_pack_shards(spark, docs):
-    """The composition the op exists for: shard budgets from REAL
-    learned-tokenizer counts — pack_shards(n_tokens_col='n_bpe') must
-    equal the plain global cumsum over the same counts."""
-    from text_ocr_spark.ops.bpe import bpe_tokenize, bpe_train
-    from text_ocr_spark.ops.curate import pack_shards
-
-    toked = bpe_tokenize(docs, bpe_train(docs, n_merges=30)).select(
-        "doc_id", F.col("bpe_tokens").alias("text_toks"), "n_bpe"
-    )
-    # pack_shards reads (doc_id, n_tokens_col); text col unused there
-    packed = {
-        r.doc_id: r.shard_id
-        for r in pack_shards(
-            toked.withColumn("text", F.lit("x")),
-            max_tokens=512,
-            bucket_size=64,
-            n_tokens_col="n_bpe",
-        ).collect()
-    }
-    rows = sorted(
-        (r.doc_id, r.n_bpe) for r in toked.select("doc_id", "n_bpe").collect()
-    )
-    run = 0
-    for d, n in rows:
-        assert packed[d] == run // 512
-        run += n
-
-
-def test_bpe_plan_gates(spark, docs):
+def test_bpe_plan_gates(spark, docs, monkeypatch):
     """Train's corpus work: one map-side-combined aggregate + a
     TakeOrdered cut (never a global sort of the dictionary). Tokenize:
     ONE Arrow stage, zero exchanges (map-only)."""
@@ -193,7 +171,8 @@ def test_bpe_plan_gates(spark, docs):
     assert "TakeOrderedAndProject" in p
     assert "MapInPandas" not in p
 
-    df = bpe_tokenize(docs, bpe_train(docs, n_merges=5))
+    monkeypatch.setattr(bpe, "N_MERGES", 5)
+    df = bpe_tokenize(docs, bpe_train(docs))
     p2 = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )

@@ -97,13 +97,23 @@ def test_entry_paths_follow_the_checkout(tmp_path):
         assert value.startswith(str(tmp_path) + os.sep), (name, value)
 
 
+def _settable(family) -> set[str]:
+    """Every defaulted parameter of ``family``'s functions, as fn.param."""
+    import inspect
+
+    return {
+        f"{fn.__name__}.{name}"
+        for fn in family
+        for name, p in inspect.signature(fn).parameters.items()
+        if p.default is not inspect.Parameter.empty
+    }
+
+
 def test_embedding_family_takes_only_its_input():
     """The 11 embedding entry points keep a settable value only where two
     real callers need different ones: the centroids of ivf_assign (the
     ivf_train and ivf_assign rows) and of ivf_topk, and embed_pairs'
     n_vecs (the incremental index passes its delta count)."""
-    import inspect
-
     from text_ocr_spark.ops import dedup, incremental, similarity
 
     family = [
@@ -119,14 +129,35 @@ def test_embedding_family_takes_only_its_input():
         incremental.embed_incremental_resolve,
         incremental.update_embed_index,
     ]
-    settable = {
-        f"{fn.__name__}.{name}"
-        for fn in family
-        for name, p in inspect.signature(fn).parameters.items()
-        if p.default is not inspect.Parameter.empty
-    }
-    assert settable == {
+    assert _settable(family) == {
         "ivf_assign.centroids", "ivf_topk.centroids", "embed_pairs.n_vecs",
+    }
+
+
+def test_curation_family_takes_only_its_input():
+    """The 18 curation entry points (sampling, packing, span surgery,
+    DSIR, both trained classifiers, BPE and the tokenizers they share)
+    keep a settable value only where real callers need different ones:
+    the capstone's dsir_k and max_tokens (perfbench sets both) and
+    pack_shards' shuffle_seed (the pack_shards and pack_shards_shuffled
+    rows)."""
+    from text_ocr_spark.ops import bpe, curate, dsir, lang_clf, lm
+    from text_ocr_spark.ops import quality_clf, span_dedup, text_stats
+
+    family = [
+        curate.sample_stratified, curate.sample_weighted,
+        curate.pack_shards, curate.pretrain_pipeline, dsir.dsir_select,
+        span_dedup.dup_spans, span_dedup.strip_dup_spans,
+        quality_clf.quality_train, quality_clf.quality_classify,
+        lang_clf.langid_fixture, lang_clf.char_ngram_occurrences,
+        lang_clf.langid_train, lang_clf.langid_classify,
+        bpe.bpe_train, bpe.bpe_tokenize,
+        text_stats.ws_tokens, text_stats.frequent_ngrams, lm.lm_tokens,
+    ]
+    assert len(family) == 18
+    assert _settable(family) == {
+        "pretrain_pipeline.dsir_k", "pretrain_pipeline.max_tokens",
+        "pack_shards.shuffle_seed",
     }
 
 

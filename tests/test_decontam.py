@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from text_ocr_spark.ops import decontam
+from text_ocr_spark.ops import decontam, text_stats
 from text_ocr_spark.ops.decontam import decontaminate
 from text_ocr_spark.ops.text_stats import frequent_ngrams
 
@@ -191,7 +191,7 @@ def test_vocab_cap_falls_back_to_inverted(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_frequent_ngrams_doc_frequency_not_term_frequency(spark):
+def test_frequent_ngrams_doc_frequency_not_term_frequency(spark, monkeypatch):
     """A document repeating one shingle many times counts ONCE — the
     corpus profile cannot be hijacked by a single pathological doc."""
     docs = _tr(
@@ -204,25 +204,28 @@ def test_frequent_ngrams_doc_frequency_not_term_frequency(spark):
             (5, None),                 # null text contributes nothing
         ],
     )
-    top = frequent_ngrams(docs, n=3, k=3).orderBy("rank").collect()
+    monkeypatch.setattr(text_stats, "FREQUENT_K", 3)
+    top = frequent_ngrams(docs).orderBy("rank").collect()
     assert top[0]["ngram"] == "x y z"
     assert top[0]["doc_freq"] == 3
     assert top[0]["rank"] == 1
 
 
-def test_frequent_ngrams_deterministic_tiebreak(spark):
+def test_frequent_ngrams_deterministic_tiebreak(spark, monkeypatch):
     # all shingles have doc_freq 1 -> rank order is pure lexicographic
     docs = _tr(spark, [(1, "b b b"), (2, "a a a"), (3, "c c c")])
-    top = frequent_ngrams(docs, n=3, k=2).orderBy("rank").collect()
+    monkeypatch.setattr(text_stats, "FREQUENT_K", 2)
+    top = frequent_ngrams(docs).orderBy("rank").collect()
     assert [r["ngram"] for r in top] == ["a a a", "b b b"]
     assert [r["rank"] for r in top] == [1, 2]
 
 
-def test_frequent_ngrams_short_doc_whole_shingle(spark):
+def test_frequent_ngrams_short_doc_whole_shingle(spark, monkeypatch):
     # sub-n docs contribute their whole text as ONE shingle (slice
     # clamps), matching tokens_col's grammar
     docs = _tr(spark, [(1, "solo"), (2, "solo")])
-    top = frequent_ngrams(docs, n=3, k=1).collect()
+    monkeypatch.setattr(text_stats, "FREQUENT_K", 1)
+    top = frequent_ngrams(docs).collect()
     assert top[0]["ngram"] == "solo" and top[0]["doc_freq"] == 2
 
 

@@ -1,6 +1,7 @@
 """DSIR importance resampling (ops/dsir.py): exact pure-Python replay,
 Gumbel-top-k selection semantics, partition independence, NULL/empty
-discipline, and the pure-JVM + TakeOrderedAndProject plan gates."""
+discipline, and the pure-JVM + TakeOrderedAndProject plan gates. Tests
+set the bucket count by patching ``dsir.N_BUCKETS``."""
 
 from __future__ import annotations
 
@@ -15,6 +16,13 @@ SF_TINY = "/root/testdata/sf0.001"
 
 WS = re.compile(r"[ \t\n\f\r]+")
 B = 64  # small bucket count so collisions actually occur in the replay
+
+
+@pytest.fixture
+def small_buckets(monkeypatch):
+    from text_ocr_spark.ops import dsir
+
+    monkeypatch.setattr(dsir, "N_BUCKETS", B)
 
 
 def _half_up(x: float) -> int:
@@ -88,21 +96,21 @@ def corpus(spark):
     return docs, rows
 
 
-def test_dsir_matches_pure_python_replay(spark, corpus):
+def test_dsir_matches_pure_python_replay(spark, corpus, small_buckets):
     from text_ocr_spark.ops.dsir import dsir_select
 
     docs, rows = corpus
     target = docs.where(F.col("doc_id") % 11 == 0)
     got = {
         r.doc_id: (r.n_feats, r.logw_micro, r.key_micro, r.selected)
-        for r in dsir_select(docs, target, k=10, n_buckets=B).collect()
+        for r in dsir_select(docs, target, k=10).collect()
     }
     want = _replay(rows, [r for r in rows if r[0] % 11 == 0], k=10)
     assert got == want
     assert sum(v[3] for v in got.values()) == 10
 
 
-def test_dsir_replay_on_adversarial_corpus(spark):
+def test_dsir_replay_on_adversarial_corpus(spark, small_buckets):
     """Replay equality on constructed edge docs the fixture grammar
     never produces: NULL / empty / whitespace-only / single-token
     (no bigram) / tab-and-CRLF-edged / unicode / exact-duplicate /
@@ -125,17 +133,19 @@ def test_dsir_replay_on_adversarial_corpus(spark):
     target = docs.where(F.col("doc_id") % 2 == 0)
     got = {
         r.doc_id: (r.n_feats, r.logw_micro, r.key_micro, r.selected)
-        for r in dsir_select(docs, target, k=4, n_buckets=B).collect()
+        for r in dsir_select(docs, target, k=4).collect()
     }
     want = _replay(rows, [r for r in rows if r[0] % 2 == 0], k=4)
     assert got == want
 
 
-def test_dsir_prefers_target_like_docs(spark):
+def test_dsir_prefers_target_like_docs(spark, monkeypatch):
     """Docs sharing the target's vocabulary must outweigh disjoint
     ones — the one-line sanity DSIR exists for."""
+    from text_ocr_spark.ops import dsir
     from text_ocr_spark.ops.dsir import dsir_select
 
+    monkeypatch.setattr(dsir, "N_BUCKETS", 256)
     docs = spark.createDataFrame(
         [(0, "alpha beta gamma alpha beta"), (1, "delta epsilon zeta eta")],
         "doc_id long, text string",
@@ -146,20 +156,18 @@ def test_dsir_prefers_target_like_docs(spark):
     )
     w = {
         r.doc_id: r.logw_micro
-        for r in dsir_select(docs, target, k=1, n_buckets=256).collect()
+        for r in dsir_select(docs, target, k=1).collect()
     }
     assert w[0] > w[1]
 
 
-def test_dsir_partition_independence(spark, corpus):
+def test_dsir_partition_independence(spark, corpus, small_buckets):
     from text_ocr_spark.ops.dsir import dsir_select
 
     docs, _ = corpus
     target = docs.where(F.col("doc_id") % 11 == 0)
-    a = dsir_select(docs, target, k=25, n_buckets=B)
-    b = dsir_select(
-        docs.repartition(7, "text"), target.repartition(3), k=25, n_buckets=B
-    )
+    a = dsir_select(docs, target, k=25)
+    b = dsir_select(docs.repartition(7, "text"), target.repartition(3), k=25)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -184,20 +192,20 @@ def test_dsir_null_and_empty_text(spark):
     assert all(r.selected == 1 for r in rows.values())  # n < k selects all
 
 
-def test_dsir_k_edges(spark, corpus):
+def test_dsir_k_edges(spark, corpus, small_buckets):
     from text_ocr_spark.ops.dsir import dsir_select
 
     docs, rows = corpus
     target = docs.where(F.col("doc_id") % 11 == 0)
     n = len(rows)
     assert (
-        dsir_select(docs, target, k=n + 50, n_buckets=B)
+        dsir_select(docs, target, k=n + 50)
         .where("selected = 1")
         .count()
         == n
     )
     assert (
-        dsir_select(docs, target, k=1, n_buckets=B)
+        dsir_select(docs, target, k=1)
         .where("selected = 1")
         .count()
         == 1
@@ -225,7 +233,9 @@ def test_dsir_plan_is_jvm_only_with_topk_boundary(spark, corpus):
     assert "BroadcastHashJoin" in p
 
 
-def test_dsir_runtime_reuses_the_scoring_exchange(spark, corpus):
+def test_dsir_runtime_reuses_the_scoring_exchange(
+    spark, corpus, small_buckets
+):
     """The executed adaptive plan must tokenize the corpus exactly
     twice (model fit + scoring) plus once for the target slice — the
     published algorithm's inherent shape. The threshold branch must
@@ -239,7 +249,7 @@ def test_dsir_runtime_reuses_the_scoring_exchange(spark, corpus):
 
     docs, _ = corpus
     target = docs.where(F.col("doc_id") % 11 == 0)
-    df = dsir_select(docs, target, k=10, n_buckets=B)
+    df = dsir_select(docs, target, k=10)
     df.collect()
     p = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"

@@ -79,26 +79,30 @@ def _replay_ovr(fx, n_buckets, iters, lr=2.0):
 
 @pytest.fixture(scope="module")
 def small_fixture():
-    from text_ocr_spark.ops.lang_clf import langid_fixture
+    from text_ocr_spark.ops import lang_clf
 
-    return langid_fixture(n_per_lang=10)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(lang_clf, "LANGID_PER_LANG", 10)
+        return lang_clf.langid_fixture()
 
 
-def test_spark_training_equals_python_replay(spark, small_fixture):
+def test_spark_training_equals_python_replay(
+    spark, small_fixture, monkeypatch
+):
     """langid_train (K one-vs-rest quality_train runs over char
     3-grams) must be bit-identical to the independent pure-Python
     retrain at reduced size — pins the committed full-size weight
     table, which gen_op_golden.py produces with the same replay."""
-    from text_ocr_spark.ops.lang_clf import langid_train
+    from text_ocr_spark.ops import lang_clf, quality_clf
 
+    monkeypatch.setattr(lang_clf, "LANGID_BUCKETS", B_SMALL)
+    monkeypatch.setattr(quality_clf, "ITERS", ITERS_SMALL)
     tdf = spark.createDataFrame(
         small_fixture, "doc_id long, text string, lang string"
     )
     got = {
         (r.lang, r.b): r.w_micro
-        for r in langid_train(
-            tdf, n_buckets=B_SMALL, iters=ITERS_SMALL
-        ).collect()
+        for r in lang_clf.langid_train(tdf).collect()
     }
     want = {}
     for lang, (w0, w) in _replay_ovr(
@@ -114,15 +118,12 @@ def test_committed_weights_match_replay():
     """The committed model table IS the full-size pure-Python retrain
     over the full fixture (no Spark needed) — a drifted or hand-edited
     fixture file fails here."""
-    from text_ocr_spark.ops.lang_clf import (
-        LANGID_BUCKETS,
-        LANGID_ITERS,
-        langid_fixture,
-    )
+    from text_ocr_spark.ops.lang_clf import LANGID_BUCKETS, langid_fixture
+    from text_ocr_spark.ops.quality_clf import ITERS
 
     want = {}
     for lang, (w0, w) in _replay_ovr(
-        langid_fixture(), LANGID_BUCKETS, LANGID_ITERS
+        langid_fixture(), LANGID_BUCKETS, ITERS
     ).items():
         want[(lang, -1)] = w0
         for b, m in w.items():
@@ -170,16 +171,13 @@ def test_generalizes_to_unseen_fixture_docs():
     fixed job overhead for the same arithmetic. (A starved reduced-size
     split only reaches ~31%, which is a statement about 8 docs/lang,
     not about the machinery.)"""
-    from text_ocr_spark.ops.lang_clf import (
-        LANGID_BUCKETS,
-        LANGID_ITERS,
-        langid_fixture,
-    )
+    from text_ocr_spark.ops.lang_clf import LANGID_BUCKETS, langid_fixture
+    from text_ocr_spark.ops.quality_clf import ITERS
 
     fx = langid_fixture()
     train = [r for r in fx if r[0] % 4 != 0]
     test = [r for r in fx if r[0] % 4 == 0]
-    model = _replay_ovr(train, LANGID_BUCKETS, LANGID_ITERS)
+    model = _replay_ovr(train, LANGID_BUCKETS, ITERS)
     langs = sorted(model)
     ok = 0
     for _d, t, lang in test:

@@ -154,3 +154,26 @@ def test_collapse_skip_path_drops_expansion_joins(spark, monkeypatch):
     assert n_exchanges(skip) < n_exchanges(full)
     for df in (skip, full):
         assert "SortAggregate" not in plan_str(spark, df)
+
+
+def test_plans_md_headings_match_the_capture_script():
+    """PLANS.md is written by scripts/capture_plans.py, one ``## `` section
+    per (title, commentary, plan) tuple. Its headings must be the
+    script's titles in order; a stale heading shows a plan the script no
+    longer captures. Reads both files only (no Spark)."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    tree = ast.parse((root / "scripts" / "capture_plans.py").read_text())
+    titles = [
+        node.elts[0].value
+        for node in sorted(
+            (n for n in ast.walk(tree) if isinstance(n, ast.Tuple)),
+            key=lambda n: n.lineno,
+        )
+        if len(node.elts) == 3 and isinstance(node.elts[0], ast.Constant)
+    ]
+    plans = (root / "PLANS.md").read_text().splitlines()
+    assert len(titles) > 20
+    assert [line[3:] for line in plans if line.startswith("## ")] == titles

@@ -1,7 +1,9 @@
 """Trained quality classifier (ops/quality_clf.py): pure-Python replay
 equality at non-default hyperparameters, separable-corpus sanity, loss
 decrease, id-collision safety, NULL/empty discipline, partition
-independence, and the one-pass JVM/broadcast plan gate for classify."""
+independence, and the one-pass JVM/broadcast plan gate for classify.
+Tests set the bucket count and schedule by patching ``quality_clf``'s
+N_BUCKETS / ITERS."""
 
 from __future__ import annotations
 
@@ -16,6 +18,13 @@ B = 128
 ITERS = 4
 LR = 2.0
 SCALE = 1_000_000
+
+
+def _hp(monkeypatch, n_buckets=B, iters=ITERS):
+    from text_ocr_spark.ops import quality_clf
+
+    monkeypatch.setattr(quality_clf, "N_BUCKETS", n_buckets)
+    monkeypatch.setattr(quality_clf, "ITERS", iters)
 
 
 def _half_up(x: float) -> int:
@@ -98,7 +107,7 @@ def corpus(spark):
     return docs, [(r.doc_id, r.text) for r in docs.collect()]
 
 
-def test_quality_clf_matches_pure_python_replay(spark, corpus):
+def test_quality_clf_matches_pure_python_replay(spark, corpus, monkeypatch):
     from text_ocr_spark.ops.quality_clf import (
         quality_classify,
         quality_train,
@@ -107,10 +116,11 @@ def test_quality_clf_matches_pure_python_replay(spark, corpus):
     docs, rows = corpus
     pos = docs.where(F.col("doc_id") % 11 == 0)
     neg = docs.where((F.col("doc_id") % 11 != 0) & (F.col("doc_id") % 3 == 0))
-    w = quality_train(pos, neg, n_buckets=B, iters=ITERS, lr=LR)
+    _hp(monkeypatch)
+    w = quality_train(pos, neg)
     got = {
         r.doc_id: (r.n_tokens, r.z_micro, r.prob, r.keep)
-        for r in quality_classify(docs, w, n_buckets=B).collect()
+        for r in quality_classify(docs, w).collect()
     }
     want = _replay(
         [(d, t) for d, t in rows if d % 11 == 0],
@@ -126,7 +136,7 @@ def test_quality_clf_matches_pure_python_replay(spark, corpus):
     assert len({v[1] for v in got.values()}) > 10
 
 
-def test_quality_clf_separates_a_separable_corpus(spark):
+def test_quality_clf_separates_a_separable_corpus(spark, monkeypatch):
     from text_ocr_spark.ops.quality_clf import (
         quality_classify,
         quality_train,
@@ -140,16 +150,17 @@ def test_quality_clf_separates_a_separable_corpus(spark):
         [(i, f"zeta spam junk click v{i}") for i in range(16)],
         "doc_id long, text string",
     )
-    w = quality_train(pos, neg, n_buckets=256, iters=6)
+    _hp(monkeypatch, n_buckets=256, iters=6)
+    w = quality_train(pos, neg)
     held = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "zeta spam junk")],
         "doc_id long, text string",
     )
-    got = {r.doc_id: r.keep for r in quality_classify(held, w, 256).collect()}
+    got = {r.doc_id: r.keep for r in quality_classify(held, w).collect()}
     assert got == {1: 1, 2: 0}
 
 
-def test_quality_clf_training_reduces_loss(spark, corpus):
+def test_quality_clf_training_reduces_loss(spark, corpus, monkeypatch):
     """Log-loss of the trained model must beat the zero-weight prior
     (sigma(0) = 0.5 -> loss ln 2) on the training sample."""
     from text_ocr_spark.ops.quality_clf import (
@@ -160,11 +171,12 @@ def test_quality_clf_training_reduces_loss(spark, corpus):
     docs, _ = corpus
     pos = docs.where(F.col("doc_id") % 11 == 0)
     neg = docs.where((F.col("doc_id") % 11 != 0) & (F.col("doc_id") % 3 == 0))
-    w = quality_train(pos, neg, n_buckets=B, iters=ITERS, lr=LR)
+    _hp(monkeypatch)
+    w = quality_train(pos, neg)
 
     def loss(sample, y):
         probs = [
-            r.prob for r in quality_classify(sample, w, n_buckets=B).collect()
+            r.prob for r in quality_classify(sample, w).collect()
         ]
         eps = 1e-9
         return sum(
@@ -178,7 +190,7 @@ def test_quality_clf_training_reduces_loss(spark, corpus):
     assert trained < math.log(2.0)
 
 
-def test_quality_clf_id_collision_between_samples_is_safe(spark):
+def test_quality_clf_id_collision_between_samples_is_safe(spark, monkeypatch):
     """The same doc_id on both sides must not join-duplicate features
     (internal 2*id+label re-key): one shared id trains cleanly."""
     from text_ocr_spark.ops.quality_clf import (
@@ -192,7 +204,8 @@ def test_quality_clf_id_collision_between_samples_is_safe(spark):
     neg = spark.createDataFrame(
         [(7, "zeta zeta junk")], "doc_id long, text string"
     )
-    w = quality_train(pos, neg, n_buckets=64, iters=4)
+    _hp(monkeypatch, n_buckets=64, iters=4)
+    w = quality_train(pos, neg)
     got = {
         r.doc_id: r.keep
         for r in quality_classify(
@@ -201,13 +214,14 @@ def test_quality_clf_id_collision_between_samples_is_safe(spark):
                 "doc_id long, text string",
             ),
             w,
-            64,
         ).collect()
     }
     assert got == {1: 1, 2: 0}
 
 
-def test_quality_clf_null_and_empty_docs_score_the_bias(spark, corpus):
+def test_quality_clf_null_and_empty_docs_score_the_bias(
+    spark, corpus, monkeypatch
+):
     from text_ocr_spark.ops.quality_clf import (
         quality_classify,
         quality_train,
@@ -216,19 +230,19 @@ def test_quality_clf_null_and_empty_docs_score_the_bias(spark, corpus):
     docs, _ = corpus
     pos = docs.where(F.col("doc_id") % 11 == 0)
     neg = docs.where((F.col("doc_id") % 11 != 0) & (F.col("doc_id") % 3 == 0))
-    w = quality_train(pos, neg, n_buckets=B, iters=2)
+    _hp(monkeypatch, iters=2)
+    w = quality_train(pos, neg)
     w0 = w.where("b = -1").collect()[0].w_micro
     out = quality_classify(
         spark.createDataFrame(
             [(1, None), (2, ""), (3, " \t ")], "doc_id long, text string"
         ),
         w,
-        n_buckets=B,
     ).collect()
     assert all(r.n_tokens == 0 and r.z_micro == w0 for r in out)
 
 
-def test_quality_clf_partition_independence(spark, corpus):
+def test_quality_clf_partition_independence(spark, corpus, monkeypatch):
     from text_ocr_spark.ops.quality_clf import (
         quality_classify,
         quality_train,
@@ -237,19 +251,18 @@ def test_quality_clf_partition_independence(spark, corpus):
     docs, _ = corpus
     pos = docs.where(F.col("doc_id") % 11 == 0)
     neg = docs.where((F.col("doc_id") % 11 != 0) & (F.col("doc_id") % 3 == 0))
-    a = quality_train(pos, neg, n_buckets=B, iters=2)
-    b = quality_train(
-        pos.repartition(7, "text"), neg.repartition(5), n_buckets=B, iters=2
-    )
+    _hp(monkeypatch, iters=2)
+    a = quality_train(pos, neg)
+    b = quality_train(pos.repartition(7, "text"), neg.repartition(5))
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    ca = quality_classify(docs, a, n_buckets=B)
-    cb = quality_classify(docs.repartition(9, "text"), a, n_buckets=B)
+    ca = quality_classify(docs, a)
+    cb = quality_classify(docs.repartition(9, "text"), a)
     assert sorted(map(tuple, ca.collect())) == sorted(
         map(tuple, cb.collect())
     )
 
 
-def test_quality_clf_classify_plan_one_pass_jvm(spark, corpus):
+def test_quality_clf_classify_plan_one_pass_jvm(spark, corpus, monkeypatch):
     """The corpus-scale path: no Python stage, the weight table
     broadcasts, and the corpus is tokenized exactly ONCE (one Generate
     — the count and the weight sum share one left-join aggregate)."""
@@ -261,8 +274,9 @@ def test_quality_clf_classify_plan_one_pass_jvm(spark, corpus):
     docs, _ = corpus
     pos = docs.where(F.col("doc_id") % 11 == 0)
     neg = docs.where((F.col("doc_id") % 11 != 0) & (F.col("doc_id") % 3 == 0))
-    w = quality_train(pos, neg, n_buckets=B, iters=1)
-    df = quality_classify(docs, w, n_buckets=B)
+    _hp(monkeypatch, iters=1)
+    w = quality_train(pos, neg)
+    df = quality_classify(docs, w)
     p = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
@@ -275,7 +289,7 @@ def test_quality_clf_classify_plan_one_pass_jvm(spark, corpus):
     assert p.count("Generate (") == 1, p
 
 
-def test_quality_clf_rejects_bad_weight_tables(spark, corpus):
+def test_quality_clf_rejects_bad_weight_tables(spark, corpus, monkeypatch):
     """ADVICE r4 regression: the public apply API must refuse a weight
     table with a missing or duplicated bias row instead of silently
     emitting zero rows / multiplied rows, and a repeated feature bucket
@@ -288,16 +302,17 @@ def test_quality_clf_rejects_bad_weight_tables(spark, corpus):
     docs, _ = corpus
     pos = docs.where(F.col("doc_id") % 11 == 0)
     neg = docs.where((F.col("doc_id") % 11 != 0) & (F.col("doc_id") % 3 == 0))
-    w = quality_train(pos, neg, n_buckets=B, iters=1)
+    _hp(monkeypatch, iters=1)
+    w = quality_train(pos, neg)
 
     no_bias = w.where(F.col("b") != -1)
     with pytest.raises(ValueError, match="exactly one bias row"):
-        quality_classify(docs, no_bias, n_buckets=B)
+        quality_classify(docs, no_bias)
 
     doubled = w.unionByName(w.where(F.col("b") == -1))
     with pytest.raises(ValueError, match="exactly one bias row"):
-        quality_classify(docs, doubled, n_buckets=B)
+        quality_classify(docs, doubled)
 
     repeated = w.unionByName(w.where(F.col("b") != -1))
     with pytest.raises(ValueError, match="repeats feature buckets"):
-        quality_classify(docs, repeated, n_buckets=B)
+        quality_classify(docs, repeated)

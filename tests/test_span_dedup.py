@@ -3,7 +3,9 @@
 oracle parity runs through the contract (scripts/check_contract.py);
 these tests pin the edge semantics the sf0.01 corpus cannot reach:
 within-doc repeats, interval merging, short/NULL/empty docs, full-cover
-cuts, and the sampling draw's exact hash arithmetic.
+cuts, and the sampling draw's exact hash arithmetic. The span ops run
+at a 4-token window (``span_dedup.NGRAM`` patched) so hand-built docs
+stay short.
 """
 
 from __future__ import annotations
@@ -13,8 +15,14 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
+from text_ocr_spark.ops import curate, span_dedup
 from text_ocr_spark.ops.curate import sample_stratified
 from text_ocr_spark.ops.span_dedup import dup_spans, strip_dup_spans
+
+
+@pytest.fixture
+def ngram4(monkeypatch):
+    monkeypatch.setattr(span_dedup, "NGRAM", 4)
 
 
 def _docs(spark, rows):
@@ -25,7 +33,7 @@ def _words(*idx):
     return " ".join(f"w{i}" for i in idx)
 
 
-def test_cross_doc_duplicate_window_found(spark):
+def test_cross_doc_duplicate_window_found(spark, ngram4):
     """A 4-gram shared by two docs marks the covering span in both;
     a doc with no duplicated window emits nothing."""
     shared = _words(0, 1, 2, 3)
@@ -36,44 +44,44 @@ def test_cross_doc_duplicate_window_found(spark):
     ]
     got = {
         (r.doc_id, r.span_start, r.span_end)
-        for r in dup_spans(_docs(spark, rows), ngram=4).collect()
+        for r in dup_spans(_docs(spark, rows)).collect()
     }
     assert got == {(1, 0, 4), (2, 2, 6)}
 
 
-def test_within_doc_repeat_counts(spark):
-    """min_count counts TOTAL occurrences (paper semantics): a doc
+def test_within_doc_repeat_counts(spark, ngram4):
+    """MIN_COUNT counts TOTAL occurrences (paper semantics): a doc
     repeating its own window twice is duplicated with no second doc."""
     rep = _words(0, 1, 2, 3)
     rows = [(1, f"{rep} {_words(9)} {rep}")]
     got = [
         (r.span_start, r.span_end)
-        for r in dup_spans(_docs(spark, rows), ngram=4)
+        for r in dup_spans(_docs(spark, rows))
         .orderBy("span_start")
         .collect()
     ]
     assert got == [(0, 4), (5, 9)]
 
 
-def test_overlapping_and_touching_intervals_merge(spark):
+def test_overlapping_and_touching_intervals_merge(spark, ngram4):
     """Consecutive duplicated windows merge into one maximal interval:
-    a shared 5-token run under ngram=4 yields two overlapping hits
+    a shared 5-token run under NGRAM = 4 yields two overlapping hits
     (pos 0 and 1) -> ONE [0, 5) span."""
     run = _words(0, 1, 2, 3, 4)
     rows = [(1, f"{run} {_words(10, 11)}"), (2, f"{_words(20)} {run}")]
     got = {
         (r.doc_id, r.span_start, r.span_end)
-        for r in dup_spans(_docs(spark, rows), ngram=4).collect()
+        for r in dup_spans(_docs(spark, rows)).collect()
     }
     assert got == {(1, 0, 5), (2, 1, 6)}
 
 
-def test_short_null_and_empty_docs_emit_nothing(spark):
+def test_short_null_and_empty_docs_emit_nothing(spark, ngram4):
     rows = [(1, _words(0, 1)), (2, None), (3, ""), (4, "   ")]
-    assert dup_spans(_docs(spark, rows), ngram=4).count() == 0
+    assert dup_spans(_docs(spark, rows)).count() == 0
 
 
-def test_strip_cuts_spans_and_counts(spark):
+def test_strip_cuts_spans_and_counts(spark, ngram4):
     shared = _words(0, 1, 2, 3)
     rows = [
         (1, f"{shared} {_words(10, 11, 12)}"),
@@ -84,7 +92,7 @@ def test_strip_cuts_spans_and_counts(spark):
     ]
     got = {
         r.doc_id: (r.clean_text, r.n_cut)
-        for r in strip_dup_spans(_docs(spark, rows), ngram=4).collect()
+        for r in strip_dup_spans(_docs(spark, rows)).collect()
     }
     assert got[1] == (_words(10, 11, 12), 4)
     assert got[2] == (_words(20, 21), 4)
@@ -93,17 +101,17 @@ def test_strip_cuts_spans_and_counts(spark):
     assert got[5] == ("", 4)
 
 
-def test_strip_preserves_every_doc_row(spark):
+def test_strip_preserves_every_doc_row(spark, ngram4):
     rows = [(i, _words(i, i + 1, i + 2, i + 3)) for i in range(10)]
-    out = strip_dup_spans(_docs(spark, rows), ngram=4)
+    out = strip_dup_spans(_docs(spark, rows))
     assert out.count() == 10
 
 
-def test_span_plans_are_pure_jvm(spark):
+def test_span_plans_are_pure_jvm(spark, ngram4):
     rows = [(1, _words(0, 1, 2, 3)), (2, _words(0, 1, 2, 3))]
     for df in (
-        dup_spans(_docs(spark, rows), ngram=4),
-        strip_dup_spans(_docs(spark, rows), ngram=4),
+        dup_spans(_docs(spark, rows)),
+        strip_dup_spans(_docs(spark, rows)),
     ):
         p = df._jdf.queryExecution().executedPlan().toString()
         for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
@@ -135,7 +143,7 @@ def test_sample_matches_exact_hash_arithmetic(spark):
     the draw is a pure row function, independent of partitioning."""
     fr = {"en": 0.3, "de": 1.0, "fr": 0.0}
     docs = _lang_docs(spark)
-    got = {r.doc_id for r in sample_stratified(docs, fr, "lang").collect()}
+    got = {r.doc_id for r in sample_stratified(docs, fr).collect()}
     want = {
         i
         for i in range(200)
@@ -151,19 +159,20 @@ def test_sample_matches_exact_hash_arithmetic(spark):
 def test_sample_is_deterministic_and_partition_independent(spark):
     fr = {"en": 0.5, "de": 0.5}
     docs = _lang_docs(spark)
-    a = sorted(r.doc_id for r in sample_stratified(docs, fr, "lang").collect())
+    a = sorted(r.doc_id for r in sample_stratified(docs, fr).collect())
     b = sorted(
-        r.doc_id
-        for r in sample_stratified(docs.repartition(13), fr, "lang").collect()
+        r.doc_id for r in sample_stratified(docs.repartition(13), fr).collect()
     )
     assert a == b and len(a) > 0
 
 
-def test_sample_seed_changes_membership(spark):
+def test_sample_seed_changes_membership(spark, monkeypatch):
     fr = {"en": 0.5}
     docs = _lang_docs(spark)
-    a = {r.doc_id for r in sample_stratified(docs, fr, "lang", seed=1).collect()}
-    b = {r.doc_id for r in sample_stratified(docs, fr, "lang", seed=2).collect()}
+    monkeypatch.setattr(curate, "SAMPLE_SEED", 1)
+    a = {r.doc_id for r in sample_stratified(docs, fr).collect()}
+    monkeypatch.setattr(curate, "SAMPLE_SEED", 2)
+    b = {r.doc_id for r in sample_stratified(docs, fr).collect()}
     assert a != b
 
 
@@ -173,7 +182,7 @@ def test_sample_plan_is_single_pass_no_exchange(spark, tmp_path):
     p = str(tmp_path / "docs.parquet")
     _lang_docs(spark).write.parquet(p)
     plan = (
-        sample_stratified(spark.read.parquet(p), {"en": 0.5}, "lang")
+        sample_stratified(spark.read.parquet(p), {"en": 0.5})
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -191,6 +200,12 @@ def test_sample_plan_is_single_pass_no_exchange(spark, tmp_path):
 from text_ocr_spark.ops.curate import pack_shards  # noqa: E402
 
 
+@pytest.fixture
+def bucket2(monkeypatch):
+    """Two docs per prefix-sum bucket, so small inputs span buckets."""
+    monkeypatch.setattr(curate, "BUCKET_SIZE", 2)
+
+
 def _tok_docs(spark, counts):
     rows = [
         (i, " ".join(f"t{i}_{j}" for j in range(c)) if c is not None else None)
@@ -199,44 +214,42 @@ def _tok_docs(spark, counts):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_pack_shards_exclusive_prefix_sum(spark):
+def test_pack_shards_exclusive_prefix_sum(spark, bucket2):
     """shard_id = floor(exclusive cumsum / budget): boundaries land
     exactly where the running total crosses the budget, a doc may
     overshoot its shard, and boundary docs start the NEXT shard."""
     docs = _tok_docs(spark, [3, 3, 3, 3])  # budget 6: cum 0,3,6,9
     got = {
-        r.doc_id: r.shard_id for r in pack_shards(docs, 6, 2).collect()
+        r.doc_id: r.shard_id for r in pack_shards(docs, 6).collect()
     }
     assert got == {0: 0, 1: 0, 2: 1, 3: 1}
 
 
-def test_pack_shards_null_and_empty_ride_along(spark):
+def test_pack_shards_null_and_empty_ride_along(spark, bucket2):
     docs = _tok_docs(spark, [5, None, 5])
     rows = {
         r.doc_id: (r.n_tokens, r.shard_id)
-        for r in pack_shards(docs, 5, 2).collect()
+        for r in pack_shards(docs, 5).collect()
     }
     # doc 1 (NULL) contributes 0 tokens; cum: 0, 5, 5
     assert rows == {0: (5, 0), 1: (0, 1), 2: (5, 1)}
     empty = _tok_docs(spark, [1])
-    e = pack_shards(
-        empty.withColumn("text", F.lit("   ")), 5, 2
-    ).collect()[0]
+    e = pack_shards(empty.withColumn("text", F.lit("   ")), 5).collect()[0]
     assert (e.n_tokens, e.shard_id) == (0, 0)
 
 
-def test_pack_shards_bucket_size_invariant(spark):
+def test_pack_shards_bucket_size_invariant(spark, monkeypatch):
     """The two-level distributed prefix sum is bit-identical to the
-    single-window form: bucket_size 1 (every doc its own bucket),
-    bucket_size 7 (uneven buckets), and bucket_size 10^9 (one bucket —
+    single-window form: BUCKET_SIZE 1 (every doc its own bucket),
+    BUCKET_SIZE 7 (uneven buckets), and BUCKET_SIZE 10^9 (one bucket —
     the plain global window) all agree."""
     counts = [(i * 37) % 23 for i in range(101)]
     counts[13] = 0
     docs = _tok_docs(spark, counts)
-    outs = [
-        sorted(tuple(r) for r in pack_shards(docs, 50, b).collect())
-        for b in (1, 7, 10**9)
-    ]
+    outs = []
+    for b in (1, 7, 10**9):
+        monkeypatch.setattr(curate, "BUCKET_SIZE", b)
+        outs.append(sorted(tuple(r) for r in pack_shards(docs, 50).collect()))
     assert outs[0] == outs[1] == outs[2]
     # shards are contiguous in doc_id order and all used
     shard_of = {d: s for d, _, s in outs[0]}
@@ -245,14 +258,17 @@ def test_pack_shards_bucket_size_invariant(spark):
     assert set(seq) == set(range(max(seq) + 1))
 
 
-def test_pack_shards_plan_no_global_corpus_window(spark, tmp_path):
+def test_pack_shards_plan_no_global_corpus_window(
+    spark, tmp_path, monkeypatch
+):
     """Scale gate: the corpus-wide stages never sort globally — the
     only non-partitioned window runs over the SMALL bucket frame. The
     corpus side sees one bucket-hash exchange for the per-bucket window
     plus the broadcast offset join; no Python anywhere."""
     p = str(tmp_path / "docs.parquet")
     _tok_docs(spark, [(i * 17) % 31 for i in range(300)]).write.parquet(p)
-    df = pack_shards(spark.read.parquet(p), 100, 16)
+    monkeypatch.setattr(curate, "BUCKET_SIZE", 16)
+    df = pack_shards(spark.read.parquet(p), 100)
     plan = df._jdf.queryExecution().executedPlan().toString()
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert marker not in plan
@@ -265,32 +281,25 @@ def test_pack_shards_plan_no_global_corpus_window(spark, tmp_path):
     assert any("bucket" in s for s in singles)
 
 
-def test_pack_shards_precomputed_token_column(spark):
-    """n_tokens_col feeds both prefix-sum passes from a precomputed
-    long (no re-tokenization); output identical to the text path."""
-    docs = _tok_docs(spark, [4, 9, 0, 7, 2])
-    pre = docs.withColumn(
-        "my_count",
-        F.when(
-            F.length(F.trim("text")) > 0,
-            F.size(F.split(F.trim(F.col("text")), r"[ \t\n\f\r]+")),
-        ).otherwise(F.lit(0)),
-    )
-    a = sorted(tuple(r) for r in pack_shards(docs, 10, 2).collect())
-    b = sorted(
-        tuple(r)
-        for r in pack_shards(pre, 10, 2, n_tokens_col="my_count").collect()
-    )
-    assert a == b
+def test_pack_shards_rejects_a_budget_below_one(spark):
+    """A budget below 1 has no shards to fill: 0 would divide by zero
+    on the executors and a negative budget would number shards
+    backwards (0, -2, -3, ...). Both raise before any plan is built."""
+    docs = _tok_docs(spark, [3, 3, 3])
+    for bad in (0, -4):
+        with pytest.raises(ValueError, match="max_tokens must be >= 1"):
+            pack_shards(docs, bad)
+        with pytest.raises(ValueError, match="max_tokens must be >= 1"):
+            pack_shards(docs, bad, shuffle_seed=7)
 
 
-def test_pack_shards_whitespace_token_contract(spark):
+def test_pack_shards_whitespace_token_contract(spark, bucket2):
     """The budget counts REAL tokens: trailing newlines add no phantom
     token and tabs-only docs count 0 (docstring contract) — the raw
     size(split(trim)) idiom would count 3 and 2 here."""
     rows = [(0, "a b\n"), (1, "\t"), (2, "  "), (3, "x y z")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r.n_tokens for r in pack_shards(df, 100, 2).collect()}
+    got = {r.doc_id: r.n_tokens for r in pack_shards(df, 100).collect()}
     assert got == {0: 2, 1: 0, 2: 0, 3: 3}
 
 
@@ -385,7 +394,7 @@ def test_sample_weighted_epoch_counts(spark):
     sample_stratified (0 or 1 copies); 0.0 and unlisted keys drop."""
     fr = {"en": 2.0, "de": 2.5, "fr": 0.3, "es": 0.0}
     docs = _lang_docs(spark)  # en/de/fr/zh round-robin
-    out = sample_weighted(docs, fr, "lang").collect()
+    out = sample_weighted(docs, fr).collect()
     from collections import Counter
 
     copies = Counter(r.doc_id for r in out)
@@ -408,7 +417,7 @@ def test_sample_weighted_epoch_counts(spark):
     # the fractional membership below 1.0 equals sample_stratified's
     kept_strat = {
         r.doc_id
-        for r in sample_stratified(docs, {"fr": 0.3}, "lang").collect()
+        for r in sample_stratified(docs, {"fr": 0.3}).collect()
     }
     assert {r.doc_id for r in out if r.lang == "fr"} == kept_strat
 
@@ -419,7 +428,7 @@ def test_sample_weighted_plan_zero_exchange(spark, tmp_path):
     p = str(tmp_path / "docs.parquet")
     _lang_docs(spark).write.parquet(p)
     plan = (
-        sample_weighted(spark.read.parquet(p), {"en": 2.5}, "lang")
+        sample_weighted(spark.read.parquet(p), {"en": 2.5})
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -12,27 +12,27 @@ Algorithm (Sennrich et al. 2016, the reference BPE):
   tokenizers) uses: one distributed pass collapses the corpus to
   (word, count) pairs (bounded by the vocabulary, which is orders of
   magnitude smaller than the corpus; production trainers additionally
-  truncate to the top-K words or train on a sample — `max_words` here,
+  truncate to the top-K words or train on a sample — MAX_WORDS here,
   taken by count-then-word order so it is deterministic), then the
   merge loop runs driver-side over that dictionary exactly as the
   paper describes: repeatedly count adjacent symbol pairs weighted by
   word frequency, merge the most frequent pair (ties broken
-  lexicographically — a total, replayable order), n_merges times.
+  lexicographically — a total, replayable order), N_MERGES times.
   Words are space-joined symbol sequences with the end-of-word marker
   `</w>` on the final symbol (the paper's formulation), so merges
   never cross word boundaries.
 
 - TOKENIZE is the corpus-scale path: the learned merge ranks broadcast
-  (n_merges entries) and every document tokenizes in ONE Arrow stage
+  (N_MERGES entries) and every document tokenizes in ONE Arrow stage
   (mapInPandas) — the per-word merge loop is inherently iterative
   (apply the lowest-rank applicable merge until none applies), which
   no Catalyst expression expresses, so this is the legitimate
   pandas-UDF case; per-word results are memoized per batch (web text
   repeats words heavily) and words never leave the executor. Output
-  carries the subword array and its count, so `pack_shards(docs,
-  n_tokens_col="n_bpe")` budgets shards by REAL tokenizer counts.
+  carries the subword array and its count (``n_bpe``), the learned
+  token count a budget or mixture tally reads.
 
-Determinism: train is a pure function of (corpus, n_merges, max_words)
+Determinism: train is a pure function of (corpus, N_MERGES, MAX_WORDS)
 — exact integer counts, total tie orders, no RNG; tokenize is a pure
 per-row function of (text, merges). Both replay bit-exact in pure
 Python (the committed-golden oracle, gen_op_golden.py::golden_bpe).
@@ -51,12 +51,15 @@ from text_ocr_spark.ops.lm import lm_tokens
 #: end-of-word marker (Sennrich et al. 2016)
 EOW = "</w>"
 
-DEFAULT_MERGES = 200
+#: learned merges per training run (below saturation for the fixture's
+#: 31-word vocabulary, so tokens are genuine subwords). Both constants
+#: are read at call time so tests can patch them.
+N_MERGES = 40
 
 #: train-side dictionary cap: production BPE trainers bound the word
 #: dictionary (top-K by frequency / sampling); ties at the boundary
 #: break by word string so the cut is deterministic
-DEFAULT_MAX_WORDS = 1_000_000
+MAX_WORDS = 1_000_000
 
 
 def word_counts(docs: DataFrame) -> DataFrame:
@@ -114,15 +117,11 @@ def bpe_learn_from_counts(
     return merges
 
 
-def bpe_train(
-    docs: DataFrame,
-    n_merges: int = DEFAULT_MERGES,
-    max_words: int = DEFAULT_MAX_WORDS,
-) -> DataFrame:
-    """Train BPE merges on the corpus. -> (rank, left, right).
+def bpe_train(docs: DataFrame) -> DataFrame:
+    """Train N_MERGES BPE merges on the corpus. -> (rank, left, right).
 
     One corpus pass (word_counts); the dictionary comes to the driver
-    bounded by ``max_words`` (taken in (-count, word) order — the
+    bounded by MAX_WORDS (taken in (-count, word) order — the
     deterministic top-K every production trainer applies); the merge
     loop is driver-side over that dictionary, as in every reference
     implementation — the corpus itself is never iterated."""
@@ -131,17 +130,12 @@ def bpe_train(
         for r in (
             word_counts(docs)
             .orderBy(F.desc("cnt"), F.asc("word"))
-            .limit(max_words)
+            .limit(MAX_WORDS)
             .collect()
         )
     ]
-    merges = bpe_learn_from_counts(top, n_merges)
-    spark = docs.sparkSession
-    if not merges:
-        return spark.createDataFrame(
-            [], "rank int, left string, right string"
-        )
-    return spark.createDataFrame(
+    merges = bpe_learn_from_counts(top, N_MERGES)
+    return docs.sparkSession.createDataFrame(
         [(i, a, b) for i, (a, b) in enumerate(merges)],
         "rank int, left string, right string",
     )
@@ -167,14 +161,12 @@ def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     return syms
 
 
-def bpe_tokenize(
-    docs: DataFrame, merges: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def bpe_tokenize(docs: DataFrame, merges: DataFrame) -> DataFrame:
     """Tokenize the corpus with learned merges (the 100 TB path).
 
     -> (doc_id, bpe_tokens array<string>, n_bpe long). ONE Arrow stage:
     the merge table broadcasts as a plain Python dict inside the UDF
-    closure (n_merges entries), per-word encodings memoize per batch,
+    closure (one entry per merge), per-word encodings memoize per batch,
     and nothing but the input rows crosses the wire. NULL/empty docs
     -> empty array, n_bpe 0."""
     ranks = {
@@ -219,7 +211,7 @@ def bpe_tokenize(
             )
 
     return docs.select(
-        "doc_id", F.col(text_col).alias("__text")
+        "doc_id", F.col("text").alias("__text")
     ).mapInPandas(
         run, schema="doc_id long, bpe_tokens array<string>, n_bpe long"
     )

@@ -9,6 +9,11 @@ pays the extraction's single salted exchange plus two hash aggregations
 for the dedup verdict — no intermediate materialization. Every stage
 after extraction is SQL-expressible, so the contract oracle is the same
 transformation applied to the committed extraction golden in DuckDB.
+
+The sampling and sharding ops and the ``pretrain_pipeline`` capstone
+live here too. Their fixed values (SAMPLE_KEY, SAMPLE_SEED,
+BUCKET_SIZE) are module constants, read at call time so tests can
+patch them.
 """
 
 from __future__ import annotations
@@ -17,9 +22,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from text_ocr_spark.ops.cleaning import WS_RE, scrub_expr
+from text_ocr_spark.ops.lm import lm_tokens
 
 #: minimum whitespace tokens for a turn to survive curation
 MIN_TOKENS_KEEP = 5
+
+#: the sampling ops' mixture key column and md5-draw seed
+SAMPLE_KEY = "lang"
+SAMPLE_SEED = 42
+
+#: docs per pack_shards prefix-sum bucket (the output does not depend
+#: on it; it bounds the per-bucket window task and the bucket frame)
+BUCKET_SIZE = 4096
 
 
 def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,20 +79,22 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _md5_key(seed: int) -> F.Column:
+    """md5(seed || ':' || doc_id) as 32 lowercase hex chars — a pure
+    function of the row key, so every draw built on it is identical on
+    every run, any cluster size, any partitioning, with no RNG state
+    to ship."""
+    return F.md5(
+        F.concat_ws(
+            ":", F.lit(str(seed)), F.col("doc_id").cast("string")
+        ).cast("binary")
+    )
+
+
 def _md5_draw(seed: int) -> F.Column:
     """The single-sourced sampling draw: first 8 hex chars of
-    md5(seed || ':' || doc_id) — a pure function of the row key, so
-    membership is identical on every run, any cluster size, any
-    partitioning, with no RNG state to ship."""
-    return F.substring(
-        F.md5(
-            F.concat_ws(
-                ":", F.lit(str(seed)), F.col("doc_id").cast("string")
-            ).cast("binary")
-        ),
-        1,
-        8,
-    )
+    ``_md5_key(seed)``."""
+    return F.substring(_md5_key(seed), 1, 8)
 
 
 def _draw_threshold(frac: float) -> str:
@@ -92,22 +108,21 @@ def _draw_threshold(frac: float) -> str:
 
 
 def sample_stratified(
-    docs: DataFrame,
-    fractions: dict[str, float],
-    key_col: str = "lang",
-    seed: int = 42,
+    docs: DataFrame, fractions: dict[str, float]
 ) -> DataFrame:
-    """-> (doc_id, <key_col>, draw): deterministic per-key Bernoulli
+    """-> (doc_id, lang, draw): deterministic per-key Bernoulli
     sampling — the domain-mixing step of a training-data pipeline
     (Pile/Dolma-style mixture weights: upweight by keeping 1.0, dilute
     a dominant domain by keeping a fraction, drop a domain with 0.0).
-    Keys absent from ``fractions`` are dropped (explicit mixtures only).
+    Keys (the SAMPLE_KEY column) absent from ``fractions`` are dropped
+    (explicit mixtures only).
 
-    The draw is the first 8 hex chars of md5(seed || ':' || doc_id) —
-    a pure function of the row key, so the SAME rows are kept on every
-    run, on any cluster size, under any partitioning, with no RNG state
-    to ship (contrast ``DataFrame.sampleBy``, whose per-partition RNG
-    makes row membership depend on the physical split). Selection
+    The draw is the first 8 hex chars of
+    md5(SAMPLE_SEED || ':' || doc_id) — a pure function of the row key,
+    so the SAME rows are kept on every run, on any cluster size, under
+    any partitioning, with no RNG state to ship (contrast
+    ``DataFrame.sampleBy``, whose per-partition RNG makes row
+    membership depend on the physical split). Selection
     compares the hex draw LEXICOGRAPHICALLY against floor(frac * 2^32)
     rendered as 8 lowercase hex chars — order-identical to the numeric
     compare and expressible byte-for-byte in any engine (the DuckDB
@@ -116,25 +131,20 @@ def sample_stratified(
     no shuffle at all: the sample is a filter, so it composes with
     downstream ops without breaking pushdown.
     """
-    draw = _md5_draw(seed)
+    draw = _md5_draw(SAMPLE_SEED)
     thr = _draw_threshold
     keep = F.lit(False)
     for key, frac in sorted(fractions.items()):
         keep = F.when(
-            F.col(key_col) == key, draw < F.lit(thr(frac))
+            F.col(SAMPLE_KEY) == key, draw < F.lit(thr(frac))
         ).otherwise(keep)
     return docs.where(keep).select(
-        "doc_id", key_col, draw.alias("draw")
+        "doc_id", SAMPLE_KEY, draw.alias("draw")
     )
 
 
-def sample_weighted(
-    docs: DataFrame,
-    fractions: dict[str, float],
-    key_col: str = "lang",
-    seed: int = 42,
-) -> DataFrame:
-    """-> (doc_id, <key_col>, draw, epoch): deterministic WEIGHTED
+def sample_weighted(docs: DataFrame, fractions: dict[str, float]) -> DataFrame:
+    """-> (doc_id, lang, draw, epoch): deterministic WEIGHTED
     sampling with replacement — ``sample_stratified`` extended to
     mixture weights above 1.0 (the upsampling half of domain mixing:
     Pile-style "epochs", where a high-quality domain repeats in the
@@ -149,26 +159,26 @@ def sample_weighted(
     (ceil(w) elements per row) — still ZERO exchanges; keys absent
     from ``fractions`` drop as in sample_stratified.
     """
-    draw = _md5_draw(seed)
+    draw = _md5_draw(SAMPLE_SEED)
     thr = _draw_threshold
     n_copies = F.lit(0)
     for key, frac in sorted(fractions.items()):
         base_n = int(frac)
         extra = (draw < F.lit(thr(frac - base_n))).cast("int")
         n_copies = F.when(
-            F.col(key_col) == key, F.lit(base_n) + extra
+            F.col(SAMPLE_KEY) == key, F.lit(base_n) + extra
         ).otherwise(n_copies)
     return (
         docs.select(
             "doc_id",
-            key_col,
+            SAMPLE_KEY,
             draw.alias("draw"),
             n_copies.alias("n_copies"),
         )
         .where(F.col("n_copies") > 0)
         .select(
             "doc_id",
-            key_col,
+            SAMPLE_KEY,
             "draw",
             F.explode(
                 F.sequence(F.lit(0), F.col("n_copies") - 1)
@@ -178,11 +188,7 @@ def sample_weighted(
 
 
 def pack_shards(
-    docs: DataFrame,
-    max_tokens: int,
-    bucket_size: int = 4096,
-    n_tokens_col: str | None = None,
-    shuffle_seed: int | None = None,
+    docs: DataFrame, max_tokens: int, shuffle_seed: int | None = None
 ) -> DataFrame:
     """-> (doc_id, n_tokens, shard_id): token-budget shard assignment —
     the corpus-to-training-shards step. Documents are laid out in
@@ -190,32 +196,23 @@ def pack_shards(
     max_tokens): consecutive docs fill consecutive shards, document
     boundaries are never split, and a shard overshoots max_tokens by at
     most one document (the standard token-offset sharding contract).
-    NULL/whitespace-only docs count 0 tokens and ride along.
+    n_tokens counts the non-empty whitespace tokens of ``text``;
+    NULL/whitespace-only docs count 0 tokens and ride along. A budget
+    below 1 raises ValueError.
 
     Scale shape — the textbook TWO-LEVEL DISTRIBUTED PREFIX SUM: a
     naive ``Window.orderBy(doc_id)`` global cumsum collapses the whole
     corpus into ONE task, so instead
-    (1) docs bucket by ``floor(doc_id / bucket_size)`` and per-bucket
-        token sums aggregate map-side-combined (n/bucket_size rows);
+    (1) docs bucket by ``floor(doc_id / BUCKET_SIZE)`` and per-bucket
+        token sums aggregate map-side-combined (n/BUCKET_SIZE rows);
     (2) bucket offsets are an exclusive cumsum over that SMALL frame —
-        the only single-task window, over n/bucket_size rows (pick
-        bucket_size so this fits: 1e12 docs / 1e6 = 1e6 rows in one
-        task is trivial);
+        the only single-task window, over n/BUCKET_SIZE rows;
     (3) offsets broadcast-join back onto the corpus;
     (4) the within-bucket exclusive cumsum windows BY bucket — parallel
-        across buckets, each task bounded by bucket_size rows.
+        across buckets, each task bounded by BUCKET_SIZE rows.
     Output is bit-identical to the single-window form (pytest
-    differential at bucket_size 1 / huge) and to the DuckDB oracle's
+    differential at bucket size 1 / huge) and to the DuckDB oracle's
     plain global cumsum.
-
-    The corpus is scanned twice (bucket sums, then the join side); pass
-    ``n_tokens_col`` naming a precomputed count column so both passes
-    read a long instead of re-tokenizing the text column. The column
-    must be a NON-EMPTY-token count (e.g. ``F.size(lm_tokens())`` or a
-    real tokenizer's length) — token_stats' ``n_ws_tokens`` is a raw
-    regexp_count that counts boundary phantoms on whitespace-edged
-    docs, which would inflate budgets relative to the self-computed
-    path below (and to the oracle).
 
     ``shuffle_seed`` switches the layout from doc_id order to a
     DETERMINISTIC pseudo-random permutation — training shards want
@@ -233,38 +230,20 @@ def pack_shards(
     """
     from pyspark.sql import Window
 
-    if n_tokens_col is not None:
-        n_tok = F.coalesce(
-            F.col(n_tokens_col).cast("long"), F.lit(0)
-        )
-    else:
-        # count NON-EMPTY tokens: Spark trim() strips only spaces and
-        # split() keeps boundary empties, so the bare size(split(trim))
-        # idiom counts a phantom token for 'a b\n' and >= 1 for a
-        # tabs-only doc — budget inflation the docstring contract
-        # ("whitespace-only counts 0") forbids. token_stats keeps the
-        # raw idiom (its oracle and golden pin it); a budget must not.
-        toks = F.split(F.trim(F.col("text")), WS_RE)
-        n_tok = (
-            F.when(
-                F.col("text").isNotNull(),
-                F.size(F.filter(toks, lambda x: x != F.lit(""))),
-            )
-            .otherwise(F.lit(0))
-            .cast("long")
-        )
+    if max_tokens < 1:
+        raise ValueError(f"max_tokens must be >= 1, got {max_tokens}")
+    # count NON-EMPTY tokens (lm_tokens drops the boundary empties
+    # Spark's split() keeps): the bare size(split(trim)) idiom counts a
+    # phantom token for 'a b\n' and >= 1 for a tabs-only doc — budget
+    # inflation the docstring contract forbids. token_stats keeps the
+    # raw idiom (its oracle and golden pin it); a budget must not.
+    n_tok = F.size(lm_tokens()).cast("long")
     if shuffle_seed is None:
-        bucket = F.floor(F.col("doc_id") / F.lit(bucket_size))
+        bucket = F.floor(F.col("doc_id") / F.lit(BUCKET_SIZE))
         order_cols = [F.col("doc_id")]
         extra_cols = []
     else:
-        draw = F.md5(
-            F.concat_ws(
-                ":",
-                F.lit(str(shuffle_seed)),
-                F.col("doc_id").cast("string"),
-            ).cast("binary")
-        )
+        draw = _md5_key(shuffle_seed)
         # lowercase-hex lexicographic order == numeric order of the
         # 4-char prefix, so this bucket is a prefix of the order key
         bucket = F.conv(F.substring(draw, 1, 4), 16, 10).cast("long")

@@ -9,7 +9,7 @@ The published recipe, re-expressed shuffle-native:
 
 1. FEATURES: unigrams + bigrams of the lowercased whitespace tokens
    (``lm_tokens`` — one tokenizer across all LM-shaped ops), hashed
-   into ``n_buckets`` slots. The hash is the first 8 hex chars of md5
+   into N_BUCKETS slots. The hash is the first 8 hex chars of md5
    as an integer mod B — computable bit-identically in Spark
    (``conv(substring(md5(tok), 1, 8), 16, 10)``) and DuckDB
    (``('0x' || substr(md5(tok), 1, 8))::BIGINT``), the same
@@ -32,7 +32,7 @@ The published recipe, re-expressed shuffle-native:
    u = (md5-draw + 0.5) / 2^32 in (0,1), g = -ln(-ln(u)), rounded to
    the same 1e6 fixed point, so key = logw_micro + gumbel_micro is an
    exact BIGINT and the selected set is a pure function of
-   (corpus, target, seed) — stable under any partitioning or cluster
+   (corpus, target, SEED) — stable under any partitioning or cluster
    size, and exactly reproducible by the DuckDB oracle.
 
 Scale shape (100 TB):
@@ -76,10 +76,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from text_ocr_spark.ops.curate import _md5_draw
 from text_ocr_spark.ops.lm import LP_SCALE, lm_tokens, _bigrams
 
-#: the paper's bucket count (10k hashed n-gram features)
-DEFAULT_BUCKETS = 10_000
+#: the paper's bucket count (10k hashed n-gram features) and the
+#: Gumbel draw's md5 seed; read at call time so tests can patch them
+N_BUCKETS = 10_000
+SEED = 42
 
 
 def _hash_bucket(col: F.Column, n_buckets: int) -> F.Column:
@@ -92,7 +95,7 @@ def _hash_bucket(col: F.Column, n_buckets: int) -> F.Column:
     )
 
 
-def _occurrences(docs: DataFrame, n_buckets: int) -> DataFrame:
+def _occurrences(docs: DataFrame) -> DataFrame:
     """-> (doc_id, b): one row per hashed n-gram OCCURRENCE over
     unigrams + bigrams (bigram text = w1 || ' ' || w2, unambiguous for
     whitespace-split tokens). NULL/empty text emits nothing.
@@ -112,16 +115,10 @@ def _occurrences(docs: DataFrame, n_buckets: int) -> DataFrame:
     )
     return docs.select(
         "doc_id", F.explode(grams).alias("tok")
-    ).select("doc_id", _hash_bucket(F.col("tok"), n_buckets).alias("b"))
+    ).select("doc_id", _hash_bucket(F.col("tok"), N_BUCKETS).alias("b"))
 
 
-def dsir_select(
-    docs: DataFrame,
-    target: DataFrame,
-    k: int,
-    n_buckets: int = DEFAULT_BUCKETS,
-    seed: int = 42,
-) -> DataFrame:
+def dsir_select(docs: DataFrame, target: DataFrame, k: int) -> DataFrame:
     """-> (doc_id, n_feats, logw_micro, key_micro, selected): DSIR
     importance weights for every doc in ``docs`` against ``target``,
     plus the deterministic Gumbel-top-k selection verdict.
@@ -133,7 +130,7 @@ def dsir_select(
       * 1e6) over the doc's buckets (add-one smoothing both sides:
       p_b = (cp_b + 1) / (P + B), q_b = (cq_b + 1) / (Q + B));
     - key_micro: logw_micro + round(-ln(-ln(u)) * 1e6) with u the
-      md5(seed:doc_id) draw — the Gumbel-perturbed sort key;
+      md5(SEED:doc_id) draw — the Gumbel-perturbed sort key;
     - selected: 1 for the k largest (key_micro, then lowest doc_id)
       rows, 0 otherwise; exactly min(k, n) rows are selected.
     """
@@ -145,10 +142,10 @@ def dsir_select(
     # contribute to P's total; P/Q totals are window sums over that
     # single <= 2B-row frame — separate .agg() frames would each embed
     # (and re-run) a corpus tokenize pass
-    raw = _occurrences(docs, n_buckets).groupBy("b").agg(
+    raw = _occurrences(docs).groupBy("b").agg(
         F.count("*").alias("cq")
     )
-    tgt = _occurrences(target, n_buckets).groupBy("b").agg(
+    tgt = _occurrences(target).groupBy("b").agg(
         F.count("*").alias("cp")
     )
     whole = Window.partitionBy().rowsBetween(
@@ -170,10 +167,10 @@ def dsir_select(
             (
                 F.log(
                     (F.coalesce(F.col("cp"), F.lit(0)) + 1)
-                    / (F.col("pn") + F.lit(n_buckets))
+                    / (F.col("pn") + F.lit(N_BUCKETS))
                 )
                 - F.log(
-                    (F.col("cq") + 1) / (F.col("qn") + F.lit(n_buckets))
+                    (F.col("cq") + 1) / (F.col("qn") + F.lit(N_BUCKETS))
                 )
             )
             * LP_SCALE
@@ -186,7 +183,7 @@ def dsir_select(
     # and the per-doc aggregate map-side-combines to <= n_docs rows per
     # mapper; the only corpus-wide shuffle carries one row per document
     scored = (
-        _occurrences(docs, n_buckets)
+        _occurrences(docs)
         .join(F.broadcast(lp), "b")
         .groupBy("doc_id")
         .agg(
@@ -195,19 +192,7 @@ def dsir_select(
         )
     )
 
-    draw = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":", F.lit(str(seed)), F.col("doc_id").cast("string")
-                ).cast("binary")
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    draw = F.conv(_md5_draw(SEED), 16, 10).cast("long")
     u = (draw + F.lit(0.5)) / F.lit(float(2**32))
     gumbel_micro = F.round(-F.log(-F.log(u)) * LP_SCALE).cast("long")
 

@@ -10,8 +10,11 @@ Model: per language L, z_L(doc) = w0_L + (sum over char-3-gram
 occurrences of w_L[bucket]) / n_grams, all in exact int64 micro units
 (the quality_clf discipline — see that module's determinism notes);
 prediction = argmax_L z_L with ties broken by language-code order.
-Training is K independent ``quality_train`` runs (one-vs-rest) over a
+Training is K independent one-vs-rest runs of ``quality_train``'s
+trainer (``quality_clf._train``, same ITERS / LR schedule) over a
 bounded labeled sample; the weights table carries a ``lang`` column.
+Every value here is a module constant, read at call time so tests can
+patch it.
 
 Scale shape (100 TB): TRAINING is bounded (labeled fixture); CLASSIFY
 is ONE corpus pass — the per-bucket weight table pivots to one column
@@ -38,14 +41,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from text_ocr_spark.ops.dsir import _hash_bucket
-from text_ocr_spark.ops.quality_clf import quality_train
+from text_ocr_spark.ops.quality_clf import _check_weights, _train
 
 #: hashed char-3-gram feature buckets (lang-id needs far fewer than a
 #: topical classifier — fastText's lang-id models are tiny)
 LANGID_BUCKETS = 2048
 LANGID_NGRAM = 3
-LANGID_ITERS = 8
-LANGID_LR = 2.0
+
+#: training fixture shape: docs per language, words per doc
+LANGID_PER_LANG = 48
+LANGID_MIN_WORDS = 8
+LANGID_MAX_WORDS = 16
 
 #: deterministic multilingual training fixture: high-frequency function
 #: words per language (public knowledge), sentences assembled by md5
@@ -67,20 +73,20 @@ _LANGID_WORDS = {
 }
 
 
-def langid_fixture(
-    n_per_lang: int = 48, min_words: int = 8, max_words: int = 16
-) -> list[tuple[int, str, str]]:
-    """-> [(doc_id, text, lang)]: the deterministic training corpus.
-    Word count and word choices derive from md5 of (lang, doc, pos) —
-    a pure function, shared verbatim by the Spark op, the pytests, and
-    the golden generator's pure-Python replay."""
+def langid_fixture() -> list[tuple[int, str, str]]:
+    """-> [(doc_id, text, lang)]: the deterministic training corpus,
+    LANGID_PER_LANG docs per language of LANGID_MIN_WORDS to
+    LANGID_MAX_WORDS words. Word count and word choices derive from md5
+    of (lang, doc, pos) — a pure function, shared verbatim by the Spark
+    op, the pytests, and the golden generator's pure-Python replay."""
     rows: list[tuple[int, str, str]] = []
     did = 0
     for lang in sorted(_LANGID_WORDS):
         words = _LANGID_WORDS[lang]
-        for i in range(n_per_lang):
+        for i in range(LANGID_PER_LANG):
             h = hashlib.md5(f"langid:{lang}:{i}".encode()).hexdigest()
-            k = min_words + int(h[:2], 16) % (max_words - min_words + 1)
+            span = LANGID_MAX_WORDS - LANGID_MIN_WORDS + 1
+            k = LANGID_MIN_WORDS + int(h[:2], 16) % span
             toks = []
             for j in range(k):
                 hj = hashlib.md5(
@@ -92,15 +98,14 @@ def langid_fixture(
     return rows
 
 
-def char_ngram_occurrences(
-    docs: DataFrame, n_buckets: int, n: int = LANGID_NGRAM
-) -> DataFrame:
-    """-> (doc_id, b): one row per char-n-gram OCCURRENCE of
-    lower(trim(text)), hashed to a bucket with the dsir md5 idiom.
-    Pure JVM (sequence + substr transform + explode); docs shorter
-    than ``n`` chars emit nothing (they score the biases alone).
-    F.trim is spaces-only — the Python replay strips ' ' only, the
-    bpe/lm whitespace discipline."""
+def char_ngram_occurrences(docs: DataFrame) -> DataFrame:
+    """-> (doc_id, b): one row per char-LANGID_NGRAM-gram OCCURRENCE of
+    lower(trim(text)), hashed to one of LANGID_BUCKETS with the dsir
+    md5 idiom. Pure JVM (sequence + substr transform + explode); docs
+    shorter than LANGID_NGRAM chars emit nothing (they score the biases
+    alone). F.trim is spaces-only — the Python replay strips ' ' only,
+    the bpe/lm whitespace discipline."""
+    n = LANGID_NGRAM
     txt = F.lower(F.trim(F.coalesce(F.col("text"), F.lit(""))))
     ln = F.length(txt)
     grams = F.when(
@@ -112,54 +117,37 @@ def char_ngram_occurrences(
     ).otherwise(F.array().cast("array<string>"))
     return docs.select(
         "doc_id", F.explode(grams).alias("g")
-    ).select("doc_id", _hash_bucket(F.col("g"), n_buckets).alias("b"))
+    ).select("doc_id", _hash_bucket(F.col("g"), LANGID_BUCKETS).alias("b"))
 
 
-def langid_train(
-    labeled: DataFrame,
-    n_buckets: int = LANGID_BUCKETS,
-    iters: int = LANGID_ITERS,
-    lr: float = LANGID_LR,
-) -> DataFrame:
+def langid_train(labeled: DataFrame) -> DataFrame:
     """Train one-vs-rest heads on (doc_id, text, lang) samples.
 
     -> (lang, b, w_micro): per language, quality_train's weight rows
     (bias at b = -1) tagged with the language. The language list comes
     from ONE bounded distinct over the labeled sample (training sets
     are bounded by definition — the quality_clf scale note)."""
-    occ = lambda d, nb: char_ngram_occurrences(d, nb)  # noqa: E731
     langs = sorted(
         r[0] for r in labeled.select("lang").distinct().collect()
     )
     if not langs:
         raise ValueError("langid_train: labeled sample has no languages")
-    spark = labeled.sparkSession
-    parts = []
+    # collect each bounded head (<= LANGID_BUCKETS + 1 rows) so
+    # consumers never re-run the K training loops
+    rows = []
     for lang in langs:
-        w = quality_train(
+        w = _train(
             labeled.where(F.col("lang") == lang).select("doc_id", "text"),
             labeled.where(F.col("lang") != lang).select("doc_id", "text"),
-            n_buckets=n_buckets,
-            iters=iters,
-            lr=lr,
-            occurrences=occ,
+            char_ngram_occurrences,
         )
-        parts.append(w.select(F.lit(lang).alias("lang"), "b", "w_micro"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    # materialize the bounded model table so consumers never re-run
-    # the K training loops (<= K * (n_buckets + 1) rows)
-    return spark.createDataFrame(
-        out.collect(), "lang string, b long, w_micro long"
+        rows += [(lang, r["b"], r["w_micro"]) for r in w.collect()]
+    return labeled.sparkSession.createDataFrame(
+        rows, "lang string, b long, w_micro long"
     )
 
 
-def langid_classify(
-    docs: DataFrame,
-    weights: DataFrame,
-    n_buckets: int = LANGID_BUCKETS,
-) -> DataFrame:
+def langid_classify(docs: DataFrame, weights: DataFrame) -> DataFrame:
     """Apply trained heads to a corpus (the 100 TB path — one pass).
 
     -> (doc_id, n_grams, lang_pred, z_micro): n_grams = char-3-gram
@@ -167,31 +155,10 @@ def langid_classify(
     first), z_micro = the winning exact int64 micro logit. Zero-gram
     docs score the biases alone. Raises on a weight table whose bias
     rows are missing or duplicated for any language, or that repeats a
-    (lang, b) feature row, which the pivot would silently sum (the
-    quality_classify ADVICE discipline)."""
-    # one bounded driver action on the model table: the bias rows plus
-    # every repeated (lang, b) key
-    flagged = (
-        weights.groupBy("lang", "b")
-        .agg(F.count("*").alias("n"), F.min("w_micro").alias("w_micro"))
-        .where((F.col("b") == -1) | (F.col("n") > 1))
-        .collect()
-    )
-    bias_rows = [r for r in flagged if r["b"] == -1]
-    langs = sorted(r["lang"] for r in bias_rows)
-    if not langs or any(r["n"] != 1 for r in bias_rows):
-        raise ValueError(
-            "langid_classify: weight table must contain exactly one "
-            f"bias row (b == -1) per language; got "
-            f"{sorted((r['lang'], r['n']) for r in bias_rows)}"
-        )
-    dup_keys = sorted((r["lang"], r["b"]) for r in flagged if r["b"] != -1)
-    if dup_keys:
-        raise ValueError(
-            "langid_classify: weight table repeats (lang, b) feature rows "
-            f"{dup_keys[:5]} ({len(dup_keys)} in all)"
-        )
-    bias = {r["lang"]: int(r["w_micro"]) for r in bias_rows}
+    (lang, b) feature row, which the pivot would silently sum
+    (``quality_clf._check_weights``)."""
+    bias = _check_weights(weights, "langid_classify", per="lang")
+    langs = sorted(bias)
 
     # pivot the weight table to one column per language so the corpus
     # pays ONE broadcast join + ONE groupBy(doc_id): (b, w_<lang>...)
@@ -202,7 +169,7 @@ def langid_classify(
         .sum("w_micro")
     )
     scored = (
-        char_ngram_occurrences(docs, n_buckets)
+        char_ngram_occurrences(docs)
         .join(F.broadcast(wtab), "b", "left")
         .groupBy("doc_id")
         .agg(

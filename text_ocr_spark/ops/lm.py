@@ -46,13 +46,14 @@ from text_ocr_spark.ops.text_stats import WS_RE
 LP_SCALE = 1_000_000
 
 
-def lm_tokens(text_col: str = "text") -> F.Column:
-    """Lowercased whitespace tokens, empties dropped, NULL text -> [].
+def lm_tokens() -> F.Column:
+    """Lowercased whitespace tokens of ``text``, empties dropped, NULL
+    text -> [].
     Lowercasing matches CCNet's case-insensitive LM; the empty-drop
     keeps all-whitespace and NULL docs at zero tokens in BOTH engines.
     """
     toks = F.split(
-        F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))), WS_RE
+        F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), WS_RE
     )
     return F.filter(toks, lambda t: F.length(t) > 0)
 

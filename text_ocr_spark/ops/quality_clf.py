@@ -29,7 +29,7 @@ Scale shape (100 TB):
 - TRAINING runs over bounded labeled samples (production trains on
   10^4-10^6 docs, not the corpus); the feature frame is computed once
   and localCheckpoint-ed (the resolve_pairs precedent) so each of the
-  `iters` epochs is two joins + two long-only HashAggregates over the
+  ITERS epochs is two joins + two long-only HashAggregates over the
   materialized frame — the driver holds B+1 int64 weights (80 KB at
   the default B) and each epoch moves <= B+1 aggregate rows to it.
 - CLASSIFY is the corpus-scale path and is ONE pass: the <= B+1-row
@@ -53,41 +53,25 @@ from text_ocr_spark.ops.dsir import _hash_bucket
 from text_ocr_spark.ops.lm import LP_SCALE, lm_tokens
 
 #: hashed-unigram feature buckets (fastText's default ballpark)
-DEFAULT_BUCKETS = 10_000
+N_BUCKETS = 10_000
 
 #: training hyperparameters — fixed, documented, replayed by the golden
-DEFAULT_ITERS = 8
-DEFAULT_LR = 2.0
+#: (ops/lang_clf.py trains on the same schedule). Every constant here
+#: is read at call time so tests can patch it.
+ITERS = 8
+LR = 2.0
 
 
-def _unigram_occurrences(docs: DataFrame, n_buckets: int) -> DataFrame:
+def _unigram_occurrences(docs: DataFrame) -> DataFrame:
     """-> (doc_id, b): one row per token occurrence, hashed to a bucket
     (the dsir md5 idiom, unigrams only — fastText's word-level mode).
     NULL/empty text emits nothing."""
     return docs.select(
         "doc_id", F.explode(lm_tokens()).alias("tok")
-    ).select("doc_id", _hash_bucket(F.col("tok"), n_buckets).alias("b"))
+    ).select("doc_id", _hash_bucket(F.col("tok"), N_BUCKETS).alias("b"))
 
 
-def _feats(docs: DataFrame, n_buckets: int, occurrences=None) -> DataFrame:
-    """-> (doc_id, b, c, n): per-doc bucket counts plus the doc's total
-    token count (training-side only — bounded labeled samples).
-    ``occurrences`` swaps the featurizer (default hashed word unigrams;
-    ops/lang_clf.py passes hashed char n-grams)."""
-    occ = (occurrences or _unigram_occurrences)(docs, n_buckets)
-    per_doc = occ.groupBy("doc_id", "b").agg(F.count("*").alias("c"))
-    totals = occ.groupBy("doc_id").agg(F.count("*").alias("n"))
-    return per_doc.join(totals, "doc_id")
-
-
-def quality_train(
-    pos: DataFrame,
-    neg: DataFrame,
-    n_buckets: int = DEFAULT_BUCKETS,
-    iters: int = DEFAULT_ITERS,
-    lr: float = DEFAULT_LR,
-    occurrences=None,
-) -> DataFrame:
+def quality_train(pos: DataFrame, neg: DataFrame) -> DataFrame:
     """Train the logistic quality model on labeled samples.
 
     -> (b, w_micro): int64 micro-unit weights for every bucket that
@@ -95,6 +79,14 @@ def quality_train(
     ``quality_classify``. Docs with zero tokens train the bias only
     (their z is exactly w0).
     """
+    return _train(pos, neg, _unigram_occurrences)
+
+
+def _train(pos: DataFrame, neg: DataFrame, occurrences) -> DataFrame:
+    """``quality_train`` over any featurizer: ``occurrences`` maps
+    (doc_id, text) docs to one (doc_id, b) row per feature occurrence
+    (hashed word unigrams here; ops/lang_clf.py passes hashed char
+    n-grams)."""
     spark = pos.sparkSession
     # re-key internally (2*id+label) so a doc_id appearing in BOTH
     # samples cannot join-duplicate its features with opposite labels;
@@ -110,8 +102,13 @@ def quality_train(
             F.lit(0.0).alias("y"),
         )
     )
+    # (doc_id, b, c, n, y): per-doc bucket counts c, the doc's total
+    # count n and its label
+    occ = occurrences(labeled.select("doc_id", "text"))
     feats = (
-        _feats(labeled.select(F.col("doc_id"), "text"), n_buckets, occurrences)
+        occ.groupBy("doc_id", "b")
+        .agg(F.count("*").alias("c"))
+        .join(occ.groupBy("doc_id").agg(F.count("*").alias("n")), "doc_id")
         .join(labeled.select("doc_id", "y"), "doc_id")
         .localCheckpoint()  # bounded training frame, reused every epoch
     )
@@ -122,7 +119,7 @@ def quality_train(
     w: dict[int, int] = {}  # bucket -> micro weight (int)
     w0 = 0  # bias, micro
 
-    for _ in range(iters):
+    for _ in range(ITERS):
         wdf = F.broadcast(
             spark.createDataFrame(
                 [(int(b), int(m)) for b, m in sorted(w.items())] or [(-1, 0)],
@@ -183,9 +180,9 @@ def quality_train(
         # the approximation: bias learns from featured docs only.
         for r in grads:
             b = int(r["b"])
-            step = _half_up(lr * int(r["gsum"]) / n_docs)
+            step = _half_up(LR * int(r["gsum"]) / n_docs)
             w[b] = w.get(b, 0) - step
-        w0 -= _half_up(lr * int(bias_g) / n_docs)
+        w0 -= _half_up(LR * int(bias_g) / n_docs)
 
     rows = [(-1, int(w0))] + [(int(b), int(m)) for b, m in sorted(w.items())]
     return spark.createDataFrame(rows, "b long, w_micro long")
@@ -198,46 +195,53 @@ def _half_up(x: float) -> int:
     return int(math.floor(x + 0.5)) if x >= 0 else int(math.ceil(x - 0.5))
 
 
-def quality_classify(
-    docs: DataFrame,
-    weights: DataFrame,
-    n_buckets: int = DEFAULT_BUCKETS,
-) -> DataFrame:
+def _check_weights(
+    weights: DataFrame, who: str, per: str | None = None
+) -> dict:
+    """-> {head: bias w_micro} for a (b, w_micro) weight table, or one
+    head per value of the ``per`` column (key None without). Raises
+    unless each head has exactly one bias row (b == -1) and no feature
+    key repeats: a missing bias row would empty the output, a duplicated
+    one multiply it, a repeated feature double its weight through the
+    broadcast join or the pivot. One bounded driver action."""
+    keys = [per, "b"] if per else ["b"]
+    flagged = (
+        weights.groupBy(*keys)
+        .agg(F.count("*").alias("n"), F.min("w_micro").alias("w_micro"))
+        .where((F.col("b") == -1) | (F.col("n") > 1))
+        .collect()
+    )
+    bias_rows = [r for r in flagged if r["b"] == -1]
+    if not bias_rows or any(r["n"] != 1 for r in bias_rows):
+        found = sorted(
+            (r[per], r["n"]) if per else r["n"] for r in bias_rows
+        )
+        raise ValueError(
+            f"{who}: weight table must contain exactly one bias row "
+            f"(b == -1){f' per {per}' if per else ''}; found {found}"
+        )
+    dups = sorted(
+        tuple(r[k] for k in keys) for r in flagged if r["b"] != -1
+    )
+    if dups:
+        raise ValueError(
+            f"{who}: weight table repeats feature buckets {dups[:5]} "
+            f"({len(dups)} in all, keyed on {', '.join(keys)})"
+        )
+    return {r[per] if per else None: int(r["w_micro"]) for r in bias_rows}
+
+
+def quality_classify(docs: DataFrame, weights: DataFrame) -> DataFrame:
     """Apply a trained model to a corpus (the 100 TB path — one pass).
 
     -> (doc_id, n_tokens, z_micro, prob, keep): z_micro is the exact
     int64 micro-unit logit (w0 + mean occurrence weight, rounded once),
     prob = round(sigmoid, 6), keep = (z_micro >= 0) — an integer
     comparison, so the verdict is exact regardless of exp() ulps.
-    Zero-token docs score the bias alone.
+    Zero-token docs score the bias alone. Raises ValueError on a
+    malformed weight table (``_check_weights``).
     """
-    # validate the weight table up front (ADVICE r4): this is the
-    # public apply API, and a missing bias row would otherwise yield
-    # ZERO output rows (crossJoin with empty) while a duplicated row
-    # (e.g. a concatenated weight table) would silently multiply every
-    # row or, for a feature bucket, double its n_tokens and s_micro
-    # through the broadcast join. One bounded driver action on the
-    # model table finds the bias row and every repeated bucket.
-    flagged = (
-        weights.groupBy("b")
-        .agg(F.count("*").alias("n"), F.min("w_micro").alias("w_micro"))
-        .where((F.col("b") == -1) | (F.col("n") > 1))
-        .collect()
-    )
-    bias_rows = [r for r in flagged if r["b"] == -1]
-    n_bias = sum(r["n"] for r in bias_rows)
-    if n_bias != 1:
-        raise ValueError(
-            "quality_classify: weight table must contain exactly one "
-            f"bias row (b == -1); found {n_bias}"
-        )
-    dup_buckets = sorted(r["b"] for r in flagged if r["b"] != -1)
-    if dup_buckets:
-        raise ValueError(
-            "quality_classify: weight table repeats feature buckets "
-            f"{dup_buckets[:5]} ({len(dup_buckets)} in all)"
-        )
-    w0_micro = int(bias_rows[0]["w_micro"])
+    w0_micro = _check_weights(weights, "quality_classify")[None]
     wtab = weights.where(F.col("b") != -1)
     # ONE corpus tokenize pass: a LEFT join keeps unweighted
     # occurrences (buckets unseen in training score 0 but still count
@@ -245,7 +249,7 @@ def quality_classify(
     # aggregate — a second occurrence pass here would re-explode the
     # corpus (the dsir_select lesson)
     scored = (
-        _unigram_occurrences(docs, n_buckets)
+        _unigram_occurrences(docs)
         .join(F.broadcast(wtab), "b", "left")
         .groupBy("doc_id")
         .agg(

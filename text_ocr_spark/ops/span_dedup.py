@@ -1,8 +1,9 @@
 """Substring-span dedup — exact duplicated-window removal (the Lee et
 al. 2021 "Deduplicating Training Data Makes Language Models Better"
-primitive): find every word n-gram window whose exact text occurs >=
-min_count times corpus-wide, merge the hits into maximal per-document
-token intervals, and optionally cut those intervals out of the text.
+primitive): find every word n-gram window (n = NGRAM) whose exact text
+occurs >= MIN_COUNT times corpus-wide, merge the hits into maximal
+per-document token intervals, and optionally cut those intervals out
+of the text.
 
 Unlike document-level dedup (``ops/dedup.py``) this removes PARTIAL
 duplication — licence blocks, boilerplate headers, quoted reposts —
@@ -29,7 +30,7 @@ Scale shape at 100 TB:
   shuffled on doc_id-free keys is re-used where possible; at worst it
   is one additional doc_id exchange of (doc_id, pos) longs.
 - ``strip_dup_spans`` folds the per-doc span list (collect_list over
-  the merged intervals — bounded by text length / ngram, not corpus
+  the merged intervals — bounded by text length / NGRAM, not corpus
   size) back onto the corpus with ONE equi-join on doc_id, then cuts
   tokens with JVM higher-order functions (zip_with + filter + exists);
   reconstruction never leaves the executor row.
@@ -47,9 +48,11 @@ from pyspark.sql import functions as F
 
 from text_ocr_spark.ops.text_stats import WS_RE, ws_tokens  # noqa: F401
 
-#: the paper's canonical window width (50 BPE tokens ~ 13 words); kept
-#: as the default so `dup_spans(docs)` is the published operating point
-DEFAULT_NGRAM = 13
+#: the paper's canonical window width (50 BPE tokens ~ 13 words) and
+#: its duplication floor: `dup_spans(docs)` is the published operating
+#: point. Read at call time so tests can patch them.
+NGRAM = 13
+MIN_COUNT = 2
 
 
 def _windows(docs: DataFrame, ngram: int) -> DataFrame:
@@ -76,20 +79,18 @@ def _windows(docs: DataFrame, ngram: int) -> DataFrame:
     )
 
 
-def dup_spans(
-    docs: DataFrame, ngram: int = DEFAULT_NGRAM, min_count: int = 2
-) -> DataFrame:
+def dup_spans(docs: DataFrame) -> DataFrame:
     """-> (doc_id, span_start, span_end): maximal merged token-index
     intervals [span_start, span_end) covered by n-gram windows whose
-    exact text occurs >= min_count times across the whole corpus
+    exact text occurs >= MIN_COUNT times across the whole corpus
     (within-doc repeats count, as in the paper). Intervals that overlap
     or touch merge; output is disjoint with gaps >= 1 token.
     """
-    wins = _windows(docs, ngram)
+    wins = _windows(docs, NGRAM)
     dup = (
         wins.groupBy("h")
         .agg(F.count("*").alias("cnt"))
-        .where(F.col("cnt") >= min_count)
+        .where(F.col("cnt") >= MIN_COUNT)
         .select("h")
     )
     hits = wins.join(dup, "h", "left_semi").select("doc_id", "pos")
@@ -97,7 +98,7 @@ def dup_spans(
     # gaps-and-islands: a hit starts a new interval iff it clears the
     # running max end of everything before it (NULL prev -> new)
     w = Window.partitionBy("doc_id").orderBy("pos")
-    prev_end = F.max(F.col("pos") + F.lit(ngram)).over(
+    prev_end = F.max(F.col("pos") + F.lit(NGRAM)).over(
         w.rowsBetween(Window.unboundedPreceding, -1)
     )
     brk = F.when(F.col("pos") <= prev_end, 0).otherwise(1)
@@ -108,15 +109,13 @@ def dup_spans(
         grouped.groupBy("doc_id", "g")
         .agg(
             F.min("pos").alias("span_start"),
-            (F.max("pos") + F.lit(ngram)).alias("span_end"),
+            (F.max("pos") + F.lit(NGRAM)).alias("span_end"),
         )
         .select("doc_id", "span_start", "span_end")
     )
 
 
-def strip_dup_spans(
-    docs: DataFrame, ngram: int = DEFAULT_NGRAM, min_count: int = 2
-) -> DataFrame:
+def strip_dup_spans(docs: DataFrame) -> DataFrame:
     """-> (doc_id, clean_text, n_cut): each document with every
     duplicated span cut out (survivor tokens re-joined by single
     spaces) and the count of removed tokens. Docs with no duplicated
@@ -124,7 +123,7 @@ def strip_dup_spans(
     same way, so the column means one thing); NULL text stays NULL.
     """
     spans = (
-        dup_spans(docs, ngram, min_count)
+        dup_spans(docs)
         .groupBy("doc_id")
         .agg(
             F.collect_list(

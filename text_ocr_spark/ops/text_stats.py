@@ -29,8 +29,13 @@ LANG_MARKERS = {
 }
 
 
-def ws_tokens(text_col: str = "text") -> F.Column:
-    return F.split(F.trim(F.col(text_col)), WS_RE)
+#: frequent_ngrams' shingle width and top-k cut
+FREQUENT_N = 3
+FREQUENT_K = 20
+
+
+def ws_tokens() -> F.Column:
+    return F.split(F.trim(F.col("text")), WS_RE)
 
 
 def token_stats(docs: DataFrame) -> DataFrame:
@@ -112,14 +117,15 @@ def doc_fingerprint(docs: DataFrame) -> DataFrame:
     )
 
 
-def frequent_ngrams(docs: DataFrame, n: int = 3, k: int = 20) -> DataFrame:
-    """Top-k corpus-wide frequent word n-grams by DOCUMENT frequency —
-    the boilerplate-discovery primitive of a training-data pipeline
-    (shingles shared by many documents are headers, footers, license
-    blurbs, templates). -> (ngram, doc_freq, rank), rank dense 1..k with
-    a deterministic (doc_freq DESC, ngram ASC) tie-break.
+def frequent_ngrams(docs: DataFrame) -> DataFrame:
+    """Top-k corpus-wide frequent word n-grams by DOCUMENT frequency
+    (n = FREQUENT_N, k = FREQUENT_K) — the boilerplate-discovery
+    primitive of a training-data pipeline (shingles shared by many
+    documents are headers, footers, license blurbs, templates).
+    -> (ngram, doc_freq, rank), rank dense 1..k with a deterministic
+    (doc_freq DESC, ngram ASC) tie-break.
 
-    Scale shape: the per-doc DISTINCT shingle set (``tokens_col(n)`` —
+    Scale shape: the per-doc DISTINCT shingle set (``tokens_col`` —
     JVM sequence/transform/slice, no Python) explodes into one
     map-side-combined HashAggregate keyed on the shingle, then top-k is
     TakeOrderedAndProject (never a global sort of the n-gram table);
@@ -130,11 +136,11 @@ def frequent_ngrams(docs: DataFrame, n: int = 3, k: int = 20) -> DataFrame:
     from pyspark.sql import Window
 
     df = (
-        docs.select(F.explode(tokens_col("text", n)).alias("ngram"))
+        docs.select(F.explode(tokens_col("text", FREQUENT_N)).alias("ngram"))
         .groupBy("ngram")
         .agg(F.count("*").alias("doc_freq"))
         .orderBy(F.desc("doc_freq"), "ngram")
-        .limit(k)
+        .limit(FREQUENT_K)
     )
     w = Window.orderBy(F.desc("doc_freq"), "ngram")
     return df.withColumn("rank", F.row_number().over(w))
