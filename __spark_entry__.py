@@ -306,7 +306,7 @@ def _decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     test = docs.where(F.col("doc_id") % 13 == 0).select("doc_id", "text")
-    return decontaminate(docs, test, threshold=0.8).orderBy("doc_id")
+    return decontaminate(docs, test).orderBy("doc_id")
 
 
 def _decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -320,7 +320,7 @@ def _decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     test = docs.where(F.col("doc_id") % 13 == 0).select("doc_id", "text")
-    return decontaminate_ngrams(docs, test, ngram=13).orderBy("doc_id")
+    return decontaminate_ngrams(docs, test).orderBy("doc_id")
 
 
 def _frequent_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -220,7 +220,7 @@ def main() -> int:
         )
         timed(
             "decontaminate",
-            lambda: decontaminate(docs, test_slice, threshold=0.8).count(),
+            lambda: decontaminate(docs, test_slice).count(),
         )
         # 3-shingles of a doc_id%3 slice: its vocabulary (7.6k at
         # sf0.01, 26k at sf0.1) exceeds DENSE_VOCAB_LIMIT, so the probe
@@ -230,9 +230,7 @@ def main() -> int:
         )
         timed(
             "decontaminate_inverted",
-            lambda: decontaminate(
-                docs, big_slice, threshold=0.8, ngram=3
-            ).count(),
+            lambda: decontaminate(docs, big_slice, ngram=3).count(),
         )
         timed("dup_spans", lambda: dup_spans(docs).count())
         from text_ocr_spark.ops.lm import lm_perplexity

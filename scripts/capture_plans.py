@@ -13,9 +13,19 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = "/root/testdata/sf0.001"
 
 
-def _incremental_edges_df(spark, docs):
+def _index_dir(prefix: str) -> str:
+    """A temp directory for an index whose probe plan is captured,
+    removed when the script exits (the plans are written by then)."""
+    import atexit
+    import shutil
     import tempfile
 
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, tmp, True)
+    return tmp
+
+
+def _incremental_edges_df(spark, docs):
     from pyspark.sql import functions as F
 
     from text_ocr_spark.ops.dedup import collapse_exact
@@ -26,15 +36,13 @@ def _incremental_edges_df(spark, docs):
 
     corpus = docs.filter(F.col("doc_id") % 5 != 4)
     delta = docs.filter(F.col("doc_id") % 5 == 4)
-    tmp = tempfile.mkdtemp(prefix="plans_idx_")
+    tmp = _index_dir("plans_idx_")
     build_neardup_index(corpus, tmp)
     n_reps, _ = collapse_exact(delta)
     return incremental_edges(spark, n_reps, tmp)
 
 
 def _embed_incremental_edges_df(spark, emb):
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from text_ocr_spark.ops.incremental import (
@@ -44,7 +52,7 @@ def _embed_incremental_edges_df(spark, emb):
 
     corpus = emb.filter(F.col("vec_id") % 5 != 4)
     delta = emb.filter(F.col("vec_id") % 5 == 4)
-    tmp = tempfile.mkdtemp(prefix="plans_eidx_")
+    tmp = _index_dir("plans_eidx_")
     build_embed_index(corpus, tmp)
     return embed_incremental_edges(spark, delta, tmp)
 
@@ -129,7 +137,7 @@ def _decontaminate_ngrams_df(spark, docs):
     from text_ocr_spark.ops.decontam import decontaminate_ngrams
 
     test = docs.where(F.col("doc_id") % 13 == 0).select("doc_id", "text")
-    return decontaminate_ngrams(docs, test, ngram=13)
+    return decontaminate_ngrams(docs, test)
 
 
 def _decontaminate_df(docs, mod=13, ngram=1):
@@ -138,7 +146,7 @@ def _decontaminate_df(docs, mod=13, ngram=1):
     from text_ocr_spark.ops.decontam import decontaminate
 
     test = docs.where(F.col("doc_id") % mod == 0).select("doc_id", "text")
-    return decontaminate(docs, test, threshold=0.8, ngram=ngram)
+    return decontaminate(docs, test, ngram=ngram)
 
 
 def _embed_prefilter_df(emb):

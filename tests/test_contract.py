@@ -161,6 +161,35 @@ def test_curation_family_takes_only_its_input():
     }
 
 
+def test_near_dup_family_takes_only_its_input():
+    """Batch near-dup, decontamination, the persisted text index and the
+    streaming surface (16 entry points) keep a settable value only where
+    real callers need different ones: jaccard_pairs' threshold and ngram
+    (the reference every route is tested against), minhash_dedup's and
+    decontaminate's ngram (unigram and 3-shingle callers), and
+    stream_extract's num_partitions. The index shares THRESHOLD and
+    NEARDUP_NGRAM with neardup_resolve instead of taking its own."""
+    from text_ocr_spark import streaming
+    from text_ocr_spark.ops import decontam, dedup, incremental
+
+    family = [
+        dedup.jaccard_pairs, dedup.minhash_dedup, dedup.neardup_resolve,
+        dedup.simhash_pairs, decontam.decontaminate,
+        decontam.decontaminate_ngrams, incremental.build_neardup_index,
+        incremental.init_neardup_index, incremental.incremental_edges,
+        incremental.incremental_resolve, incremental.update_index,
+        incremental.compact_index, streaming.stream_extract,
+        streaming.conversation_state_stream,
+        streaming.stream_dedup_incremental, streaming.stream_turn_rates,
+    ]
+    assert len(family) == 16
+    assert _settable(family) == {
+        "jaccard_pairs.threshold", "jaccard_pairs.ngram",
+        "minhash_dedup.ngram", "decontaminate.ngram",
+        "stream_extract.num_partitions",
+    }
+
+
 def test_every_query_has_oracle_or_reason():
     import __spark_entry__ as e
 

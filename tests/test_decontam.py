@@ -48,7 +48,7 @@ def verdicts(spark):
             (105, None),  # null test text must match nothing
         ],
     )
-    out = decontaminate(train, test, threshold=0.8).orderBy("doc_id")
+    out = decontaminate(train, test).orderBy("doc_id")
     return {r["doc_id"]: r.asDict() for r in out.collect()}
 
 
@@ -99,10 +99,11 @@ def test_exact_beats_near_and_min_test_id_tiebreak(verdicts):
     assert v["best_test_id"] == 103
 
 
-def test_one_row_per_train_doc(spark):
+def test_one_row_per_train_doc(spark, monkeypatch):
+    monkeypatch.setattr(decontam, "THRESHOLD", 0.1)
     train = _tr(spark, [(i, f"tok{i} common") for i in range(20)])
     test = _tr(spark, [(900, "common tokX")])
-    out = decontaminate(train, test, threshold=0.1)
+    out = decontaminate(train, test)
     assert out.count() == 20
     assert out.select("doc_id").distinct().count() == 20
 
@@ -113,8 +114,8 @@ def test_shingle_mode_sees_word_order(spark):
     the order-sensitivity production decontamination relies on."""
     train = _tr(spark, [(1, "a b c d e f g h")])
     test = _tr(spark, [(200, "h g f e d c b a")])
-    uni = decontaminate(train, test, threshold=0.8, ngram=1).first()
-    tri = decontaminate(train, test, threshold=0.8, ngram=3).first()
+    uni = decontaminate(train, test, ngram=1).first()
+    tri = decontaminate(train, test, ngram=3).first()
     assert uni["contaminated"] == 1 and uni["best_jaccard"] == 1.0
     assert tri["contaminated"] == 0
 
@@ -163,10 +164,11 @@ def test_routes_agree_on_randomized_corpus(spark, monkeypatch):
     ] + [(215, train_rows[3][1]), (216, None)]  # verbatim leak + null
     train, test = _tr(spark, train_rows), _tr(spark, test_rows)
     for thr in (0.5, 0.8):
-        a = decontaminate(train, test, threshold=thr)
+        monkeypatch.setattr(decontam, "THRESHOLD", thr)
+        a = decontaminate(train, test)
         with monkeypatch.context() as mp:
             mp.setattr(decontam, "DENSE_MAX_TEST_DOCS", 0)
-            b = decontaminate(train, test, threshold=thr)
+            b = decontaminate(train, test)
         assert "MapInPandas" in _plan(a)
         assert "MapInPandas" not in _plan(b)
         ra = [tuple(r) for r in a.orderBy("doc_id").collect()]
@@ -258,11 +260,12 @@ def test_doc_cap_falls_back_to_inverted(spark):
 # --------------------------------------------------------------------------
 
 
-def test_ngram_decontam_semantics_by_eye(spark):
+def test_ngram_decontam_semantics_by_eye(spark, monkeypatch):
     """3-gram windows over hand-built docs: counts, first positions,
     fractions, and the short/NULL discipline all computable by eye."""
     from text_ocr_spark.ops.decontam import decontaminate_ngrams
 
+    monkeypatch.setattr(decontam, "COLLISION_NGRAM", 3)
     train = _tr(
         spark,
         [
@@ -280,7 +283,7 @@ def test_ngram_decontam_semantics_by_eye(spark):
     test = _tr(spark, [(100, "a b c q q q c d e")])
     got = {
         r.doc_id: r
-        for r in decontaminate_ngrams(train, test, ngram=3).collect()
+        for r in decontaminate_ngrams(train, test).collect()
     }
     assert len(got) == 5
     r1 = got[1]
@@ -311,8 +314,8 @@ def test_ngram_decontam_differs_from_jaccard_decontam(spark):
     alien = " ".join(f"z{i}" for i in range(100))
     train = _tr(spark, [(1, f"{alien} {frag}")])
     test = _tr(spark, [(100, f"{frag} other tail tokens here")])
-    jac = decontaminate(train, test, threshold=0.8).collect()[0]
-    col = decontaminate_ngrams(train, test, ngram=13).collect()[0]
+    jac = decontaminate(train, test).collect()[0]
+    col = decontaminate_ngrams(train, test).collect()[0]
     assert jac.contaminated == 0  # whole-doc jaccard ~ 13/113: invisible
     assert col.contaminated == 1 and col.first_hit_pos == 100
 
@@ -347,12 +350,8 @@ def test_ngram_decontam_join_routes_agree(spark, monkeypatch):
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text")
     test = train.where(F.col("doc_id") % 13 == 0)
-    a = sorted(
-        map(tuple, D.decontaminate_ngrams(train, test, ngram=13).collect())
-    )
+    a = sorted(map(tuple, D.decontaminate_ngrams(train, test).collect()))
     monkeypatch.setattr(D, "NGRAM_BROADCAST_LIMIT", 0)
-    b = sorted(
-        map(tuple, D.decontaminate_ngrams(train, test, ngram=13).collect())
-    )
+    b = sorted(map(tuple, D.decontaminate_ngrams(train, test).collect()))
     assert a == b
     assert any(r[5] == 1 for r in a)  # the corpus has real collisions

@@ -35,12 +35,12 @@ def test_minhash_equals_exact_jaccard(spark, docs, monkeypatch):
     }
     dense = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in minhash_dedup(docs, 0.95).collect()
+        for r in minhash_dedup(docs).collect()
     }
     monkeypatch.setattr(dedup, "DENSE_VOCAB_LIMIT", 0)
     lsh = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in minhash_dedup(docs, 0.95).collect()
+        for r in minhash_dedup(docs).collect()
     }
     assert dense == exact
     assert lsh == exact
@@ -69,6 +69,43 @@ def test_simhash_pairs_are_near_dups(spark, docs):
     }
     hits = sum(1 for r in sh if (r.doc_a, r.doc_b) in loose)
     assert hits / len(sh) >= 0.9
+
+
+def test_simhash_finds_pair_differing_in_three_bands(spark):
+    """The worst case the radius allows: hamming 3 with one differing
+    bit in each of three 16-bit bands, so only the fourth band joins
+    the pair. The texts are found by appending one token to a base
+    text until the driver-side simhash shows that shape."""
+    from text_ocr_spark.ops.dedup import _simhash, simhash_pairs
+
+    base = [f"w{i}" for i in range(60)]
+    h0 = _simhash(base)
+    for j in range(1000):
+        extra = f"x{j}"
+        diff = _simhash(base + [extra]) ^ h0
+        bits = [b for b in range(64) if diff >> b & 1]
+        if len(bits) == 3 and len({b // 16 for b in bits}) == 3:
+            break
+    else:
+        pytest.fail("no three-band hamming-3 variant found")
+    docs = spark.createDataFrame(
+        [(0, " ".join(base)), (1, " ".join(base + [extra])),
+         (2, "unrelated words entirely")],
+        "doc_id long, text string",
+    )
+    got = {tuple(r) for r in simhash_pairs(docs).collect()}
+    assert (0, 1, 3) in got
+
+
+def test_simhash_radius_must_stay_below_bands(spark, monkeypatch):
+    """A radius of SIMHASH_BANDS would miss a pair with one differing
+    bit in every band (no band equal), so simhash_pairs refuses it."""
+    from text_ocr_spark.ops import dedup
+
+    docs = spark.createDataFrame([(0, "a b")], "doc_id long, text string")
+    monkeypatch.setattr(dedup, "SIMHASH_RADIUS", dedup.SIMHASH_BANDS)
+    with pytest.raises(ValueError, match="SIMHASH_RADIUS=4"):
+        dedup.simhash_pairs(docs)
 
 
 def test_exact_dedup_keeps_min_id(spark, docs):
@@ -266,13 +303,13 @@ def test_boilerplate_collapse_kills_hot_bands(spark, monkeypatch):
     assert n_cand <= 9 * 8 // 2  # bounded by distinct-text pairs, << k^2
 
     monkeypatch.setattr(dedup, "DENSE_VOCAB_LIMIT", 0)
-    pairs = minhash_dedup(docs512, 0.95)
+    pairs = minhash_dedup(docs512)
     n_boiler_pairs = pairs.filter(
         (pairs.doc_a < k) & (pairs.doc_b < k) & (pairs.jaccard == 1.0)
     ).count()
     assert n_boiler_pairs == k * (k - 1) // 2  # expansion is complete
 
-    resolved = neardup_resolve(docs512, 0.95)
+    resolved = neardup_resolve(docs512)
     verdicts = {r.doc_id: (r.cluster_id, r.is_dup) for r in resolved.collect()}
     assert verdicts[0] == (0, 0)
     assert all(verdicts[i] == (0, 1) for i in range(1, k))
@@ -331,7 +368,7 @@ def test_collapse_expansion_invariant_random_corpora(spark, seed):
             mp.setattr(dedup, "DENSE_VOCAB_LIMIT", limit)
             got = {
                 (r.doc_a, r.doc_b, r.jaccard)
-                for r in minhash_dedup(docs, 0.95).collect()
+                for r in minhash_dedup(docs).collect()
             }
         assert got == exact, f"route limit={limit}"
 
@@ -357,7 +394,7 @@ def test_collapse_expansion_invariant_random_corpora(spark, seed):
         want[did] = (keep, keep, int(did != keep))
     got_r = {
         r.doc_id: (r.cluster_id, r.keep_id, r.is_dup)
-        for r in neardup_resolve(docs, 0.95).collect()
+        for r in neardup_resolve(docs).collect()
     }
     assert got_r == want
 
@@ -385,12 +422,12 @@ def test_null_text_docs_stay_singletons(spark):
     assert members.count() == 4  # nobody dropped
     assert reps.count() == 3  # two nulls = two singleton groups, one text pair
 
-    pairs = {(r.doc_a, r.doc_b) for r in minhash_dedup(docs, 0.95).collect()}
+    pairs = {(r.doc_a, r.doc_b) for r in minhash_dedup(docs).collect()}
     assert pairs == {(3, 4)}  # no null-null pair
 
     got = {
         r.doc_id: (r.cluster_id, r.is_dup)
-        for r in neardup_resolve(docs, 0.95).collect()
+        for r in neardup_resolve(docs).collect()
     }
     assert got == {1: (1, 0), 2: (2, 0), 3: (3, 0), 4: (3, 1)}
 
@@ -465,15 +502,15 @@ def test_minhash_auxiliary_actions_bounded(spark, docs, monkeypatch):
     with pytest.MonkeyPatch.context() as mp:
         # forced LSH, adaptive collapse: exactly the one exact-stats probe
         mp.setattr(dedup, "DENSE_VOCAB_LIMIT", 0)
-        minhash_dedup(docs, 0.95)
+        minhash_dedup(docs)
         assert len(calls) == 1
         calls.clear()
         # stats + vocab HLL pre-filter (which says big vocab, no collect)
         mp.setattr(dedup, "DENSE_VOCAB_LIMIT", 4)
-        minhash_dedup(docs, 0.95)
+        minhash_dedup(docs)
         assert len(calls) == 2
         calls.clear()
-    minhash_dedup(docs, 0.95)  # adaptive; dense on this corpus
+    minhash_dedup(docs)  # adaptive; dense on this corpus
     assert len(calls) <= 3
 
 
@@ -543,7 +580,7 @@ def test_neardup_resolve_matches_union_find(spark, docs):
     output mirrors exact_dedup's keep semantics for near-dups."""
     from text_ocr_spark.ops.dedup import minhash_dedup, resolve_pairs
 
-    pairs = minhash_dedup(docs, 0.95)
+    pairs = minhash_dedup(docs)
     got = {
         r.doc_id: (r.cluster_id, r.keep_id, r.is_dup)
         for r in resolve_pairs(docs, pairs).collect()
@@ -830,11 +867,11 @@ def test_collapse_gate_skips_on_low_dup_corpora(spark, docs, caplog):
         caplog.clear()
         auto = {
             (r.doc_a, r.doc_b, r.jaccard)
-            for r in minhash_dedup(lowdup, 0.95).collect()
+            for r in minhash_dedup(lowdup).collect()
         }
         assert skipped()  # zero-dup corpus: gate skips
-        forced_on = forced(True, minhash_dedup, lowdup, 0.95)
-        forced_off = forced(False, minhash_dedup, lowdup, 0.95)
+        forced_on = forced(True, minhash_dedup, lowdup)
+        forced_off = forced(False, minhash_dedup, lowdup)
         assert auto == forced_on == forced_off
 
         # the fixture documents corpora are (nearly) dup-free, so the
@@ -847,21 +884,21 @@ def test_collapse_gate_skips_on_low_dup_corpora(spark, docs, caplog):
         caplog.clear()
         auto_h = {
             (r.doc_a, r.doc_b, r.jaccard)
-            for r in minhash_dedup(heavy, 0.95).collect()
+            for r in minhash_dedup(heavy).collect()
         }
         assert not skipped()  # 50%-dup corpus: collapse engages
 
         # forced-off still equals forced-on at a high dup rate (the
         # algebra holds in both directions at any dup rate)
-        off = forced(False, minhash_dedup, heavy, 0.95)
+        off = forced(False, minhash_dedup, heavy)
         assert auto_h == off and len(off) > 0
 
         sh_on = forced(True, simhash_pairs, heavy)
         sh_off = forced(False, simhash_pairs, heavy)
         assert sh_on == sh_off and len(sh_on) > 0
 
-        rs_on = forced(True, neardup_resolve, heavy, 0.95)
-        rs_off = forced(False, neardup_resolve, heavy, 0.95)
+        rs_on = forced(True, neardup_resolve, heavy)
+        rs_off = forced(False, neardup_resolve, heavy)
         assert rs_on == rs_off
 
 
@@ -889,7 +926,7 @@ def test_shingle_mode_sees_word_order(spark):
 
     uni = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in minhash_dedup(docs, 0.95, ngram=1).collect()
+        for r in minhash_dedup(docs, ngram=1).collect()
     }
     # token sets: reordered doc is a "perfect" dup — the failure mode
     assert uni[(0, 1)] == 1.0 and uni[(0, 2)] == 1.0
@@ -897,7 +934,7 @@ def test_shingle_mode_sees_word_order(spark):
 
     tri = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in minhash_dedup(docs, 0.95, ngram=3).collect()
+        for r in minhash_dedup(docs, ngram=3).collect()
     }
     assert (0, 1) not in tri  # shingles see the reordering
     assert all(6 not in p for p in tri) and all(6 not in p for p in uni)
@@ -917,9 +954,21 @@ def test_shingle_mode_sees_word_order(spark):
             mp.setattr(dedup, "DENSE_VOCAB_LIMIT", limit)
             got = {
                 (r.doc_a, r.doc_b, r.jaccard)
-                for r in minhash_dedup(docs, 0.95, ngram=3).collect()
+                for r in minhash_dedup(docs, ngram=3).collect()
             }
         assert got == exact, f"route limit={limit}"
+
+
+def test_ngram_must_be_a_positive_int(spark, docs):
+    """A threshold passed positionally where ``ngram`` now sits, or a
+    zero window, raises instead of silently tokenizing unigrams."""
+    from text_ocr_spark.ops.decontam import decontaminate
+    from text_ocr_spark.ops.dedup import minhash_dedup
+
+    with pytest.raises(ValueError, match="ngram must be a positive int"):
+        minhash_dedup(docs, 0.8)
+    with pytest.raises(ValueError, match="ngram must be a positive int"):
+        decontaminate(docs, docs, ngram=0)
 
 
 def test_ivf_train_objective_and_golden(spark, monkeypatch):
@@ -1004,7 +1053,7 @@ def test_collapse_gate_null_heavy_corpus(spark, caplog):
     docs = spark.createDataFrame(pdf)
     with caplog.at_level(logging.INFO, logger="text_ocr_spark.ops.dedup"):
         caplog.clear()
-        pairs = minhash_dedup(docs, 0.95).collect()
+        pairs = minhash_dedup(docs).collect()
         assert any("SKIPPED" in r.getMessage() for r in caplog.records)
     assert pairs == []  # nulls pair with nothing, texts are distinct
 
@@ -1075,7 +1124,7 @@ def test_hot_group_engages_collapse_at_low_dup_rate(spark, caplog, monkeypatch):
         caplog.clear()
         got = {
             (r.doc_a, r.doc_b)
-            for r in minhash_dedup(docs, 0.95).collect()
+            for r in minhash_dedup(docs).collect()
         }
         assert any(
             "ENGAGED by hot-pair mass" in r.getMessage() for r in caplog.records
@@ -1083,7 +1132,7 @@ def test_hot_group_engages_collapse_at_low_dup_rate(spark, caplog, monkeypatch):
     monkeypatch.setattr(dedup, "_gate_collapse", lambda *_: False)
     want = {
         (r.doc_a, r.doc_b)
-        for r in minhash_dedup(docs, 0.95).collect()
+        for r in minhash_dedup(docs).collect()
     }
     assert got == want
     assert len(got) == k * (k - 1) // 2  # exactly the mega-group's pairs

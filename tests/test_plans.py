@@ -149,7 +149,7 @@ def test_collapse_skip_path_drops_expansion_joins(spark, monkeypatch):
     plans = {}
     for collapse in (False, True):
         monkeypatch.setattr(dedup, "_gate_collapse", lambda *_, c=collapse: c)
-        plans[collapse] = minhash_dedup(lowdup, 0.95)
+        plans[collapse] = minhash_dedup(lowdup)
     skip, full = plans[False], plans[True]
     assert n_exchanges(skip) < n_exchanges(full)
     for df in (skip, full):

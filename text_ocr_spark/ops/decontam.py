@@ -7,7 +7,7 @@ exact DuckDB oracle in __spark_entry__.
 
 Semantics: a train doc is contaminated iff its text EXACTLY matches any
 test doc (md5 equality, NULL-safe) or its token/shingle-set jaccard
-against some test doc clears ``threshold``. The reported best match is
+against some test doc clears ``THRESHOLD``. The reported best match is
 deterministic: exact beats near; within a kind, max jaccard then min
 test_id.
 
@@ -51,6 +51,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from text_ocr_spark.ops.dedup import DENSE_VOCAB_LIMIT, tokens_col
+
+#: jaccard cut of ``decontaminate``'s near arm; read at call time on
+#: the driver and handed to the scoring closure
+THRESHOLD = 0.8
+
+#: word window of ``decontaminate_ngrams`` (GPT-3's 13-gram rule)
+COLLISION_NGRAM = 13
 
 #: dense-route cap on TEST CORPUS SIZE: bounds the driver collect, the
 #: broadcast (<= 4096 masks x 512 B packed), and the per-batch GEMM
@@ -213,10 +220,7 @@ def _near_inverted(
 
 
 def decontaminate(
-    train: DataFrame,
-    test: DataFrame,
-    threshold: float = 0.8,
-    ngram: int = 1,
+    train: DataFrame, test: DataFrame, ngram: int = 1
 ) -> DataFrame:
     """-> (doc_id, contaminated, match_kind, best_test_id, best_jaccard)
     for EVERY train doc (a verdict table, like gopher_filter — consumers
@@ -233,6 +237,7 @@ def decontaminate(
     collect and a count, the same bounded-probe idiom as
     dedup._probe_corpus; the 100 TB train side is never touched by the
     probe. Tests force the inverted arm with DENSE_MAX_TEST_DOCS = 0."""
+    threshold = THRESHOLD
     tr = train.select("doc_id", "text")
     te = test.select(F.col("doc_id").alias("test_id"), "text")
 
@@ -298,17 +303,14 @@ def decontaminate(
     )
 
 
-def decontaminate_ngrams(
-    train: DataFrame,
-    test: DataFrame,
-    ngram: int = 13,
-) -> DataFrame:
+def decontaminate_ngrams(train: DataFrame, test: DataFrame) -> DataFrame:
     """N-gram-collision decontamination (the GPT-3 appendix-C /
     PaLM-style rule, distinct from ``decontaminate``'s whole-document
-    jaccard): a train document is flagged iff ANY of its word n-gram
-    windows occurs verbatim anywhere in the test corpus. Reports enough
-    per-doc signal for both published policies — GPT-3's "any collision
-    removes the doc" and PaLM's "high seen-fraction removes the doc".
+    jaccard): a train document is flagged iff ANY of its
+    COLLISION_NGRAM-word windows occurs verbatim anywhere in the test
+    corpus. Reports enough per-doc signal for both published policies —
+    GPT-3's "any collision removes the doc" and PaLM's "high
+    seen-fraction removes the doc".
 
     -> (doc_id, n_windows, n_hits, hit_frac, first_hit_pos,
     contaminated) for EVERY train doc: n_windows = total n-gram windows
@@ -337,9 +339,9 @@ def decontaminate_ngrams(
     """
     from text_ocr_spark.ops.span_dedup import _windows
 
-    wins = _windows(train.select("doc_id", "text"), ngram)
+    wins = _windows(train.select("doc_id", "text"), COLLISION_NGRAM)
     th = (
-        _windows(test.select("doc_id", "text"), ngram)
+        _windows(test.select("doc_id", "text"), COLLISION_NGRAM)
         .select("h")
         .distinct()
         .withColumn("hit", F.lit(1))

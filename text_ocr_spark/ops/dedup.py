@@ -33,13 +33,19 @@ Four strategies, scale-ordered:
               numpy kernel, no wide shuffle of token arrays at all.
             Both strategies return the identical exact result
             (pytest-asserted against the inverted-index ground truth).
-- simhash:  64-bit SimHash + banded hamming join (radius <= 3), with the
-            same representative-collapse before banding (identical texts
+- simhash:  64-bit SimHash + banded hamming join (SIMHASH_RADIUS = 3;
+            a radius of SIMHASH_BANDS or more is refused), with the same
+            representative-collapse before banding (identical texts
             have identical simhashes, hamming 0 <= any radius).
 
 Every physical choice (collapse or not, dense or LSH, exhaustive or
 prefiltered embedding tiles) is made from the input by the probe and
 the module constants; no op takes a parameter that forces a route.
+The jaccard cut (THRESHOLD), the resolve tokenizer (NEARDUP_NGRAM) and
+the simhash radius are module constants too, read at call time on the
+driver. ``jaccard_pairs``, the reference the routes are tested
+against, keeps threshold and ngram settable; ``minhash_dedup`` keeps
+ngram (its unigram and 3-shingle registry rows).
 
 Pair OUTPUT is inherently quadratic in duplication (k exact copies are
 k(k-1)/2 true pairs no matter how they are found); the collapse moves
@@ -69,6 +75,14 @@ NUM_PERM = 128
 BANDS = 32  # rows per band = NUM_PERM // BANDS = 4
 SIMHASH_BITS = 64
 SIMHASH_BANDS = 4  # 16 bits each; radius<=3 guarantees >=1 clean band
+#: hamming radius of ``simhash_pairs``; must stay below SIMHASH_BANDS
+SIMHASH_RADIUS = 3
+#: jaccard cut of ``minhash_dedup``, ``neardup_resolve`` and the
+#: persisted text index (ops/incremental.py)
+THRESHOLD = 0.95
+#: tokenizer of ``neardup_resolve`` and the persisted text index, so an
+#: incremental verdict equals the batch one by construction
+NEARDUP_NGRAM = 1
 #: vocab size below which the dense bitset strategy wins; 4096 bits =
 #: 512 B/doc mask, broadcast vocab ~100 KB — trivially clusterable.
 DENSE_VOCAB_LIMIT = 4096
@@ -110,11 +124,17 @@ def tokens_col(text_col: str = "text", ngram: int = 1) -> F.Column:
     ``ngram`` tokens contribute ONE shingle — the whole document — so
     identical short docs still score 1.0 and different short docs 0.0
     (slice clamps at the array end on both engines; the DuckDB oracle
-    uses the same greatest(len - n + 1, 1) window count)."""
+    uses the same greatest(len - n + 1, 1) window count).
+
+    Anything but a positive int is refused: a jaccard cut passed
+    positionally (``minhash_dedup(docs, 0.8)``) would otherwise run as
+    unigrams at THRESHOLD without a word."""
     from text_ocr_spark.ops.text_stats import WS_RE
 
+    if not isinstance(ngram, int) or ngram < 1:
+        raise ValueError(f"ngram must be a positive int, got {ngram!r}")
     arr = F.split(F.trim(F.col(text_col)), WS_RE)
-    if ngram <= 1:
+    if ngram == 1:
         return F.array_distinct(arr)
     idx = F.sequence(
         F.lit(1), F.greatest(F.size(arr) - F.lit(ngram - 1), F.lit(1))
@@ -690,13 +710,13 @@ def _gate_collapse(n_reps: int, n_docs: int, f2_excess: int, op: str) -> bool:
 
 def _rep_neardup_pairs(
     base: DataFrame,
-    threshold: float,
-    ngram: int = 1,
+    ngram: int,
     strategy: tuple[list[str] | None, int] | None = None,
 ) -> DataFrame:
-    """Verified near-dup pairs (doc_a, doc_b, jaccard) among the docs of
-    ``base`` (exact-dup representatives, or the raw corpus when the
-    dup-rate gate skipped the collapse); adaptive physical strategy.
+    """Verified near-dup pairs (doc_a, doc_b, jaccard >= THRESHOLD) among
+    the docs of ``base`` (exact-dup representatives, or the raw corpus
+    when the dup-rate gate skipped the collapse); adaptive physical
+    strategy.
 
     ``strategy`` is the precomputed (vocab, n_base) from the caller's
     single ``_probe_corpus`` pass (tokenize-once, VERDICT r2 item 5:
@@ -710,7 +730,11 @@ def _rep_neardup_pairs(
     4 rows, LSH recall at j >= 0.95 is 1 - (1 - j^4)^32 ~= 1 - 4e-24,
     and the dense path is exhaustive, so either way the result equals
     jaccard_pairs (pytest-asserted).
+
+    THRESHOLD is read once here, on the driver, and handed to the tile
+    kernel's closure and the verify filter as a value.
     """
+    threshold = THRESHOLD
     toks_df = _toks_of(base, ngram)
     if strategy is None:
         vocab, n_reps, _, _f2 = _probe_corpus(
@@ -730,7 +754,7 @@ def _rep_neardup_pairs(
 
 
 def _gated_neardup_pairs(
-    docs: DataFrame, threshold: float, ngram: int, op: str
+    docs: DataFrame, ngram: int, op: str
 ) -> tuple[DataFrame, DataFrame | None, DataFrame | None]:
     """Shared minhash_dedup / neardup_resolve core: one probe pass feeds
     BOTH the dup-rate collapse gate and the dense-vs-LSH strategy pick,
@@ -742,20 +766,16 @@ def _gated_neardup_pairs(
     )
     if _gate_collapse(n_reps, n_docs, f2_excess, op):
         reps, members = collapse_exact(docs)
-        pairs = _rep_neardup_pairs(
-            reps, threshold, ngram, strategy=(vocab, n_reps)
-        )
+        pairs = _rep_neardup_pairs(reps, ngram, strategy=(vocab, n_reps))
         return pairs, reps, members
     # skipped: the dense cap re-checks against the FULL doc count (the
     # tiles would run over every doc, not one per distinct text)
-    pairs = _rep_neardup_pairs(docs, threshold, ngram, strategy=(vocab, n_docs))
+    pairs = _rep_neardup_pairs(docs, ngram, strategy=(vocab, n_docs))
     return pairs, None, None
 
 
-def minhash_dedup(
-    docs: DataFrame, threshold: float = 0.95, ngram: int = 1
-) -> DataFrame:
-    """Near-dup pairs at jaccard >= threshold — representative-collapse
+def minhash_dedup(docs: DataFrame, ngram: int = 1) -> DataFrame:
+    """Near-dup pairs at jaccard >= THRESHOLD — representative-collapse
     first (when the dup-rate probe says the corpus has exact dups worth
     collapsing), then the adaptive verified-banding of
     ``_rep_neardup_pairs``, then expansion of the verified pairs back
@@ -765,9 +785,7 @@ def minhash_dedup(
     on w-shingles instead of token sets (order-sensitive, the production
     near-dup unit). Equals jaccard_pairs on any corpus
     (pytest-asserted)."""
-    pairs, _reps, members = _gated_neardup_pairs(
-        docs, threshold, ngram, "minhash_dedup"
-    )
+    pairs, _reps, members = _gated_neardup_pairs(docs, ngram, "minhash_dedup")
     if members is None:
         return pairs
     return _expand_rep_pairs(pairs, members, "jaccard", F.lit(1.0).cast("double"))
@@ -935,10 +953,9 @@ def resolve_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-def neardup_resolve(
-    docs: DataFrame, threshold: float = 0.95, ngram: int = 1
-) -> DataFrame:
-    """Verified rep pairs -> connected components -> keep/drop per doc.
+def neardup_resolve(docs: DataFrame) -> DataFrame:
+    """Verified rep pairs -> connected components -> keep/drop per doc,
+    at jaccard >= THRESHOLD over NEARDUP_NGRAM tokens.
 
     Resolution runs at the REPRESENTATIVE level (one node per distinct
     text) and each doc then joins its group's verdict — the quadratic
@@ -951,7 +968,7 @@ def neardup_resolve(
     member join degenerates to identity there, so it is elided).
     """
     pairs, reps, members = _gated_neardup_pairs(
-        docs, threshold, ngram, "neardup_resolve"
+        docs, NEARDUP_NGRAM, "neardup_resolve"
     )
     if members is None:
         return resolve_pairs(
@@ -1289,8 +1306,8 @@ def _simhash_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": np.array(sh, dtype=np.uint64).astype(np.int64)})
 
 
-def simhash_pairs(docs: DataFrame, radius: int = 3) -> DataFrame:
-    """Near-dup pairs with hamming(simhash_a, simhash_b) <= radius.
+def simhash_pairs(docs: DataFrame) -> DataFrame:
+    """Near-dup pairs with hamming(simhash_a, simhash_b) <= SIMHASH_RADIUS.
 
     Exact-duplicate collapse first (identical texts have identical
     simhashes, so hamming transfers exactly through the groups and
@@ -1299,18 +1316,28 @@ def simhash_pairs(docs: DataFrame, radius: int = 3) -> DataFrame:
     contributes ONE row per band, never an O(k^2) hot bucket. The same
     dup-rate gate as minhash_dedup skips the collapse on low-dup
     corpora (its probe is the exact group-stats pass — no tokenization;
-    simhash has no dense route to pick)."""
+    simhash has no dense route to pick).
+
+    A radius of SIMHASH_BANDS or more is refused: two hashes one bit
+    apart in every band share no band, so the join would drop the pair
+    without a trace."""
+    if SIMHASH_RADIUS >= SIMHASH_BANDS:
+        raise ValueError(
+            f"SIMHASH_RADIUS={SIMHASH_RADIUS} needs fewer differing bits "
+            f"than the {SIMHASH_BANDS} bands: a pair differing in every "
+            "band shares no band and would be missed"
+        )
     _, n_reps, n_docs, f2_excess = _probe_corpus(_probe_frame(docs), 0)
     if not _gate_collapse(n_reps, n_docs, f2_excess, "simhash_pairs"):
-        return _simhash_rep_pairs(docs, radius)
+        return _simhash_rep_pairs(docs)
     reps, members = collapse_exact(docs)
-    rep_pairs = _simhash_rep_pairs(reps, radius)
+    rep_pairs = _simhash_rep_pairs(reps)
     return _expand_rep_pairs(rep_pairs, members, "hamming", F.lit(0))
 
 
-def _simhash_rep_pairs(reps: DataFrame, radius: int = 3) -> DataFrame:
+def _simhash_rep_pairs(reps: DataFrame) -> DataFrame:
     """Banded hamming join among representatives: 4 bands of 16 bits —
-    radius <= 3 guarantees at least one band matches exactly
+    SIMHASH_RADIUS <= 3 guarantees at least one band matches exactly
     (pigeonhole), so the join is on band equality, never a cross join.
     All bands ride ONE equi-join: each doc explodes to (doc_id,
     band_idx, band_val) rows and the self-join keys on (band_idx,
@@ -1350,6 +1377,6 @@ def _simhash_rep_pairs(reps: DataFrame, radius: int = 3) -> DataFrame:
         .withColumn(
             "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
         )
-        .filter(F.col("hamming") <= radius)
+        .filter(F.col("hamming") <= SIMHASH_RADIUS)
         .select("doc_a", "doc_b", "hamming")
     )

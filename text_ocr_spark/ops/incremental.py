@@ -41,6 +41,12 @@ reps a group does not matter); exact-hash matches shortcut straight to
 the old group's cluster; and the component minimum over {old cluster
 ids, new rep ids} equals the minimum over all member doc ids because
 each old cluster_id / new rep IS its members' minimum.
+
+The index and the batch op share one setting: the jaccard cut is
+``dedup.THRESHOLD`` and the tokenizer ``dedup.NEARDUP_NGRAM``, both read
+at call time, so no caller can build or probe an index under a
+different relation than ``neardup_resolve``'s. ``meta/`` records the
+ngram an index was built under; probing it under another raises.
 """
 
 from __future__ import annotations
@@ -48,6 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from text_ocr_spark.ops import dedup
 from text_ocr_spark.ops.dedup import (
     _band_candidates,
     _rep_neardup_pairs,
@@ -100,13 +107,14 @@ def _write_meta(spark: SparkSession, path: str, ngram: int) -> None:
     ).parquet(f"{path}/meta")
 
 
-def _index_ngram(spark: SparkSession, path: str, requested: int | None) -> int:
-    """Resolve the effective ngram for an index read: None means "use
-    the stored setting"; an explicit mismatch with the stored setting is
-    an ERROR, never a silent recall collapse. Indexes built before the
-    meta table existed resolve to the requested value (default 1)."""
+def _index_ngram(spark: SparkSession, path: str) -> int:
+    """The ngram to probe the index with: ``dedup.NEARDUP_NGRAM``, after
+    checking it against the setting the index was built under. A
+    mismatch is an ERROR, never a silent recall collapse. Indexes built
+    before the meta table existed are taken as built under it."""
     from pyspark.errors import AnalysisException
 
+    ngram = dedup.NEARDUP_NGRAM
     try:
         row = spark.read.parquet(f"{path}/meta").first()
         stored = int(row["ngram"]) if row is not None else None
@@ -116,20 +124,18 @@ def _index_ngram(spark: SparkSession, path: str, requested: int | None) -> int:
         # corrupt footer swallowed here would skip the mismatch guard
         # and silently band incompatible signatures.
         stored = None
-    if requested is None:
-        return 1 if stored is None else stored
-    if stored is not None and stored != requested:
+    if stored is not None and stored != ngram:
         raise ValueError(
             f"index at {path} was built with ngram={stored}; probing with "
-            f"ngram={requested} would band incompatible signatures"
+            f"NEARDUP_NGRAM={ngram} would band incompatible signatures"
         )
-    return requested
+    return ngram
 
 
-def build_neardup_index(
-    docs: DataFrame, path: str, threshold: float = 0.95, ngram: int = 1
-) -> None:
-    """Batch-resolve ``docs`` and persist the probe index at ``path``.
+def build_neardup_index(docs: DataFrame, path: str) -> None:
+    """Batch-resolve ``docs`` and persist the probe index at ``path``,
+    at ``dedup.THRESHOLD`` over ``dedup.NEARDUP_NGRAM`` tokens (the
+    batch ``neardup_resolve`` setting, recorded in ``meta/``).
 
     Materialize-once build: the collapse shuffle runs exactly once (for
     the reps write); bands, the rep-level pair verification, and the
@@ -143,6 +149,7 @@ def build_neardup_index(
     """
     spark = docs.sparkSession
     p = _paths(path)
+    ngram = dedup.NEARDUP_NGRAM
     _write_meta(spark, path, ngram)
     reps, _members = collapse_exact(docs)
     reps.select(F.col("doc_id").alias("rep_id"), "text").write.mode(
@@ -155,7 +162,7 @@ def build_neardup_index(
         "doc_id", "rep_id"
     ).write.mode("overwrite").parquet(p["bands"])
 
-    rep_pairs = _rep_neardup_pairs(rep_docs, threshold, ngram)
+    rep_pairs = _rep_neardup_pairs(rep_docs, ngram)
     resolved = resolve_pairs(
         rep_docs.select("doc_id"), rep_pairs.select("doc_a", "doc_b")
     ).select(F.col("doc_id").alias("rep_id"), "cluster_id")
@@ -172,29 +179,25 @@ def build_neardup_index(
     )
 
 
-def init_neardup_index(spark: SparkSession, path: str, ngram: int = 1) -> None:
+def init_neardup_index(spark: SparkSession, path: str) -> None:
     """Bootstrap an EMPTY index (stream-from-scratch): the first
     ``update_index`` micro-batch then behaves as the initial build."""
     build_neardup_index(
-        spark.createDataFrame([], "doc_id long, text string"), path, ngram=ngram
+        spark.createDataFrame([], "doc_id long, text string"), path
     )
 
 
 def incremental_edges(
-    spark: SparkSession,
-    new_reps: DataFrame,
-    path: str,
-    threshold: float = 0.95,
-    ngram: int | None = None,
+    spark: SparkSession, new_reps: DataFrame, path: str
 ) -> DataFrame:
     """(u, v) component edges for the delta's representatives:
     exact-hash shortcuts, verified delta->old collisions, verified
     delta<->delta pairs, plus the index's accumulated merge edges.
     The index side is scans + equi-joins only — the corpus is never
     re-banded or re-tokenized beyond the colliding candidates' texts.
-    ``ngram=None`` adopts the index's stored tokenizer setting; an
-    explicit mismatch raises."""
-    ngram = _index_ngram(spark, path, ngram)
+    An index built under another ``NEARDUP_NGRAM`` raises."""
+    ngram = _index_ngram(spark, path)
+    threshold = dedup.THRESHOLD
     p = _paths(path)
     bands_idx = spark.read.parquet(p["bands"])
     groups = spark.read.parquet(p["groups"])
@@ -262,17 +265,13 @@ def incremental_edges(
 
 
 def incremental_resolve(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    path: str,
-    threshold: float = 0.95,
-    ngram: int | None = None,
+    spark: SparkSession, new_docs: DataFrame, path: str
 ) -> DataFrame:
     """-> (doc_id, cluster_id, keep_id, is_dup) for the DELTA docs,
     equal to batch ``neardup_resolve(corpus UNION delta)`` restricted to
     the delta (see module docstring for the exactness argument)."""
     n_reps, n_members = collapse_exact(new_docs)
-    edges = incremental_edges(spark, n_reps, path, threshold, ngram)
+    edges = incremental_edges(spark, n_reps, path)
     resolved = resolve_pairs(
         n_reps.select("doc_id"),
         edges.select(F.col("u").alias("doc_a"), F.col("v").alias("doc_b")),
@@ -598,11 +597,7 @@ def update_embed_index(
 
 
 def update_index(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    path: str,
-    threshold: float = 0.95,
-    ngram: int | None = None,
+    spark: SparkSession, new_docs: DataFrame, path: str
 ) -> DataFrame:
     """Fold a delta into the index (append-only) and return its verdicts.
 
@@ -613,7 +608,6 @@ def update_index(
     without rewriting stale ``groups`` labels. On Iceberg this whole
     function is one MERGE INTO + appends inside a single transaction.
     """
-    ngram = _index_ngram(spark, path, ngram)
     p = _paths(path)
     groups = spark.read.parquet(p["groups"])
 
@@ -621,8 +615,10 @@ def update_index(
     # freeze the edge set BEFORE any index write: every later action
     # (the four appends re-trigger their lazy inputs) then reads the
     # pre-update index state through the checkpoint instead of its own
-    # partial writes, and the delta banding runs once, not per write
-    edges = incremental_edges(spark, n_reps, path, threshold, ngram).localCheckpoint()
+    # partial writes, and the delta banding runs once, not per write.
+    # incremental_edges checks the index meta against NEARDUP_NGRAM
+    # here, once, before the first append
+    edges = incremental_edges(spark, n_reps, path).localCheckpoint()
     resolved = resolve_pairs(
         n_reps.select("doc_id"),
         edges.select(F.col("u").alias("doc_a"), F.col("v").alias("doc_b")),
@@ -654,7 +650,10 @@ def update_index(
     )
 
     bands_new = band_signatures(
-        _toks_of(unmatched.select(F.col("rep_id").alias("doc_id"), "text"), ngram)
+        _toks_of(
+            unmatched.select(F.col("rep_id").alias("doc_id"), "text"),
+            dedup.NEARDUP_NGRAM,
+        )
     ).withColumnRenamed("doc_id", "rep_id")
     groups_new = unmatched.join(resolved, "rep_id").select(
         "text_hash", "rep_id", "cluster_id"

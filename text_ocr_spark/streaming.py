@@ -8,15 +8,23 @@ ocrlib/src/main/cpp/jni/main.cpp:51-70). The graft mirrors that shape:
 - ``stream_extract``: file-source stream of transcript rows ->
   ``foreachBatch`` running the SAME batch transform (extract_transcripts)
   -> append sink. Stateless per turn, so no watermark/state is needed
-  and batch/stream results are identical by construction (pytest-pinned
-  with an availableNow trigger). Restart safety comes from the stream
-  checkpoint; on an Iceberg sink the foreachBatch append is idempotent
-  per epoch.
+  and batch/stream results are identical by construction (pytest-pinned).
+  Restart safety comes from the stream checkpoint; on an Iceberg sink
+  the foreachBatch append is idempotent per epoch.
 - ``stream_turn_rates``: the one genuinely event-time surface — per-kind
   turn counts in tumbling windows with a watermark for late data. The
   reference has no event-time aggregation at all (each frame stands
   alone), so this is a graft extension, kept windowed + watermarked the
   idiomatic Structured Streaming way.
+- ``conversation_state_stream``: per-conversation running totals carried
+  across micro-batches (applyInPandasWithState).
+- ``stream_dedup_incremental``: each micro-batch resolves against, and
+  folds into, the persisted near-dup index (ops/incremental.py).
+
+Every query runs under an availableNow trigger: it processes the input
+present at start, in micro-batches, and then stops, so a caller awaits
+its termination. A new wave of input is a new run on the same
+checkpoint.
 
 The batch sink is idempotent PER EPOCH (write_epoch): epoch-partitioned
 dynamic overwrite, so checkpoint-replayed micro-batches never duplicate
@@ -27,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from text_ocr_spark.pipeline import extract_transcripts
 
@@ -47,6 +55,16 @@ def read_transcript_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     )
 
 
+def _start(writer: DataStreamWriter, checkpoint_dir: str) -> StreamingQuery:
+    """Start ``writer`` on its checkpoint under the availableNow trigger
+    every query of this module runs with."""
+    return (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def stream_extract(
     spark: SparkSession,
     input_dir: str,
@@ -54,7 +72,6 @@ def stream_extract(
     checkpoint_dir: str,
     *,
     num_partitions: int | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Stream turns through the batch extraction transform.
 
@@ -69,14 +86,8 @@ def stream_extract(
         ).withColumn("epoch_id", F.lit(epoch_id))
         write_epoch(out, out_dir)
 
-    writer = (
-        read_transcript_stream(spark, input_dir)
-        .writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = read_transcript_stream(spark, input_dir).writeStream
+    return _start(writer.foreachBatch(_process), checkpoint_dir)
 
 
 def write_epoch(out: DataFrame, out_dir: str) -> None:
@@ -118,8 +129,6 @@ def conversation_state_stream(
     input_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    *,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Custom stateful operator: per-conversation running totals carried
     ACROSS micro-batches with applyInPandasWithState (the graft's
@@ -160,15 +169,8 @@ def conversation_state_stream(
             GroupStateTimeout.NoTimeout,
         )
     )
-    writer = (
-        out.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = out.writeStream.outputMode("append").format("parquet")
+    return _start(writer.option("path", out_dir), checkpoint_dir)
 
 
 def stream_dedup_incremental(
@@ -177,9 +179,6 @@ def stream_dedup_incremental(
     index_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    *,
-    threshold: float = 0.95,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuous corpus dedup: every micro-batch of documents resolves
     against — and folds into — the persisted near-dup index
@@ -200,30 +199,26 @@ def stream_dedup_incremental(
     appends ride one transaction per batch instead.
 
     A doc's verdict reflects the corpus AS OF its arrival batch: batch
-    resolve over union(all earlier batches + its own), restricted to
-    the batch — pytest- and oracle-pinned per wave.
+    ``neardup_resolve`` over union(all earlier batches + its own),
+    restricted to the batch — pytest- and oracle-pinned per wave. The
+    threshold and tokenizer are the index's (``dedup.THRESHOLD``,
+    ``dedup.NEARDUP_NGRAM``), so the stream cannot drift from the batch
+    relation.
     """
     from text_ocr_spark.ops.incremental import update_index
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         verdicts = update_index(
-            spark,
-            batch_df.select("doc_id", "text"),
-            index_dir,
-            threshold,
+            spark, batch_df.select("doc_id", "text"), index_dir
         ).withColumn("epoch_id", F.lit(epoch_id))
         write_epoch(verdicts, out_dir)
 
-    writer = (
+    docs = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 8)
         .parquet(input_dir)
-        .writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs.writeStream.foreachBatch(_process), checkpoint_dir)
 
 
 def stream_turn_rates(
@@ -231,17 +226,8 @@ def stream_turn_rates(
     input_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    *,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Watermarked tumbling-window turn rates, append-mode sink."""
-    writer = (
-        turn_rates(read_transcript_stream(spark, input_dir))
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    rates = turn_rates(read_transcript_stream(spark, input_dir))
+    writer = rates.writeStream.outputMode("append").format("parquet")
+    return _start(writer.option("path", out_dir), checkpoint_dir)
