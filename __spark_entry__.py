@@ -56,6 +56,19 @@ def entry(spark: SparkSession) -> DataFrame:
 # queries
 # --------------------------------------------------------------------------
 
+def _scratch_dir(prefix: str) -> str:
+    """A temp directory for a row's stream sources, sinks, checkpoints or
+    index, removed when the process exits: the returned frame reads it
+    lazily, so it must outlive the call."""
+    import atexit
+    import shutil
+    import tempfile
+
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, tmp, True)
+    return tmp
+
+
 def _extract_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from text_ocr_spark.pipeline import extract_corpus, ordered
 
@@ -88,12 +101,10 @@ def _stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     transcripts parquet -> file stream -> foreachBatch(batch transform)
     -> sink. Output equals the batch extraction, so the golden parquet
     is its oracle too."""
-    import tempfile
-
     from text_ocr_spark.pipeline import build_transcripts
     from text_ocr_spark.streaming import stream_extract
 
-    tmp = tempfile.mkdtemp(prefix="stream_contract_")
+    tmp = _scratch_dir("stream_contract_")
     src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
     build_transcripts(spark, sf_dir).repartition(4).write.mode(
         "overwrite"
@@ -109,12 +120,10 @@ def _stream_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-role turn counts, run to completion (availableNow). Append mode
     emits exactly the windows the final watermark (max event time - 5
     min) has passed — the oracle applies the same cutoff."""
-    import tempfile
-
     from text_ocr_spark.pipeline import build_transcripts
     from text_ocr_spark.streaming import stream_turn_rates
 
-    tmp = tempfile.mkdtemp(prefix="stream_rates_")
+    tmp = _scratch_dir("stream_rates_")
     src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
     build_transcripts(spark, sf_dir).repartition(4).write.mode(
         "overwrite"
@@ -137,12 +146,10 @@ def _stream_conv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract face is the FINAL state per conversation — deterministic
     and SQL-expressible — while the per-batch snapshot ledger is
     pytest-covered (tests/test_streaming.py)."""
-    import tempfile
-
     from text_ocr_spark.pipeline import build_transcripts
     from text_ocr_spark.streaming import conversation_state_stream
 
-    tmp = tempfile.mkdtemp(prefix="stream_state_")
+    tmp = _scratch_dir("stream_state_")
     src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
     build_transcripts(spark, sf_dir).repartition(16).write.mode(
         "overwrite"
@@ -160,11 +167,9 @@ def _resumable_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunked checkpoint-resume surface run end-to-end: commit the
     first chunks, 'crash', resume, and return the assembled output —
     which must equal the single-shot golden."""
-    import tempfile
-
     from text_ocr_spark.checkpoint import read_extracted, resumable_extract
 
-    tmp = tempfile.mkdtemp(prefix="resume_contract_")
+    tmp = _scratch_dir("resume_contract_")
     out = f"{tmp}/run"
     try:
         resumable_extract(
@@ -194,8 +199,6 @@ def _dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id % 5 = 4) against it — verdicts must equal the batch
     resolution of the full corpus restricted to the delta (the oracle
     runs the same recursive closure over ALL documents and filters)."""
-    import tempfile
-
     from pyspark.sql import functions as SF
 
     from text_ocr_spark.ops.incremental import (
@@ -206,7 +209,7 @@ def _dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     corpus = docs.filter(SF.col("doc_id") % 5 != 4)
     delta = docs.filter(SF.col("doc_id") % 5 == 4)
-    tmp = tempfile.mkdtemp(prefix="neardup_idx_")
+    tmp = _scratch_dir("neardup_idx_")
     build_neardup_index(corpus, tmp)
     return incremental_resolve(spark, delta, tmp).orderBy("doc_id")
 
@@ -216,8 +219,6 @@ def _embed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus slice (vec_id % 5 != 4), resolve only the delta slice
     against it; verdicts must equal batch embed_resolve on the union
     restricted to the delta."""
-    import tempfile
-
     from pyspark.sql import functions as SF
 
     from text_ocr_spark.ops.incremental import (
@@ -228,7 +229,7 @@ def _embed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     corpus = emb.filter(SF.col("vec_id") % 5 != 4)
     delta = emb.filter(SF.col("vec_id") % 5 == 4)
-    tmp = tempfile.mkdtemp(prefix="embed_idx_")
+    tmp = _scratch_dir("embed_idx_")
     build_embed_index(corpus, tmp)
     return embed_incremental_resolve(spark, delta, tmp).orderBy("vec_id")
 
@@ -239,8 +240,6 @@ def _stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     its wave into the persisted index via foreachBatch(update_index).
     A doc's verdict reflects the corpus as of its arrival wave — the
     oracle replays per-wave recursive closures over the same splits."""
-    import tempfile
-
     from pyspark.sql import functions as SF
 
     from text_ocr_spark.ops.incremental import init_neardup_index
@@ -249,7 +248,7 @@ def _stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
-    tmp = tempfile.mkdtemp(prefix="stream_dedup_")
+    tmp = _scratch_dir("stream_dedup_")
     src, idx, out, ckpt = (f"{tmp}/{d}" for d in ("src", "idx", "out", "ckpt"))
     init_neardup_index(spark, idx)
     for w in range(3):

@@ -110,7 +110,7 @@ def _settable(family) -> set[str]:
 
 
 def test_embedding_family_takes_only_its_input():
-    """The 11 embedding entry points keep a settable value only where two
+    """The 12 embedding entry points keep a settable value only where two
     real callers need different ones: the centroids of ivf_assign (the
     ivf_train and ivf_assign rows) and of ivf_topk, and embed_pairs'
     n_vecs (the incremental index passes its delta count)."""
@@ -128,7 +128,9 @@ def test_embedding_family_takes_only_its_input():
         incremental.embed_incremental_edges,
         incremental.embed_incremental_resolve,
         incremental.update_embed_index,
+        incremental.compact_embed_index,
     ]
+    assert len(family) == 12
     assert _settable(family) == {
         "ivf_assign.centroids", "ivf_topk.centroids", "embed_pairs.n_vecs",
     }

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_TINY
-from text_ocr_spark.ops import dedup, incremental
+from text_ocr_spark.ops import dedup, incremental, similarity
 from text_ocr_spark.ops.dedup import collapse_exact, embed_resolve, neardup_resolve
 from text_ocr_spark.ops.incremental import (
     build_embed_index,
@@ -437,25 +437,129 @@ def test_index_ngram_metadata(spark, docs, monkeypatch, tmp_path):
     build_neardup_index(corpus, tmp)
 
     monkeypatch.setattr(dedup, "NEARDUP_NGRAM", 1)
-    with pytest.raises(ValueError, match="ngram=3"):
+    with pytest.raises(ValueError, match="NEARDUP_NGRAM=3"):
         incremental_resolve(spark, delta, tmp)
 
 
-def test_update_index_reads_meta_once(spark, monkeypatch, tmp_path):
-    """update_index checks the index's tokenizer meta (a Spark read)
-    once, not once itself and again inside incremental_edges."""
-    tmp = str(tmp_path)
-    build_neardup_index(_mini_corpus(spark, WAVE_A[:2]), tmp)
+def _spy_meta_checks(monkeypatch) -> list:
     reads = []
-    real = incremental._index_ngram
+    real = incremental._check_meta
 
     def spy(*args):
         reads.append(args)
         return real(*args)
 
-    monkeypatch.setattr(incremental, "_index_ngram", spy)
+    monkeypatch.setattr(incremental, "_check_meta", spy)
+    return reads
+
+
+def test_update_index_reads_meta_once(spark, monkeypatch, tmp_path):
+    """update_index checks the index's meta (a Spark read) once, not
+    once itself and again inside incremental_edges."""
+    tmp = str(tmp_path)
+    build_neardup_index(_mini_corpus(spark, WAVE_A[:2]), tmp)
+    reads = _spy_meta_checks(monkeypatch)
     update_index(spark, _mini_corpus(spark, WAVE_B[:1]), tmp).collect()
     assert len(reads) == 1
+
+
+def test_update_embed_index_reads_meta_once(spark, emb, monkeypatch, tmp_path):
+    """The embedding twin: one meta check per update, before its
+    appends."""
+    tmp = str(tmp_path)
+    build_embed_index(emb.filter("vec_id < 40"), tmp)
+    reads = _spy_meta_checks(monkeypatch)
+    update_embed_index(spark, emb.filter("vec_id between 40 and 59"), tmp)
+    assert len(reads) == 1
+
+
+# A silent divergence without the meta check: j(A, B) = 19/21 = 0.905 and
+# j(C, A) = 20/21 = 0.952, so C's cluster is 10 at THRESHOLD 0.95 (the
+# build setting) and 5 at 0.9 — an index probed at 0.9 without a meta
+# check answers 10 where batch neardup_resolve answers 5
+META_A = _w(0, 20)
+META_B = _w(0, 19, "y")
+META_C = _w(0, 20, "z")
+
+
+@pytest.fixture(scope="module")
+def text_idx(spark, tmp_path_factory):
+    """A (doc 10) and B (doc 5), indexed at the default settings."""
+    tmp = str(tmp_path_factory.mktemp("text_idx"))
+    build_neardup_index(_mini_corpus(spark, [(10, META_A), (5, META_B)]), tmp)
+    return tmp
+
+
+@pytest.fixture(scope="module")
+def embed_idx(spark, emb, tmp_path_factory):
+    """The vec_id % 5 != 4 corpus, indexed at EMBED_THRESHOLD 0.9."""
+    tmp = str(tmp_path_factory.mktemp("embed_idx"))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "EMBED_THRESHOLD", 0.9)
+        build_embed_index(_split(emb, "vec_id")[0], tmp)
+    return tmp
+
+
+def _refused(name, built, probed):
+    return re.escape(f"built with {name}={built}; probing it with {name}={probed} ")
+
+
+@pytest.mark.parametrize(
+    "name, value", [("THRESHOLD", 0.9), ("NUM_PERM", 64), ("BANDS", 16)]
+)
+def test_text_index_refuses_other_settings(
+    spark, text_idx, monkeypatch, name, value
+):
+    """Every setting the text index records (NEARDUP_NGRAM: in
+    test_index_ngram_metadata): probing under another value raises,
+    naming the setting and both values."""
+    built = getattr(dedup, name)
+    monkeypatch.setattr(dedup, name, value)
+    with pytest.raises(ValueError, match=_refused(name, built, value)):
+        incremental_resolve(spark, _mini_corpus(spark, [(70, META_C)]), text_idx)
+
+
+@pytest.mark.parametrize(
+    "name, value",
+    [("EMBED_THRESHOLD", 0.35), ("LSH_TABLES", 4), ("LSH_PLANES", 8)],
+)
+def test_embed_index_refuses_other_settings(
+    spark, emb, embed_idx, monkeypatch, name, value
+):
+    """Every setting the embedding index records. Probing the 0.9 index
+    at the default 0.35 without the check disagrees with batch
+    embed_resolve of the union on 29 of the 100 delta vectors."""
+    monkeypatch.setattr(dedup, "EMBED_THRESHOLD", 0.9)
+    owner = dedup if name == "EMBED_THRESHOLD" else similarity
+    built = getattr(owner, name)
+    monkeypatch.setattr(owner, name, value)
+    with pytest.raises(ValueError, match=_refused(name, built, value)):
+        embed_incremental_resolve(spark, _split(emb, "vec_id")[1], embed_idx)
+
+
+def test_index_kinds_refuse_each_other(spark, emb, text_idx, embed_idx):
+    """A text index probed through the embedding API (and the reverse)
+    fails on the settings its meta does not record."""
+    with pytest.raises(ValueError, match="EMBED_THRESHOLD=<unrecorded>"):
+        embed_incremental_resolve(spark, emb.filter("vec_id < 5"), text_idx)
+    with pytest.raises(ValueError, match="NEARDUP_NGRAM=<unrecorded>"):
+        incremental_resolve(spark, _mini_corpus(spark, [(70, META_C)]), embed_idx)
+
+
+def test_updates_refuse_other_settings_before_any_write(
+    spark, emb, text_idx, embed_idx, monkeypatch
+):
+    """A refused update writes nothing: the index keeps its files."""
+    def files(root):
+        return sorted((d, f) for d, _, fs in os.walk(root) for f in fs)
+
+    before = files(text_idx), files(embed_idx)
+    monkeypatch.setattr(dedup, "THRESHOLD", 0.9)
+    with pytest.raises(ValueError, match="THRESHOLD"):
+        update_index(spark, _mini_corpus(spark, [(70, META_C)]), text_idx)
+    with pytest.raises(ValueError, match="EMBED_THRESHOLD"):
+        update_embed_index(spark, _split(emb, "vec_id")[1], embed_idx)
+    assert (files(text_idx), files(embed_idx)) == before
 
 
 def test_compact_crash_between_renames_self_heals(
